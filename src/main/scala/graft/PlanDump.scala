@@ -1,7 +1,7 @@
 package graft
 
 import java.nio.file.{Files, Paths}
-import org.apache.spark.sql.SparkSession
+import graft.core.GraftSession
 import org.apache.spark.sql.execution.ExplainMode
 
 /** Measurement tooling for the optimization rounds: writes
@@ -13,9 +13,7 @@ import org.apache.spark.sql.execution.ExplainMode
 object PlanDump {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir, tag) = args
-    val cpus = core.GraftSession.defaultCpus
-    val spark: SparkSession = core.GraftSession.builder(s"local[$cpus]").getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.local()
     new java.io.File(outDir).mkdirs()
     SparkEntry.inventory.foreach { q =>
       val plan = q.fn(spark, sfDir).queryExecution

@@ -1,35 +1,24 @@
 package graft.core
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.Column
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.DecimalType
 
 /** One declared engine query: a Spark implementation plus (when the
   * semantics are ANSI-SQL-expressible) the equivalent DuckDB oracle
   * SQL the driver's correctness gate replays on the same parquet
   * tables. `oracle = None` → the driver records a weaker rows-only
   * check (used for the probabilistic/hash-seeded operators whose
-  * exact output no other engine can reproduce).
+  * exact output no other engine can reproduce). Every declared query
+  * is part of the Bench headline set.
   */
 final case class GQuery(
     name: String,
     fn: (SparkSession, String) => DataFrame,
-    oracle: Option[String],
-    /** Part of the Bench headline set (scale-safe at sf0.1+). */
-    bench: Boolean = true)
+    oracle: Option[String])
 
 object QueryUtils {
   import org.apache.spark.sql.catalyst.expressions.{EqualTo, Expression, If, Literal}
   import org.apache.spark.sql.graftbridge._
-
-  /** double → DECIMAL(28,10), value-identical to `.cast` (proven by
-    * DecimalFastSpec) but ~2× cheaper per value and producing
-    * compact-long-backed decimals the Sum fast path can add without
-    * BigDecimal. Retained for per-row decimal consumers; the sum
-    * kernels below skip the Decimal object entirely. */
-  def dec(c: Column): Column =
-    ColumnBridge.column(FastDoubleToDecimal(ColumnBridge.expression(c)))
 
   /** The parse half of the exact-sum split: unscaled(cast(c →
     * DECIMAL(28,10))) as a long, or the out-of-band sentinel when the
@@ -50,8 +39,8 @@ object QueryUtils {
     val ue = ColumnBridge.expression(u)
     val de = ColumnBridge.expression(d)
     val sent = Literal(DecimalSum.Sentinel)
-    val hi = If(EqualTo(ue, sent), SlowSplitHi(de), Literal(0L))
-    val lo = If(EqualTo(ue, sent), SlowSplitLo(de), ue)
+    val hi = If(EqualTo(ue, sent), SlowSplit(de, hi = true), Literal(0L))
+    val lo = If(EqualTo(ue, sent), SlowSplit(de, hi = false), ue)
     (hi, lo)
   }
 

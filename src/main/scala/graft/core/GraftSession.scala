@@ -24,15 +24,9 @@ object GraftSession {
       .config("spark.sql.adaptive.skewJoin.enabled", "true")
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")
-      // the synthetic events table has carried parquet TIMESTAMP(NANOS)
-      // in some generations and TIMESTAMP(MICROS, isAdjustedToUTC=false)
-      // in others. Nanos: Spark has no nanos TimestampType, so read them
-      // as raw longs and normalize in Tables.events. Micros without UTC
-      // adjustment: Spark ≥3.4 infers TIMESTAMP_NTZ by default, which
-      // unix_micros()/to_utc conversions reject — disable the inference
-      // so the column scans as plain TimestampType whose epoch-micros
-      // match what DuckDB's epoch_us sees (session tz is pinned UTC).
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
+      // events.ts is parquet TIMESTAMP(MICROS) without UTC adjustment:
+      // read it as TimestampType, not the inferred TIMESTAMP_NTZ that
+      // unix_micros() rejects, so its epoch micros match DuckDB's epoch_us
       .config("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
 
   def local(): SparkSession = {

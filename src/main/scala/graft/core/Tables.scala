@@ -1,18 +1,12 @@
 package graft.core
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.LongType
 
 /** Loaders for the synthetic test tables (TESTDATA.md). Plain parquet
   * scans so Catalyst's V2ScanRelationPushDown can prune columns and
-  * push predicates down to the scan; no caching, no inference.
+  * push predicates down to the scan; no caching.
   */
 object Tables {
-  val names: Seq[String] = Seq(
-    "region", "nation", "customer", "supplier", "part",
-    "orders", "lineitem", "events", "documents", "embeddings")
-
   def load(spark: SparkSession, dir: String, name: String): DataFrame =
     spark.read.parquet(s"$dir/$name.parquet")
 
@@ -23,20 +17,7 @@ object Tables {
   def part(s: SparkSession, d: String): DataFrame = load(s, d, "part")
   def orders(s: SparkSession, d: String): DataFrame = load(s, d, "orders")
   def lineitem(s: SparkSession, d: String): DataFrame = load(s, d, "lineitem")
+  def events(s: SparkSession, d: String): DataFrame = load(s, d, "events")
   def documents(s: SparkSession, d: String): DataFrame = load(s, d, "documents")
   def embeddings(s: SparkSession, d: String): DataFrame = load(s, d, "embeddings")
-
-  /** events.ts is parquet TIMESTAMP(NANOS); with
-    * spark.sql.legacy.parquet.nanosAsLong it scans as a raw Long which
-    * we truncate to micro-precision TimestampType (`div` keeps the
-    * arithmetic integral — doubles lose precision above 2^53). If a
-    * future writer emits micros directly, the column is passed through.
-    */
-  def events(s: SparkSession, d: String): DataFrame = {
-    val raw = load(s, d, "events")
-    raw.schema("ts").dataType match {
-      case LongType => raw.withColumn("ts", expr("timestamp_micros(ts div 1000)"))
-      case _        => raw
-    }
-  }
 }

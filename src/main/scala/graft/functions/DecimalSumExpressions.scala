@@ -1,6 +1,6 @@
 package org.apache.spark.sql.graftbridge
 
-import org.apache.spark.sql.catalyst.expressions.{Add, AttributeReference, BinaryExpression, CreateNamedStruct, EqualTo, EvalMode, ExpectsInputTypes, Expression, GreaterThanOrEqual, If, IsNotNull, LessThanOrEqual, Literal, Multiply, Or, Subtract, UnaryExpression}
+import org.apache.spark.sql.catalyst.expressions.{Add, AttributeReference, BinaryExpression, CreateNamedStruct, EvalMode, ExpectsInputTypes, Expression, GreaterThanOrEqual, If, IsNotNull, LessThanOrEqual, Literal, Multiply, Or, Subtract, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.aggregate.DeclarativeAggregate
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.trees.BinaryLike
@@ -112,42 +112,29 @@ case class UnscaledOrSentinel(child: Expression)
     copy(child = newChild)
 }
 
-/** Exact hi-part of the decimal split for fast-path-rejected doubles
-  * (rare: |d| ≥ 10⁸ and sub-2⁻²¹ magnitudes). NaN/Inf throw here
-  * (NumberFormatException via Decimal(NaN)) where Spark's non-ANSI
-  * Cast would return NULL — a deliberate loud-failure divergence,
-  * unreachable for the benchmark domain, shared with toDec2810.
-  * Only evaluated behind a sentinel check. */
-case class SlowSplitHi(child: Expression)
+/** Exact hi (`hi = true`) or lo part of the decimal split for
+  * fast-path-rejected doubles (rare: |d| ≥ 10⁸ and sub-2⁻²¹
+  * magnitudes). NaN/Inf throw here (NumberFormatException via
+  * Decimal(NaN)) where Spark's non-ANSI Cast would return NULL — a
+  * deliberate loud-failure divergence, unreachable for the benchmark
+  * domain, shared with toDec2810. Only evaluated behind a sentinel
+  * check. */
+case class SlowSplit(child: Expression, hi: Boolean)
     extends UnaryExpression with ExpectsInputTypes {
   override def inputTypes: Seq[AbstractDataType] = Seq(DoubleType)
   override def dataType: DataType = LongType
-  override def prettyName: String = "graft_slow_hi18"
+  override def prettyName: String = if (hi) "graft_slow_hi18" else "graft_slow_lo18"
 
-  override protected def nullSafeEval(input: Any): Any =
-    DecimalSum.slowHi18(input.asInstanceOf[Double])
+  private def method: String = if (hi) "slowHi18" else "slowLo18"
 
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev,
-      c => s"org.apache.spark.sql.graftbridge.DecimalSum.slowHi18($c)")
-
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
-}
-
-/** lo-part twin of SlowSplitHi. */
-case class SlowSplitLo(child: Expression)
-    extends UnaryExpression with ExpectsInputTypes {
-  override def inputTypes: Seq[AbstractDataType] = Seq(DoubleType)
-  override def dataType: DataType = LongType
-  override def prettyName: String = "graft_slow_lo18"
-
-  override protected def nullSafeEval(input: Any): Any =
-    DecimalSum.slowLo18(input.asInstanceOf[Double])
+  override protected def nullSafeEval(input: Any): Any = {
+    val d = input.asInstanceOf[Double]
+    if (hi) DecimalSum.slowHi18(d) else DecimalSum.slowLo18(d)
+  }
 
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
     defineCodeGen(ctx, ev,
-      c => s"org.apache.spark.sql.graftbridge.DecimalSum.slowLo18($c)")
+      c => s"org.apache.spark.sql.graftbridge.DecimalSum.$method($c)")
 
   override protected def withNewChildInternal(newChild: Expression): Expression =
     copy(child = newChild)

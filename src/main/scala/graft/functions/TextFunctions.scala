@@ -2,6 +2,7 @@ package graft.functions
 
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftbridge.{ColumnBridge, StripNoiseExpr, TokenStatsExpr, WordShinglesExpr, WsTokensExpr}
 
 /** Column-level text kernels: Spark-first re-expressions of the
   * reference's `clean_text` (reference src/utils.py:5-10, applied at
@@ -19,39 +20,21 @@ object TextFunctions {
     * deletes via str.translate (reference src/utils.py:9). */
   val asciiPunctuation: String = "!\"#$%&'()*+,-./:;<=>?@[\\]^_`{|}~"
 
-  /** F1: strip URLs (reference src/utils.py:6). Reference spelling for
-    * the spec — query paths use stripNoise. */
-  def stripUrls(c: Column): Column = regexp_replace(c, "http\\S+|www\\S+", "")
-
-  /** F2: strip @mentions (reference src/utils.py:7). Reference
-    * spelling for the spec. */
-  def stripMentions(c: Column): Column = regexp_replace(c, "@\\w+", "")
-
-  /** F3: strip #hashtags (reference src/utils.py:8). Reference
-    * spelling for the spec. */
-  def stripHashtags(c: Column): Column = regexp_replace(c, "#\\w+", "")
-
-  /** F1–F3 in ONE codegen'd byte scan (StripNoiseExpr): equality with
-    * the three sequential regexp_replace passes is property-proven in
-    * TextFunctionsSpec — those were three full java.util.regex passes
-    * per row, the dominant cost of q20/q25. */
+  /** F1–F3 — strip URLs, @mentions and #hashtags (reference
+    * src/utils.py:6-8) — in ONE codegen'd byte scan (StripNoiseExpr):
+    * equality with the three sequential regexp_replace passes is
+    * property-proven in TextFunctionsSpec — those were three full
+    * java.util.regex passes per row, the dominant cost of q20/q25. */
   def stripNoise(c: Column): Column =
-    org.apache.spark.sql.graftbridge.ColumnBridge.column(
-      org.apache.spark.sql.graftbridge.StripNoiseExpr(
-        org.apache.spark.sql.graftbridge.ColumnBridge.expression(c)))
+    ColumnBridge.column(StripNoiseExpr(ColumnBridge.expression(c)))
 
   /** F1–F4 fused: the noise scan with the punctuation translate-delete
-    * applied to each surviving byte — per-character deletions commute
-    * with the emit order, so this equals
-    * dropPunctuation(stripNoise(c)) exactly (property-proven). */
+    * (F4, reference src/utils.py:9) applied to each surviving byte —
+    * per-character deletions commute with the emit order, so this
+    * equals translate(stripNoise(c), asciiPunctuation, "") exactly
+    * (property-proven). */
   def stripNoiseAndPunct(c: Column): Column =
-    org.apache.spark.sql.graftbridge.ColumnBridge.column(
-      org.apache.spark.sql.graftbridge.StripNoiseExpr(
-        org.apache.spark.sql.graftbridge.ColumnBridge.expression(c),
-        asciiPunctuation))
-
-  /** F4: delete ASCII punctuation (reference src/utils.py:9). */
-  def dropPunctuation(c: Column): Column = translate(c, asciiPunctuation, "")
+    ColumnBridge.column(StripNoiseExpr(ColumnBridge.expression(c), asciiPunctuation))
 
   /** The 6-char java-\s set: [ \t\n\x0B\f\r]. */
   private val wsChars = " \t\n\u000B\f\r"
@@ -82,37 +65,18 @@ object TextFunctions {
     * split(pyStrip(c), "\\s+") including the [""] result for strings
     * that strip to empty (TextFunctionsSpec proves equality). */
   def tokens(c: Column): Column =
-    org.apache.spark.sql.graftbridge.ColumnBridge.column(
-      org.apache.spark.sql.graftbridge.WsTokensExpr(
-        org.apache.spark.sql.graftbridge.ColumnBridge.expression(c)))
-
-  def tokenCount(c: Column): Column = size(tokens(c))
+    ColumnBridge.column(WsTokensExpr(ColumnBridge.expression(c)))
 
   /** Tiny embedded stopword list for quality scoring. */
   val qualityStopwords: Seq[String] =
     Seq("the", "a", "an", "and", "or", "of", "to", "in", "is", "it")
-
-  /** Reference spelling, kept for the kernel equivalence spec: the
-    * filter lambda is interpreted CodegenFallback — query paths use
-    * tokenStats3 instead. */
-  def stopwordCount(toks: Column): Column =
-    size(filter(toks, t => t.isin(qualityStopwords: _*)))
-
-  /** Sum of token lengths (for avg-word-length style metrics).
-    * Reference spelling for the spec — interpreted CodegenFallback,
-    * see tokenStats3. */
-  def tokenCharSum(toks: Column): Column =
-    aggregate(transform(toks, t => length(t)), lit(0), (acc, x) => acc + x)
 
   /** [n_tokens, n_stop, char_sum] in ONE codegen'd byte scan over the
     * raw text — no token array materialized, no interpreted HOF lambda
     * (TokenStatsExpr; equality with the size/filter/aggregate spelling
     * proven in TextFunctionsSpec). */
   def tokenStats3(c: Column): Column =
-    org.apache.spark.sql.graftbridge.ColumnBridge.column(
-      org.apache.spark.sql.graftbridge.TokenStatsExpr(
-        org.apache.spark.sql.graftbridge.ColumnBridge.expression(c),
-        qualityStopwords))
+    ColumnBridge.column(TokenStatsExpr(ColumnBridge.expression(c), qualityStopwords))
 
   /** Content-defined document fingerprint: md5 over the cleaned text.
     * Stable across engines (unlike murmur/xxhash whose seeds differ),
@@ -125,12 +89,5 @@ object TextFunctions {
     * CodegenFallback and dominated the dedup queries; output is
     * identical, short/NULL docs yield an empty array. */
   def wordShingles(toks: Column, n: Int): Column =
-    org.apache.spark.sql.graftbridge.ColumnBridge.column(
-      org.apache.spark.sql.graftbridge.WordShinglesExpr(
-        org.apache.spark.sql.graftbridge.ColumnBridge.expression(toks), n))
-
-  /** Language-marker hit count: number of whole-word matches of any of
-    * the marker words. */
-  def markerHits(c: Column, markers: Seq[String]): Column =
-    size(regexp_extract_all(c, lit("\\b(" + markers.mkString("|") + ")\\b"), lit(0)))
+    ColumnBridge.column(WordShinglesExpr(ColumnBridge.expression(toks), n))
 }

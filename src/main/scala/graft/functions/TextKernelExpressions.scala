@@ -142,6 +142,18 @@ object TextKernelUtil {
     new GenericArrayData(Array[Any](nTok, nStop, chars))
   }
 
+  /** Bitmap of ASCII bytes to drop at emit time (the translate-delete
+    * pass of clean_text). Deleting punctuation AFTER the noise strip
+    * commutes with emitting survivors during it: both are per-
+    * character deletions over the noise-stripped stream. Bytes ≥ 0x80
+    * (multi-byte UTF-8) index the upper half, which is always false —
+    * translate passes non-mapped characters through. */
+  def punctTable(chars: String): Array[Boolean] = {
+    val t = new Array[Boolean](256)
+    chars.foreach { c => require(c < 128, s"non-ASCII punct '$c'"); t(c) = true }
+    t
+  }
+
   /** One byte scan reproducing the three sequential regexp_replace
     * deletions of clean_text — regexp_replace(regexp_replace(
     * regexp_replace(s, "http\S+|www\S+", ""), "@\w+", ""), "#\w+", "")
@@ -158,26 +170,13 @@ object TextKernelUtil {
     *    new intra-run adjacency is ever created by pass 1;
     *  - a mention match's greedy \w+ means the character following any
     *    pass-2 deletion is non-\w, so pass 2 can never create a new
-    *    mention, and '@' decisions are local to the pass-1 stream;
-    *  - the only cross-pass effect left is a '#' whose \w+ begins
-    *    after a CHAIN of deleted mentions ("#@x@y7abc" → pass 2 →
-    *    "#abc" → pass 3 → "") — handled by skipping the mention chain
-    *    in the '#' lookahead;
+    *    mention or hashtag: a '#' before a deleted mention chain still
+    *    faces a non-\w byte afterwards ("#@x@y7abc" → pass 2 → "#" →
+    *    pass 3 → "#"), so '@' and '#' decisions are both local to the
+    *    pass-1 stream;
     *  - pass 3 runs AFTER pass 2, so text joined by a hashtag deletion
     *    is never re-examined for mentions ("@#x" → "@"), which the
     *    left-to-right single scan reproduces for free. */
-  /** Bitmap of ASCII bytes to drop at emit time (the translate-delete
-    * pass of clean_text). Deleting punctuation AFTER the noise strip
-    * commutes with emitting survivors during it: both are per-
-    * character deletions over the noise-stripped stream. Bytes ≥ 0x80
-    * (multi-byte UTF-8) index the upper half, which is always false —
-    * translate passes non-mapped characters through. */
-  def punctTable(chars: String): Array[Boolean] = {
-    val t = new Array[Boolean](256)
-    chars.foreach { c => require(c < 128, s"non-ASCII punct '$c'"); t(c) = true }
-    t
-  }
-
   def stripNoise(s: UTF8String, drop: Array[Boolean]): UTF8String = {
     val base = s.getBaseObject
     val off = s.getBaseOffset
@@ -211,23 +210,10 @@ object TextKernelUtil {
         var p = i
         while (p < eff) {
           val c = Platform.getByte(base, off + p)
-          if (c == '@' && p + 1 < eff && isWord(Platform.getByte(base, off + p + 1))) {
-            p += 1
+          if ((c == '@' || c == '#') && p + 1 < eff &&
+              isWord(Platform.getByte(base, off + p + 1))) {
+            p += 1 // drop the sigil and its word run
             while (p < eff && isWord(Platform.getByte(base, off + p))) p += 1
-          } else if (c == '#') {
-            var q = p + 1 // lookahead across any deleted-mention chain
-            while (q + 1 < eff && Platform.getByte(base, off + q) == '@' &&
-                isWord(Platform.getByte(base, off + q + 1))) {
-              q += 1
-              while (q < eff && isWord(Platform.getByte(base, off + q))) q += 1
-            }
-            if (q < eff && isWord(Platform.getByte(base, off + q))) {
-              p = q + 1 // drop '#', the mention chain, and the word run
-              while (p < eff && isWord(Platform.getByte(base, off + p))) p += 1
-            } else {
-              if (!drop(c & 0xFF)) { out(o) = c; o += 1 }
-              p += 1
-            }
           } else {
             if (!drop(c & 0xFF)) { out(o) = c; o += 1 }
             p += 1

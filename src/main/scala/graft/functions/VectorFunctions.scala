@@ -28,14 +28,4 @@ object VectorFunctions {
       DotProductExpr(ColumnBridge.expression(a), ColumnBridge.expression(b)))
 
   def norm2(a: Column): Column = sqrt(dot(a, a))
-
-  /** Cosine similarity of two array<double> columns. Prefer the
-    * precomputed-norm form in joins. */
-  def cosine(a: Column, b: Column): Column = dot(a, b) / (norm2(a) * norm2(b))
-
-  /** Cosine rounded to `scale` decimals — the form used in oracle-backed
-    * queries so a last-ulp difference in another engine's fold order
-    * cannot flip a comparison. */
-  def cosineRounded(a: Column, b: Column, scale: Int = 4): Column =
-    round(cosine(a, b), scale)
 }

@@ -2,8 +2,9 @@ package graft.operators
 
 import graft.core.{GQuery, Tables}
 import graft.functions.TextFunctions._
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftbridge.{ColumnBridge, MinHashSigExpr, SignatureUtil, SimHash64Expr}
 
 /** Deduplication operators over `documents` — the exact and near-dup
   * families a pretraining-data pipeline runs at corpus scale.
@@ -132,7 +133,7 @@ object Dedup {
   // engine-specific; the driver records a rows-only check and
   // DedupSpec validates the pair set against exact Jaccard). ----
 
-  private val MinhashFuncs = 32
+  private val MinhashFuncs = SignatureUtil.MinhashFuncs
   private val Bands = 8
   private val RowsPerBand = MinhashFuncs / Bands
 
@@ -146,7 +147,6 @@ object Dedup {
     * shingles are filtered, exactly as explode dropped them. */
   def minhashSignatures(s: SparkSession, d: String,
                         maxDocId: Long = 1000L): DataFrame = {
-    import org.apache.spark.sql.graftbridge.{ColumnBridge, MinHashSigExpr}
     val mhs = ColumnBridge.column(MinHashSigExpr(
       ColumnBridge.expression(col("sh_arr"))))
     withShingleArr(s, d, maxDocId)
@@ -233,8 +233,7 @@ object Dedup {
     * Docs with no tokens are filtered, exactly as explode dropped
     * them. */
   def simhashSignatures(s: SparkSession, d: String,
-                        maxDocId: Long = 1000L): DataFrame = {
-    import org.apache.spark.sql.graftbridge.{ColumnBridge, SimHash64Expr}
+                        maxDocId: Long = 1000L): DataFrame =
     Tables.documents(s, d)
       .filter(col("doc_id") < maxDocId)
       .select(col("doc_id"), array_distinct(tokens(col("text"))).as("toks"))
@@ -242,7 +241,6 @@ object Dedup {
       .select(col("doc_id"),
         ColumnBridge.column(SimHash64Expr(
           ColumnBridge.expression(col("toks")))).as("simhash"))
-  }
 
   private val SimhashBands = 8 // 8 bands × 8 bits
 

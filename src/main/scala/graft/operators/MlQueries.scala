@@ -53,6 +53,7 @@ object MlQueries {
       .agg(sum(col("support_n")).as("support"),
         sum(col("tp_n")).as("tp"),
         sum(col("pred_n")).as("pred_cnt"))
+      // equals the old inner join only while pred is never NULL (InventorySpec pins it)
       .filter(col("support") > 0 && col("pred_cnt") > 0)
       .withColumn("precision", round(col("tp") / col("pred_cnt"), 6))
       .withColumn("recall", round(col("tp") / col("support"), 6))

@@ -2,9 +2,10 @@ package graft.operators
 
 import graft.core.{GQuery, Tables}
 import graft.functions.VectorFunctions._
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftbridge.{ColumnBridge, IvfTopBucketsExpr}
 
 /** Similarity search over the `embeddings` table (array<float>, 64-d).
   *
@@ -137,11 +138,8 @@ object Similarity {
   /** Per-row codegen'd bucket assignment against the driver-local
     * codebook (IvfTopBucketsExpr): top-`top` centroid ids by cosine,
     * ties to the smaller id. */
-  private def topBuckets(v: org.apache.spark.sql.Column,
-      code: Seq[Seq[Double]], top: Int): org.apache.spark.sql.Column =
-    org.apache.spark.sql.graftbridge.ColumnBridge.column(
-      org.apache.spark.sql.graftbridge.IvfTopBucketsExpr(
-        org.apache.spark.sql.graftbridge.ColumnBridge.expression(v), code, top))
+  private def topBuckets(v: Column, code: Seq[Seq[Double]], top: Int): Column =
+    ColumnBridge.column(IvfTopBucketsExpr(ColumnBridge.expression(v), code, top))
 
   /** (vec_id, bucket): primary (rank-1) trained-codebook assignment —
     * exposed for the bucket-balance spec; not a declared query. */

@@ -4,6 +4,7 @@ import graft.core.{GQuery, Tables}
 import graft.functions.TextFunctions._
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftbridge.{ColumnBridge, MarkerCountsExpr}
 
 /** Text-analysis inventory over the `documents` table: the reference's
   * clean_text/decode kernels (SURVEY.md §2.3 F1–F7) plus the
@@ -141,10 +142,8 @@ object TextQueries {
     // so the kernel evaluates once.
     Tables.documents(s, d)
       .select(col("doc_id"), col("lang"),
-        org.apache.spark.sql.graftbridge.ColumnBridge.column(
-          org.apache.spark.sql.graftbridge.MarkerCountsExpr(
-            org.apache.spark.sql.graftbridge.ColumnBridge.expression(col("text")),
-            Seq(enMarkers, frMarkers, esMarkers, deMarkers))).as("mc"))
+        ColumnBridge.column(MarkerCountsExpr(ColumnBridge.expression(col("text")),
+          Seq(enMarkers, frMarkers, esMarkers, deMarkers))).as("mc"))
       .select(col("doc_id"), col("lang"),
         element_at(col("mc"), 1).cast("long").as("en_n"),
         element_at(col("mc"), 2).cast("long").as("fr_n"),

@@ -47,7 +47,6 @@ class SumScaledSpec extends AnyFunSuite {
     }
     // one extra group whose values are ALL null (sum must be NULL)
     val allNull = (0 until 5).map(i => (100000L + i, groups.toLong, null: java.lang.Double))
-    import spark.implicits._
     spark.createDataFrame(data ++ allNull).toDF("id", "g", "v")
   }
 
@@ -121,7 +120,6 @@ class SumScaledSpec extends AnyFunSuite {
     // every value has |unscaled| in [0.9e18, 1e18] so consecutive adds
     // cross the carry boundary constantly, in both directions
     val rnd = new scala.util.Random(99)
-    import spark.implicits._
     val data = (0 until 4000).map { i =>
       val sign = if (rnd.nextBoolean()) 1 else -1
       (i.toLong, (i % 3).toLong, sign * (9e7 + rnd.nextDouble() * 1e7))

@@ -1,7 +1,9 @@
 package graft
 
+import graft.TextReference._
 import graft.functions.TextFunctions
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftbridge.{ColumnBridge, MarkerCountsExpr}
 import org.scalatest.funsuite.AnyFunSuite
 
 /** clean_text parity with the reference's unit-tested goldens
@@ -142,12 +144,12 @@ class TextFunctionsSpec extends AnyFunSuite {
     val messy = docs.select(concat(lit("  #Tag @user http://x.com/a?b=1 "),
       col("text"), lit(" READ!!\t")).as("text"))
     val ref = (c: org.apache.spark.sql.Column) =>
-      TextFunctions.stripHashtags(TextFunctions.stripMentions(TextFunctions.stripUrls(c)))
+      stripHashtags(stripMentions(stripUrls(c)))
     Seq(adv, docs, messy).foreach { df =>
       val bad = df.filter(not(
         TextFunctions.stripNoise(col("text")) <=> ref(col("text")) &&
         TextFunctions.stripNoiseAndPunct(col("text")) <=>
-          TextFunctions.dropPunctuation(ref(col("text")))))
+          dropPunctuation(ref(col("text")))))
       assert(bad.count() === 0L,
         bad.select(col("text"), TextFunctions.stripNoise(col("text")), ref(col("text")))
           .collect().mkString("\n").take(2000))
@@ -166,7 +168,7 @@ class TextFunctionsSpec extends AnyFunSuite {
     assert(fuzz.filter(not(
       TextFunctions.stripNoise(col("text")) <=> ref(col("text")) &&
       TextFunctions.stripNoiseAndPunct(col("text")) <=>
-        TextFunctions.dropPunctuation(ref(col("text"))))).count() === 0L)
+        dropPunctuation(ref(col("text"))))).count() === 0L)
   }
 
   test("one-pass token stats equal the size/filter/aggregate HOF spelling") {
@@ -182,8 +184,8 @@ class TextFunctionsSpec extends AnyFunSuite {
       val checked = df.select(
         TextFunctions.tokenStats3(col("text")).as("st"),
         size(toks).cast("long").as("e_n"),
-        TextFunctions.stopwordCount(toks).cast("long").as("e_stop"),
-        TextFunctions.tokenCharSum(toks).cast("long").as("e_chars"))
+        stopwordCount(toks).cast("long").as("e_stop"),
+        tokenCharSum(toks).cast("long").as("e_chars"))
       val bad = checked.filter(not(
         element_at(col("st"), 1) <=> col("e_n") &&
         element_at(col("st"), 2) <=> col("e_stop") &&
@@ -199,18 +201,16 @@ class TextFunctionsSpec extends AnyFunSuite {
   test("one-pass marker counts equal the four regexp_extract_all scans") {
     import graft.operators.TextQueries._
     val sets = Seq(enMarkers, frMarkers, esMarkers, deMarkers)
-    val mc = org.apache.spark.sql.graftbridge.ColumnBridge.column(
-      org.apache.spark.sql.graftbridge.MarkerCountsExpr(
-        org.apache.spark.sql.graftbridge.ColumnBridge.expression(col("text")), sets))
+    val mc = ColumnBridge.column(MarkerCountsExpr(ColumnBridge.expression(col("text")), sets))
     val adv = advStrings.toDF("text")
     val docs = core.Tables.documents(spark, TestSpark.sfDir).select("text")
     Seq(adv, docs).foreach { df =>
       val checked = df.select(
         mc.as("mc"),
-        TextFunctions.markerHits(col("text"), enMarkers).as("e0"),
-        TextFunctions.markerHits(col("text"), frMarkers).as("e1"),
-        TextFunctions.markerHits(col("text"), esMarkers).as("e2"),
-        TextFunctions.markerHits(col("text"), deMarkers).as("e3"))
+        markerHits(col("text"), enMarkers).as("e0"),
+        markerHits(col("text"), frMarkers).as("e1"),
+        markerHits(col("text"), esMarkers).as("e2"),
+        markerHits(col("text"), deMarkers).as("e3"))
       val bad = checked.filter(not(
         element_at(col("mc"), 1) <=> col("e0") &&
         element_at(col("mc"), 2) <=> col("e1") &&

@@ -1,0 +1,37 @@
+package graft
+
+import graft.functions.TextFunctions.{asciiPunctuation, qualityStopwords}
+import org.apache.spark.sql.Column
+import org.apache.spark.sql.functions._
+
+/** The built-in spellings the byte-scan text kernels replaced, kept as
+  * the references TextFunctionsSpec compares the kernels against. */
+object TextReference {
+
+  /** F1: strip URLs (reference src/utils.py:6). */
+  def stripUrls(c: Column): Column = regexp_replace(c, "http\\S+|www\\S+", "")
+
+  /** F2: strip @mentions (reference src/utils.py:7). */
+  def stripMentions(c: Column): Column = regexp_replace(c, "@\\w+", "")
+
+  /** F3: strip #hashtags (reference src/utils.py:8). */
+  def stripHashtags(c: Column): Column = regexp_replace(c, "#\\w+", "")
+
+  /** F4: delete ASCII punctuation (reference src/utils.py:9). */
+  def dropPunctuation(c: Column): Column = translate(c, asciiPunctuation, "")
+
+  /** Stopword hits in a token array: the filter lambda is interpreted
+    * CodegenFallback — query paths use tokenStats3 instead. */
+  def stopwordCount(toks: Column): Column =
+    size(filter(toks, t => t.isin(qualityStopwords: _*)))
+
+  /** Sum of token lengths — interpreted CodegenFallback, see
+    * tokenStats3. */
+  def tokenCharSum(toks: Column): Column =
+    aggregate(transform(toks, t => length(t)), lit(0), (acc, x) => acc + x)
+
+  /** Language-marker hit count: number of whole-word matches of any of
+    * the marker words. */
+  def markerHits(c: Column, markers: Seq[String]): Column =
+    size(regexp_extract_all(c, lit("\\b(" + markers.mkString("|") + ")\\b"), lit(0)))
+}
