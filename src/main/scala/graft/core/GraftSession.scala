@@ -24,10 +24,6 @@ object GraftSession {
       .config("spark.sql.adaptive.skewJoin.enabled", "true")
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")
-      // events.ts is parquet TIMESTAMP(MICROS) without UTC adjustment:
-      // read it as TimestampType, not the inferred TIMESTAMP_NTZ that
-      // unix_micros() rejects, so its epoch micros match DuckDB's epoch_us
-      .config("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
 
   def local(): SparkSession = {
     val s = builder().getOrCreate()

@@ -121,7 +121,9 @@ object Similarity {
     * seeded pseudo-random, scale-stable choice that plans as
     * TakeOrderedAndProject (per-partition top-k + driver merge:
     * bounded driver transfer, no corpus shuffle — the cost shape of
-    * building any broadcast relation). */
+    * building any broadcast relation). The sample `collect` is q37's one
+    * build-time Spark job per invocation, a declared cost of the query:
+    * the codebook must be trained before the index plan can be built. */
   private def trainedCentroids(s: SparkSession, emb: DataFrame): Seq[Seq[Double]] = {
     val sample = emb
       .select(col("v"), pmod(xxhash64(col("vec_id")), lit(1L << 20)).as("h"),

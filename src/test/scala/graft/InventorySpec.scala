@@ -1,12 +1,15 @@
 package graft
 
+import org.apache.spark.grafttest.ListenerBusDrain
 import org.apache.spark.sql.functions.col
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Runs every declared query at sf0.001, so a query that throws or
-  * changes its result size fails tier-1. Row counts are pinned from a
-  * Verify run of the same inventory; the rows-only queries (no SQL
-  * oracle) must also repeat exactly.
+  * changes its result size or output column types fails tier-1. Row
+  * counts are pinned from a Verify run of the same inventory, output
+  * schemas from its `df.schema.toDDL`; the rows-only queries (no SQL
+  * oracle) must also repeat exactly. Building a table or a query must
+  * launch no Spark job beyond q37's declared codebook sample.
   */
 class InventorySpec extends AnyFunSuite {
   private lazy val spark = TestSpark.spark
@@ -53,6 +56,88 @@ class InventorySpec extends AnyFunSuite {
     "q46_class_report" -> 10L,
     "q47_accuracy" -> 1L)
 
+  private val pinnedSchemas: Map[String, String] = Map(
+    "q01_pricing_summary" ->
+      "l_returnflag STRING,l_linestatus STRING,sum_qty DOUBLE,sum_base_price DOUBLE,sum_disc_price DOUBLE,sum_charge DOUBLE,avg_qty DOUBLE,avg_disc DOUBLE,count_order BIGINT NOT NULL",
+    "q02_event_histogram" ->
+      "event_type STRING,n BIGINT NOT NULL,sum_value DOUBLE",
+    "q03_topk_orders" ->
+      "o_orderkey BIGINT,o_custkey BIGINT,o_orderstatus STRING,o_totalprice DOUBLE,o_orderdate TIMESTAMP,o_orderpriority STRING",
+    "q04_filter_pushdown" ->
+      "l_orderkey BIGINT,l_linenumber INT,l_partkey BIGINT,l_quantity DOUBLE,l_extendedprice DOUBLE,l_discount DOUBLE",
+    "q05_revenue_by_nation" ->
+      "r_name STRING,n_name STRING,revenue DOUBLE,n_orders BIGINT NOT NULL",
+    "q06_parts_by_brand" ->
+      "p_brand STRING,sum_qty DOUBLE,sum_price DOUBLE,n_items BIGINT NOT NULL",
+    "q07_semi_join_big_spenders" ->
+      "c_custkey BIGINT,c_name STRING,c_mktsegment STRING",
+    "q08_anti_join_no_big_orders" ->
+      "c_custkey BIGINT,c_name STRING,c_acctbal DOUBLE",
+    "q09_top_orders_per_customer" ->
+      "o_custkey BIGINT,rn BIGINT NOT NULL,o_orderkey BIGINT,o_totalprice DOUBLE",
+    "q10_rollup_orders" ->
+      "o_orderstatus STRING,o_orderpriority STRING,n BIGINT,sum_price DOUBLE",
+    "q11_cube_events" ->
+      "event_type STRING,dow BIGINT,n BIGINT,sum_value DOUBLE",
+    "q12_distinct_flags" ->
+      "l_returnflag STRING,l_linestatus STRING",
+    "q13_except_nations" ->
+      "nationkey INT",
+    "q14_intersect_nations" ->
+      "nationkey INT",
+    "q15_pivot_flags" ->
+      "l_returnflag STRING,n_f BIGINT,n_o BIGINT",
+    "q16_above_avg_orders" ->
+      "o_orderkey BIGINT,o_custkey BIGINT,o_totalprice DOUBLE,cust_avg DOUBLE",
+    "q17_latest_event_per_user" ->
+      "user_id BIGINT,event_id BIGINT,ts_us BIGINT,event_type STRING",
+    "q18_props_sum" ->
+      "event_type STRING,sum_k BIGINT,n_k BIGINT NOT NULL",
+    "q20_clean_text" ->
+      "doc_id BIGINT,clean STRING",
+    "q21_sentiment_decode" ->
+      "doc_id BIGINT,pred BIGINT,sentiment STRING NOT NULL",
+    "q22_token_stats" ->
+      "doc_id BIGINT,n_chars BIGINT,n_tokens BIGINT,len_chars BIGINT,chars_match BOOLEAN",
+    "q23_quality_score" ->
+      "doc_id BIGINT,n_tokens BIGINT,n_stop BIGINT,char_sum BIGINT,stop_ratio DOUBLE,avg_token_len DOUBLE,quality STRING NOT NULL",
+    "q24_lang_guess" ->
+      "doc_id BIGINT,lang STRING,en_n BIGINT,fr_n BIGINT,es_n BIGINT,de_n BIGINT,guess STRING NOT NULL,hit BOOLEAN",
+    "q25_fingerprint" ->
+      "doc_id BIGINT,fp STRING",
+    "q26_binary_meta" ->
+      "doc_id BIGINT,n_bytes BIGINT,payload_md5 STRING",
+    "q30_dedup_exact" ->
+      "h STRING,keeper BIGINT,n_copies BIGINT NOT NULL",
+    "q31_dedup_prefix" ->
+      "prefix_key STRING NOT NULL,keeper BIGINT,n_docs BIGINT NOT NULL",
+    "q32_ngram_jaccard_pairs" ->
+      "a_id BIGINT,b_id BIGINT,n_inter BIGINT NOT NULL,jaccard DOUBLE",
+    "q33_minhash_lsh_pairs" ->
+      "a_id BIGINT,b_id BIGINT,jaccard DOUBLE",
+    "q34_simhash_pairs" ->
+      "a_id BIGINT,b_id BIGINT,hamming INT",
+    "q35_knn_bruteforce" ->
+      "q_id BIGINT,rank BIGINT NOT NULL,c_id BIGINT,sim DOUBLE",
+    "q36_embedding_neardup" ->
+      "a_id BIGINT,b_id BIGINT,label INT,sim DOUBLE",
+    "q37_ann_ivf" ->
+      "q_id BIGINT,rank BIGINT NOT NULL,c_id BIGINT,sim DOUBLE",
+    "q40_tumbling_hourly" ->
+      "ws TIMESTAMP,event_type STRING,n BIGINT NOT NULL,sum_value DOUBLE",
+    "q41_sliding_two_hour" ->
+      "ws TIMESTAMP,n BIGINT NOT NULL,sum_value DOUBLE",
+    "q42_sessionize" ->
+      "user_id BIGINT,sess_id BIGINT,n_events BIGINT NOT NULL,start_us BIGINT,end_us BIGINT,sum_value DOUBLE",
+    "q43_running_totals" ->
+      "user_id BIGINT,idx BIGINT NOT NULL,event_id BIGINT,ts_us BIGINT,cum_value DOUBLE",
+    "q45_confusion_matrix" ->
+      "label BIGINT,pred BIGINT,n BIGINT NOT NULL",
+    "q46_class_report" ->
+      "class BIGINT,support BIGINT,tp BIGINT,pred_cnt BIGINT,precision DOUBLE,recall DOUBLE,f1 DOUBLE",
+    "q47_accuracy" ->
+      "n_correct BIGINT,n BIGINT NOT NULL,accuracy DOUBLE")
+
   private def query(name: String) = SparkEntry.inventory.find(_.name == name).get
 
   test("every inventory query has a pinned row count") {
@@ -78,5 +163,31 @@ class InventorySpec extends AnyFunSuite {
   test("q46 class report has no NULL class") {
     val out = query("q46_class_report").fn(spark, TestSpark.sfDir)
     assert(out.filter(col("class").isNull).count() === 0L)
+  }
+
+  test("every query's output schema equals its pinned DDL") {
+    assert(SparkEntry.inventory.map(_.name).sorted === pinnedSchemas.keys.toSeq.sorted)
+    val changed = SparkEntry.inventory.map(q => q.name -> q.fn(spark, TestSpark.sfDir).schema.toDDL)
+      .filter { case (name, ddl) => ddl != pinnedSchemas(name) }
+    assert(changed.isEmpty)
+  }
+
+  test("building a table or a query launches no Spark job, except q37's codebook sample") {
+    val sc = spark.sparkContext
+    def jobsLaunchedBy(group: String)(build: => Unit): Int = {
+      sc.setJobGroup(group, group)
+      try build finally sc.clearJobGroup()
+      ListenerBusDrain.drain(sc)
+      sc.statusTracker.getJobIdsForGroup(group).length
+    }
+    val tableJobs = TablesSpec.loaders.map { case (name, load) =>
+      name -> jobsLaunchedBy(s"build-table:$name")(load(spark, TestSpark.sfDir))
+    }
+    assert(tableJobs === TablesSpec.loaders.map { case (name, _) => name -> 0 })
+    val queryJobs = SparkEntry.inventory.map { q =>
+      q.name -> jobsLaunchedBy(s"build-query:${q.name}")(q.fn(spark, TestSpark.sfDir))
+    }.toMap
+    val expected = SparkEntry.inventory.map(q => q.name -> 0).toMap + ("q37_ann_ivf" -> 1)
+    assert(queryJobs === expected)
   }
 }
