@@ -9,6 +9,20 @@ import org.apache.spark.sql.SparkSession
   * shuffles at runtime (skew join, partition coalescing), shuffle
   * parallelism is sized to cores rather than the 200 default, and
   * timestamps are pinned to UTC for oracle parity.
+  *
+  * Every session also runs [[SinglePartitionSort]] as an AQE
+  * query-stage preparation rule. Every query ends in a global
+  * `orderBy`, and most of their results are small: when a sort's whole
+  * input has a known size that AQE's partition coalescing would pack
+  * into one partition, the sort runs on that one partition instead of
+  * behind a range exchange, which saves the range-bound sampling job,
+  * the range map stage and its shuffle. The rule adds no setting of its
+  * own: its threshold is AQE's coalescing target
+  * (`spark.sql.adaptive.coalescePartitions.minPartitionSize`, or the
+  * advisory partition size when parallelism-first coalescing is off),
+  * so it fires only where the stage already ran as one task, and it is
+  * inert when AQE or partition coalescing is off. Plans that show it
+  * are the final adaptive plans (`isFinalPlan=true`).
   */
 object GraftSession {
   def defaultCpus: String = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
@@ -24,6 +38,7 @@ object GraftSession {
       .config("spark.sql.adaptive.skewJoin.enabled", "true")
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")
+      .withExtensions(_.injectQueryStagePrepRule(_ => SinglePartitionSort))
 
   def local(): SparkSession = {
     val s = builder().getOrCreate()

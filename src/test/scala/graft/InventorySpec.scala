@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.grafttest.ListenerBusDrain
 import org.apache.spark.sql.functions.col
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -8,7 +7,8 @@ import org.scalatest.funsuite.AnyFunSuite
   * changes its result size or output column types fails tier-1. Row
   * counts are pinned from a Verify run of the same inventory, output
   * schemas from its `df.schema.toDDL`; the rows-only queries (no SQL
-  * oracle) must also repeat exactly. Building a table or a query must
+  * oracle) must also repeat exactly, and in the same order at any
+  * shuffle parallelism. Building a table or a query must
   * launch no Spark job beyond q37's declared codebook sample.
   */
 class InventorySpec extends AnyFunSuite {
@@ -160,6 +160,17 @@ class InventorySpec extends AnyFunSuite {
     }
   }
 
+  test("rows-only queries give identical ordered output at shuffle partitions 1, 8 and 32") {
+    Seq("q33_minhash_lsh_pairs", "q34_simhash_pairs", "q37_ann_ivf").foreach { name =>
+      val outputs = Seq("1", "8", "32").map { n =>
+        TestSpark.withConf("spark.sql.shuffle.partitions" -> n) {
+          query(name).fn(spark, TestSpark.sfDir).collect().toSeq
+        }
+      }
+      assert(outputs.distinct.size === 1, name)
+    }
+  }
+
   test("q46 class report has no NULL class") {
     val out = query("q46_class_report").fn(spark, TestSpark.sfDir)
     assert(out.filter(col("class").isNull).count() === 0L)
@@ -173,13 +184,7 @@ class InventorySpec extends AnyFunSuite {
   }
 
   test("building a table or a query launches no Spark job, except q37's codebook sample") {
-    val sc = spark.sparkContext
-    def jobsLaunchedBy(group: String)(build: => Unit): Int = {
-      sc.setJobGroup(group, group)
-      try build finally sc.clearJobGroup()
-      ListenerBusDrain.drain(sc)
-      sc.statusTracker.getJobIdsForGroup(group).length
-    }
+    import TestSpark.jobsLaunchedBy
     val tableJobs = TablesSpec.loaders.map { case (name, load) =>
       name -> jobsLaunchedBy(s"build-table:$name")(load(spark, TestSpark.sfDir))
     }

@@ -1,6 +1,7 @@
 package graft
 
 import graft.core.GraftSession
+import org.apache.spark.grafttest.ListenerBusDrain
 import org.apache.spark.sql.SparkSession
 
 /** One shared local session for the whole forked test JVM. */
@@ -11,5 +12,26 @@ object TestSpark {
     val s = GraftSession.builder("local[8]", shufflePartitions = 8).getOrCreate()
     s.sparkContext.setLogLevel("ERROR")
     s
+  }
+
+  /** Runs `body` with `settings` on the shared session, then restores
+    * each key's earlier value, or unsets it if it had none. */
+  def withConf[T](settings: (String, String)*)(body: => T): T = {
+    val before = settings.map { case (k, _) => k -> spark.conf.getOption(k) }
+    settings.foreach { case (k, v) => spark.conf.set(k, v) }
+    try body finally before.foreach {
+      case (k, Some(v)) => spark.conf.set(k, v)
+      case (k, None) => spark.conf.unset(k)
+    }
+  }
+
+  /** Spark jobs launched by `body`, counted through a job group once the
+    * listener bus has delivered them. `group` must be unique per call. */
+  def jobsLaunchedBy(group: String)(body: => Unit): Int = {
+    val sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try body finally sc.clearJobGroup()
+    ListenerBusDrain.drain(sc)
+    sc.statusTracker.getJobIdsForGroup(group).length
   }
 }
