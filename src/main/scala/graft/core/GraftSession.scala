@@ -10,14 +10,17 @@ import org.apache.spark.sql.SparkSession
   * parallelism is sized to cores rather than the 200 default, and
   * timestamps are pinned to UTC for oracle parity.
   *
-  * Every session also runs [[SinglePartitionSort]] as an AQE
-  * query-stage preparation rule. Every query ends in a global
-  * `orderBy`, and most of their results are small: when a sort's whole
-  * input has a known size that AQE's partition coalescing would pack
-  * into one partition, the sort runs on that one partition instead of
-  * behind a range exchange, which saves the range-bound sampling job,
-  * the range map stage and its shuffle. The rule adds no setting of its
-  * own: its threshold is AQE's coalescing target
+  * Every session also runs [[SinglePartitionStages]] as an AQE
+  * query-stage preparation rule. Most queries are chains of small
+  * grouped results (aggregate, window, distinct) ending in a global
+  * `orderBy`: when the whole input of such a single-input operator's
+  * stage has a known size that AQE's partition coalescing would pack
+  * into one partition, the operator runs on that one partition instead
+  * of behind an exchange, which saves the shuffle-map job, its shuffle
+  * and, under a sort, the range-bound sampling job. Joins keep their
+  * exchanges, and so does an operator whose partitioning a join or
+  * union above it, or the query's output, relies on. The rule adds no setting of its own: its threshold is
+  * AQE's coalescing target
   * (`spark.sql.adaptive.coalescePartitions.minPartitionSize`, or the
   * advisory partition size when parallelism-first coalescing is off),
   * so it fires only where the stage already ran as one task, and it is
@@ -38,7 +41,7 @@ object GraftSession {
       .config("spark.sql.adaptive.skewJoin.enabled", "true")
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")
-      .withExtensions(_.injectQueryStagePrepRule(_ => SinglePartitionSort))
+      .withExtensions(_.injectQueryStagePrepRule(_ => SinglePartitionStages))
 
   def local(): SparkSession = {
     val s = builder().getOrCreate()

@@ -1,5 +1,7 @@
 package graft
 
+import scala.sys.process._
+import scala.util.Try
 import org.apache.spark.sql.functions.col
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -9,7 +11,10 @@ import org.scalatest.funsuite.AnyFunSuite
   * schemas from its `df.schema.toDDL`; the rows-only queries (no SQL
   * oracle) must also repeat exactly, and in the same order at any
   * shuffle parallelism. Building a table or a query must
-  * launch no Spark job beyond q37's declared codebook sample.
+  * launch no Spark job beyond q37's declared codebook sample. Where
+  * `python3` can import `duckdb` and `pandas`, every result is also
+  * replayed against its DuckDB oracle, as the correctness gate does
+  * (`graft.Verify` + `tools/check_oracle.py`).
   */
 class InventorySpec extends AnyFunSuite {
   private lazy val spark = TestSpark.spark
@@ -194,5 +199,17 @@ class InventorySpec extends AnyFunSuite {
     }.toMap
     val expected = SparkEntry.inventory.map(q => q.name -> 0).toMap + ("q37_ann_ivf" -> 1)
     assert(queryJobs === expected)
+  }
+
+  test("every query's sf0.001 result matches its DuckDB oracle") {
+    assume(Try(Seq("python3", "-c", "import duckdb, pandas").!).toOption.contains(0),
+      "python3 with duckdb and pandas is needed to replay the oracle")
+    TestSpark.withTempDir { dir =>
+      assert(Verify.dump(spark, TestSpark.sfDir, dir).isEmpty)
+      val log = new StringBuilder
+      val exit = Seq("python3", "tools/check_oracle.py", TestSpark.sfDir, dir)
+        .!(ProcessLogger(line => log.append(line).append('\n')))
+      assert(exit === 0, log.toString)
+    }
   }
 }

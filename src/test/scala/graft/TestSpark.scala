@@ -1,6 +1,8 @@
 package graft
 
+import java.nio.file.Files
 import graft.core.GraftSession
+import org.apache.commons.io.FileUtils
 import org.apache.spark.grafttest.ListenerBusDrain
 import org.apache.spark.sql.SparkSession
 
@@ -23,6 +25,12 @@ object TestSpark {
       case (k, Some(v)) => spark.conf.set(k, v)
       case (k, None) => spark.conf.unset(k)
     }
+  }
+
+  /** Runs `body` with a fresh temp directory, deleted afterwards. */
+  def withTempDir[T](body: String => T): T = {
+    val dir = Files.createTempDirectory("graft-test").toFile
+    try body(dir.getPath) finally FileUtils.deleteDirectory(dir)
   }
 
   /** Spark jobs launched by `body`, counted through a job group once the
