@@ -19,28 +19,35 @@ final case class GQuery(
 object QueryUtils {
   import org.apache.spark.sql.catalyst.expressions.{EqualTo, Expression, If, Literal}
   import org.apache.spark.sql.graftbridge._
+  import org.apache.spark.sql.types.{DoubleType, LongType}
+
+  /** `obj.<method>(d)` for a double argument, as a long. */
+  private def ofDouble(obj: AnyRef, method: String, d: Expression): Expression =
+    ColumnBridge.invoke(obj, method, LongType, Seq(d), Seq(DoubleType))
 
   /** The parse half of the exact-sum split: unscaled(cast(c →
     * DECIMAL(28,10))) as a long, or the out-of-band sentinel when the
-    * fast path does not apply. Call sites pre-project this ONCE as a
+    * fast path does not apply (`DecimalFast.unscaled18OrSentinel`;
+    * NULL stays NULL). Call sites pre-project this ONCE as a
     * named column (`withColumn("_u", unscaled18(c))`) — it is the
     * expensive node (Double.toString + digit parse), and neither
     * window update projections nor aggregate-update codegen reliably
     * CSE a subtree that several buffer expressions share (measured: 3
     * evaluations/row/input when inlined, 1 when pre-projected). */
   def unscaled18(c: Column): Column =
-    ColumnBridge.column(UnscaledOrSentinel(ColumnBridge.expression(c)))
+    ColumnBridge.column(ofDouble(DecimalFast, "unscaled18OrSentinel", ColumnBridge.expression(c)))
 
   /** (hi, lo) children for SumScaled128 from a pre-projected parse
-    * column `u` and the original double `d` (slow-branch-only). All
-    * refs are attribute/branch reads — cheap to duplicate across the
-    * aggregate's buffer-update expressions. */
+    * column `u` and the original double `d`, which only the slow split
+    * (`DecimalSum.slowHi18`/`slowLo18`, behind the sentinel check)
+    * reads. All refs are attribute/branch reads — cheap to duplicate
+    * across the aggregate's buffer-update expressions. */
   private def parts(u: Column, d: Column): (Expression, Expression) = {
     val ue = ColumnBridge.expression(u)
     val de = ColumnBridge.expression(d)
     val sent = Literal(DecimalSum.Sentinel)
-    val hi = If(EqualTo(ue, sent), SlowSplit(de, hi = true), Literal(0L))
-    val lo = If(EqualTo(ue, sent), SlowSplit(de, hi = false), ue)
+    val hi = If(EqualTo(ue, sent), ofDouble(DecimalSum, "slowHi18", de), Literal(0L))
+    val lo = If(EqualTo(ue, sent), ofDouble(DecimalSum, "slowLo18", de), ue)
     (hi, lo)
   }
 

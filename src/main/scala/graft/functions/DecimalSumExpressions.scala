@@ -1,10 +1,9 @@
 package org.apache.spark.sql.graftbridge
 
-import org.apache.spark.sql.catalyst.expressions.{Add, AttributeReference, BinaryExpression, CreateNamedStruct, EvalMode, ExpectsInputTypes, Expression, GreaterThanOrEqual, If, IsNotNull, LessThanOrEqual, Literal, Multiply, Or, Subtract, UnaryExpression}
+import org.apache.spark.sql.catalyst.expressions.{Add, AttributeReference, CreateNamedStruct, EvalMode, Expression, GreaterThanOrEqual, If, IsNotNull, LessThanOrEqual, Literal, Multiply, Or, Subtract}
 import org.apache.spark.sql.catalyst.expressions.aggregate.DeclarativeAggregate
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.trees.BinaryLike
-import org.apache.spark.sql.types.{AbstractDataType, BooleanType, DataType, Decimal, DecimalType, DoubleType, LongType, StructField, StructType}
+import org.apache.spark.sql.types.{BooleanType, DataType, Decimal, DecimalType, LongType, StructField, StructType}
 
 /** Exact decimal-sum kernel over a pair of longs.
   *
@@ -25,8 +24,12 @@ import org.apache.spark.sql.types.{AbstractDataType, BooleanType, DataType, Deci
   * splits exactly (|unscaled| < 10²⁸ → hi < 10¹⁰), and the two-long
   * window covers |sum| < ~9.2·10²⁶ — ~10× narrower than DECIMAL(38,10),
   * unreachable for this input domain, and GUARDED: the hi accumulator
-  * update is an overflow-checked add (CheckedHiAdd), so an
+  * update is an overflow-checked add (`checkedHiAdd`), so an
   * out-of-window sum throws like built-in Sum instead of wrapping.
+  * The aggregate's update and result expressions call `checkedHiAdd`
+  * and `combine` through a StaticInvoke; `QueryUtils` builds the
+  * per-row parse (`DecimalFast.unscaled18OrSentinel`) and the slow
+  * split (`slowHi18`/`slowLo18`) the same way.
   * Equivalence to `sum(cast(c as DECIMAL(28,10)))` is
   * property-proven in DecimalFastSpec (grouped, windowed, null and
   * slow-path inputs) and gated by the DuckDB oracle.
@@ -42,8 +45,13 @@ object DecimalSum {
   val Sentinel: Long = Long.MinValue
 
   /** hi part (truncated division by 10¹⁸) of unscaled(cast) for values
-    * the fast path rejected. Exact for the whole DECIMAL(28,10) domain:
-    * |unscaled| < 10²⁸ → |hi| < 10¹⁰. */
+    * the fast path rejected (rare: |d| ≥ 10⁸ and sub-2⁻²¹ magnitudes).
+    * Exact for the whole DECIMAL(28,10) domain: |unscaled| < 10²⁸ →
+    * |hi| < 10¹⁰. NaN/Inf throw here (NumberFormatException via
+    * Decimal(NaN)) where Spark's non-ANSI Cast would return NULL — a
+    * deliberate loud-failure divergence, unreachable for the benchmark
+    * domain, shared with toDec2810. Only evaluated behind a sentinel
+    * check. */
   def slowHi18(d: Double): Long =
     DecimalFast.toDec2810(d).toJavaBigDecimal.unscaledValue()
       .divide(BaseBig).longValueExact()
@@ -87,99 +95,6 @@ object DecimalSum {
     }
 }
 
-/** unscaled(Cast(d → DECIMAL(28,10))) as a bare long when the plain-
-  * notation fast parse applies (|u| ≤ 10¹⁸ by construction), else
-  * `DecimalSum.Sentinel`. The single expensive node of the split —
-  * consumers reference it from several buffer-update expressions and
-  * HashAggregate's whole-stage-codegen subexpression elimination
-  * evaluates it once per row; window call sites pre-project it as a
-  * named column instead (window update projections do not CSE).
-  */
-case class UnscaledOrSentinel(child: Expression)
-    extends UnaryExpression with ExpectsInputTypes {
-  override def inputTypes: Seq[AbstractDataType] = Seq(DoubleType)
-  override def dataType: DataType = LongType
-  override def prettyName: String = "graft_unscaled18"
-
-  override protected def nullSafeEval(input: Any): Any =
-    DecimalFast.unscaled18OrSentinel(input.asInstanceOf[Double])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev,
-      c => s"org.apache.spark.sql.graftbridge.DecimalFast.unscaled18OrSentinel($c)")
-
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
-}
-
-/** Exact hi (`hi = true`) or lo part of the decimal split for
-  * fast-path-rejected doubles (rare: |d| ≥ 10⁸ and sub-2⁻²¹
-  * magnitudes). NaN/Inf throw here (NumberFormatException via
-  * Decimal(NaN)) where Spark's non-ANSI Cast would return NULL — a
-  * deliberate loud-failure divergence, unreachable for the benchmark
-  * domain, shared with toDec2810. Only evaluated behind a sentinel
-  * check. */
-case class SlowSplit(child: Expression, hi: Boolean)
-    extends UnaryExpression with ExpectsInputTypes {
-  override def inputTypes: Seq[AbstractDataType] = Seq(DoubleType)
-  override def dataType: DataType = LongType
-  override def prettyName: String = if (hi) "graft_slow_hi18" else "graft_slow_lo18"
-
-  private def method: String = if (hi) "slowHi18" else "slowLo18"
-
-  override protected def nullSafeEval(input: Any): Any = {
-    val d = input.asInstanceOf[Double]
-    if (hi) DecimalSum.slowHi18(d) else DecimalSum.slowLo18(d)
-  }
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev,
-      c => s"org.apache.spark.sql.graftbridge.DecimalSum.$method($c)")
-
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
-}
-
-/** (long, long) → long overflow-checked hi-accumulator add
-  * (DecimalSum.checkedHiAdd) — out-of-window sums fail loudly like
-  * built-in Sum instead of wrapping. */
-case class CheckedHiAdd(left: Expression, right: Expression)
-    extends BinaryExpression with ExpectsInputTypes {
-  override def inputTypes: Seq[AbstractDataType] = Seq(LongType, LongType)
-  override def dataType: DataType = LongType
-  override def prettyName: String = "graft_checked_hi_add"
-
-  override protected def nullSafeEval(a: Any, b: Any): Any =
-    DecimalSum.checkedHiAdd(a.asInstanceOf[Long], b.asInstanceOf[Long])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, (a, b) =>
-      s"org.apache.spark.sql.graftbridge.DecimalSum.checkedHiAdd($a, $b)")
-
-  override protected def withNewChildrenInternal(
-      newLeft: Expression, newRight: Expression): Expression =
-    copy(left = newLeft, right = newRight)
-}
-
-/** (hi, lo) longs → exact DECIMAL(38,10); evaluated once per group. */
-case class CombineScaled128(left: Expression, right: Expression)
-    extends BinaryExpression with ExpectsInputTypes {
-  override def inputTypes: Seq[AbstractDataType] = Seq(LongType, LongType)
-  override def dataType: DataType = DecimalType(38, 10)
-  override def prettyName: String = "graft_combine128"
-
-  override protected def nullSafeEval(hi: Any, lo: Any): Any =
-    DecimalSum.combine(hi.asInstanceOf[Long], lo.asInstanceOf[Long])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, (hi, lo) =>
-      s"org.apache.spark.sql.graftbridge.DecimalSum.combine($hi, $lo)")
-
-  override protected def withNewChildrenInternal(
-      newLeft: Expression, newRight: Expression): Expression =
-    copy(left = newLeft, right = newRight)
-}
-
 /** Sum of exact scale-10 decimals represented as (hi, lo) long parts
   * (value = hi·10¹⁸ + lo). Buffer = (shi, slo, seen): two longs and a
   * bool — fixed-width, mutable, allocation-free in the hash-aggregate
@@ -217,6 +132,10 @@ case class SumScaled128(
 
   private def legacyAdd(a: Expression, b: Expression) = Add(a, b, EvalMode.LEGACY)
 
+  /** `DecimalSum.<method>(a, b)` over two longs. */
+  private def longs(method: String, dataType: DataType, a: Expression, b: Expression) =
+    ColumnBridge.invoke(DecimalSum, method, dataType, Seq(a, b), Seq(LongType, LongType))
+
   /** One carry-normalized accumulation step. Preconditions: |curLo| <
     * 10¹⁸ (buffer invariant) and |inLo| ≤ 10¹⁸ (parser/normalized
     * bound), so |newLo| < 2·10¹⁸ < 2⁶³ and one borrow/carry restores
@@ -230,7 +149,7 @@ case class SumScaled128(
     Seq(
       // guarded hi add: out-of-window |sum| throws instead of wrapping
       // (inner add is safe: |inHi| is in-window on both paths, |carry| ≤ 1)
-      CheckedHiAdd(curHi, legacyAdd(inHi, carry)),
+      longs("checkedHiAdd", LongType, curHi, legacyAdd(inHi, carry)),
       Subtract(newLo, Multiply(carry, base, EvalMode.LEGACY), EvalMode.LEGACY))
   }
 
@@ -253,7 +172,7 @@ case class SumScaled128(
       if (emitStruct) {
         CreateNamedStruct(Seq(Literal("hi"), shi, Literal("lo"), slo))
       } else {
-        CombineScaled128(shi, slo)
+        longs("combine", DecimalType(38, 10), shi, slo)
       },
       Literal.create(null, dataType))
 

@@ -1,14 +1,11 @@
 package org.apache.spark.sql.graftbridge
 
-import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.{ExpectsInputTypes, Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode, FalseLiteral}
-import org.apache.spark.sql.catalyst.expressions.codegen.Block._
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
-import org.apache.spark.sql.types.{AbstractDataType, ArrayType, DataType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
 
-/** Word n-gram shingles over a token array, as one tight JVM loop.
+/** Word n-gram shingles over a token array, as one tight JVM loop,
+  * called from generated code through a StaticInvoke
+  * (`TextFunctions.wordShingles`).
   *
   * The higher-order-function spelling
   * (`when(size(t) >= n, transform(sequence(1, size(t)-n+1),
@@ -16,56 +13,18 @@ import org.apache.spark.unsafe.types.UTF8String
   * CodegenFallback: every shingle is an interpreted sub-tree walk
   * (sequence element → lambda bind → n element_at calls → concat_ws),
   * measured at ~2.7 s per evaluation over just 500 docs — and the
-  * dedup queries evaluate it up to four times per plan. This
-  * expression produces the identical array (same strings, same order,
-  * concat_ws null-skipping included; size < n and NULL input both
-  * yield the empty array exactly like the when/otherwise wrapper) in
-  * one codegen'd call per row.
+  * dedup queries evaluate it up to four times per plan. This kernel
+  * produces the identical array (same strings, same order, concat_ws
+  * null-skipping included; size < n and NULL input both yield the
+  * empty array exactly like the when/otherwise wrapper) in one call
+  * per row.
   */
-case class WordShinglesExpr(child: Expression, n: Int)
-    extends UnaryExpression with ExpectsInputTypes {
-  require(n >= 1, "shingle size must be >= 1")
-
-  override def inputTypes: Seq[AbstractDataType] = Seq(ArrayType(StringType))
-
-  override def dataType: DataType = ArrayType(StringType, containsNull = false)
-
-  /** NULL input maps to the empty array (the wrapper's `otherwise`). */
-  override def nullable: Boolean = false
-
-  override def prettyName: String = "graft_word_shingles"
-
-  override def eval(input: InternalRow): Any = {
-    val v = child.eval(input)
-    if (v == null) ShingleUtil.empty()
-    else ShingleUtil.shingles(v.asInstanceOf[ArrayData], n)
-  }
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val c = child.genCode(ctx)
-    val util = "org.apache.spark.sql.graftbridge.ShingleUtil"
-    ev.copy(
-      code = code"""
-        ${c.code}
-        org.apache.spark.sql.catalyst.util.ArrayData ${ev.value} =
-          ${c.isNull} ? $util.empty() : $util.shingles(${c.value}, $n);
-      """,
-      isNull = FalseLiteral)
-  }
-
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
-}
-
-/** Static helpers callable from generated code (Scala emits static
-  * forwarders for object methods). */
 object ShingleUtil {
   private val Sep = UTF8String.fromString(" ")
   private val Empty = new GenericArrayData(Array.empty[Any])
 
-  def empty(): ArrayData = Empty
-
   def shingles(toks: ArrayData, n: Int): ArrayData = {
+    if (toks == null) return Empty
     val m = toks.numElements()
     if (m < n) return Empty
     val out = new Array[Any](m - n + 1)

@@ -1,10 +1,8 @@
 package org.apache.spark.sql.graftbridge
 
-import org.apache.spark.sql.catalyst.expressions.{ExpectsInputTypes, Expression, Murmur3HashFunction, UnaryExpression, XxHash64Function}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
+import org.apache.spark.sql.catalyst.expressions.{Expression, Murmur3HashFunction, UnsafeArrayData, XxHash64Function}
 import org.apache.spark.sql.catalyst.util.ArrayData
-import org.apache.spark.sql.catalyst.expressions.UnsafeArrayData
-import org.apache.spark.sql.types.{AbstractDataType, ArrayType, DataType, LongType, StringType}
+import org.apache.spark.sql.types.{ArrayType, LongType, StringType}
 
 /** Per-document signature kernels for the near-dup operators.
   *
@@ -13,9 +11,11 @@ import org.apache.spark.sql.types.{AbstractDataType, ArrayType, DataType, LongTy
   * (explode → groupBy(doc_id) → 32 min / 64 conditional-sum slots)
   * materializes a row per token, hashes it through the aggregate map,
   * and pays a doc-keyed exchange — a corpus-wide shuffle at scale for
-  * what is semantically a map. These expressions compute the identical
-  * signature in one codegen'd loop per row, so the signature stage
-  * becomes scan → project with NO shuffle at any scale.
+  * what is semantically a map. These kernels compute the identical
+  * signature in one loop per row, called from generated code through
+  * a StaticInvoke (MinHashSigExpr, SimHash64Expr below), so the
+  * signature stage becomes scan → project with NO shuffle at any
+  * scale.
   *
   * Hash parity: the per-element hashes call the same
   * Murmur3HashFunction / XxHash64Function entry points (seed 42) that
@@ -93,38 +93,16 @@ object SignatureUtil {
   }
 }
 
-/** array<string> shingles → array<long>(32) MinHash signature. */
-case class MinHashSigExpr(child: Expression)
-    extends UnaryExpression with ExpectsInputTypes {
-  override def inputTypes: Seq[AbstractDataType] = Seq(ArrayType(StringType))
-  override def dataType: DataType = ArrayType(LongType, containsNull = false)
-  override def prettyName: String = "graft_minhash32"
-
-  override protected def nullSafeEval(input: Any): Any =
-    SignatureUtil.minhash(input.asInstanceOf[ArrayData])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev,
-      c => s"org.apache.spark.sql.graftbridge.SignatureUtil.minhash($c)")
-
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
+/** array<string> shingles → array<long>(32) MinHash signature
+  * (SignatureUtil.minhash). */
+object MinHashSigExpr {
+  def apply(child: Expression): Expression =
+    ColumnBridge.invoke(SignatureUtil, "minhash", ArrayType(LongType, containsNull = false),
+      Seq(child), Seq(ArrayType(StringType)))
 }
 
-/** array<string> tokens → 64-bit SimHash signature. */
-case class SimHash64Expr(child: Expression)
-    extends UnaryExpression with ExpectsInputTypes {
-  override def inputTypes: Seq[AbstractDataType] = Seq(ArrayType(StringType))
-  override def dataType: DataType = LongType
-  override def prettyName: String = "graft_simhash64"
-
-  override protected def nullSafeEval(input: Any): Any =
-    SignatureUtil.simhash(input.asInstanceOf[ArrayData])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev,
-      c => s"org.apache.spark.sql.graftbridge.SignatureUtil.simhash($c)")
-
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
+/** array<string> tokens → 64-bit SimHash signature (SignatureUtil.simhash). */
+object SimHash64Expr {
+  def apply(child: Expression): Expression =
+    ColumnBridge.invoke(SignatureUtil, "simhash", LongType, Seq(child), Seq(ArrayType(StringType)))
 }

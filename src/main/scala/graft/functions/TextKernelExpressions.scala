@@ -1,13 +1,16 @@
 package org.apache.spark.sql.graftbridge
 
-import org.apache.spark.sql.catalyst.expressions.{ExpectsInputTypes, Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
+import graft.functions.TextFunctions
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
-import org.apache.spark.sql.types.{AbstractDataType, ArrayType, DataType, IntegerType, StringType}
 import org.apache.spark.unsafe.Platform
 import org.apache.spark.unsafe.types.UTF8String
 
 /** Byte-scan text kernels replacing per-row java.util.regex passes.
+  * Each public method is one kernel, called from generated code through
+  * a StaticInvoke (`ColumnBridge.invoke`, built in `TextFunctions`).
+  * A kernel's plan-time table (punctuation, stopwords, marker words) is
+  * a constant here, built from the list in `TextFunctions` that the
+  * oracle SQL also reads.
   *
   * The tokenizer and marker counter below are exact re-implementations
   * of regex spellings whose character classes are pure ASCII (java
@@ -74,7 +77,7 @@ object TextKernelUtil {
 
   /** Compile marker sets into (packed word, set index) arrays. Words
     * must be ASCII \w+ and pairwise distinct across sets. */
-  def compile(sets: Seq[Seq[String]]): (Array[Long], Array[Int], Int) = {
+  private def compile(sets: Seq[Seq[String]]): (Array[Long], Array[Int], Int) = {
     val words = new scala.collection.mutable.ArrayBuffer[Long]
     val idx = new scala.collection.mutable.ArrayBuffer[Int]
     sets.zipWithIndex.foreach { case (set, si) =>
@@ -101,8 +104,10 @@ object TextKernelUtil {
     * times — except that char_sum accumulates in a long where the HOF's
     * int accumulator would overflow-throw under ANSI (needs a single
     * document of ≥ 2³¹ chars; unreachable, and wider-exact is the safe
-    * direction). Property-proven equal in TextFunctionsSpec. */
-  def tokenStats(s: UTF8String, stopPacked: Array[Long]): ArrayData = {
+    * direction). Property-proven equal in TextFunctionsSpec. The
+    * stopwords are `TextFunctions.qualityStopwords`. */
+  def tokenStats(s: UTF8String): ArrayData = {
+    val stopPacked = QualityStop
     val base = s.getBaseObject
     val off = s.getBaseOffset
     val n = s.numBytes
@@ -148,7 +153,7 @@ object TextKernelUtil {
     * character deletions over the noise-stripped stream. Bytes ≥ 0x80
     * (multi-byte UTF-8) index the upper half, which is always false —
     * translate passes non-mapped characters through. */
-  def punctTable(chars: String): Array[Boolean] = {
+  private def punctTable(chars: String): Array[Boolean] = {
     val t = new Array[Boolean](256)
     chars.foreach { c => require(c < 128, s"non-ASCII punct '$c'"); t(c) = true }
     t
@@ -177,7 +182,14 @@ object TextKernelUtil {
     *  - pass 3 runs AFTER pass 2, so text joined by a hashtag deletion
     *    is never re-examined for mentions ("@#x" → "@"), which the
     *    left-to-right single scan reproduces for free. */
-  def stripNoise(s: UTF8String, drop: Array[Boolean]): UTF8String = {
+  def stripNoise(s: UTF8String): UTF8String = strip(s, NoDrop)
+
+  /** stripNoise fused with the translate-delete of
+    * `TextFunctions.asciiPunctuation`: a dropped byte is just not
+    * emitted (see punctTable). */
+  def stripNoisePunct(s: UTF8String): UTF8String = strip(s, PunctDrop)
+
+  private def strip(s: UTF8String, drop: Array[Boolean]): UTF8String = {
     val base = s.getBaseObject
     val off = s.getBaseOffset
     val n = s.numBytes
@@ -225,7 +237,12 @@ object TextKernelUtil {
     UTF8String.fromBytes(out, 0, o)
   }
 
-  private[graftbridge] val NoDrop: Array[Boolean] = new Array[Boolean](256)
+  // the plan-time tables; building them validates the lists (ASCII
+  // punctuation, 1..7-byte words, disjoint marker sets)
+  private val NoDrop: Array[Boolean] = new Array[Boolean](256)
+  private val PunctDrop: Array[Boolean] = punctTable(TextFunctions.asciiPunctuation)
+  private val QualityStop: Array[Long] = compile(Seq(TextFunctions.qualityStopwords))._1
+  private val (markerWords, markerSet, markerSets) = compile(TextFunctions.langMarkers)
 
   /** java.util.regex \b neighbor test: the default (non-UNICODE_
     * CHARACTER_CLASS) Bound node treats '_' and any Unicode
@@ -262,9 +279,12 @@ object TextKernelUtil {
     * scan: a \b(w)\b match is precisely a maximal \w-run equal to w
     * whose neighboring code points are not java-\b word characters
     * (the trailing \b rejects prefix matches, runs are disjoint so
-    * counts are independent across disjoint sets). */
-  def markerCounts(s: UTF8String, words: Array[Long], setIdx: Array[Int],
-      nSets: Int): ArrayData = {
+    * counts are independent across disjoint sets). The sets are
+    * `TextFunctions.langMarkers`, counted in their order. */
+  def langMarkerCounts(s: UTF8String): ArrayData = {
+    val words = markerWords
+    val setIdx = markerSet
+    val nSets = markerSets
     val base = s.getBaseObject
     val off = s.getBaseOffset
     val n = s.numBytes
@@ -299,107 +319,4 @@ object TextKernelUtil {
     while (c < nSets) { out(c) = counts(c); c += 1 }
     new GenericArrayData(out)
   }
-}
-
-/** string → string: the URL/mention/hashtag deletions of clean_text in
-  * one byte scan; `dropChars` optionally fuses the subsequent
-  * translate-delete pass into the same scan at zero cost (see
-  * TextKernelUtil.stripNoise). */
-case class StripNoiseExpr(child: Expression, dropChars: String = "")
-    extends UnaryExpression with ExpectsInputTypes {
-  override def inputTypes: Seq[AbstractDataType] = Seq(StringType)
-  override def dataType: DataType = StringType
-  override def prettyName: String = "graft_strip_noise"
-
-  // eager: non-ASCII drop chars must fail at plan construction
-  private val drop: Array[Boolean] =
-    if (dropChars.isEmpty) TextKernelUtil.NoDrop
-    else TextKernelUtil.punctTable(dropChars)
-
-  override protected def nullSafeEval(input: Any): Any =
-    TextKernelUtil.stripNoise(input.asInstanceOf[UTF8String], drop)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val dropRef = ctx.addReferenceObj("dropChars", drop, "boolean[]")
-    defineCodeGen(ctx, ev,
-      c => s"org.apache.spark.sql.graftbridge.TextKernelUtil.stripNoise($c, $dropRef)")
-  }
-
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
-}
-
-/** string → array<long> [n_tokens, n_stop, char_sum]: everything q23's
-  * three per-doc token statistics need, in ONE byte scan with NO token
-  * array materialized (see TextKernelUtil.tokenStats). */
-case class TokenStatsExpr(child: Expression, stopwords: Seq[String])
-    extends UnaryExpression with ExpectsInputTypes {
-  override def inputTypes: Seq[AbstractDataType] = Seq(StringType)
-  override def dataType: DataType =
-    ArrayType(org.apache.spark.sql.types.LongType, containsNull = false)
-  override def prettyName: String = "graft_token_stats"
-
-  // eager validation: a bad stopword list must fail at plan time, not
-  // per task at first evaluation
-  private val packed: Array[Long] = TextKernelUtil.compile(Seq(stopwords))._1
-
-  override protected def nullSafeEval(input: Any): Any =
-    TextKernelUtil.tokenStats(input.asInstanceOf[UTF8String], packed)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val stopRef = ctx.addReferenceObj("stopWords", packed, "long[]")
-    defineCodeGen(ctx, ev, c =>
-      s"org.apache.spark.sql.graftbridge.TextKernelUtil.tokenStats($c, $stopRef)")
-  }
-
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
-}
-
-/** string → array<string> whitespace tokens (split(pyStrip(c), "\s+")
-  * parity, see TextKernelUtil.wsTokens). */
-case class WsTokensExpr(child: Expression)
-    extends UnaryExpression with ExpectsInputTypes {
-  override def inputTypes: Seq[AbstractDataType] = Seq(StringType)
-  override def dataType: DataType = ArrayType(StringType, containsNull = false)
-  override def prettyName: String = "graft_ws_tokens"
-
-  override protected def nullSafeEval(input: Any): Any =
-    TextKernelUtil.wsTokens(input.asInstanceOf[UTF8String])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev,
-      c => s"org.apache.spark.sql.graftbridge.TextKernelUtil.wsTokens($c)")
-
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
-}
-
-/** string → array<int> of whole-word marker-set hit counts, one scan
-  * over the text for all sets. */
-case class MarkerCountsExpr(child: Expression, sets: Seq[Seq[String]])
-    extends UnaryExpression with ExpectsInputTypes {
-  override def inputTypes: Seq[AbstractDataType] = Seq(StringType)
-  override def dataType: DataType = ArrayType(IntegerType, containsNull = false)
-  override def prettyName: String = "graft_marker_counts"
-
-  // eager: a marker list violating the pack/disjointness constraints
-  // must fail at plan construction, not per task at first evaluation
-  private val compiled = TextKernelUtil.compile(sets)
-
-  override protected def nullSafeEval(input: Any): Any = {
-    val (w, si, n) = compiled
-    TextKernelUtil.markerCounts(input.asInstanceOf[UTF8String], w, si, n)
-  }
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val (w, si, n) = compiled
-    val wordsRef = ctx.addReferenceObj("markerWords", w, "long[]")
-    val idxRef = ctx.addReferenceObj("markerSetIdx", si, "int[]")
-    defineCodeGen(ctx, ev, c =>
-      s"org.apache.spark.sql.graftbridge.TextKernelUtil.markerCounts($c, $wordsRef, $idxRef, $n)")
-  }
-
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
 }

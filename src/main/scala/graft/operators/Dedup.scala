@@ -137,10 +137,10 @@ object Dedup {
   private val Bands = 8
   private val RowsPerBand = MinhashFuncs / Bands
 
-  /** Per-doc 32-slot MinHash signature, computed by the codegen'd
-    * per-row kernel (SignatureUtil.minhash: same murmur3 shingle
-    * hashes folded into [0, p), same affine (a_i·h + b_i) mod p mins —
-    * DedupSpec proves equality with the aggregate spelling). The
+  /** Per-doc 32-slot MinHash signature, computed by the per-row
+    * kernel (MinHashSigExpr → SignatureUtil.minhash: same murmur3
+    * shingle hashes folded into [0, p), same affine (a_i·h + b_i) mod p
+    * mins — DedupSpec proves equality with the aggregate spelling). The
     * signature stage is a pure scan → project: the aggregate spelling
     * paid an explode (a row per shingle) plus a doc-keyed exchange —
     * a corpus-wide shuffle at scale for what is a map. Docs with no
@@ -226,8 +226,8 @@ object Dedup {
   }
 
   /** SimHash: 64-bit signature — per-token xxhash64-derived bits,
-    * summed ±1 per bit position, sign → bit — computed by the
-    * codegen'd per-row kernel (SignatureUtil.simhash; DedupSpec proves
+    * summed ±1 per bit position, sign → bit — computed by the per-row
+    * kernel (SimHash64Expr → SignatureUtil.simhash; DedupSpec proves
     * equality with the 64-conditional-sum aggregate spelling). Pure
     * scan → project: no explode, no doc-keyed exchange at any scale.
     * Docs with no tokens are filtered, exactly as explode dropped

@@ -4,7 +4,6 @@ import graft.core.{GQuery, Tables}
 import graft.functions.TextFunctions._
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.graftbridge.{ColumnBridge, MarkerCountsExpr}
 
 /** Text-analysis inventory over the `documents` table: the reference's
   * clean_text/decode kernels (SURVEY.md §2.3 F1–F7) plus the
@@ -27,7 +26,7 @@ object TextQueries {
   private val messySqlSuffix = "' READ!!' || chr(9)"
 
   /** Python string.punctuation with the single quote doubled for SQL. */
-  private val punctSql = """!"#$%&''()*+,-./:;<=>?@[\]^_`{|}~"""
+  private val punctSql = asciiPunctuation.replace("'", "''")
 
   /** F1–F5 chain (reference src/utils.py:5-10). */
   def cleanTextQuery(s: SparkSession, d: String): DataFrame =
@@ -85,7 +84,7 @@ object TextQueries {
   /** Quality scoring: stopword ratio, mean token length, bucketing —
     * the length/punct/stopword heuristics of a pretraining filter. */
   def qualityScore(s: SparkSession, d: String): DataFrame = {
-    // ALL three stats in one byte-scan kernel (TokenStatsExpr): the
+    // ALL three stats in one byte-scan kernel (tokenStats3): the
     // r21 spelling tokenized once but then walked the token array
     // three more times, two of them through interpreted CodegenFallback
     // lambdas (filter/aggregate HOFs) — the last interpreted
@@ -128,22 +127,11 @@ object TextQueries {
 
   /** Language guess via marker-word hit counts (n-gram heuristic
     * lang-ID — deterministic argmax with a fixed tie order). */
-  val enMarkers = Seq("the", "and", "of", "to", "is")
-  val frMarkers = Seq("le", "la", "les", "et", "des")
-  val esMarkers = Seq("el", "los", "las", "de", "y")
-  val deMarkers = Seq("der", "die", "das", "und", "ist")
-
   def langGuess(s: SparkSession, d: String): DataFrame =
-    // all four marker counts in ONE byte-scan pass (MarkerCountsExpr):
-    // the regexp_extract_all spelling ran four full-text regex scans
-    // per row. Whole-word counts are identical (the sets are disjoint
-    // and a \b(w)\b match is exactly a maximal \w-run equal to w —
-    // TextFunctionsSpec proves equality per set). Two-level projection
-    // so the kernel evaluates once.
+    // all four marker counts in ONE byte-scan pass (markerCounts).
+    // Two-level projection so the kernel evaluates once.
     Tables.documents(s, d)
-      .select(col("doc_id"), col("lang"),
-        ColumnBridge.column(MarkerCountsExpr(ColumnBridge.expression(col("text")),
-          Seq(enMarkers, frMarkers, esMarkers, deMarkers))).as("mc"))
+      .select(col("doc_id"), col("lang"), markerCounts(col("text")).as("mc"))
       .select(col("doc_id"), col("lang"),
         element_at(col("mc"), 1).cast("long").as("en_n"),
         element_at(col("mc"), 2).cast("long").as("fr_n"),

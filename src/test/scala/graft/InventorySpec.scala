@@ -6,11 +6,12 @@ import org.apache.spark.sql.functions.col
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Runs every declared query at sf0.001, so a query that throws or
-  * changes its result size or output column types fails tier-1. Row
-  * counts are pinned from a Verify run of the same inventory, output
-  * schemas from its `df.schema.toDDL`; the rows-only queries (no SQL
-  * oracle) must also repeat exactly, and in the same order at any
-  * shuffle parallelism. Building a table or a query must
+  * changes its result size, its number of Spark jobs or its output
+  * column types fails tier-1. Row counts are pinned from a Verify run
+  * of the same inventory, job counts from a collect on this session,
+  * output schemas from its `df.schema.toDDL`; the rows-only queries
+  * (no SQL oracle) must also repeat exactly, and in the same order at
+  * any shuffle parallelism. Building a table or a query must
   * launch no Spark job beyond q37's declared codebook sample. Where
   * `python3` can import `duckdb` and `pandas`, every result is also
   * replayed against its DuckDB oracle, as the correctness gate does
@@ -19,47 +20,48 @@ import org.scalatest.funsuite.AnyFunSuite
 class InventorySpec extends AnyFunSuite {
   private lazy val spark = TestSpark.spark
 
-  private val pinnedRows: Map[String, Long] = Map(
-    "q01_pricing_summary" -> 6L,
-    "q02_event_histogram" -> 5L,
-    "q03_topk_orders" -> 10L,
-    "q04_filter_pushdown" -> 225L,
-    "q05_revenue_by_nation" -> 25L,
-    "q06_parts_by_brand" -> 25L,
-    "q07_semi_join_big_spenders" -> 93L,
-    "q08_anti_join_no_big_orders" -> 57L,
-    "q09_top_orders_per_customer" -> 449L,
-    "q10_rollup_orders" -> 19L,
-    "q11_cube_events" -> 48L,
-    "q12_distinct_flags" -> 6L,
-    "q13_except_nations" -> 15L,
-    "q14_intersect_nations" -> 10L,
-    "q15_pivot_flags" -> 3L,
-    "q16_above_avg_orders" -> 754L,
-    "q17_latest_event_per_user" -> 15L,
-    "q18_props_sum" -> 5L,
-    "q20_clean_text" -> 500L,
-    "q21_sentiment_decode" -> 500L,
-    "q22_token_stats" -> 500L,
-    "q23_quality_score" -> 500L,
-    "q24_lang_guess" -> 500L,
-    "q25_fingerprint" -> 500L,
-    "q26_binary_meta" -> 500L,
-    "q30_dedup_exact" -> 500L,
-    "q31_dedup_prefix" -> 476L,
-    "q32_ngram_jaccard_pairs" -> 28L,
-    "q33_minhash_lsh_pairs" -> 28L,
-    "q34_simhash_pairs" -> 7320L,
-    "q35_knn_bruteforce" -> 50L,
-    "q36_embedding_neardup" -> 14L,
-    "q37_ann_ivf" -> 50L,
-    "q40_tumbling_hourly" -> 868L,
-    "q41_sliding_two_hour" -> 664L,
-    "q42_sessionize" -> 946L,
-    "q43_running_totals" -> 1000L,
-    "q45_confusion_matrix" -> 99L,
-    "q46_class_report" -> 10L,
-    "q47_accuracy" -> 1L)
+  /** (rows, execution jobs) of each query's collect at sf0.001. */
+  private val pinned: Map[String, (Long, Int)] = Map(
+    "q01_pricing_summary" -> (6L, 1),
+    "q02_event_histogram" -> (5L, 1),
+    "q03_topk_orders" -> (10L, 1),
+    "q04_filter_pushdown" -> (225L, 1),
+    "q05_revenue_by_nation" -> (25L, 5),
+    "q06_parts_by_brand" -> (25L, 2),
+    "q07_semi_join_big_spenders" -> (93L, 2),
+    "q08_anti_join_no_big_orders" -> (57L, 2),
+    "q09_top_orders_per_customer" -> (449L, 1),
+    "q10_rollup_orders" -> (19L, 1),
+    "q11_cube_events" -> (48L, 1),
+    "q12_distinct_flags" -> (6L, 1),
+    "q13_except_nations" -> (15L, 2),
+    "q14_intersect_nations" -> (10L, 2),
+    "q15_pivot_flags" -> (3L, 1),
+    "q16_above_avg_orders" -> (754L, 1),
+    "q17_latest_event_per_user" -> (15L, 1),
+    "q18_props_sum" -> (5L, 1),
+    "q20_clean_text" -> (500L, 1),
+    "q21_sentiment_decode" -> (500L, 1),
+    "q22_token_stats" -> (500L, 1),
+    "q23_quality_score" -> (500L, 1),
+    "q24_lang_guess" -> (500L, 1),
+    "q25_fingerprint" -> (500L, 1),
+    "q26_binary_meta" -> (500L, 1),
+    "q30_dedup_exact" -> (500L, 1),
+    "q31_dedup_prefix" -> (476L, 1),
+    "q32_ngram_jaccard_pairs" -> (28L, 3),
+    "q33_minhash_lsh_pairs" -> (28L, 6),
+    "q34_simhash_pairs" -> (7320L, 3),
+    "q35_knn_bruteforce" -> (50L, 2),
+    "q36_embedding_neardup" -> (14L, 3),
+    "q37_ann_ivf" -> (50L, 2),
+    "q40_tumbling_hourly" -> (868L, 1),
+    "q41_sliding_two_hour" -> (664L, 1),
+    "q42_sessionize" -> (946L, 1),
+    "q43_running_totals" -> (1000L, 1),
+    "q45_confusion_matrix" -> (99L, 1),
+    "q46_class_report" -> (10L, 1),
+    "q47_accuracy" -> (1L, 1))
 
   private val pinnedSchemas: Map[String, String] = Map(
     "q01_pricing_summary" ->
@@ -146,7 +148,7 @@ class InventorySpec extends AnyFunSuite {
   private def query(name: String) = SparkEntry.inventory.find(_.name == name).get
 
   test("every inventory query has a pinned row count") {
-    assert(SparkEntry.inventory.map(_.name).sorted === pinnedRows.keys.toSeq.sorted)
+    assert(SparkEntry.inventory.map(_.name).sorted === pinned.keys.toSeq.sorted)
   }
 
   SparkEntry.inventory.foreach { q =>
@@ -154,8 +156,18 @@ class InventorySpec extends AnyFunSuite {
       // collect, not count(): count() lets Catalyst prune the columns a
       // runtime failure would come from
       val rows = q.fn(spark, TestSpark.sfDir).collect()
-      assert(rows.length.toLong === pinnedRows(q.name))
+      assert(rows.length.toLong === pinned(q.name)._1)
     }
+  }
+
+  test("every query launches its pinned number of execution jobs at sf0.001") {
+    // a lost fusion or a new exchange shows here without any timing;
+    // the query is built outside the count (q37's codebook sample)
+    val jobs = SparkEntry.inventory.map { q =>
+      val df = q.fn(spark, TestSpark.sfDir)
+      q.name -> TestSpark.jobsLaunchedBy(s"exec-jobs:${q.name}")(df.collect())
+    }.toMap
+    assert(jobs === pinned.map { case (name, (_, n)) => name -> n })
   }
 
   test("rows-only queries give identical sorted output on two executions") {

@@ -3,7 +3,6 @@ package graft
 import graft.TextReference._
 import graft.functions.TextFunctions
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.graftbridge.{ColumnBridge, MarkerCountsExpr}
 import org.scalatest.funsuite.AnyFunSuite
 
 /** clean_text parity with the reference's unit-tested goldens
@@ -55,7 +54,7 @@ class TextFunctionsSpec extends AnyFunSuite {
   }
 
   test("codegen'd word shingles equal the HOF spelling over the corpus") {
-    // the optimized WordShinglesExpr must reproduce the original
+    // the ShingleUtil.shingles kernel must reproduce the original
     // transform/sequence/element_at/concat_ws chain element-for-element
     def hofShingles(toks: org.apache.spark.sql.Column, n: Int) =
       when(size(toks) >= n,
@@ -199,9 +198,8 @@ class TextFunctionsSpec extends AnyFunSuite {
   }
 
   test("one-pass marker counts equal the four regexp_extract_all scans") {
-    import graft.operators.TextQueries._
-    val sets = Seq(enMarkers, frMarkers, esMarkers, deMarkers)
-    val mc = ColumnBridge.column(MarkerCountsExpr(ColumnBridge.expression(col("text")), sets))
+    import TextFunctions.{deMarkers, enMarkers, esMarkers, frMarkers}
+    val mc = TextFunctions.markerCounts(col("text"))
     val adv = advStrings.toDF("text")
     val docs = core.Tables.documents(spark, TestSpark.sfDir).select("text")
     Seq(adv, docs).foreach { df =>
