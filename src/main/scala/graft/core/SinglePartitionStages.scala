@@ -1,13 +1,17 @@
 package graft.core
 
-import org.apache.spark.sql.catalyst.plans.physical.{BroadcastDistribution, HashPartitioning,
-  PartitioningCollection, SinglePartition, UnspecifiedDistribution}
+import org.apache.spark.sql.catalyst.optimizer.{BuildLeft, BuildRight, BuildSide}
+import org.apache.spark.sql.catalyst.plans.InnerLike
+import org.apache.spark.sql.catalyst.plans.physical.{AllTuples, BroadcastDistribution,
+  HashPartitioning, PartitioningCollection, SinglePartition, UnspecifiedDistribution}
 import org.apache.spark.sql.catalyst.rules.Rule
 import org.apache.spark.sql.execution.{CoalesceExec, FileSourceScanExec, SortExec, SparkPlan,
   UnaryExecNode}
 import org.apache.spark.sql.execution.adaptive.{BroadcastQueryStageExec, ShuffleQueryStageExec}
-import org.apache.spark.sql.execution.exchange.{ENSURE_REQUIREMENTS, Exchange, REPARTITION_BY_NUM,
-  ShuffleExchangeExec}
+import org.apache.spark.sql.execution.exchange.{BroadcastExchangeExec, ENSURE_REQUIREMENTS,
+  Exchange, REPARTITION_BY_NUM, ShuffleExchangeExec}
+import org.apache.spark.sql.execution.joins.{BroadcastHashJoinExec, BroadcastNestedLoopJoinExec,
+  CartesianProductExec, ShuffledHashJoinExec}
 import org.apache.spark.sql.internal.SQLConf
 
 /** AQE query-stage preparation rule: a single-input operator whose whole
@@ -18,15 +22,31 @@ import org.apache.spark.sql.internal.SQLConf
   * aggregate or a global sort. When its child is the exchange
   * `EnsureRequirements` added (possibly under the local sort it adds
   * too), that exchange becomes `CoalesceExec(1)`, whose `SinglePartition`
-  * satisfies the consumer: the same rows, with no shuffle-map stage, no
-  * shuffle and, under a sort, no `RangePartitioner` sampling job. The
+  * satisfies the consumer, or goes when the stage below already declares
+  * one partition: the same rows, with no shuffle-map stage, no shuffle
+  * and, under a sort, no `RangePartitioner` sampling job. The
   * rule runs bottom-up, so a chain of small stages (scan, partial
   * aggregate, final aggregate, sort) becomes one job of one task.
   *
-  * The gate: every input of the stage under the exchange has a known
-  * size, and their sum fits in the one partition that
-  * `CoalesceShufflePartitions` would pack it into, so the stage already
-  * ran as one task. Known sizes are:
+  * Joins: a broadcast join whose broadcast has not run yet, and whose two
+  * sides fit one partition together, runs in its consumer's one task
+  * too. A broadcast hash join becomes a shuffled hash join with the
+  * same keys, join type, build side and condition, and an inner or
+  * cross broadcast nested-loop join becomes a cartesian product with
+  * the same condition, each over one partition per side
+  * (`CoalesceExec(1)` where a side does not declare one already). That
+  * saves the broadcast job, its driver-side collect and the broadcast
+  * relation, and neither side is shuffled. An explicit `broadcast(...)`
+  * hint is a choice of strategy, not a request for partitioning, so the
+  * rule overrides it as it would Spark's own size-based choice. Two
+  * broadcast joins always stay: a null-aware anti join (`NOT IN`), which
+  * `ShuffledHashJoinExec` has no mode for, and an outer, semi or anti
+  * nested-loop join, as `CartesianProductExec` is inner only.
+  *
+  * The gate: every input of the stage under the exchange (or of both
+  * sides of the join) has a known size, and their sum fits in the one
+  * partition that `CoalesceShufflePartitions` would pack it into, so the
+  * stage already ran as one task. Known sizes are:
   *  - a materialized shuffle stage: its map output bytes; not one a
   *    user's `repartition(n)` wrote, which AQE does not coalesce;
   *  - a broadcast stage: 0, as it does not set the stage's task count;
@@ -44,16 +64,18 @@ import org.apache.spark.sql.internal.SQLConf
   * AQE re-applies the rule each time a stage materializes.
   *
   * The rewrite also changes the consumer's own output partitioning, and
-  * an aggregate or window reports its child's: a join above it may have
-  * had no exchange of its own on that side, counting on the other side
-  * being hash partitioned the same way. So the rule walks the plan from
-  * the root and rewrites only consumers whose partitioning no ancestor
+  * an aggregate or window reports its child's, as a broadcast join
+  * reports its stream side's: a join above it may have had no exchange
+  * of its own on that side, counting on the other side being hash
+  * partitioned the same way. So the rule walks the plan from the root
+  * and rewrites only consumers and joins whose partitioning no ancestor
   * relies on: a path to the root, or to an exchange, that passes only
-  * through operators one partition satisfies and, of operators with
-  * two or more inputs, only through the stream side of a broadcast
-  * join. Sort-merge, shuffled hash and co-group joins, unions and
-  * cartesian products zip or pair their inputs partition by partition,
-  * so neither their exchanges nor any consumer below them are touched.
+  * through operators one partition satisfies and, of operators with two
+  * or more inputs, only through the stream side of a broadcast join.
+  * Sort-merge, shuffled hash and co-group joins that Spark planned,
+  * unions and cartesian products zip or pair their inputs partition by
+  * partition, so neither their exchanges nor any consumer or join below
+  * them are touched.
   * A hash partitioned root keeps its partitioning too (so a query that
   * ends in an unsorted aggregate keeps its last exchange), as it may
   * stand for a user's `repartition(n, cols)` that `EnsureRequirements`
@@ -80,14 +102,42 @@ object SinglePartitionStages extends Rule[SparkPlan] {
     val children = plan.children.indices.map(i => rewrite(plan.children(i), childFree(plan, i, free)))
     plan.withNewChildren(children) match {
       case consumer: UnaryExecNode if free && needsDistribution(consumer) => consumer.child match {
-        case SmallStage(stage) => consumer.withNewChildren(Seq(CoalesceExec(1, stage)))
+        case SmallStage(stage) => consumer.withNewChildren(Seq(onOnePartition(stage)))
         case sort @ SortExec(_, false, SmallStage(stage), _) =>
-          consumer.withNewChildren(Seq(sort.withNewChildren(Seq(CoalesceExec(1, stage)))))
+          consumer.withNewChildren(Seq(sort.withNewChildren(Seq(onOnePartition(stage)))))
         case _ => consumer
       }
+      case join: BroadcastHashJoinExec if free && !join.isNullAwareAntiJoin =>
+        onePartitionSides(join.buildSide, join.left, join.right).fold[SparkPlan](join) {
+          case (left, right) => ShuffledHashJoinExec(join.leftKeys, join.rightKeys, join.joinType,
+            join.buildSide, join.condition, left, right)
+        }
+      case join: BroadcastNestedLoopJoinExec if free && join.joinType.isInstanceOf[InnerLike] =>
+        onePartitionSides(join.buildSide, join.left, join.right).fold[SparkPlan](join) {
+          case (left, right) => CartesianProductExec(left, right, join.condition)
+        }
       case other => other
     }
   }
+
+  /** A broadcast join's (left, right) inputs, each on one partition and
+    * the build side without its broadcast, when that broadcast has not
+    * run yet and the inputs of both sides together fit one partition. */
+  private def onePartitionSides(buildSide: BuildSide, left: SparkPlan,
+                                right: SparkPlan): Option[(SparkPlan, SparkPlan)] = {
+    val sides = (buildSide, left, right) match {
+      case (BuildLeft, BroadcastExchangeExec(_, leftInput), _) => Some((leftInput, right))
+      case (BuildRight, _, BroadcastExchangeExec(_, rightInput)) => Some((left, rightInput))
+      case _ => None
+    }
+    sides.collect { case (l, r) if fits(l, r) => (onOnePartition(l), onOnePartition(r)) }
+  }
+
+  /** `plan` as one partition: as it is when it already declares one (it
+    * was rewritten below), else under `CoalesceExec(1)`. Each extra
+    * coalesce would only add an RDD and split a codegen stage. */
+  private def onOnePartition(plan: SparkPlan): SparkPlan =
+    if (plan.outputPartitioning.satisfies(AllTuples)) plan else CoalesceExec(1, plan)
 
   /** No ancestor relies on child `i`'s partitioning: an exchange
     * repartitions it; otherwise the node is free, one partition meets
@@ -115,8 +165,7 @@ object SinglePartitionStages extends Rule[SparkPlan] {
     * one partition. */
   private object SmallStage {
     def unapply(plan: SparkPlan): Option[SparkPlan] = plan match {
-      case ShuffleExchangeExec(_, stage, ENSURE_REQUIREMENTS, _)
-          if inputBytes(stage).exists(_ <= onePartitionBytes) => Some(stage)
+      case ShuffleExchangeExec(_, stage, ENSURE_REQUIREMENTS, _) if fits(stage) => Some(stage)
       case _ => None
     }
   }
@@ -130,10 +179,14 @@ object SinglePartitionStages extends Rule[SparkPlan] {
       conf.getConf(SQLConf.COALESCE_PARTITIONS_MIN_PARTITION_SIZE)
     else conf.getConf(SQLConf.ADVISORY_PARTITION_SIZE_IN_BYTES)
 
-  /** Summed size of the stage's inputs, or None if one is not known. */
-  private def inputBytes(stage: SparkPlan): Option[Long] =
-    if (stage.exists(_.isInstanceOf[Exchange])) None
-    else stage.collectLeaves().foldLeft(Option(0L)) { (sum, leaf) =>
+  /** The inputs of `stages` have known sizes that together fit one partition. */
+  private def fits(stages: SparkPlan*): Boolean =
+    inputBytes(stages).exists(_ <= onePartitionBytes)
+
+  /** Summed size of the stages' inputs, or None if one is not known. */
+  private def inputBytes(stages: Seq[SparkPlan]): Option[Long] =
+    if (stages.exists(_.exists(_.isInstanceOf[Exchange]))) None
+    else stages.flatMap(_.collectLeaves()).foldLeft(Option(0L)) { (sum, leaf) =>
       sum.flatMap(s => leafBytes(leaf).map(s + _))
     }
 

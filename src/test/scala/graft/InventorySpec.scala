@@ -26,16 +26,16 @@ class InventorySpec extends AnyFunSuite {
     "q02_event_histogram" -> (5L, 1),
     "q03_topk_orders" -> (10L, 1),
     "q04_filter_pushdown" -> (225L, 1),
-    "q05_revenue_by_nation" -> (25L, 5),
-    "q06_parts_by_brand" -> (25L, 2),
-    "q07_semi_join_big_spenders" -> (93L, 2),
-    "q08_anti_join_no_big_orders" -> (57L, 2),
+    "q05_revenue_by_nation" -> (25L, 1),
+    "q06_parts_by_brand" -> (25L, 1),
+    "q07_semi_join_big_spenders" -> (93L, 1),
+    "q08_anti_join_no_big_orders" -> (57L, 1),
     "q09_top_orders_per_customer" -> (449L, 1),
     "q10_rollup_orders" -> (19L, 1),
     "q11_cube_events" -> (48L, 1),
     "q12_distinct_flags" -> (6L, 1),
-    "q13_except_nations" -> (15L, 2),
-    "q14_intersect_nations" -> (10L, 2),
+    "q13_except_nations" -> (15L, 1),
+    "q14_intersect_nations" -> (10L, 1),
     "q15_pivot_flags" -> (3L, 1),
     "q16_above_avg_orders" -> (754L, 1),
     "q17_latest_event_per_user" -> (15L, 1),
@@ -50,11 +50,11 @@ class InventorySpec extends AnyFunSuite {
     "q30_dedup_exact" -> (500L, 1),
     "q31_dedup_prefix" -> (476L, 1),
     "q32_ngram_jaccard_pairs" -> (28L, 3),
-    "q33_minhash_lsh_pairs" -> (28L, 6),
-    "q34_simhash_pairs" -> (7320L, 3),
-    "q35_knn_bruteforce" -> (50L, 2),
-    "q36_embedding_neardup" -> (14L, 3),
-    "q37_ann_ivf" -> (50L, 2),
+    "q33_minhash_lsh_pairs" -> (28L, 5),
+    "q34_simhash_pairs" -> (7320L, 2),
+    "q35_knn_bruteforce" -> (50L, 1),
+    "q36_embedding_neardup" -> (14L, 2),
+    "q37_ann_ivf" -> (50L, 1),
     "q40_tumbling_hourly" -> (868L, 1),
     "q41_sliding_two_hour" -> (664L, 1),
     "q42_sessionize" -> (946L, 1),

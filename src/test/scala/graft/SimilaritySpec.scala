@@ -53,10 +53,18 @@ class SimilaritySpec extends AnyFunSuite {
   }
 
   test("near-dup join plans broadcast the small side, never nested-loop over pairs") {
-    val plan = Similarity.knnBruteForce(spark, sf)
-      .queryExecution.executedPlan.toString
-    assert(plan.contains("Broadcast"), plan.take(2000))
-    assert(!plan.contains("CartesianProduct"), plan.take(2000))
+    def plan(): String = Similarity.knnBruteForce(spark, sf).queryExecution.executedPlan.toString
+    // Spark's own join choice shows with SinglePartitionStages' gate closed
+    // (a 1-byte coalescing target)
+    val planned = TestSpark.withConf(
+      "spark.sql.adaptive.coalescePartitions.minPartitionSize" -> "1b")(plan())
+    assert(planned.contains("Broadcast"), planned.take(2000))
+    assert(!planned.contains("CartesianProduct"), planned.take(2000))
+    // at sf0.001 the rule runs the whole cross join in one task instead:
+    // a cartesian product over one partition per side, with no pair shuffled
+    val onePartition = plan()
+    assert(onePartition.contains("CartesianProduct") && !onePartition.contains("Exchange"),
+      onePartition.take(2000))
   }
 
   test("blocked near-dup plan contains no cartesian product") {

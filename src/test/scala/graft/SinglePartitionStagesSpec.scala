@@ -3,15 +3,15 @@ package graft
 import graft.core.Tables
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
-import org.apache.spark.sql.functions.{broadcast, col, count, lit}
+import org.apache.spark.sql.functions.{broadcast, col, count, lit, when}
 import org.scalatest.funsuite.AnyFunSuite
 
-/** `SinglePartitionStages` runs small single-input stages on one
-  * partition. It must give every query's rows in the order Spark's
-  * exchanges give them, save shuffle-map jobs only under its gate, and
-  * leave Spark's exchanges in place when the gate fails. The rule is
-  * forced off with Spark's own conf: a 1-byte coalescing target, which
-  * no non-empty input fits.
+/** `SinglePartitionStages` runs small single-input stages and small
+  * broadcast joins on one partition. It must give every query's rows in
+  * the order Spark's exchanges give them, save shuffle-map and broadcast
+  * jobs only under its gate, and leave Spark's exchanges and broadcasts
+  * in place when the gate fails. The rule is forced off with Spark's own
+  * conf: a 1-byte coalescing target, which no non-empty input fits.
   */
 class SinglePartitionStagesSpec extends AnyFunSuite {
   private lazy val spark = TestSpark.spark
@@ -29,6 +29,35 @@ class SinglePartitionStagesSpec extends AnyFunSuite {
     adaptive.executedPlan.toString
   }
 
+  /** Runs `df` and returns its final plan, once its ordered rows are
+    * checked against Spark's exchanges. */
+  private def checkedPlan(df: => DataFrame): String = {
+    val ruled = df
+    val plan = finalPlan(ruled)
+    assert(ruled.collect().toSeq === TestSpark.withConf(sparkExchanges)(df.collect().toSeq), plan)
+    plan
+  }
+
+  /** Execution jobs of each query, with the rule and with Spark's exchanges. */
+  private def jobs(names: String*): (Seq[Int], Seq[Int]) = {
+    def run(tag: String): Seq[Int] = names.map { name =>
+      TestSpark.jobsLaunchedBy(s"stage-jobs:$tag:$name") {
+        query(name).fn(spark, TestSpark.sfDir).collect()
+      }
+    }
+    (run("one-partition"), TestSpark.withConf(sparkExchanges)(run("exchanges")))
+  }
+
+  /** `events` written as two files, which the gate never counts. */
+  private def withTwoFileEvents[T](body: DataFrame => T): T = TestSpark.withTempDir { dir =>
+    Tables.events(spark, TestSpark.sfDir).repartition(2).write.parquet(s"$dir/events")
+    val twoFiles = spark.read.parquet(s"$dir/events")
+    assert(twoFiles.inputFiles.length === 2)
+    body(twoFiles)
+  }
+
+  private def sorted(df: DataFrame): DataFrame = df.orderBy(df.columns.map(col).toSeq: _*)
+
   test("every query's ordered output equals Spark's exchanges at sf0.001") {
     val changed = SparkEntry.inventory.filter { q =>
       val onePartition = q.fn(spark, TestSpark.sfDir).collect().toSeq
@@ -39,14 +68,12 @@ class SinglePartitionStagesSpec extends AnyFunSuite {
   }
 
   test("q20, q30, q40 and q46 launch 1 job each; 3, 4, 4 and 5 with Spark's exchanges") {
-    val names = Seq("q20_clean_text", "q30_dedup_exact", "q40_tumbling_hourly", "q46_class_report")
-    def jobs(tag: String): Seq[Int] = names.map { name =>
-      TestSpark.jobsLaunchedBy(s"stage-jobs:$tag:$name") {
-        query(name).fn(spark, TestSpark.sfDir).collect()
-      }
-    }
-    assert(jobs("one-partition") === Seq(1, 1, 1, 1))
-    assert(TestSpark.withConf(sparkExchanges)(jobs("exchanges")) === Seq(3, 4, 4, 5))
+    assert(jobs("q20_clean_text", "q30_dedup_exact", "q40_tumbling_hourly", "q46_class_report") ===
+      ((Seq(1, 1, 1, 1), Seq(3, 4, 4, 5))))
+  }
+
+  test("q05 and q35 launch 1 job each; 9 and 5 with Spark's exchanges and broadcasts") {
+    assert(jobs("q05_revenue_by_nation", "q35_knn_bruteforce") === ((Seq(1, 1), Seq(9, 5))))
   }
 
   test("q30, q40 and q46 plan no exchange; Spark's stay when the gate fails") {
@@ -103,11 +130,98 @@ class SinglePartitionStagesSpec extends AnyFunSuite {
   }
 
   test("an aggregate on a broadcast join's stream side still runs on one partition") {
+    // a build side the gate does not count keeps the join a broadcast join
+    withTwoFileEvents { twoFiles =>
+      val perType = Tables.events(spark, TestSpark.sfDir).groupBy("event_type").count()
+      val plan = finalPlan(perType.join(broadcast(twoFiles.select("event_type")), "event_type")
+        .orderBy("event_type"))
+      assert(plan.contains("BroadcastHashJoin") && !plan.contains("partitioning("), plan)
+    }
+  }
+
+  test("a small broadcast join of each shape runs on one partition, with Spark's rows") {
+    val customer = Tables.customer(spark, TestSpark.sfDir)
+      .select("c_custkey", "c_nationkey", "c_acctbal")
+    val orders = Tables.orders(spark, TestSpark.sfDir).filter(col("o_totalprice") > 150000)
+      .select("o_orderkey", "o_custkey", "o_totalprice")
+    val nation = Tables.nation(spark, TestSpark.sfDir)
+    val region = Tables.region(spark, TestSpark.sfDir)
+    val byCustomer = col("c_custkey") === col("o_custkey")
+    // NULL keys on both sides: every third customer, every other order
+    val customerNulls = customer.select(when(col("c_custkey") % 3 =!= 0, col("c_custkey")).as("ck"))
+    val orderNulls = orders.select(col("o_orderkey"),
+      when(col("o_custkey") % 2 =!= 0, col("o_custkey")).as("ok"))
+    val byNullableKey = col("ck") === col("ok")
+    val joins: Seq[(String, () => DataFrame)] = Seq(
+      "inner" -> (() => customer.join(broadcast(orders), byCustomer)),
+      "left outer" -> (() => customer.join(broadcast(orders), byCustomer, "left")),
+      "right outer" -> (() => broadcast(customer.filter(col("c_nationkey") < 10))
+        .join(orders, byCustomer, "right")),
+      "left semi" -> (() => customer.join(broadcast(orders), byCustomer, "left_semi")),
+      "left anti" -> (() => customer.join(broadcast(orders), byCustomer, "left_anti")),
+      "except" -> (() => customer.select("c_nationkey")
+        .except(nation.filter(col("n_regionkey") =!= 1).select("n_nationkey"))),
+      "NULL keys, inner" -> (() => customerNulls.join(broadcast(orderNulls), byNullableKey)),
+      "NULL keys, left outer" -> (() =>
+        customerNulls.join(broadcast(orderNulls), byNullableKey, "left")),
+      "non-equi residual" -> (() => customer.join(broadcast(orders),
+        byCustomer && col("o_totalprice") > col("c_acctbal") * 50)),
+      "cross" -> (() => nation.crossJoin(broadcast(region))),
+      "inner nested-loop" -> (() =>
+        nation.join(broadcast(region), col("n_regionkey") < col("r_regionkey"))))
+    joins.foreach { case (shape, join) =>
+      val plan = checkedPlan(sorted(join()))
+      assert(plan.contains("ShuffledHashJoin") || plan.contains("CartesianProduct"),
+        s"$shape\n$plan")
+      assert(!plan.contains("Broadcast"), s"$shape\n$plan")
+    }
+  }
+
+  test("a broadcast join the rule cannot run on one partition keeps its broadcast") {
+    val customer = Tables.customer(spark, TestSpark.sfDir).select("c_custkey", "c_nationkey")
+    val nation = Tables.nation(spark, TestSpark.sfDir)
+    // NULL for nations 0-4
+    val withNulls = nation.select(when(col("n_nationkey") > 4, col("n_nationkey")).as("nk"))
     val events = Tables.events(spark, TestSpark.sfDir)
-    val types = events.select("event_type").distinct()
-    val plan = finalPlan(events.groupBy("event_type").count().join(broadcast(types), "event_type")
-      .orderBy("event_type"))
-    assert(plan.contains("BroadcastHashJoin") && !plan.contains("partitioning("), plan)
+    def kept(join: String, df: => DataFrame): Unit = {
+      val plan = checkedPlan(sorted(df))
+      assert(plan.contains(join) && !plan.contains("ShuffledHashJoin") &&
+        !plan.contains("CartesianProduct"), plan)
+    }
+    // NOT IN is a null-aware anti join, which a shuffled hash join cannot
+    // run; once the broadcast has found a NULL key, AQE empties the join
+    kept("EmptyRelation Join LeftAnti", customer.filter(!col("c_nationkey").isin(withNulls)))
+    kept("BroadcastHashJoin",
+      customer.filter(!col("c_nationkey").isin(nation.select("n_nationkey"))))
+    // a cartesian product is inner only
+    kept("BroadcastNestedLoopJoin",
+      nation.join(broadcast(Tables.region(spark, TestSpark.sfDir)),
+        col("n_regionkey") < col("r_regionkey"), "left"))
+    withTwoFileEvents { twoFiles =>
+      // the gate does not count a scan of two files
+      kept("BroadcastHashJoin", twoFiles.select("event_id", "event_type")
+        .join(broadcast(events.select("event_type").distinct()), "event_type"))
+      // once the shuffle both sides reuse has run, the gate counts both
+      // sides, but the sort-merge join above relies on the broadcast join's
+      // hash partitioning
+      val perType = twoFiles.groupBy("event_type").count()
+      val joined = perType.join(broadcast(perType.withColumnRenamed("count", "n")), "event_type")
+      val plan = checkedPlan(sorted(joined.hint("merge")
+        .join(events.select("event_type", "event_id"), "event_type")))
+      assert(plan.contains("SortMergeJoin") && plan.contains("BroadcastHashJoin"), plan)
+    }
+  }
+
+  test("a join whose build or stream side is empty only at run time returns Spark's rows") {
+    val events = Tables.events(spark, TestSpark.sfDir)
+    // the optimizer cannot fold `n < 0` away; it is empty only at run time
+    val none = events.groupBy("event_type").agg(count(lit(1)).as("n")).filter(col("n") < 0)
+    val ids = events.select("event_id", "event_type")
+    Seq("inner", "left").foreach { how =>
+      val emptyBuild = checkedPlan(sorted(ids.join(broadcast(none), Seq("event_type"), how)))
+      val emptyStream = checkedPlan(sorted(none.join(broadcast(ids), Seq("event_type"), how)))
+      Seq(emptyBuild, emptyStream).foreach(plan => assert(plan.contains("ShuffledHashJoin"), plan))
+    }
   }
 
   test("a user's repartition(8, cols) folded into an aggregate's exchange keeps 8 partitions") {
@@ -130,10 +244,7 @@ class SinglePartitionStagesSpec extends AnyFunSuite {
   }
 
   test("a scan of two small files keeps its aggregate exchange") {
-    TestSpark.withTempDir { dir =>
-      Tables.events(spark, TestSpark.sfDir).repartition(2).write.parquet(s"$dir/events")
-      val twoFiles = spark.read.parquet(s"$dir/events")
-      assert(twoFiles.inputFiles.length === 2)
+    withTwoFileEvents { twoFiles =>
       assert(finalPlan(twoFiles.groupBy("event_type").count().orderBy("event_type"))
         .contains("hashpartitioning"))
     }
