@@ -38,7 +38,11 @@ import org.apache.spark.sql.internal.SQLConf
   * saves the broadcast job, its driver-side collect and the broadcast
   * relation, and neither side is shuffled. An explicit `broadcast(...)`
   * hint is a choice of strategy, not a request for partitioning, so the
-  * rule overrides it as it would Spark's own size-based choice. Two
+  * rule overrides it as it would Spark's own size-based choice. What
+  * that saves is jobs; its effect on wall time is not known: q05, which
+  * hints four broadcasts that AQE ran concurrently, leaned slower at
+  * sf0.001 (0.450 -> 0.493 s, 3 of 3 pairs, inside the host's drift),
+  * as its one task reads all ~167 KB of input serially. Two
   * broadcast joins always stay: a null-aware anti join (`NOT IN`), which
   * `ShuffledHashJoinExec` has no mode for, and an outer, semi or anti
   * nested-loop join, as `CartesianProductExec` is inner only.
@@ -109,15 +113,25 @@ object SinglePartitionStages extends Rule[SparkPlan] {
       }
       case join: BroadcastHashJoinExec if free && !join.isNullAwareAntiJoin =>
         onePartitionSides(join.buildSide, join.left, join.right).fold[SparkPlan](join) {
-          case (left, right) => ShuffledHashJoinExec(join.leftKeys, join.rightKeys, join.joinType,
-            join.buildSide, join.condition, left, right)
+          case (left, right) => replacing(join, ShuffledHashJoinExec(join.leftKeys, join.rightKeys,
+            join.joinType, join.buildSide, join.condition, left, right))
         }
       case join: BroadcastNestedLoopJoinExec if free && join.joinType.isInstanceOf[InnerLike] =>
         onePartitionSides(join.buildSide, join.left, join.right).fold[SparkPlan](join) {
-          case (left, right) => CartesianProductExec(left, right, join.condition)
+          case (left, right) => replacing(join, CartesianProductExec(left, right, join.condition))
         }
       case other => other
     }
+  }
+
+  /** `join` carrying `old`'s tags, its logical link among them. AQE links
+    * a new query stage to the first linked node under its exchange, and
+    * later swaps that logical node for the stage: without the link, a
+    * stage over the join would stand for the join's first input, and a
+    * re-plan would run the join again on the stage's output. */
+  private def replacing(old: SparkPlan, join: SparkPlan): SparkPlan = {
+    join.copyTagsFrom(old)
+    join
   }
 
   /** A broadcast join's (left, right) inputs, each on one partition and

@@ -1,5 +1,6 @@
 package graft
 
+import graft.core.Tables
 import graft.functions.VectorFunctions
 import graft.operators.Similarity
 import org.apache.spark.sql.functions._
@@ -53,18 +54,20 @@ class SimilaritySpec extends AnyFunSuite {
   }
 
   test("near-dup join plans broadcast the small side, never nested-loop over pairs") {
-    def plan(): String = Similarity.knnBruteForce(spark, sf).queryExecution.executedPlan.toString
-    // Spark's own join choice shows with SinglePartitionStages' gate closed
-    // (a 1-byte coalescing target)
-    val planned = TestSpark.withConf(
-      "spark.sql.adaptive.coalescePartitions.minPartitionSize" -> "1b")(plan())
-    assert(planned.contains("Broadcast"), planned.take(2000))
-    assert(!planned.contains("CartesianProduct"), planned.take(2000))
-    // at sf0.001 the rule runs the whole cross join in one task instead:
-    // a cartesian product over one partition per side, with no pair shuffled
-    val onePartition = plan()
-    assert(onePartition.contains("CartesianProduct") && !onePartition.contains("Exchange"),
-      onePartition.take(2000))
+    // embeddings as two files: SinglePartitionStages never counts such an
+    // input, so the plan is Spark's own join choice
+    TestSpark.withTempDir { dir =>
+      Tables.embeddings(spark, sf).repartition(2).write.parquet(s"$dir/embeddings.parquet")
+      val plan = Similarity.knnBruteForce(spark, dir)
+        .queryExecution.executedPlan.toString
+      assert(plan.contains("Broadcast"), plan.take(2000))
+      assert(!plan.contains("CartesianProduct"), plan.take(2000))
+    }
+  }
+
+  test("a near-dup join whose inputs fit one partition pairs them in one task, no pair shuffled") {
+    val plan = Similarity.knnBruteForce(spark, sf).queryExecution.executedPlan.toString
+    assert(plan.contains("CartesianProduct") && !plan.contains("Exchange"), plan.take(2000))
   }
 
   test("blocked near-dup plan contains no cartesian product") {

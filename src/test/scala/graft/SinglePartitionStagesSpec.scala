@@ -212,6 +212,33 @@ class SinglePartitionStagesSpec extends AnyFunSuite {
     }
   }
 
+  /** `nation` by region key: five rows per key, so a join with it that
+    * ran twice would multiply the rows. */
+  private def perRegion: DataFrame = broadcast(Tables.nation(spark, TestSpark.sfDir)
+    .select(col("n_regionkey").as("rk"), col("n_name")))
+
+  test("a small join under a sort-merge join's exchange returns Spark's rows") {
+    val customer = Tables.customer(spark, TestSpark.sfDir).select("c_custkey", "c_nationkey")
+    val orders = Tables.orders(spark, TestSpark.sfDir).select("o_orderkey", "o_custkey")
+    val plan = checkedPlan(sorted(
+      customer.join(perRegion, col("c_nationkey") % 5 === col("rk")).hint("merge")
+        .join(orders, col("c_custkey") === col("o_custkey"))))
+    assert(plan.contains("SortMergeJoin") && plan.contains("ShuffledHashJoin"), plan)
+  }
+
+  test("a small join on the build side of a broadcast join that stays returns Spark's rows") {
+    withTwoFileEvents { twoFiles =>
+      // the gate does not count the stream side, so the outer join keeps
+      // its broadcast of the small join, keyed like the small join's
+      // stream side
+      val byRegion = Tables.nation(spark, TestSpark.sfDir).select("n_nationkey", "n_regionkey")
+        .join(perRegion, col("n_regionkey") === col("rk"))
+      val plan = checkedPlan(sorted(twoFiles.select("event_id")
+        .join(broadcast(byRegion), col("event_id") % 5 === col("n_regionkey"))))
+      assert(plan.contains("BroadcastHashJoin") && plan.contains("ShuffledHashJoin"), plan)
+    }
+  }
+
   test("a join whose build or stream side is empty only at run time returns Spark's rows") {
     val events = Tables.events(spark, TestSpark.sfDir)
     // the optimizer cannot fold `n < 0` away; it is empty only at run time
