@@ -28,7 +28,8 @@ import scala.collection.mutable
   * round-robin (a,b,a,b,…) within the one session — the only
   * per-query comparison that survives this host's ±25% cross-run
   * drift. Same one-line JSON, plus an `"ab":true` marker; `"reps"` is
-  * the timed-rep count of the schedule that ran.
+  * the timed-rep count of the schedule that ran. A name that is not a
+  * declared query fails the run before the session starts.
   */
 object Bench {
   private val Reps = 3
@@ -45,14 +46,20 @@ object Bench {
       .asScala.map(b => math.max(b.getCollectionTime, 0L)).sum
   }
 
+  /** The queries an `SPARK_GRAFT_AB` value selects: all of them when it
+    * is unset; throws, listing them, on names that are not declared. */
+  def selected(ab: Option[String]): Seq[GQuery] = ab.fold(SparkEntry.inventory) { names =>
+    val sel = names.split(",").map(_.trim).filter(_.nonEmpty).toSet
+    val unknown = sel -- SparkEntry.inventory.map(_.name)
+    require(unknown.isEmpty, s"unknown SPARK_GRAFT_AB queries: ${unknown.toSeq.sorted.mkString(", ")}")
+    SparkEntry.inventory.filter(q => sel(q.name))
+  }
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val spark = GraftSession.local()
-
     val abSel = sys.env.get("SPARK_GRAFT_AB")
-      .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet)
-    val headline = abSel.fold(SparkEntry.inventory)(sel =>
-      SparkEntry.inventory.filter(q => sel(q.name)))
+    val headline = selected(abSel)
+    val spark = GraftSession.local()
     val reps = if (abSel.isDefined) AbReps else Reps
     val schedule: Seq[(GQuery, Int)] =
       if (abSel.isDefined)

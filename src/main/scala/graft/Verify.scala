@@ -7,13 +7,18 @@ import scala.jdk.CollectionConverters._
 
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the DuckDB oracle compare
-  * (`tools/check_oracle.py <sfDir> <outDir>`). */
+  * (`tools/check_oracle.py <sfDir> <outDir>`). Exits 1, naming them,
+  * when any query failed. */
 object Verify {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args
     val spark = GraftSession.local()
-    dump(spark, sfDir, outDir)
+    val failed = dump(spark, sfDir, outDir)
     spark.stop()
+    if (failed.nonEmpty) {
+      System.err.println(s"[verify] FAILED: ${failed.sorted.mkString(", ")}")
+      sys.exit(1)
+    }
   }
 
   /** Writes every query's result to `<outDir>/<query>` and the oracle

@@ -28,55 +28,51 @@ object QueryUtils {
   /** The parse half of the exact-sum split: unscaled(cast(c →
     * DECIMAL(28,10))) as a long, or the out-of-band sentinel when the
     * fast path does not apply (`DecimalFast.unscaled18OrSentinel`;
-    * NULL stays NULL). Call sites pre-project this ONCE as a
-    * named column (`withColumn("_u", unscaled18(c))`) — it is the
-    * expensive node (Double.toString + digit parse), and neither
-    * window update projections nor aggregate-update codegen reliably
-    * CSE a subtree that several buffer expressions share (measured: 3
-    * evaluations/row/input when inlined, 1 when pre-projected). */
+    * NULL stays NULL). Queries reach it through `withExactParse`. */
   def unscaled18(c: Column): Column =
     ColumnBridge.column(ofDouble(DecimalFast, "unscaled18OrSentinel", ColumnBridge.expression(c)))
 
-  /** (hi, lo) children for SumScaled128 from a pre-projected parse
-    * column `u` and the original double `d`, which only the slow split
-    * (`DecimalSum.slowHi18`/`slowLo18`, behind the sentinel check)
-    * reads. All refs are attribute/branch reads — cheap to duplicate
-    * across the aggregate's buffer-update expressions. */
-  private def parts(u: Column, d: Column): (Expression, Expression) = {
+  private def parseOf(c: String): String = s"_u_$c"
+
+  /** Projects each named double column's `unscaled18` parse ONCE per
+    * row, as `_u_<column>`, for the name-keyed sums below to read. The
+    * parse is the expensive node (Double.toString + digit parse), and
+    * neither window update projections nor aggregate-update codegen
+    * reliably CSE it (measured: 3 evaluations/row/input when inlined, 1
+    * when pre-projected). A name-keyed sum over a column whose parse
+    * was not projected here fails analysis when the frame is built. */
+  def withExactParse(cols: String*)(df: DataFrame): DataFrame =
+    df.select(col("*") +: cols.map(c => unscaled18(col(c)).as(parseOf(c))): _*)
+
+  /** SumScaled128 over a pre-projected parse column `u` and the original
+    * double `d`, which only the slow split (`DecimalSum.slowHi18`/
+    * `slowLo18`, behind the sentinel check) reads. All refs are
+    * attribute/branch reads — cheap to duplicate across the aggregate's
+    * buffer-update expressions. */
+  private def sum128(u: Column, d: Column, emitStruct: Boolean): Column = {
     val ue = ColumnBridge.expression(u)
     val de = ColumnBridge.expression(d)
     val sent = Literal(DecimalSum.Sentinel)
     val hi = If(EqualTo(ue, sent), ofDouble(DecimalSum, "slowHi18", de), Literal(0L))
     val lo = If(EqualTo(ue, sent), ofDouble(DecimalSum, "slowLo18", de), ue)
-    (hi, lo)
+    ColumnBridge.column(SumScaled128(hi, lo, emitStruct).toAggregateExpression())
   }
 
   /** Exact sum of cast(d → DECIMAL(28,10)) as DECIMAL(38,10), computed
     * by the two-long SumScaled128 kernel (bit-identical to the built-in
-    * Sum over the cast — see DecimalFastSpec — without its per-row
-    * BigDecimal buffer churn).
-    *
-    * CONTRACT: `u` MUST be the pre-projected `unscaled18(d)` of the
-    * SAME expression `d` — nothing here can verify the pairing (both
-    * are opaque Columns at this point), and a mismatched pair
-    * type-checks but sums garbage. Convention at every call site: the
-    * parse column is named `u_<x>`/`_u` and is created by
-    * `withColumn("u_x", unscaled18(col("x")))` immediately above the
-    * aggregate that consumes it, so the pairing is reviewable in one
-    * screenful. The oracle gate backstops the convention: a wrong
-    * pairing cannot produce the Cast-sum the DuckDB replay computes. */
-  def sumDec(u: Column, d: Column): Column = {
-    val (hi, lo) = parts(u, d)
-    ColumnBridge.column(SumScaled128(hi, lo).toAggregateExpression())
-  }
+    * Sum over the cast — see SumScaledSpec — without its per-row
+    * BigDecimal buffer churn), from `u` = `unscaled18(d)` projected
+    * above the aggregate. Queries call the name-keyed `sumDec(c)`,
+    * which cannot pair a value with another column's parse. */
+  def sumDec(u: Column, d: Column): Column = sum128(u, d, emitStruct = false)
+
+  /** Exact sum of column `c`, read with its `withExactParse` parse. */
+  def sumDec(c: String): Column = sumDec(col(parseOf(c)), col(c))
 
   /** sumDec emitting the normalized struct<hi,lo> parts instead of the
     * decimal — for two-level aggregations whose outer level re-sums
     * the partials (q05/q10/q11). */
-  def sumDecParts(u: Column, d: Column): Column = {
-    val (hi, lo) = parts(u, d)
-    ColumnBridge.column(SumScaled128(hi, lo, emitStruct = true).toAggregateExpression())
-  }
+  def sumDecParts(c: String): Column = sum128(col(parseOf(c)), col(c), emitStruct = true)
 
   /** Re-aggregate struct<hi,lo> partials (from sumDecParts) into the
     * exact DECIMAL(38,10) total. Children are plain field reads. */
@@ -86,19 +82,16 @@ object QueryUtils {
     ColumnBridge.column(SumScaled128(hi, lo).toAggregateExpression())
   }
 
-  /** Exact decimal sum of a double expression, surfaced as double.
-    * Summing doubles directly is order-dependent (shuffle/partition
-    * order differs run to run and engine to engine); summing after a
-    * cast to DECIMAL(28,10) is exact and associative, so Spark and the
-    * DuckDB oracle agree bit-for-bit no matter the plan. The final
-    * round() guards the decimal→double conversion ulp.
-    * `u` must be the pre-projected `unscaled18(d)` column. */
-  def dsum(u: Column, d: Column): Column =
-    round(sumDec(u, d).cast("double"), 4)
+  /** Exact decimal sum of column `c`, surfaced as double. Summing
+    * doubles directly is order-dependent (shuffle/partition order
+    * differs run to run and engine to engine); summing after a cast to
+    * DECIMAL(28,10) is exact and associative, so Spark and the DuckDB
+    * oracle agree bit-for-bit no matter the plan. The final round()
+    * guards the decimal→double conversion ulp. */
+  def dsum(c: String): Column = round(sumDec(c).cast("double"), 4)
 
   /** Deterministic mean: exact decimal sum over exact long count. */
-  def davg(u: Column, d: Column): Column =
-    round(sumDec(u, d).cast("double") / count(lit(1)), 6)
+  def davg(c: String): Column = round(sumDec(c).cast("double") / count(lit(1)), 6)
 
   /** The same casts, spelled for the DuckDB oracle. */
   def sqlDsum(e: String): String =

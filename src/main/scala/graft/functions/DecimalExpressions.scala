@@ -7,16 +7,16 @@ import org.apache.spark.sql.types.Decimal
   *
   * Spark's Cast defines the result as
   * `BigDecimal(Double.toString(d))` rounded HALF_UP to scale 10 — the
-  * shortest-decimal-representation semantics. The exact-sum kernels
-  * (`QueryUtils.dsum`/`davg`) apply that cast to every aggregated
-  * value, and the BigDecimal construction dominated the measured cost
-  * (q01: 5 casts × 600 k rows ≈ 0.4 s of 1.4 s).
+  * shortest-decimal-representation semantics. The exact sums
+  * (`QueryUtils.sumDec` and the sums built on it) apply that cast to
+  * every aggregated value, and the BigDecimal construction dominated
+  * the measured cost (q01: 5 casts × 600 k rows ≈ 0.4 s of 1.4 s).
   *
   * `unscaled18OrSentinel` decides the scale-10 unscaled long directly
   * (HALF_UP on the 11th fraction digit, carry handled). Anything it
   * does not handle — scientific notation, |d| ≥ 10⁸, NaN/Inf — yields
-  * the sentinel, and callers take `toDec2810`, whose slow path is the
-  * Cast definition itself, so equality holds by construction there.
+  * the sentinel, and callers take `reference`, the Cast definition
+  * itself, so equality holds by construction there.
   * Property-proven against Cast in DecimalFastSpec.
   */
 object DecimalFast {
@@ -28,17 +28,11 @@ object DecimalFast {
   private val MaxIntDigits = 8
 
   /** Reference path: exactly what Cast(double → dec(28,10)) computes. */
-  private def slow(d: Double): Decimal = {
+  def reference(d: Double): Decimal = {
     val dec = Decimal(d) // BigDecimal.valueOf == new BigDecimal(Double.toString(d))
     if (dec.changePrecision(Precision, Scale)) dec // HALF_UP, like Cast
     else throw new ArithmeticException(
       s"$d cannot be represented as Decimal($Precision, $Scale)")
-  }
-
-  def toDec2810(d: Double): Decimal = {
-    val u = unscaled18OrSentinel(d)
-    if (u == Long.MinValue) slow(d)
-    else Decimal.createUnsafe(u, Precision, Scale)
   }
 
   /** The fast parse, surfaced as a bare unscaled long for the two-long

@@ -50,15 +50,15 @@ object DecimalSum {
     * |hi| < 10¹⁰. NaN/Inf throw here (NumberFormatException via
     * Decimal(NaN)) where Spark's non-ANSI Cast would return NULL — a
     * deliberate loud-failure divergence, unreachable for the benchmark
-    * domain, shared with toDec2810. Only evaluated behind a sentinel
-    * check. */
+    * domain. Only evaluated behind a sentinel check, so it goes
+    * straight to the Cast reference without re-running the fast parse. */
   def slowHi18(d: Double): Long =
-    DecimalFast.toDec2810(d).toJavaBigDecimal.unscaledValue()
+    DecimalFast.reference(d).toJavaBigDecimal.unscaledValue()
       .divide(BaseBig).longValueExact()
 
   /** lo part (remainder, sign of the dividend) matching slowHi18. */
   def slowLo18(d: Double): Long =
-    DecimalFast.toDec2810(d).toJavaBigDecimal.unscaledValue()
+    DecimalFast.reference(d).toJavaBigDecimal.unscaledValue()
       .remainder(BaseBig).longValue()
 
   /** Loud-failure bound for the hi accumulator: 9·10¹⁸ < 2⁶³ − 10¹⁰ − 1,

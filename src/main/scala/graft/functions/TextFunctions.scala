@@ -61,6 +61,20 @@ object TextFunctions {
   def cleanText(c: Column): Column =
     pyStrip(lower(stripNoiseAndPunct(c)))
 
+  /** Python string.punctuation with the single quote doubled for SQL. */
+  private val punctSql = asciiPunctuation.replace("'", "''")
+
+  /** `cleanText` of the SQL expression `e`, spelled for the DuckDB
+    * oracle as the reference's own passes: three regex deletes, the
+    * punctuation translate, lower, strip. */
+  def sqlCleanText(e: String): String =
+    s"""regexp_replace(
+       |  lower(translate(
+       |    regexp_replace(regexp_replace(regexp_replace($e,
+       |      'http\\S+|www\\S+', '', 'g'), '@\\w+', '', 'g'), '#\\w+', '', 'g'),
+       |    '$punctSql', '')),
+       |  '^\\s+|\\s+$$', '', 'g')""".stripMargin
+
   /** F6: label decode — 1→Positive, 0→Negative, else Unknown
     * (reference src/predict.py:84-92). */
   def decodeSentiment(pred: Column): Column =
@@ -74,6 +88,10 @@ object TextFunctions {
     * that strip to empty (TextFunctionsSpec proves equality). */
   def tokens(c: Column): Column =
     textKernel("wsTokens", ArrayType(StringType, containsNull = false))(c)
+
+  /** `tokens` of the SQL expression `e`, spelled for the DuckDB oracle. */
+  def sqlTokens(e: String): String =
+    s"regexp_split_to_array(regexp_replace($e, '^\\s+|\\s+$$', '', 'g'), '\\s+')"
 
   /** Tiny embedded stopword list for quality scoring: the table of
     * `tokenStats3`'s kernel and the list q23's oracle SQL reads. */

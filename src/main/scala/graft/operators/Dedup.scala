@@ -2,7 +2,7 @@ package graft.operators
 
 import graft.core.{GQuery, Tables}
 import graft.functions.TextFunctions._
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graftbridge.{ColumnBridge, MinHashSigExpr, SignatureUtil, SimHash64Expr}
 
@@ -49,85 +49,100 @@ object Dedup {
       .orderBy("keeper")
 
   val dedupPrefixSql: String =
-    """SELECT array_to_string(list_slice(
-      |    regexp_split_to_array(regexp_replace(text, '^\s+|\s+$', '', 'g'), '\s+'),
-      |    1, 5), ' ') AS prefix_key,
-      |  min(doc_id) AS keeper, count(*) AS n_docs
-      |FROM documents GROUP BY 1 ORDER BY keeper""".stripMargin
+    s"""SELECT array_to_string(list_slice(${sqlTokens("text")}, 1, 5), ' ') AS prefix_key,
+       |  min(doc_id) AS keeper, count(*) AS n_docs
+       |FROM documents GROUP BY 1 ORDER BY keeper""".stripMargin
+
+  /** q32–q34's slice, documents below this id: the exact-quadratic
+    * oracle work stays constant as sf grows (the scalable path is
+    * MinHash-LSH). The filter and the oracle SQL read it. */
+  private[graft] val MaxDocId = 1000L
 
   /** Tokenized doc slice shared by the Jaccard paths: distinct word
-    * 3-gram shingles per document. `maxDocId` bounds the slice so the
-    * exact-quadratic oracle work stays constant as sf grows (the
-    * scalable path is MinHash-LSH) — an oracle-harness knob supplied
-    * at the call site, not part of the operator semantics. */
-  private def withShingleArr(s: SparkSession, d: String,
-                             maxDocId: Long): DataFrame =
+    * 3-gram shingles per document. */
+  private def withShingleArr(s: SparkSession, d: String): DataFrame =
     Tables.documents(s, d)
-      .filter(col("doc_id") < maxDocId)
+      .filter(col("doc_id") < MaxDocId)
       .select(col("doc_id"),
         array_distinct(wordShingles(tokens(col("text")), 3)).as("sh_arr"))
 
-  /** Inverted-index rows carrying each doc's |shingle set| alongside
-    * the exploded shingle — the count rides the index for 8 bytes/row,
-    * so Jaccard's denominators need no second evaluation of the
-    * scan → tokenize → shingle pipeline and no count-joins downstream.
-    * Hash-partitioned on the shingle — the self-join's key — so BOTH
-    * self-join sides hang off one exchange (ReuseExchange) instead of
-    * the planner broadcasting one side and recomputing the pipeline
-    * for it. Also the only shape that survives at corpus scale, where
-    * the exploded index is corpus-sized and unbroadcastable
-    * (hot-shingle skew is AQE's skew join's job). */
-  private def shingledWithCount(s: SparkSession, d: String,
-                                maxDocId: Long): DataFrame =
-    withShingleArr(s, d, maxDocId)
+  /** Inverted-index rows (doc_id, n_sh, shingle): each doc's |shingle
+    * set| rides the index for 8 bytes/row, so Jaccard's denominators
+    * need no second scan → tokenize → shingle pass and no count-joins.
+    * Hash-partitioned on `key`, the consumer's join column, so all join
+    * sides hang off one reused exchange instead of the planner
+    * broadcasting one side and recomputing the pipeline for it; at
+    * corpus scale the index is unbroadcastable anyway (hot-shingle skew
+    * is AQE's skew join's job). */
+  private def shingleIndex(s: SparkSession, d: String, key: String): DataFrame =
+    withShingleArr(s, d)
       .select(col("doc_id"), size(col("sh_arr")).cast("long").as("n_sh"),
         explode(col("sh_arr")).as("shingle"))
-      .repartition(col("shingle"))
+      .repartition(col(key))
 
-  /** Exact n-gram Jaccard near-dup pairs via a shingle inverted index:
-    * explode → self-equi-join on shingle → |∩| per pair → Jaccard.
-    * Grouping by (a_id, b_id, a_n, b_n) equals grouping by (a_id,
-    * b_id) — the counts are functions of the ids — which turns the
-    * former two count-joins + counts aggregate into two extra group
-    * columns (oracle hash green). */
-  def ngramJaccardPairs(s: SparkSession, d: String,
-                        maxDocId: Long = 1000L): DataFrame = {
-    val sh = shingledWithCount(s, d, maxDocId)
-    sh.as("a")
-      .join(sh.as("b"), col("a.shingle") === col("b.shingle") &&
-        col("a.doc_id") < col("b.doc_id"))
-      .groupBy(col("a.doc_id").as("a_id"), col("b.doc_id").as("b_id"),
-        col("a.n_sh").as("a_n"), col("b.n_sh").as("b_n"))
+  /** Pairs with Jaccard ≥ 0.5, as `cols` ordered by pair, from one row
+    * per shingle a pair (a_id, b_id) shares, carrying both set sizes
+    * (a_n, b_n). The sizes are functions of the ids, so grouping by
+    * them too keeps the groups, with no counts aggregate or count-joins. */
+  private def jaccardPairs(shared: DataFrame, cols: String*): DataFrame =
+    shared.groupBy("a_id", "b_id", "a_n", "b_n")
       .agg(count(lit(1)).as("n_inter"))
       .withColumn("jaccard",
         round(col("n_inter") / (col("a_n") + col("b_n") - col("n_inter")), 6))
       .filter(col("jaccard") >= 0.5)
-      .select("a_id", "b_id", "n_inter", "jaccard")
+      .select(cols.map(col): _*)
       .orderBy("a_id", "b_id")
+
+  /** Exact n-gram Jaccard near-dup pairs via a shingle inverted index:
+    * explode → self-equi-join on shingle → |∩| per pair → Jaccard. */
+  def ngramJaccardPairs(s: SparkSession, d: String): DataFrame = {
+    val sh = shingleIndex(s, d, "shingle")
+    jaccardPairs(sh.as("a")
+      .join(sh.as("b"), col("a.shingle") === col("b.shingle") &&
+        col("a.doc_id") < col("b.doc_id"))
+      .select(col("a.doc_id").as("a_id"), col("b.doc_id").as("b_id"),
+        col("a.n_sh").as("a_n"), col("b.n_sh").as("b_n")),
+      "a_id", "b_id", "n_inter", "jaccard")
   }
 
   val ngramJaccardPairsSql: String =
-    """WITH toks AS (
-      |  SELECT doc_id,
-      |    regexp_split_to_array(regexp_replace(text, '^\s+|\s+$', '', 'g'), '\s+') AS t
-      |  FROM documents WHERE doc_id < 1000),
-      |sh AS (
-      |  SELECT doc_id, unnest(list_distinct(list_transform(
-      |    generate_series(1, len(t) - 2),
-      |    i -> t[i] || ' ' || t[i+1] || ' ' || t[i+2]))) AS shingle
-      |  FROM toks),
-      |cnt AS (SELECT doc_id, count(*) AS n_sh FROM sh GROUP BY doc_id),
-      |inter AS (
-      |  SELECT a.doc_id AS a_id, b.doc_id AS b_id, count(*) AS n_inter
-      |  FROM sh a JOIN sh b ON a.shingle = b.shingle AND a.doc_id < b.doc_id
-      |  GROUP BY 1, 2)
-      |SELECT a_id, b_id, n_inter,
-      |  round(n_inter / (ca.n_sh + cb.n_sh - n_inter), 6) AS jaccard
-      |FROM inter
-      |  JOIN cnt ca ON ca.doc_id = a_id
-      |  JOIN cnt cb ON cb.doc_id = b_id
-      |WHERE round(n_inter / (ca.n_sh + cb.n_sh - n_inter), 6) >= 0.5
-      |ORDER BY a_id, b_id""".stripMargin
+    s"""WITH toks AS (
+       |  SELECT doc_id, ${sqlTokens("text")} AS t
+       |  FROM documents WHERE doc_id < $MaxDocId),
+       |sh AS (
+       |  SELECT doc_id, unnest(list_distinct(list_transform(
+       |    generate_series(1, len(t) - 2),
+       |    i -> t[i] || ' ' || t[i+1] || ' ' || t[i+2]))) AS shingle
+       |  FROM toks),
+       |cnt AS (SELECT doc_id, count(*) AS n_sh FROM sh GROUP BY doc_id),
+       |inter AS (
+       |  SELECT a.doc_id AS a_id, b.doc_id AS b_id, count(*) AS n_inter
+       |  FROM sh a JOIN sh b ON a.shingle = b.shingle AND a.doc_id < b.doc_id
+       |  GROUP BY 1, 2)
+       |SELECT a_id, b_id, n_inter,
+       |  round(n_inter / (ca.n_sh + cb.n_sh - n_inter), 6) AS jaccard
+       |FROM inter
+       |  JOIN cnt ca ON ca.doc_id = a_id
+       |  JOIN cnt cb ON cb.doc_id = b_id
+       |WHERE round(n_inter / (ca.n_sh + cb.n_sh - n_inter), 6) >= 0.5
+       |ORDER BY a_id, b_id""".stripMargin
+
+  /** Same-bucket doc pairs (a.doc_id < b.doc_id, with the `carry`
+    * columns): explodes `keys`, an array of struct<band, key>, to a row
+    * per (doc, band) and self-joins on (band, key). Hash-partitioned on
+    * the join key, so both sides hang off ONE reused exchange: without
+    * it the planner broadcasts one side and computes the signature
+    * pipeline twice. At corpus scale the banded table is corpus-sized,
+    * so the shuffle join is also the only shape that survives. */
+  private def bucketPairs(sig: DataFrame, keys: Column, carry: String*): DataFrame = {
+    val kept = ("doc_id" +: carry).map(col)
+    val banded = sig.select(kept :+ explode(keys).as("bk"): _*)
+      .select(kept ++ Seq(col("bk.band").as("band"), col("bk.key").as("key")): _*)
+      .repartition(col("band"), col("key"))
+    banded.as("a")
+      .join(banded.as("b"), col("a.band") === col("b.band") &&
+        col("a.key") === col("b.key") && col("a.doc_id") < col("b.doc_id"))
+  }
 
   // ---- MinHash-LSH (no SQL oracle: seeded murmur3 signatures are
   // engine-specific; the driver records a rows-only check and
@@ -145,11 +160,10 @@ object Dedup {
     * paid an explode (a row per shingle) plus a doc-keyed exchange —
     * a corpus-wide shuffle at scale for what is a map. Docs with no
     * shingles are filtered, exactly as explode dropped them. */
-  def minhashSignatures(s: SparkSession, d: String,
-                        maxDocId: Long = 1000L): DataFrame = {
+  def minhashSignatures(s: SparkSession, d: String): DataFrame = {
     val mhs = ColumnBridge.column(MinHashSigExpr(
       ColumnBridge.expression(col("sh_arr"))))
-    withShingleArr(s, d, maxDocId)
+    withShingleArr(s, d)
       .filter(size(col("sh_arr")) > 0)
       // two-level projection: the kernel evaluates ONCE into "mhs"
       // (CollapseProject keeps non-cheap multiply-referenced aliases),
@@ -172,26 +186,13 @@ object Dedup {
     * copy per call). Verification joins only the surfaced candidates
     * back to their shingle sets — the exact-quadratic all-pairs set is
     * never materialized on this path. */
-  def minhashLshPairs(s: SparkSession, d: String,
-                      maxDocId: Long = 1000L): DataFrame = {
-    val sig = minhashSignatures(s, d, maxDocId)
-    val bandStructs = array((0 until Bands).map { b =>
+  def minhashLshPairs(s: SparkSession, d: String): DataFrame = {
+    val bandKeys = array((0 until Bands).map { b =>
       val cols = (0 until RowsPerBand).map(r => col(s"mh_${b * RowsPerBand + r}"))
-      struct(lit(b).as("band"), hash(cols: _*).as("sig"))
+      struct(lit(b).as("band"), hash(cols: _*).as("key"))
     }: _*)
-    // repartition on the join key so BOTH self-join sides hang off ONE
-    // exchange (identical subplans → ReuseExchange): without it the
-    // planner broadcasts one side and the whole signature pipeline
-    // (scan → shingle → explode → 32-way min agg) is computed twice.
-    // At corpus scale the banded table is corpus-sized, so the shuffle
-    // join is also the only shape that survives.
-    val bands = sig.select(col("doc_id"), explode(bandStructs).as("bs"))
-      .select(col("doc_id"), col("bs.band").as("band"), col("bs.sig").as("sig"))
-      .repartition(col("band"), col("sig"))
-    val cand = bands.as("x")
-      .join(bands.as("y"), col("x.band") === col("y.band") &&
-        col("x.sig") === col("y.sig") && col("x.doc_id") < col("y.doc_id"))
-      .select(col("x.doc_id").as("a_id"), col("y.doc_id").as("b_id"))
+    val cand = bucketPairs(minhashSignatures(s, d), bandKeys)
+      .select(col("a.doc_id").as("a_id"), col("b.doc_id").as("b_id"))
       .distinct()
     // verify ONLY the candidates: join each side back to its shingle
     // set, count the intersection, and Jaccard-filter ≥ 0.5. No
@@ -199,30 +200,16 @@ object Dedup {
     // and broadcasts when it fits — an unconditional hint would OOM
     // the driver if candidates ever blow up at corpus scale.
     //
-    // ONE doc_id-partitioned exchange feeds both verification joins:
-    // HashPartitioning(doc_id) satisfies the a_id join outright and
-    // the (b_id, shingle) join by subset, so the scan → tokenize →
-    // shingle → explode pipeline runs once (ReuseExchange; r21
-    // measured 0.73 → 0.54 s). Each index row carries its doc's
-    // |shingle set| (8 bytes/row), so Jaccard's denominators are two
-    // extra group columns — functions of (a_id, b_id), same groups —
-    // instead of a counts aggregate plus two more joins (r22).
-    val shD = withShingleArr(s, d, maxDocId)
-      .select(col("doc_id"), size(col("sh_arr")).cast("long").as("n_sh"),
-        explode(col("sh_arr")).as("shingle"))
-      .repartition(col("doc_id"))
-    cand
+    // ONE doc_id-partitioned index feeds both verification joins (the
+    // a_id join outright, the (b_id, shingle) join by subset), so the
+    // shingle pipeline runs once (ReuseExchange; r21: 0.73 → 0.54 s).
+    val shD = shingleIndex(s, d, "doc_id")
+    jaccardPairs(cand
       .join(shD.select(col("doc_id").as("a_id"), col("n_sh").as("a_n"),
         col("shingle")), "a_id")
       .join(shD.select(col("doc_id").as("b_id"), col("n_sh").as("b_n"),
-        col("shingle")), Seq("b_id", "shingle"))
-      .groupBy("a_id", "b_id", "a_n", "b_n")
-      .agg(count(lit(1)).as("n_inter"))
-      .withColumn("jaccard",
-        round(col("n_inter") / (col("a_n") + col("b_n") - col("n_inter")), 6))
-      .filter(col("jaccard") >= 0.5)
-      .select("a_id", "b_id", "jaccard")
-      .orderBy("a_id", "b_id")
+        col("shingle")), Seq("b_id", "shingle")),
+      "a_id", "b_id", "jaccard")
   }
 
   /** SimHash: 64-bit signature — per-token xxhash64-derived bits,
@@ -232,10 +219,9 @@ object Dedup {
     * scan → project: no explode, no doc-keyed exchange at any scale.
     * Docs with no tokens are filtered, exactly as explode dropped
     * them. */
-  def simhashSignatures(s: SparkSession, d: String,
-                        maxDocId: Long = 1000L): DataFrame =
+  def simhashSignatures(s: SparkSession, d: String): DataFrame =
     Tables.documents(s, d)
-      .filter(col("doc_id") < maxDocId)
+      .filter(col("doc_id") < MaxDocId)
       .select(col("doc_id"), array_distinct(tokens(col("text"))).as("toks"))
       .filter(size(col("toks")) > 0)
       .select(col("doc_id"),
@@ -250,20 +236,12 @@ object Dedup {
     * collides on at least one — the banded candidate set is EXACTLY the
     * cartesian hamming ≤ 6 pair set (DedupSpec proves equality), with
     * no BroadcastNestedLoopJoin anywhere in the plan. */
-  def simhashPairs(s: SparkSession, d: String,
-                   maxDocId: Long = 1000L): DataFrame = {
-    val sig = simhashSignatures(s, d, maxDocId)
+  def simhashPairs(s: SparkSession, d: String): DataFrame = {
     val bandKeys = array((0 until SimhashBands).map { b =>
       struct(lit(b).as("band"),
         shiftright(col("simhash"), b * 8).bitwiseAND(0xFFL).as("key"))
     }: _*)
-    // one reused exchange for both self-join sides — see minhashLshPairs
-    val banded = sig.select(col("doc_id"), col("simhash"), explode(bandKeys).as("bk"))
-      .select(col("doc_id"), col("simhash"), col("bk.band").as("band"), col("bk.key").as("key"))
-      .repartition(col("band"), col("key"))
-    banded.as("a")
-      .join(banded.as("b"), col("a.band") === col("b.band") &&
-        col("a.key") === col("b.key") && col("a.doc_id") < col("b.doc_id"))
+    bucketPairs(simhashSignatures(s, d), bandKeys, "simhash")
       .select(col("a.doc_id").as("a_id"), col("b.doc_id").as("b_id"),
         bit_count(col("a.simhash").bitwiseXOR(col("b.simhash"))).as("hamming"))
       .filter(col("hamming") <= 6)
@@ -274,7 +252,7 @@ object Dedup {
   val all: Seq[GQuery] = Seq(
     GQuery("q30_dedup_exact", dedupExact, Some(dedupExactSql)),
     GQuery("q31_dedup_prefix", dedupPrefix, Some(dedupPrefixSql)),
-    GQuery("q32_ngram_jaccard_pairs", (s, d) => ngramJaccardPairs(s, d), Some(ngramJaccardPairsSql)),
-    GQuery("q33_minhash_lsh_pairs", (s, d) => minhashLshPairs(s, d), None),
-    GQuery("q34_simhash_pairs", (s, d) => simhashPairs(s, d), None))
+    GQuery("q32_ngram_jaccard_pairs", ngramJaccardPairs, Some(ngramJaccardPairsSql)),
+    GQuery("q33_minhash_lsh_pairs", minhashLshPairs, None),
+    GQuery("q34_simhash_pairs", simhashPairs, None))
 }

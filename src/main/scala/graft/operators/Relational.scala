@@ -28,23 +28,18 @@ object Relational {
   def pricingSummary(s: SparkSession, d: String): DataFrame =
     Tables.lineitem(s, d)
       .filter(col("l_shipdate") <= to_timestamp(lit("1998-09-02")))
-      // each summed value's unscaled parse is projected ONCE per row
-      // (see QueryUtils.unscaled18); the aggregate then works on longs
       .withColumn("v_disc_price", col("l_extendedprice") * (lit(1) - col("l_discount")))
       .withColumn("v_charge", col("v_disc_price") * (lit(1) + col("l_tax")))
-      .withColumn("u_qty", unscaled18(col("l_quantity")))
-      .withColumn("u_price", unscaled18(col("l_extendedprice")))
-      .withColumn("u_disc_price", unscaled18(col("v_disc_price")))
-      .withColumn("u_charge", unscaled18(col("v_charge")))
-      .withColumn("u_disc", unscaled18(col("l_discount")))
+      .transform(withExactParse("l_quantity", "l_extendedprice", "v_disc_price", "v_charge",
+        "l_discount"))
       .groupBy("l_returnflag", "l_linestatus")
       .agg(
-        dsum(col("u_qty"), col("l_quantity")).as("sum_qty"),
-        dsum(col("u_price"), col("l_extendedprice")).as("sum_base_price"),
-        dsum(col("u_disc_price"), col("v_disc_price")).as("sum_disc_price"),
-        dsum(col("u_charge"), col("v_charge")).as("sum_charge"),
-        davg(col("u_qty"), col("l_quantity")).as("avg_qty"),
-        davg(col("u_disc"), col("l_discount")).as("avg_disc"),
+        dsum("l_quantity").as("sum_qty"),
+        dsum("l_extendedprice").as("sum_base_price"),
+        dsum("v_disc_price").as("sum_disc_price"),
+        dsum("v_charge").as("sum_charge"),
+        davg("l_quantity").as("avg_qty"),
+        davg("l_discount").as("avg_disc"),
         count(lit(1)).as("count_order"))
       .orderBy("l_returnflag", "l_linestatus")
 
@@ -65,9 +60,9 @@ object Relational {
   /** Plain histogram (reference Q1, notebook cell 5: value_counts). */
   def eventHistogram(s: SparkSession, d: String): DataFrame =
     Tables.events(s, d)
-      .withColumn("_u", unscaled18(col("value")))
+      .transform(withExactParse("value"))
       .groupBy("event_type")
-      .agg(count(lit(1)).as("n"), dsum(col("_u"), col("value")).as("sum_value"))
+      .agg(count(lit(1)).as("n"), dsum("value").as("sum_value"))
       .orderBy("event_type")
 
   val eventHistogramSql: String =
@@ -116,9 +111,9 @@ object Relational {
   def revenueByNation(s: SparkSession, d: String): DataFrame = {
     val liPerOrder = Tables.lineitem(s, d)
       .withColumn("v_rev", col("l_extendedprice") * (lit(1) - col("l_discount")))
-      .withColumn("_u", unscaled18(col("v_rev")))
+      .transform(withExactParse("v_rev"))
       .groupBy("l_orderkey")
-      .agg(sumDecParts(col("_u"), col("v_rev")).as("rev"))
+      .agg(sumDecParts("v_rev").as("rev"))
     val o = Tables.orders(s, d)
       .filter(col("o_orderdate") >= to_timestamp(lit("1996-01-01")) &&
         col("o_orderdate") < to_timestamp(lit("1999-01-01")))
@@ -154,12 +149,11 @@ object Relational {
   def partsByBrand(s: SparkSession, d: String): DataFrame =
     Tables.lineitem(s, d)
       .join(broadcast(Tables.part(s, d)), col("l_partkey") === col("p_partkey"))
-      .withColumn("u_qty", unscaled18(col("l_quantity")))
-      .withColumn("u_price", unscaled18(col("l_extendedprice")))
+      .transform(withExactParse("l_quantity", "l_extendedprice"))
       .groupBy("p_brand")
       .agg(
-        dsum(col("u_qty"), col("l_quantity")).as("sum_qty"),
-        dsum(col("u_price"), col("l_extendedprice")).as("sum_price"),
+        dsum("l_quantity").as("sum_qty"),
+        dsum("l_extendedprice").as("sum_price"),
         count(lit(1)).as("n_items"))
       .orderBy("p_brand")
 
@@ -229,10 +223,9 @@ object Relational {
     * before you shuffle" move applied to Expand. */
   def rollupOrders(s: SparkSession, d: String): DataFrame =
     Tables.orders(s, d)
-      .withColumn("_u", unscaled18(col("o_totalprice")))
+      .transform(withExactParse("o_totalprice"))
       .groupBy("o_orderstatus", "o_orderpriority")
-      .agg(count(lit(1)).as("pn"),
-        sumDecParts(col("_u"), col("o_totalprice")).as("ps"))
+      .agg(count(lit(1)).as("pn"), sumDecParts("o_totalprice").as("ps"))
       .rollup("o_orderstatus", "o_orderpriority")
       .agg(sum(col("pn")).as("n"),
         round(sumOfParts(col("ps")).cast("double"), 4).as("sum_price"))
@@ -250,10 +243,9 @@ object Relational {
   def cubeEvents(s: SparkSession, d: String): DataFrame =
     Tables.events(s, d)
       .withColumn("dow", dayofweek(col("ts")).cast("long"))
-      .withColumn("_u", unscaled18(col("value")))
+      .transform(withExactParse("value"))
       .groupBy("event_type", "dow")
-      .agg(count(lit(1)).as("pn"),
-        sumDecParts(col("_u"), col("value")).as("ps"))
+      .agg(count(lit(1)).as("pn"), sumDecParts("value").as("ps"))
       .cube("event_type", "dow")
       .agg(sum(col("pn")).as("n"),
         round(sumOfParts(col("ps")).cast("double"), 4).as("sum_value"))
@@ -326,13 +318,10 @@ object Relational {
     * are bit-identical to the oracle's decorrelated subquery. */
   def aboveAvgOrders(s: SparkSession, d: String): DataFrame = {
     val w = Window.partitionBy("o_custkey")
-    // window update projections don't CSE, so the unscaled parse is
-    // pre-projected once per row and the window sum reads attributes
     Tables.orders(s, d)
-      .withColumn("_u", unscaled18(col("o_totalprice")))
+      .transform(withExactParse("o_totalprice"))
       .withColumn("cust_avg",
-        round(sumDec(col("_u"), col("o_totalprice")).over(w)
-          .cast("double") / count(lit(1)).over(w), 6))
+        round(sumDec("o_totalprice").over(w).cast("double") / count(lit(1)).over(w), 6))
       .filter(col("o_totalprice") > col("cust_avg"))
       .select("o_orderkey", "o_custkey", "o_totalprice", "cust_avg")
       .orderBy("o_orderkey")

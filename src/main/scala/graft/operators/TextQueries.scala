@@ -25,9 +25,6 @@ object TextQueries {
   private val messySqlPrefix = "'  #Tag @user http://x.com/a?b=1 '"
   private val messySqlSuffix = "' READ!!' || chr(9)"
 
-  /** Python string.punctuation with the single quote doubled for SQL. */
-  private val punctSql = asciiPunctuation.replace("'", "''")
-
   /** F1–F5 chain (reference src/utils.py:5-10). */
   def cleanTextQuery(s: SparkSession, d: String): DataFrame =
     Tables.documents(s, d)
@@ -36,16 +33,7 @@ object TextQueries {
 
   val cleanTextSql: String =
     s"""SELECT doc_id,
-       |  regexp_replace(
-       |    lower(translate(
-       |      regexp_replace(
-       |        regexp_replace(
-       |          regexp_replace($messySqlPrefix || text || $messySqlSuffix,
-       |            'http\\S+|www\\S+', '', 'g'),
-       |          '@\\w+', '', 'g'),
-       |        '#\\w+', '', 'g'),
-       |      '$punctSql', '')),
-       |    '^\\s+|\\s+$$', '', 'g') AS clean
+       |  ${sqlCleanText(s"$messySqlPrefix || text || $messySqlSuffix")} AS clean
        |FROM documents ORDER BY doc_id""".stripMargin
 
   /** F6: label decode (reference src/predict.py:84-92) over a
@@ -75,11 +63,10 @@ object TextQueries {
       .orderBy("doc_id")
 
   val tokenStatsSql: String =
-    """SELECT doc_id, n_chars,
-      |  len(regexp_split_to_array(regexp_replace(text, '^\s+|\s+$', '', 'g'), '\s+')) AS n_tokens,
-      |  length(text) AS len_chars,
-      |  n_chars = length(text) AS chars_match
-      |FROM documents ORDER BY doc_id""".stripMargin
+    s"""SELECT doc_id, n_chars, len(${sqlTokens("text")}) AS n_tokens,
+       |  length(text) AS len_chars,
+       |  n_chars = length(text) AS chars_match
+       |FROM documents ORDER BY doc_id""".stripMargin
 
   /** Quality scoring: stopword ratio, mean token length, bucketing —
     * the length/punct/stopword heuristics of a pretraining filter. */
@@ -106,8 +93,6 @@ object TextQueries {
       .orderBy("doc_id")
   }
 
-  private val toksSql =
-    "regexp_split_to_array(regexp_replace(text, '^\\s+|\\s+$', '', 'g'), '\\s+')"
   private val stopInSql =
     qualityStopwords.map(w => s"'$w'").mkString(", ")
 
@@ -122,7 +107,7 @@ object TextQueries {
        |  SELECT doc_id, len(t) AS n_tokens,
        |    len(list_filter(t, w -> w IN ($stopInSql))) AS n_stop,
        |    list_sum(list_transform(t, w -> length(w)))::BIGINT AS char_sum
-       |  FROM (SELECT doc_id, $toksSql AS t FROM documents))
+       |  FROM (SELECT doc_id, ${sqlTokens("text")} AS t FROM documents))
        |ORDER BY doc_id""".stripMargin
 
   /** Language guess via marker-word hit counts (n-gram heuristic
@@ -148,16 +133,14 @@ object TextQueries {
   private def markerSql(markers: Seq[String]) =
     s"len(regexp_extract_all(text, '\\b(${markers.mkString("|")})\\b'))"
 
+  private val guessSql =
+    """CASE WHEN en_n >= greatest(fr_n, es_n, de_n) THEN 'en'
+      |  WHEN fr_n >= greatest(es_n, de_n) THEN 'fr'
+      |  WHEN es_n >= de_n THEN 'es' ELSE 'de' END""".stripMargin
+
   val langGuessSql: String =
     s"""SELECT doc_id, lang, en_n, fr_n, es_n, de_n,
-       |  CASE WHEN en_n >= greatest(fr_n, es_n, de_n) THEN 'en'
-       |       WHEN fr_n >= greatest(es_n, de_n) THEN 'fr'
-       |       WHEN es_n >= de_n THEN 'es'
-       |       ELSE 'de' END AS guess,
-       |  (CASE WHEN en_n >= greatest(fr_n, es_n, de_n) THEN 'en'
-       |       WHEN fr_n >= greatest(es_n, de_n) THEN 'fr'
-       |       WHEN es_n >= de_n THEN 'es'
-       |       ELSE 'de' END) = lang AS hit
+       |  $guessSql AS guess, ($guessSql) = lang AS hit
        |FROM (
        |  SELECT doc_id, lang,
        |    ${markerSql(enMarkers)} AS en_n,
@@ -175,13 +158,7 @@ object TextQueries {
       .orderBy("doc_id")
 
   val fingerprintSql: String =
-    s"""SELECT doc_id,
-       |  md5(regexp_replace(
-       |    lower(translate(
-       |      regexp_replace(regexp_replace(regexp_replace(text,
-       |        'http\\S+|www\\S+', '', 'g'), '@\\w+', '', 'g'), '#\\w+', '', 'g'),
-       |      '$punctSql', '')),
-       |    '^\\s+|\\s+$$', '', 'g')) AS fp
+    s"""SELECT doc_id, md5(${sqlCleanText("text")}) AS fp
        |FROM documents ORDER BY doc_id""".stripMargin
 
   /** Multimodal plumbing: opaque binary payload column + typed

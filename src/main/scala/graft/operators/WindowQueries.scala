@@ -1,6 +1,6 @@
 package graft.operators
 
-import graft.core.{GQuery, QueryUtils, Tables}
+import graft.core.{GQuery, Tables}
 import graft.core.QueryUtils._
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
@@ -22,9 +22,9 @@ object WindowQueries {
     * aligned, i.e. exactly date_trunc('hour')). */
   def tumblingHourly(s: SparkSession, d: String): DataFrame =
     Tables.events(s, d)
-      .withColumn("_u", unscaled18(col("value")))
+      .transform(withExactParse("value"))
       .groupBy(window(col("ts"), "1 hour").as("w"), col("event_type"))
-      .agg(count(lit(1)).as("n"), dsum(col("_u"), col("value")).as("sum_value"))
+      .agg(count(lit(1)).as("n"), dsum("value").as("sum_value"))
       .select(col("w.start").as("ws"), col("event_type"), col("n"), col("sum_value"))
       .orderBy("ws", "event_type")
 
@@ -37,9 +37,9 @@ object WindowQueries {
     * two windows (starts at trunc(ts,h) and trunc(ts,h)-1h). */
   def slidingTwoHour(s: SparkSession, d: String): DataFrame =
     Tables.events(s, d)
-      .withColumn("_u", unscaled18(col("value")))
+      .transform(withExactParse("value"))
       .groupBy(window(col("ts"), "2 hours", "1 hour").as("w"))
-      .agg(count(lit(1)).as("n"), dsum(col("_u"), col("value")).as("sum_value"))
+      .agg(count(lit(1)).as("n"), dsum("value").as("sum_value"))
       .select(col("w.start").as("ws"), col("n"), col("sum_value"))
       .orderBy("ws")
 
@@ -72,12 +72,12 @@ object WindowQueries {
           .otherwise(0))
       .withColumn("sess_id",
         sum(col("new_sess")).over(byUser.rowsBetween(Window.unboundedPreceding, 0)))
-      .withColumn("_u", unscaled18(col("value")))
+      .transform(withExactParse("value"))
       .groupBy("user_id", "sess_id")
       .agg(count(lit(1)).as("n_events"),
         min(col("ts_us")).as("start_us"),
         max(col("ts_us")).as("end_us"),
-        dsum(col("_u"), col("value")).as("sum_value"))
+        dsum("value").as("sum_value"))
       .orderBy("user_id", "sess_id")
   }
 
@@ -94,42 +94,37 @@ object WindowQueries {
        |  FROM marked)
        |SELECT user_id, sess_id, count(*) AS n_events,
        |  min(ts_us) AS start_us, max(ts_us) AS end_us,
-       |  ${QueryUtils.sqlDsum("value")} AS sum_value
+       |  ${sqlDsum("value")} AS sum_value
        |FROM sess GROUP BY user_id, sess_id ORDER BY user_id, sess_id""".stripMargin
 
-  /** Running per-user cumulative value + event index over time — the
-    * ordered-window face (frame = unbounded preceding). `maxUserId`
-    * bounds the slice so the oracle's row count stays constant as sf
-    * grows — an oracle-harness knob like Dedup's `maxDocId`, not part
-    * of the operator semantics. */
-  private val DefaultMaxUserId = 20L
+  /** q43's slice, users below this id: the oracle's row count stays
+    * constant as sf grows. The filter and the oracle SQL read it. */
+  private val MaxUserId = 20L
 
-  def runningTotals(s: SparkSession, d: String,
-                    maxUserId: Long = DefaultMaxUserId): DataFrame = {
+  /** Running per-user cumulative value + event index over time — the
+    * ordered-window face (frame = unbounded preceding), over the
+    * `MaxUserId` slice. */
+  def runningTotals(s: SparkSession, d: String): DataFrame = {
     val byUser = Window.partitionBy("user_id").orderBy(col("ts_us"), col("event_id"))
     Tables.events(s, d)
-      .filter(col("user_id") < maxUserId)
+      .filter(col("user_id") < MaxUserId)
       .withColumn("ts_us", unix_micros(col("ts")))
       .withColumn("idx", row_number().over(byUser).cast("long"))
-      // pre-projected parse: window update projections don't CSE
-      .withColumn("_u", QueryUtils.unscaled18(col("value")))
+      .transform(withExactParse("value"))
       .withColumn("cum_value",
-        round(QueryUtils.sumDec(col("_u"), col("value"))
-          .over(byUser.rowsBetween(Window.unboundedPreceding, 0))
+        round(sumDec("value").over(byUser.rowsBetween(Window.unboundedPreceding, 0))
           .cast("double"), 4))
       .select("user_id", "idx", "event_id", "ts_us", "cum_value")
       .orderBy("user_id", "idx")
   }
 
-  // the oracle replays the DEFAULT slice; sharing the constant keeps a
-  // non-default maxUserId call from silently desyncing from this SQL
   val runningTotalsSql: String =
     s"""SELECT user_id, row_number() OVER w AS idx, event_id,
        |  epoch_us(ts) AS ts_us,
        |  round(sum(value::DECIMAL(28,10)) OVER (PARTITION BY user_id
        |    ORDER BY epoch_us(ts), event_id
        |    ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)::DOUBLE, 4) AS cum_value
-       |FROM events WHERE user_id < $DefaultMaxUserId
+       |FROM events WHERE user_id < $MaxUserId
        |WINDOW w AS (PARTITION BY user_id ORDER BY epoch_us(ts), event_id)
        |ORDER BY user_id, idx""".stripMargin
 
@@ -137,5 +132,5 @@ object WindowQueries {
     GQuery("q40_tumbling_hourly", tumblingHourly, Some(tumblingHourlySql)),
     GQuery("q41_sliding_two_hour", slidingTwoHour, Some(slidingTwoHourSql)),
     GQuery("q42_sessionize", sessionize, Some(sessionizeSql)),
-    GQuery("q43_running_totals", (s, d) => runningTotals(s, d), Some(runningTotalsSql)))
+    GQuery("q43_running_totals", runningTotals, Some(runningTotalsSql)))
 }

@@ -21,7 +21,7 @@ class DecimalFastSpec extends AnyFunSuite {
   }
 
   private def check(d: Double): Unit = {
-    val fast = DecimalFast.toDec2810(d)
+    val fast = DecimalFastSpec.toDec2810(d)
     val slow = ref(d)
     assert(fast.toJavaBigDecimal == slow.toJavaBigDecimal,
       s"d=$d fast=${fast.toJavaBigDecimal} ref=${slow.toJavaBigDecimal} " +
@@ -40,8 +40,8 @@ class DecimalFastSpec extends AnyFunSuite {
   }
 
   test("fast conversion throws where Cast overflows Decimal(28,10)") {
-    intercept[ArithmeticException](DecimalFast.toDec2810(1e19))
-    intercept[ArithmeticException](DecimalFast.toDec2810(-1e19))
+    intercept[ArithmeticException](DecimalFastSpec.toDec2810(1e19))
+    intercept[ArithmeticException](DecimalFastSpec.toDec2810(-1e19))
   }
 
   test("fast conversion equals Cast on seeded random doubles") {
@@ -144,5 +144,14 @@ class DecimalFastSpec extends AnyFunSuite {
       assert(fast.count() > 0L, e.toString)
       assert(fast.filter(not(col("fast") <=> col("slow"))).count() === 0L, e.toString)
     }
+  }
+}
+
+object DecimalFastSpec {
+  /** double → DECIMAL(28,10) as the exact sums compute it: the fast
+    * parse, or the Cast reference where the parse returns the sentinel. */
+  def toDec2810(d: Double): Decimal = {
+    val u = DecimalFast.unscaled18OrSentinel(d)
+    if (u == DecimalSum.Sentinel) DecimalFast.reference(d) else Decimal.createUnsafe(u, 28, 10)
   }
 }

@@ -68,7 +68,7 @@ class DedupSpec extends AnyFunSuite {
     import org.apache.spark.sql.graftbridge.SignatureUtil
     val p = SignatureUtil.Prime
     val sh = core.Tables.documents(spark, sf)
-      .filter(col("doc_id") < 1000L)
+      .filter(col("doc_id") < Dedup.MaxDocId)
       .select(col("doc_id"),
         explode(array_distinct(wordShingles(tokens(col("text")), 3))).as("shingle"))
       .withColumn("sh_hash", pmod(hash(col("shingle")).cast("long"), lit(p)))
@@ -86,7 +86,7 @@ class DedupSpec extends AnyFunSuite {
   test("SimHash kernel signatures equal the 64-sum aggregate spelling") {
     import graft.functions.TextFunctions._
     val tok = core.Tables.documents(spark, sf)
-      .filter(col("doc_id") < 1000L)
+      .filter(col("doc_id") < Dedup.MaxDocId)
       .select(col("doc_id"), explode(array_distinct(tokens(col("text")))).as("tok"))
       .withColumn("h", xxhash64(col("tok")))
     val bitSums = (0 until 64).map { i =>

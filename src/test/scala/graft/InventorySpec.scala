@@ -2,6 +2,7 @@ package graft
 
 import scala.sys.process._
 import scala.util.Try
+import org.apache.commons.io.FileUtils
 import org.apache.spark.sql.functions.col
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -216,12 +217,22 @@ class InventorySpec extends AnyFunSuite {
   test("every query's sf0.001 result matches its DuckDB oracle") {
     assume(Try(Seq("python3", "-c", "import duckdb, pandas").!).toOption.contains(0),
       "python3 with duckdb and pandas is needed to replay the oracle")
-    TestSpark.withTempDir { dir =>
-      assert(Verify.dump(spark, TestSpark.sfDir, dir).isEmpty)
+    def replay(dir: String): (Int, String) = {
       val log = new StringBuilder
       val exit = Seq("python3", "tools/check_oracle.py", TestSpark.sfDir, dir)
         .!(ProcessLogger(line => log.append(line).append('\n')))
-      assert(exit === 0, log.toString)
+      (exit, log.toString)
+    }
+    TestSpark.withTempDir { dir =>
+      assert(Verify.dump(spark, TestSpark.sfDir, dir).isEmpty)
+      val (exit, log) = replay(dir)
+      assert(exit === 0, log)
+      // a query that failed inside Verify leaves no output: not a skip
+      FileUtils.deleteDirectory(new java.io.File(s"$dir/q02_event_histogram"))
+      val (missingExit, missingLog) = replay(dir)
+      assert(missingExit === 1, missingLog)
+      assert(missingLog.linesIterator.exists(l =>
+        l.startsWith("q02_event_histogram") && l.contains("MISSING")), missingLog)
     }
   }
 }

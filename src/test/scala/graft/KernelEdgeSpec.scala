@@ -102,8 +102,8 @@ class KernelEdgeSpec extends AnyFunSuite {
 
   /** Exact sum of `values` through `QueryUtils.sumDec`. */
   private def sumDec(values: Seq[Any]): Any =
-    frame(DoubleType, values).withColumn("_u", QueryUtils.unscaled18(col("x")))
-      .agg(QueryUtils.sumDec(col("_u"), col("x"))).head().get(0)
+    frame(DoubleType, values).transform(QueryUtils.withExactParse("x"))
+      .agg(QueryUtils.sumDec("x")).head().get(0)
 
   /** (input values, expected exact DECIMAL(38,10) sum) */
   private val sums: Seq[(Seq[Any], Any)] = Seq(

@@ -1,7 +1,7 @@
 package graft
 
 import graft.core.QueryUtils
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{AnalysisException, Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graftbridge.DecimalSum
@@ -23,10 +23,8 @@ class SumScaledSpec extends AnyFunSuite {
   private def refSum(c: Column): Column =
     sum(c.cast(DecimalType(28, 10)))
 
-  private def newSum(df: DataFrame, c: Column): (DataFrame, Column) = {
-    val withU = df.withColumn("_su", QueryUtils.unscaled18(c))
-    (withU, QueryUtils.sumDec(col("_su"), c))
-  }
+  private def newSum(df: DataFrame, c: String): (DataFrame, Column) =
+    (df.transform(QueryUtils.withExactParse(c)), QueryUtils.sumDec(c))
 
   /** Seeded corpus: ~groups of doubles with magnitude mix that forces
     * lo-carries (values near 1e8 have unscaled near 1e18), negatives,
@@ -58,7 +56,7 @@ class SumScaledSpec extends AnyFunSuite {
       val (hi, lo) =
         if (u == DecimalSum.Sentinel) (DecimalSum.slowHi18(d), DecimalSum.slowLo18(d))
         else (0L, u)
-      val expect = org.apache.spark.sql.graftbridge.DecimalFast.toDec2810(d).toJavaBigDecimal
+      val expect = DecimalFastSpec.toDec2810(d).toJavaBigDecimal
       val got = DecimalSum.combine(hi, lo).toJavaBigDecimal
       assert(got.compareTo(expect) == 0, s"d=$d hi=$hi lo=$lo got=$got expect=$expect")
     }
@@ -66,7 +64,7 @@ class SumScaledSpec extends AnyFunSuite {
 
   test("grouped sumDec equals built-in Sum over the decimal cast") {
     val df = corpus(seed = 7, rows = 20000, groups = 13)
-    val (withU, agg) = newSum(df, col("v"))
+    val (withU, agg) = newSum(df, "v")
     val got = withU.groupBy("g").agg(agg.as("s")).orderBy("g")
     val want = df.groupBy("g").agg(refSum(col("v")).cast(DecimalType(38, 10)).as("s")).orderBy("g")
     val mismatch = got.join(want.withColumnRenamed("s", "ws"), "g")
@@ -78,10 +76,9 @@ class SumScaledSpec extends AnyFunSuite {
 
   test("dsum/davg (rounded doubles) equal the pre-kernel spelling") {
     val df = corpus(seed = 11, rows = 20000, groups = 7)
-    val withU = df.withColumn("_su", QueryUtils.unscaled18(col("v")))
-    val got = withU.groupBy("g").agg(
-      QueryUtils.dsum(col("_su"), col("v")).as("s"),
-      QueryUtils.davg(col("_su"), col("v")).as("a")).orderBy("g")
+    val got = df.transform(QueryUtils.withExactParse("v")).groupBy("g").agg(
+      QueryUtils.dsum("v").as("s"),
+      QueryUtils.davg("v").as("a")).orderBy("g")
     val want = df.groupBy("g").agg(
       round(refSum(col("v")).cast("double"), 4).as("s"),
       round(refSum(col("v")).cast("double") / count(lit(1)), 6).as("a")).orderBy("g")
@@ -91,10 +88,9 @@ class SumScaledSpec extends AnyFunSuite {
   test("two-level struct partials re-aggregate exactly, incl. through ROLLUP") {
     val df = corpus(seed = 23, rows = 20000, groups = 40)
       .withColumn("g2", col("g") % 5)
-    val withU = df.withColumn("_su", QueryUtils.unscaled18(col("v")))
-    val got = withU
+    val got = df.transform(QueryUtils.withExactParse("v"))
       .groupBy("g", "g2")
-      .agg(count(lit(1)).as("pn"), QueryUtils.sumDecParts(col("_su"), col("v")).as("ps"))
+      .agg(count(lit(1)).as("pn"), QueryUtils.sumDecParts("v").as("ps"))
       .rollup("g2")
       .agg(sum(col("pn")).as("n"), round(QueryUtils.sumOfParts(col("ps")).cast("double"), 4).as("s"))
       .orderBy(asc_nulls_first("g2"))
@@ -108,12 +104,22 @@ class SumScaledSpec extends AnyFunSuite {
   test("windowed sumDec (running frame) equals built-in Sum over the cast") {
     val df = corpus(seed = 31, rows = 5000, groups = 9)
     val w = Window.partitionBy("g").orderBy("id").rowsBetween(Window.unboundedPreceding, 0)
-    val withU = df.withColumn("_su", QueryUtils.unscaled18(col("v")))
-    val bad = withU
-      .withColumn("s", QueryUtils.sumDec(col("_su"), col("v")).over(w).cast(DecimalType(38, 10)))
+    val bad = df.transform(QueryUtils.withExactParse("v"))
+      .withColumn("s", QueryUtils.sumDec("v").over(w).cast(DecimalType(38, 10)))
       .withColumn("ws", refSum(col("v")).over(w).cast(DecimalType(38, 10)))
       .filter(not(col("s") <=> col("ws")))
     assert(bad.count() === 0L)
+  }
+
+  test("a name-keyed sum without its column's withExactParse fails when the frame is built") {
+    val df = corpus(seed = 3, rows = 10, groups = 2).withColumn("w", col("v") * 2)
+    intercept[AnalysisException](df.groupBy("g").agg(QueryUtils.dsum("v")))
+    // another column's parse does not stand in for v's
+    val parsedW = df.transform(QueryUtils.withExactParse("w"))
+    intercept[AnalysisException](parsedW.groupBy("g").agg(QueryUtils.davg("v")))
+    intercept[AnalysisException](parsedW.groupBy("g").agg(QueryUtils.sumDecParts("v")))
+    intercept[AnalysisException](
+      parsedW.withColumn("s", QueryUtils.sumDec("v").over(Window.partitionBy("g"))))
   }
 
   test("lo-carry torture: values pinned near the 10^18 unscaled bound") {
@@ -125,7 +131,7 @@ class SumScaledSpec extends AnyFunSuite {
       (i.toLong, (i % 3).toLong, sign * (9e7 + rnd.nextDouble() * 1e7))
     }
     val df = spark.createDataFrame(data).toDF("id", "g", "v")
-    val (withU, agg) = newSum(df, col("v"))
+    val (withU, agg) = newSum(df, "v")
     val got = withU.groupBy("g").agg(agg.cast(DecimalType(38, 10)).as("s")).orderBy("g")
     val want = df.groupBy("g").agg(refSum(col("v")).cast(DecimalType(38, 10)).as("s")).orderBy("g")
     assert(got.collect().toSeq === want.collect().toSeq)

@@ -4,7 +4,9 @@ the shipped library is Scala; this mimics the DuckDB oracle compare).
 
 Usage: python3 tools/check_oracle.py [sfdir] [outdir]
 Expects graft.Verify to have written <outdir>/<query>/ parquet dirs and
-<outdir>/oracle_sql.json.
+<outdir>/oracle_sql.json. An oracle query with no parquet output (no
+directory, or an empty one left by a failed write) is reported MISSING
+and counts as a failure.
 """
 import sys, json, glob, math
 
@@ -31,9 +33,15 @@ def normalize(df):
     df = df.sort_values(by=list(df.columns), ignore_index=True)
     return df
 
+dirs = {n.rstrip("/").split("/")[-1]: n for n in glob.glob(f"{out}/*/")}
 fails = 0
-for name in sorted(glob.glob(f"{out}/*/")):
-    qname = name.rstrip("/").split("/")[-1]
+for qname in sorted(set(dirs) | set(oracle)):
+    name = dirs.get(qname)
+    # a query that failed inside Verify leaves no parquet output
+    if name is None or not glob.glob(f"{name}*.parquet"):
+        print(f"{qname:32s} MISSING: no output")
+        fails += 1
+        continue
     mine = con.execute(f"SELECT * FROM read_parquet('{name}/*.parquet')").df()
     if qname not in oracle:
         print(f"{qname:32s} rows-only: {len(mine)} rows")
