@@ -12,16 +12,18 @@ import org.apache.spark.sql.graftbridge.{ColumnBridge, MinHashSigExpr, Signature
   * Scale posture:
   *  - exact/prefix dedup: one hash-shuffle on the content key; at
   *    100 TB this is the canonical "groupBy(sha) keep min(id)" job.
-  *  - n-gram Jaccard: shingle-inverted-index self-join. The candidate
-  *    generation is bounded per shingle; hot shingles are the skew risk,
-  *    so the exact variant is run on a bounded slice and the scalable
-  *    path is MinHash-LSH below (band-bucket join, no quadratic blowup).
-  *  - MinHash-LSH: signatures are computed in one pass (explode →
-  *    groupBy doc), candidates come from equality joins on band
-  *    signatures — the standard sub-quadratic shape.
-  *  - SimHash: one pass to 64-bit signatures; pairs via 8×8-bit band
-  *    equality-joins + hamming filter — exact for hamming ≤ 6 by
-  *    pigeonhole, never a nested-loop cartesian.
+  *  - near-dup pairs (q32–q34): each document is keyed into buckets
+  *    (its shingles for n-gram Jaccard, its (band, key) signature bands
+  *    for MinHash-LSH and SimHash), and one aggregate collects every
+  *    bucket's documents, which two explodes pair up (`bucketPairs`):
+  *    the standard LSH shape, a hash shuffle on the bucket key, with no
+  *    self-join and no nested-loop cartesian. Hot buckets are the skew
+  *    risk, so the near-dup queries run on a bounded slice
+  *    (`MaxDocId`) at every scale; a slice that fits one partition runs
+  *    as one task under `SinglePartitionStages`.
+  *  - MinHash-LSH and SimHash sign each document in one scan → project
+  *    pass; a candidate pair is verified from what its bucket carried
+  *    (shingle sets, signatures), so `documents` is scanned once.
   */
 object Dedup {
 
@@ -39,11 +41,12 @@ object Dedup {
       |FROM documents GROUP BY md5(text) ORDER BY keeper""".stripMargin
 
   /** Prefix-key near-dedup: normalize, take the first 5 tokens as the
-    * blocking key (a cheap URL/boilerplate-style dedup key). */
+    * blocking key (a cheap URL/boilerplate-style dedup key). NULL text
+    * has a NULL key, a group of its own, as in the oracle SQL. */
   def dedupPrefix(s: SparkSession, d: String): DataFrame =
     Tables.documents(s, d)
       .select(col("doc_id"),
-        concat_ws(" ", slice(tokens(col("text")), 1, 5)).as("prefix_key"))
+        array_join(slice(tokens(col("text")), 1, 5), " ").as("prefix_key"))
       .groupBy("prefix_key")
       .agg(min(col("doc_id")).as("keeper"), count(lit(1)).as("n_docs"))
       .orderBy("keeper")
@@ -66,42 +69,48 @@ object Dedup {
       .select(col("doc_id"),
         array_distinct(wordShingles(tokens(col("text")), 3)).as("sh_arr"))
 
-  /** Inverted-index rows (doc_id, n_sh, shingle): each doc's |shingle
-    * set| rides the index for 8 bytes/row, so Jaccard's denominators
-    * need no second scan → tokenize → shingle pass and no count-joins.
-    * Hash-partitioned on `key`, the consumer's join column, so all join
-    * sides hang off one reused exchange instead of the planner
-    * broadcasting one side and recomputing the pipeline for it; at
-    * corpus scale the index is unbroadcastable anyway (hot-shingle skew
-    * is AQE's skew join's job). */
-  private def shingleIndex(s: SparkSession, d: String, key: String): DataFrame =
-    withShingleArr(s, d)
-      .select(col("doc_id"), size(col("sh_arr")).cast("long").as("n_sh"),
-        explode(col("sh_arr")).as("shingle"))
-      .repartition(col(key))
+  /** Pairs of documents that share a bucket, as struct columns `a` and
+    * `b` of `doc_id` and the `carry` columns, a.doc_id < b.doc_id, one
+    * row per pair and shared bucket. `buckets` is each document's array
+    * of distinct bucket keys. One aggregate collects each bucket's
+    * documents and two explodes of that list pair them, with no
+    * self-join: a single-input aggregate, which `SinglePartitionStages`
+    * runs in one task when its input fits one partition, and otherwise
+    * a hash shuffle on the bucket key. A bucket of k documents yields k²
+    * rows before the filter, as a self-join would. */
+  private def bucketPairs(docs: DataFrame, buckets: Column, carry: String*): DataFrame = {
+    val kept = ("doc_id" +: carry).map(col)
+    docs.select(kept :+ explode(buckets).as("bucket"): _*)
+      .groupBy("bucket")
+      .agg(collect_list(struct(kept: _*)).as("ds"))
+      .select(explode(col("ds")).as("a"), col("ds"))
+      .select(col("a"), explode(col("ds")).as("b"))
+      .filter(col("a.doc_id") < col("b.doc_id"))
+  }
 
-  /** Pairs with Jaccard ≥ 0.5, as `cols` ordered by pair, from one row
-    * per shingle a pair (a_id, b_id) shares, carrying both set sizes
-    * (a_n, b_n). The sizes are functions of the ids, so grouping by
-    * them too keeps the groups, with no counts aggregate or count-joins. */
-  private def jaccardPairs(shared: DataFrame, cols: String*): DataFrame =
-    shared.groupBy("a_id", "b_id", "a_n", "b_n")
-      .agg(count(lit(1)).as("n_inter"))
+  /** Pairs with Jaccard ≥ 0.5, as `cols` ordered by pair, from rows
+    * (a_id, b_id, a_n, b_n, n_inter): a pair, both shingle-set sizes and
+    * the size of their intersection. */
+  private def jaccardPairs(pairs: DataFrame, cols: String*): DataFrame =
+    pairs
       .withColumn("jaccard",
         round(col("n_inter") / (col("a_n") + col("b_n") - col("n_inter")), 6))
       .filter(col("jaccard") >= 0.5)
       .select(cols.map(col): _*)
       .orderBy("a_id", "b_id")
 
-  /** Exact n-gram Jaccard near-dup pairs via a shingle inverted index:
-    * explode → self-equi-join on shingle → |∩| per pair → Jaccard. */
+  /** Exact n-gram Jaccard near-dup pairs: every shingle is a bucket, so
+    * a pair's rows from `bucketPairs` are its shared shingles; |∩| is
+    * their count. Each doc's |shingle set| rides the bucket, so the
+    * Jaccard denominators need no second pass and no count-joins (the
+    * sizes are functions of the ids, so grouping by them keeps the
+    * groups). */
   def ngramJaccardPairs(s: SparkSession, d: String): DataFrame = {
-    val sh = shingleIndex(s, d, "shingle")
-    jaccardPairs(sh.as("a")
-      .join(sh.as("b"), col("a.shingle") === col("b.shingle") &&
-        col("a.doc_id") < col("b.doc_id"))
-      .select(col("a.doc_id").as("a_id"), col("b.doc_id").as("b_id"),
-        col("a.n_sh").as("a_n"), col("b.n_sh").as("b_n")),
+    val docs = withShingleArr(s, d).withColumn("n_sh", size(col("sh_arr")))
+    jaccardPairs(bucketPairs(docs, col("sh_arr"), "n_sh")
+      .groupBy(col("a.doc_id").as("a_id"), col("b.doc_id").as("b_id"),
+        col("a.n_sh").as("a_n"), col("b.n_sh").as("b_n"))
+      .agg(count(lit(1)).as("n_inter")),
       "a_id", "b_id", "n_inter", "jaccard")
   }
 
@@ -127,23 +136,6 @@ object Dedup {
        |WHERE round(n_inter / (ca.n_sh + cb.n_sh - n_inter), 6) >= 0.5
        |ORDER BY a_id, b_id""".stripMargin
 
-  /** Same-bucket doc pairs (a.doc_id < b.doc_id, with the `carry`
-    * columns): explodes `keys`, an array of struct<band, key>, to a row
-    * per (doc, band) and self-joins on (band, key). Hash-partitioned on
-    * the join key, so both sides hang off ONE reused exchange: without
-    * it the planner broadcasts one side and computes the signature
-    * pipeline twice. At corpus scale the banded table is corpus-sized,
-    * so the shuffle join is also the only shape that survives. */
-  private def bucketPairs(sig: DataFrame, keys: Column, carry: String*): DataFrame = {
-    val kept = ("doc_id" +: carry).map(col)
-    val banded = sig.select(kept :+ explode(keys).as("bk"): _*)
-      .select(kept ++ Seq(col("bk.band").as("band"), col("bk.key").as("key")): _*)
-      .repartition(col("band"), col("key"))
-    banded.as("a")
-      .join(banded.as("b"), col("a.band") === col("b.band") &&
-        col("a.key") === col("b.key") && col("a.doc_id") < col("b.doc_id"))
-  }
-
   // ---- MinHash-LSH (no SQL oracle: seeded murmur3 signatures are
   // engine-specific; the driver records a rows-only check and
   // DedupSpec validates the pair set against exact Jaccard). ----
@@ -152,63 +144,46 @@ object Dedup {
   private val Bands = 8
   private val RowsPerBand = MinhashFuncs / Bands
 
-  /** Per-doc 32-slot MinHash signature, computed by the per-row
-    * kernel (MinHashSigExpr → SignatureUtil.minhash: same murmur3
-    * shingle hashes folded into [0, p), same affine (a_i·h + b_i) mod p
-    * mins — DedupSpec proves equality with the aggregate spelling). The
-    * signature stage is a pure scan → project: the aggregate spelling
-    * paid an explode (a row per shingle) plus a doc-keyed exchange —
-    * a corpus-wide shuffle at scale for what is a map. Docs with no
-    * shingles are filtered, exactly as explode dropped them. */
-  def minhashSignatures(s: SparkSession, d: String): DataFrame = {
-    val mhs = ColumnBridge.column(MinHashSigExpr(
-      ColumnBridge.expression(col("sh_arr"))))
+  /** The slice's documents with at least one shingle, as (doc_id,
+    * sh_arr, mhs): `mhs` is the 32-slot MinHash signature, computed by
+    * the per-row kernel (MinHashSigExpr → SignatureUtil.minhash: same
+    * murmur3 shingle hashes folded into [0, p), same affine
+    * (a_i·h + b_i) mod p mins — DedupSpec proves equality with the
+    * aggregate spelling). A pure scan → project, with no explode and no
+    * doc-keyed exchange. Docs with no shingles are filtered, exactly as
+    * explode dropped them. Projected on its own, so the kernel evaluates
+    * ONCE per doc (CollapseProject keeps non-cheap multiply-referenced
+    * aliases) and its slots are then plain array reads. */
+  private def withMinhash(s: SparkSession, d: String): DataFrame =
     withShingleArr(s, d)
       .filter(size(col("sh_arr")) > 0)
-      // two-level projection: the kernel evaluates ONCE into "mhs"
-      // (CollapseProject keeps non-cheap multiply-referenced aliases),
-      // the mh_i slots are then plain array reads
-      .select(col("doc_id"), mhs.as("mhs"))
+      .withColumn("mhs", ColumnBridge.column(MinHashSigExpr(
+        ColumnBridge.expression(col("sh_arr")))))
+
+  /** Per-doc MinHash signature, one column `mh_i` per slot. */
+  def minhashSignatures(s: SparkSession, d: String): DataFrame =
+    withMinhash(s, d)
       .select(col("doc_id") +: (0 until MinhashFuncs).map(i =>
         element_at(col("mhs"), i + 1).as(s"mh_$i")): _*)
-  }
 
-  /** LSH candidate pairs: band the signature (8 bands × 4 rows), bucket
-    * docs by (band, band-hash), join within buckets, then verify with
-    * exact Jaccard ≥ 0.5 so false positives are filtered.
-    *
-    * Scale shape: all 8 band keys come from ONE explode over the
-    * signature frame (1 row/doc, tiny next to the corpus); the band
-    * self-join's two sides are the identical subplan, so Spark's
-    * ReuseExchange computes the shuffle once — no persist() needed, and
-    * nothing leaks into the session cache across invocations
-    * (persist-without-unpersist here previously accumulated a cached
-    * copy per call). Verification joins only the surfaced candidates
-    * back to their shingle sets — the exact-quadratic all-pairs set is
-    * never materialized on this path. */
+  /** LSH pairs: band the signature (8 bands × 4 rows), bucket docs by
+    * (band, band-hash), pair within buckets, then verify with exact
+    * Jaccard ≥ 0.5 so false positives are filtered. Each doc's shingle
+    * set rides its buckets, so a candidate's |∩| is
+    * `size(array_intersect)` of the two (both are distinct already):
+    * no second shingle pass and no join back to the documents. A pair
+    * that collides in several bands is verified once per band, then
+    * deduplicated. */
   def minhashLshPairs(s: SparkSession, d: String): DataFrame = {
     val bandKeys = array((0 until Bands).map { b =>
-      val cols = (0 until RowsPerBand).map(r => col(s"mh_${b * RowsPerBand + r}"))
-      struct(lit(b).as("band"), hash(cols: _*).as("key"))
+      val slots = (0 until RowsPerBand).map(r => element_at(col("mhs"), b * RowsPerBand + r + 1))
+      struct(lit(b).as("band"), hash(slots: _*).as("key"))
     }: _*)
-    val cand = bucketPairs(minhashSignatures(s, d), bandKeys)
-      .select(col("a.doc_id").as("a_id"), col("b.doc_id").as("b_id"))
-      .distinct()
-    // verify ONLY the candidates: join each side back to its shingle
-    // set, count the intersection, and Jaccard-filter ≥ 0.5. No
-    // broadcast hint on cand: AQE sees the candidate stage's real size
-    // and broadcasts when it fits — an unconditional hint would OOM
-    // the driver if candidates ever blow up at corpus scale.
-    //
-    // ONE doc_id-partitioned index feeds both verification joins (the
-    // a_id join outright, the (b_id, shingle) join by subset), so the
-    // shingle pipeline runs once (ReuseExchange; r21: 0.73 → 0.54 s).
-    val shD = shingleIndex(s, d, "doc_id")
-    jaccardPairs(cand
-      .join(shD.select(col("doc_id").as("a_id"), col("n_sh").as("a_n"),
-        col("shingle")), "a_id")
-      .join(shD.select(col("doc_id").as("b_id"), col("n_sh").as("b_n"),
-        col("shingle")), Seq("b_id", "shingle")),
+    jaccardPairs(bucketPairs(withMinhash(s, d), bandKeys, "sh_arr")
+      .select(col("a.doc_id").as("a_id"), col("b.doc_id").as("b_id"),
+        size(col("a.sh_arr")).as("a_n"), size(col("b.sh_arr")).as("b_n"),
+        size(array_intersect(col("a.sh_arr"), col("b.sh_arr"))).as("n_inter"))
+      .distinct(),
       "a_id", "b_id", "jaccard")
   }
 
@@ -217,13 +192,13 @@ object Dedup {
     * kernel (SimHash64Expr → SignatureUtil.simhash; DedupSpec proves
     * equality with the 64-conditional-sum aggregate spelling). Pure
     * scan → project: no explode, no doc-keyed exchange at any scale.
-    * Docs with no tokens are filtered, exactly as explode dropped
-    * them. */
+    * Docs with no non-empty token (NULL or whitespace-only text) are
+    * not signed, as q32 and q33 drop docs with no shingle. */
   def simhashSignatures(s: SparkSession, d: String): DataFrame =
     Tables.documents(s, d)
       .filter(col("doc_id") < MaxDocId)
       .select(col("doc_id"), array_distinct(tokens(col("text"))).as("toks"))
-      .filter(size(col("toks")) > 0)
+      .filter(size(array_remove(col("toks"), "")) > 0)
       .select(col("doc_id"),
         ColumnBridge.column(SimHash64Expr(
           ColumnBridge.expression(col("toks")))).as("simhash"))
@@ -231,11 +206,11 @@ object Dedup {
   private val SimhashBands = 8 // 8 bands × 8 bits
 
   /** SimHash near-dup pairs at hamming ≤ 6, via banding: split the 64
-    * bits into 8×8-bit keys and equality-join on (band, key). Any pair
-    * within hamming ≤ 7 differs in at most 7 bands, so by pigeonhole it
-    * collides on at least one — the banded candidate set is EXACTLY the
-    * cartesian hamming ≤ 6 pair set (DedupSpec proves equality), with
-    * no BroadcastNestedLoopJoin anywhere in the plan. */
+    * bits into 8×8-bit (band, key) buckets. Any pair within hamming ≤ 7
+    * differs in at most 7 bands, so by pigeonhole it shares at least
+    * one bucket — the banded candidate set is EXACTLY the cartesian
+    * hamming ≤ 6 pair set (DedupSpec proves equality), with no
+    * nested-loop join anywhere in the plan. */
   def simhashPairs(s: SparkSession, d: String): DataFrame = {
     val bandKeys = array((0 until SimhashBands).map { b =>
       struct(lit(b).as("band"),

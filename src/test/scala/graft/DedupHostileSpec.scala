@@ -71,13 +71,12 @@ class DedupHostileSpec extends AnyFunSuite {
     // q30: NULL text is its own group under a NULL hash (DuckDB agrees)
     assert(out("q30").map(r => (r.isNullAt(0), r.getLong(1), r.getLong(2))) ===
       Seq((true, 1L, 1L), (false, 2L, 1L), (false, 3L, 1L), (false, 4L, 1L), (false, 5L, 3L)))
-    // q31: concat_ws gives NULL text the same "" key as whitespace-only
-    // text, so they share a group; the oracle SQL gives NULL text a NULL key
-    assert(out("q31") === Seq(Row("", 1L, 2L), Row("solo", 3L, 1L), Row("two words", 4L, 1L),
-      Row(Dup, 5L, 3L)))
-    // q34: whitespace-only text is signed over its one empty token and
-    // NULL text is not signed; neither pairs here
-    assert(out("q34 signed docs") === Seq(2L, 3L, 4L, 5L, 6L).map(Row(_)))
+    // q31: NULL text is its own group under a NULL key, whitespace-only
+    // text has the "" key (DuckDB agrees)
+    assert(out("q31") === Seq(Row(null, 1L, 1L), Row("", 2L, 1L), Row("solo", 3L, 1L),
+      Row("two words", 4L, 1L), Row(Dup, 5L, 3L)))
+    // q34: neither NULL nor whitespace-only text has a token to sign
+    assert(out("q34 signed docs") === Seq(3L, 4L, 5L, 6L).map(Row(_)))
     assert(out("q34") === Seq(Row(5L, 6L, 0)))
   }
 }

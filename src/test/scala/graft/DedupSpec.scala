@@ -1,13 +1,22 @@
 package graft
 
 import graft.operators.Dedup
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.plans.physical.HashPartitioning
+import org.apache.spark.sql.execution.FileSourceScanExec
+import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, AdaptiveSparkPlanHelper,
+  ExchangeQueryStageExec, ShuffleQueryStageExec}
+import org.apache.spark.sql.execution.exchange.Exchange
+import org.apache.spark.sql.execution.joins.BaseJoinExec
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Proves the sub-quadratic dedup paths compute the SAME pair sets as
-  * their exact counterparts on the sf0.001 corpus.
+  * their exact counterparts on the sf0.001 corpus, and that the
+  * near-dup queries pair documents from one bucket aggregate: one scan,
+  * one job, no join and no exchange at sf0.001.
   */
-class DedupSpec extends AnyFunSuite {
+class DedupSpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
   private lazy val spark = TestSpark.spark
   private val sf = TestSpark.sfDir
 
@@ -41,21 +50,38 @@ class DedupSpec extends AnyFunSuite {
     assert(banded === cartesian)
   }
 
-  test("LSH band self-join computes the signature pipeline once (reused exchange)") {
-    val df = Dedup.minhashLshPairs(spark, sf)
-    df.collect() // materialize so the adaptive plan is final
-    val plan = df.queryExecution.executedPlan.toString
-    assert(plan.contains("ReusedQueryStage") || plan.contains("ReusedExchange"),
-      "band self-join must share one exchange, not recompute signatures: " +
-        plan.take(4000))
+  private val nearDup: Seq[(String, (SparkSession, String) => DataFrame)] = Seq(
+    "q32" -> Dedup.ngramJaccardPairs, "q33" -> Dedup.minhashLshPairs, "q34" -> Dedup.simhashPairs)
+
+  nearDup.foreach { case (name, q) =>
+    test(s"$name scans documents once and runs as one job, with no join and no exchange") {
+      val df = q(spark, sf)
+      assert(TestSpark.jobsLaunchedBy(s"near-dup-jobs:$name")(df.collect()) === 1)
+      val plan = df.queryExecution.executedPlan
+      assert(plan.asInstanceOf[AdaptiveSparkPlanExec].isFinalPlan)
+      val scans = collect(plan) { case scan: FileSourceScanExec => scan.relation.location.inputFiles.toSeq }
+      assert(scans.size === 1 && scans.head.forall(_.contains("documents.parquet")), plan.toString)
+      val joinsOrExchanges = collect(plan) { case p @ (_: BaseJoinExec | _: Exchange | _: ExchangeQueryStageExec) => p }
+      assert(joinsOrExchanges.isEmpty, plan.toString)
+    }
   }
 
-  test("q32 inverted-index self-join computes the shingle pipeline once (reused exchange)") {
-    val df = Dedup.ngramJaccardPairs(spark, sf)
-    df.collect() // materialize so the adaptive plan is final
-    val plan = df.queryExecution.executedPlan.toString
-    assert(plan.contains("ReusedQueryStage") || plan.contains("ReusedExchange"),
-      "shingle self-join must share one exchange: " + plan.take(4000))
+  test("q32-q34 give the same ordered rows when the bucket aggregate shuffles over 32 partitions") {
+    nearDup.foreach { case (name, q) =>
+      val onePartition = q(spark, sf).collect().toSeq
+      // with partition coalescing off, SinglePartitionStages is inert
+      val shuffled = TestSpark.withConf("spark.sql.adaptive.coalescePartitions.enabled" -> "false",
+          "spark.sql.shuffle.partitions" -> "32") {
+        val df = q(spark, sf)
+        val rows = df.collect().toSeq
+        val hashShuffles = collect(df.queryExecution.executedPlan) {
+          case stage: ShuffleQueryStageExec => stage.shuffle.outputPartitioning
+        }.collect { case p: HashPartitioning => p.numPartitions }
+        assert(hashShuffles.nonEmpty && hashShuffles.forall(_ == 32), name)
+        rows
+      }
+      assert(onePartition.nonEmpty && shuffled === onePartition, name)
+    }
   }
 
   test("banded SimHash plan contains no nested-loop join") {

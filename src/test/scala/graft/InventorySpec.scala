@@ -50,9 +50,9 @@ class InventorySpec extends AnyFunSuite {
     "q26_binary_meta" -> (500L, 1),
     "q30_dedup_exact" -> (500L, 1),
     "q31_dedup_prefix" -> (476L, 1),
-    "q32_ngram_jaccard_pairs" -> (28L, 3),
-    "q33_minhash_lsh_pairs" -> (28L, 5),
-    "q34_simhash_pairs" -> (7320L, 2),
+    "q32_ngram_jaccard_pairs" -> (28L, 1),
+    "q33_minhash_lsh_pairs" -> (28L, 1),
+    "q34_simhash_pairs" -> (7320L, 1),
     "q35_knn_bruteforce" -> (50L, 1),
     "q36_embedding_neardup" -> (14L, 2),
     "q37_ann_ivf" -> (50L, 1),
@@ -118,7 +118,7 @@ class InventorySpec extends AnyFunSuite {
     "q30_dedup_exact" ->
       "h STRING,keeper BIGINT,n_copies BIGINT NOT NULL",
     "q31_dedup_prefix" ->
-      "prefix_key STRING NOT NULL,keeper BIGINT,n_docs BIGINT NOT NULL",
+      "prefix_key STRING,keeper BIGINT,n_docs BIGINT NOT NULL",
     "q32_ngram_jaccard_pairs" ->
       "a_id BIGINT,b_id BIGINT,n_inter BIGINT NOT NULL,jaccard DOUBLE",
     "q33_minhash_lsh_pairs" ->
