@@ -13,22 +13,23 @@ import org.apache.spark.sql.SparkSession
   * Every session also runs [[SinglePartitionStages]] as an AQE
   * query-stage preparation rule. Most queries are chains of small
   * grouped results (aggregate, window, distinct) and small joins ending
-  * in a global `orderBy`: when the whole input of such a single-input
-  * operator's stage has a known size that AQE's partition coalescing
-  * would pack into one partition, the operator runs on that one
-  * partition instead of behind an exchange, which saves the shuffle-map
-  * job, its shuffle and, under a sort, the range-bound sampling job. A
-  * broadcast join whose two sides fit that one partition together runs
-  * there as a shuffled hash join or cartesian product, which saves the
-  * broadcast job. Joins that Spark planned with exchanges (sort-merge,
-  * shuffled hash) keep them, and so does an operator whose partitioning
-  * a join or union above it, or the query's output, relies on. The rule
-  * adds no setting of its own: its threshold is AQE's coalescing target
+  * in a global `orderBy`: when such a single-input operator's stage
+  * already ran as one task, the operator runs in that task instead of
+  * behind an exchange, which saves the shuffle-map job, its shuffle
+  * and, under a sort, the range-bound sampling job. A broadcast join
+  * whose two sides fit one partition together runs there as a shuffled
+  * hash join or cartesian product, which saves the broadcast job. Joins
+  * that Spark planned with exchanges (sort-merge, shuffled hash) keep
+  * them, and so does an operator whose partitioning a join or union
+  * above it, or the query's output, relies on. The rule adds no setting
+  * of its own; its thresholds are Spark's. A stage over one file that
+  * the file split bound plans as one task (at most `openCostInBytes`
+  * and `maxPartitionBytes`) fits at any size; any other stage fits when
+  * its inputs' summed bytes are within AQE's coalescing target
   * (`spark.sql.adaptive.coalescePartitions.minPartitionSize`, or the
-  * advisory partition size when parallelism-first coalescing is off),
-  * so it fires only where the stage already ran as one task, and it is
-  * inert when AQE or partition coalescing is off. Plans that show it
-  * are the final adaptive plans (`isFinalPlan=true`).
+  * advisory partition size when parallelism-first coalescing is off).
+  * The rule is inert when AQE or partition coalescing is off. Plans
+  * that show it are the final adaptive plans (`isFinalPlan=true`).
   */
 object GraftSession {
   def defaultCpus: String = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")

@@ -11,12 +11,14 @@ import org.scalatest.funsuite.AnyFunSuite
   * the order Spark's exchanges give them, save shuffle-map and broadcast
   * jobs only under its gate, and leave Spark's exchanges and broadcasts
   * in place when the gate fails. The rule is forced off with Spark's own
-  * conf: a 1-byte coalescing target, which no non-empty input fits.
+  * conf: partition coalescing off, under which it is inert. A byte
+  * target cannot force it off, as a stage over one file that Spark reads
+  * as one task fits any target.
   */
 class SinglePartitionStagesSpec extends AnyFunSuite {
   private lazy val spark = TestSpark.spark
   private def target(size: String) = "spark.sql.adaptive.coalescePartitions.minPartitionSize" -> size
-  private val sparkExchanges = target("1b")
+  private val sparkExchanges = "spark.sql.adaptive.coalescePartitions.enabled" -> "false"
 
   private def query(name: String) = SparkEntry.inventory.find(_.name == name).get
 
@@ -80,12 +82,8 @@ class SinglePartitionStagesSpec extends AnyFunSuite {
     Seq("q30_dedup_exact", "q40_tumbling_hourly", "q46_class_report").foreach { name =>
       def plan(): String = finalPlan(query(name).fn(spark, TestSpark.sfDir))
       assert(!plan().contains("Exchange"), name)
-      Seq(sparkExchanges, "spark.sql.adaptive.coalescePartitions.enabled" -> "false").foreach {
-        setting =>
-          val exchanged = TestSpark.withConf(setting)(plan())
-          assert(exchanged.contains("hashpartitioning") && exchanged.contains("rangepartitioning"),
-            s"$name $setting")
-      }
+      val exchanged = TestSpark.withConf(sparkExchanges)(plan())
+      assert(exchanged.contains("hashpartitioning") && exchanged.contains("rangepartitioning"), name)
     }
   }
 
@@ -256,17 +254,19 @@ class SinglePartitionStagesSpec extends AnyFunSuite {
     assert(perType.repartition(8, col("event_type")).rdd.getNumPartitions === 8)
   }
 
-  test("a stage's inputs are summed: events fits a 40k target, events twice does not") {
+  test("a one-file stage fits any target; a union's inputs are summed against it") {
     val events = Tables.events(spark, TestSpark.sfDir) // one file of about 27 KB
     def perType(input: DataFrame): String =
       finalPlan(input.groupBy("event_type").count().orderBy("event_type"))
+    Seq("20k", "1b").foreach { size =>
+      TestSpark.withConf(target(size))(assert(!perType(events).contains("Exchange"), size))
+    }
+    // two scans are never one task: about 54 KB against the target
     TestSpark.withConf(target("40k")) {
-      assert(!perType(events).contains("Exchange"))
       assert(perType(events.union(events)).contains("hashpartitioning"))
     }
-    TestSpark.withConf(target("20k")) {
-      assert(perType(events).contains("hashpartitioning"))
-      assert(perType(events.union(events)).contains("hashpartitioning"))
+    TestSpark.withConf(target("60k")) {
+      assert(!perType(events.union(events)).contains("Exchange"))
     }
   }
 
@@ -275,5 +275,47 @@ class SinglePartitionStagesSpec extends AnyFunSuite {
       assert(finalPlan(twoFiles.groupBy("event_type").count().orderBy("event_type"))
         .contains("hashpartitioning"))
     }
+  }
+
+  // sf0.1: events (2.0 MB) and orders (2.7 MB) are one file each, above
+  // the 1 MB target but under the 4 MB open cost, so Spark reads each as
+  // one task
+  private val sf01 = TestSpark.sf01Dir
+
+  test("q40 at sf0.1 launches 1 job and plans no exchange") {
+    val q40 = query("q40_tumbling_hourly")
+    assert(TestSpark.jobsLaunchedBy("stage-jobs:sf0.1:q40")(q40.fn(spark, sf01).collect()) === 1)
+    val plan = finalPlan(q40.fn(spark, sf01))
+    assert(!plan.contains("Exchange"), plan)
+  }
+
+  test("at sf0.1, a file that Spark splits into two tasks keeps its exchange") {
+    TestSpark.withConf("spark.sql.files.openCostInBytes" -> "1m") {
+      val events = Tables.events(spark, sf01)
+      assert(events.rdd.getNumPartitions === 2)
+      val plan = finalPlan(query("q40_tumbling_hourly").fn(spark, sf01))
+      assert(plan.contains("hashpartitioning"), plan)
+    }
+  }
+
+  test("at sf0.1, a one-file scan joined to a second scan over the target keeps its broadcast") {
+    val orders = Tables.orders(spark, sf01).select("o_orderkey", "o_custkey")
+    val customer = Tables.customer(spark, sf01).select("c_custkey", "c_nationkey")
+    val plan = checkedPlan(orders.join(broadcast(customer), col("o_custkey") === col("c_custkey"))
+      .groupBy("c_nationkey").agg(count(lit(1)).as("n")).orderBy("c_nationkey"))
+    assert(plan.contains("BroadcastHashJoin") && !plan.contains("ShuffledHashJoin"), plan)
+    // the aggregate's stage is the orders scan and the broadcast: one task
+    assert(!plan.contains("partitioning("), plan)
+  }
+
+  test("the one-file queries give Spark's ordered rows at sf0.1") {
+    val changed = Seq("q02_event_histogram", "q09_top_orders_per_customer", "q10_rollup_orders",
+      "q11_cube_events", "q16_above_avg_orders", "q17_latest_event_per_user", "q18_props_sum",
+      "q40_tumbling_hourly", "q41_sliding_two_hour", "q42_sessionize", "q43_running_totals")
+      .filter { name =>
+        def rows() = query(name).fn(spark, sf01).collect().toSeq
+        rows() != TestSpark.withConf(sparkExchanges)(rows())
+      }
+    assert(changed.isEmpty)
   }
 }

@@ -9,6 +9,8 @@ import org.apache.spark.sql.SparkSession
 /** One shared local session for the whole forked test JVM. */
 object TestSpark {
   val sfDir = "/root/testdata/sf0.001"
+  /** The sf0.1 tables beside `sfDir`, read-only like every test table. */
+  val sf01Dir = s"${new java.io.File(sfDir).getParent}/sf0.1"
 
   lazy val spark: SparkSession = {
     val s = GraftSession.builder("local[8]", shufflePartitions = 8).getOrCreate()
