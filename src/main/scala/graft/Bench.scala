@@ -1,6 +1,9 @@
 package graft
 
 import graft.core.{GQuery, GraftSession}
+import java.nio.charset.StandardCharsets
+import java.security.MessageDigest
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import scala.collection.mutable
 
 /** Benchmark main: runs the declared queries on SPARK_GRAFT_SF_DIR and
@@ -29,7 +32,12 @@ import scala.collection.mutable
   * per-query comparison that survives this host's ±25% cross-run
   * drift. Same one-line JSON, plus an `"ab":true` marker; `"reps"` is
   * the timed-rep count of the schedule that ran. A name that is not a
-  * declared query fails the run before the session starts.
+  * declared query fails the run before the session starts. In this
+  * mode each query that ran without error also gets one more untimed
+  * run after the schedule, and the line gains a `"digests"` map of the
+  * SHA-256 of its rows in the order the query returns them (each row's
+  * string form and a newline), so two commits' A/B lines can be checked
+  * for identical outputs. The default line has no such key.
   */
 object Bench {
   private val Reps = 3
@@ -55,20 +63,37 @@ object Bench {
     SparkEntry.inventory.filter(q => sel(q.name))
   }
 
+  /** SHA-256 (hex) of `df`'s rows in the order `collect` returns them. */
+  def digest(df: DataFrame): String = {
+    val sha = MessageDigest.getInstance("SHA-256")
+    df.collect().foreach(row => sha.update(s"$row\n".getBytes(StandardCharsets.UTF_8)))
+    sha.digest().map(b => f"$b%02x").mkString
+  }
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val abSel = sys.env.get("SPARK_GRAFT_AB")
     val headline = selected(abSel)
     val spark = GraftSession.local()
-    val reps = if (abSel.isDefined) AbReps else Reps
+    println(run(spark, sfDir, headline, abSel.isDefined))
+    spark.stop()
+  }
+
+  /** Runs the schedule of `headline` on `spark` and returns the JSON line. */
+  def run(spark: SparkSession, sfDir: String, headline: Seq[GQuery], ab: Boolean): String = {
+    val reps = if (ab) AbReps else Reps
     val schedule: Seq[(GQuery, Int)] =
-      if (abSel.isDefined)
+      if (ab)
         headline.map(q => (q, 0)) ++ (1 to reps).flatMap(r => headline.map(q => (q, r)))
       else headline.flatMap(q => (0 to reps).map(r => (q, r)))
 
     val times = mutable.LinkedHashMap.empty[String, mutable.ArrayBuffer[Double]]
     val gcMs = mutable.LinkedHashMap.empty[String, Double]
     val errors = mutable.LinkedHashMap.empty[String, String]
+    def fail(q: GQuery, e: Throwable): Unit = {
+      errors(q.name) = Option(e.getMessage).getOrElse(e.getClass.getName)
+      System.err.println(s"[bench] ${q.name} failed: ${errors(q.name)}")
+    }
 
     for ((q, rep) <- schedule if !errors.contains(q.name)) {
       try {
@@ -82,14 +107,18 @@ object Bench {
           gcMs(q.name) = gcMs.getOrElse(q.name, 0.0) + (gcMillis() - gc0)
         }
       } catch {
-        case e: Throwable =>
-          errors(q.name) = Option(e.getMessage).getOrElse(e.getClass.getName)
-          System.err.println(s"[bench] ${q.name} failed: ${errors(q.name)}")
+        case e: Throwable => fail(q, e)
       } finally {
         spark.sparkContext.setJobDescription(null)
         // a query that persists frames must not bill the next one
         spark.catalog.clearCache()
       }
+    }
+    val digests = mutable.LinkedHashMap.empty[String, String]
+    if (ab) for (q <- headline if !errors.contains(q.name)) {
+      try digests(q.name) = digest(q.fn(spark, sfDir))
+      catch { case e: Throwable => fail(q, e) }
+      finally spark.catalog.clearCache()
     }
     errors.keys.foreach { k => times.remove(k); gcMs.remove(k) }
 
@@ -107,12 +136,11 @@ object Bench {
     val medians = times.map { case (k, ts) => k -> median(ts.toSeq) }
     val mins = times.map { case (k, ts) => k -> ts.min }
     val total = medians.values.sum
-    val abMarker = if (abSel.isDefined) """"ab":true,""" else ""
-    println(
-      s"""{"metric":"total","value":$total,"unit":"sec","reps":$reps,""" +
-        s"""$abMarker"queries":${jnum(medians)},"queries_min":${jnum(mins)},""" +
-        s""""queries_reps":${jarr(times)},"queries_gc_ms":${jnum(gcMs)},""" +
-        s""""errors":${jstr(errors)},"sf":"$sfDir"}""")
-    spark.stop()
+    val abMarker = if (ab) """"ab":true,""" else ""
+    val digestMap = if (ab) s""""digests":${jstr(digests)},""" else ""
+    s"""{"metric":"total","value":$total,"unit":"sec","reps":$reps,""" +
+      s"""$abMarker"queries":${jnum(medians)},"queries_min":${jnum(mins)},""" +
+      s""""queries_reps":${jarr(times)},"queries_gc_ms":${jnum(gcMs)},""" +
+      s"""$digestMap"errors":${jstr(errors)},"sf":"$sfDir"}"""
   }
 }

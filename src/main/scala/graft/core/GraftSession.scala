@@ -17,14 +17,16 @@ import org.apache.spark.sql.SparkSession
   * already ran as one task, the operator runs in that task instead of
   * behind an exchange, which saves the shuffle-map job, its shuffle
   * and, under a sort, the range-bound sampling job. A broadcast join
-  * whose two sides fit one partition together runs there as a shuffled
-  * hash join or cartesian product, which saves the broadcast job. Joins
+  * each of whose sides fits on its own runs there as a shuffled hash
+  * join or cartesian product, which saves the broadcast job. Joins
   * that Spark planned with exchanges (sort-merge, shuffled hash) keep
   * them, and so does an operator whose partitioning a join or union
   * above it, or the query's output, relies on. The rule adds no setting
-  * of its own; its thresholds are Spark's. A stage over one file that
-  * the file split bound plans as one task (at most `openCostInBytes`
-  * and `maxPartitionBytes`) fits at any size; any other stage fits when
+  * of its own; its thresholds are Spark's. A stage that runs as one
+  * task fits at any size: one that declares one partition, a unary
+  * operator or cartesian product over such inputs, or a stage over one
+  * file that the file split bound plans as one task (at most
+  * `openCostInBytes` and `maxPartitionBytes`). Any other stage fits when
   * its inputs' summed bytes are within AQE's coalescing target
   * (`spark.sql.adaptive.coalescePartitions.minPartitionSize`, or the
   * advisory partition size when parallelism-first coalescing is off).

@@ -28,33 +28,41 @@ import org.apache.spark.sql.internal.SQLConf
   * rule runs bottom-up, so a chain of small stages (scan, partial
   * aggregate, final aggregate, sort) becomes one job of one task.
   *
-  * Joins: a broadcast join whose broadcast has not run yet, and whose two
-  * sides fit one partition together, runs in its consumer's one task
-  * too. A broadcast hash join becomes a shuffled hash join with the
-  * same keys, join type, build side and condition, and an inner or
-  * cross broadcast nested-loop join becomes a cartesian product with
-  * the same condition, each over one partition per side
+  * Joins: a broadcast join whose broadcast has not run yet, and each of
+  * whose sides fits on its own, runs in its consumer's one task too.
+  * The stream side already ran as the one task the broadcast join ran
+  * in, and the build side as the broadcast job's one task, so one task
+  * over both adds no serial work. A broadcast hash join becomes a
+  * shuffled hash join with the same keys, join type, build side and
+  * condition, and an inner or cross broadcast nested-loop join becomes
+  * a cartesian product with the same condition, each over one partition
+  * per side
   * (`CoalesceExec(1)` where a side does not declare one already). That
   * saves the broadcast job, its driver-side collect and the broadcast
   * relation, and neither side is shuffled. An explicit `broadcast(...)`
   * hint is a choice of strategy, not a request for partitioning, so the
   * rule overrides it as it would Spark's own size-based choice. What
-  * that saves is jobs; its effect on wall time is not known: q05, which
-  * hints four broadcasts that AQE ran concurrently, leaned slower at
-  * sf0.001 (0.450 -> 0.493 s, 3 of 3 pairs, inside the host's drift),
-  * as its one task reads all ~167 KB of input serially. Two
+  * that saves is jobs. q05 hints four broadcasts that AQE ran
+  * concurrently, and its one task reads all of its input serially: at
+  * sf0.001 it leaned slower (0.450 -> 0.493 s, 3 of 3 pairs, inside the
+  * host's drift), and at sf0.01 it tied, 428 ms against 482 ms but
+  * faster in only 5 of 10 alternating `graft.Bench` pairs (medians of 7
+  * reps, `local[4]`, 4-vCPU host), where q06 ran in 206 ms against
+  * 250 ms, faster in 10 of 10. Two
   * broadcast joins always stay: a null-aware anti join (`NOT IN`), which
   * `ShuffledHashJoinExec` has no mode for, and an outer, semi or anti
   * nested-loop join, as `CartesianProductExec` is inner only.
   *
-  * The gate: the stage under the exchange (or both sides of the join)
-  * already ran as one task. A stage whose one input besides broadcast
-  * stages is a counted file scan (below) is judged by Spark's split
-  * bound, which plans that file as one task whatever AQE's target, so
-  * it fits at any size. Every other stage is judged by AQE's target:
-  * each of its inputs has a known size, and their sum fits in the one
-  * partition that `CoalesceShufflePartitions` would pack it into.
-  * Known sizes are:
+  * The gate: the stage under the exchange (or each side of the join)
+  * already ran as one task. A stage fits at any size when it runs as one
+  * task: it declares one partition (a rewritten join or consumer below,
+  * a one-partition stage), or it is a counted file scan (below), which
+  * Spark's split bound plans as one task whatever AQE's target, or it
+  * is a unary operator, a cartesian product or the stream side of a
+  * broadcast join over inputs that each do. Every other stage is judged
+  * by AQE's target: each of its inputs has a known size, and their sum
+  * fits in the one partition that `CoalesceShufflePartitions` would pack
+  * it into. Known sizes are:
   *  - a materialized shuffle stage: its map output bytes; not one a
   *    user's `repartition(n)` wrote, which AQE does not coalesce;
   *  - a broadcast stage: 0, as it does not set the stage's task count;
@@ -66,11 +74,12 @@ import org.apache.spark.sql.internal.SQLConf
   *    the parquet reader (a Hadoop-conf broadcast per scan) on plan
   *    copies that AQE discards at each re-plan.
   *
-  * Inputs are summed, so a union of small inputs, or the two sides of a
-  * join, keeps its exchange once it outgrows the target, even where each
-  * input is one file. Anything else (an exchange not yet
-  * materialized, a cached or local relation) keeps Spark's exchange;
-  * AQE re-applies the rule each time a stage materializes.
+  * Inputs are summed, so a union of small inputs keeps its exchange once
+  * it outgrows the target, even where each input is one file: its
+  * inputs' partitions add up. Anything else (an exchange not yet
+  * materialized, a cached or local relation that does not declare one
+  * partition) keeps Spark's exchange; AQE re-applies the rule each time
+  * a stage materializes.
   *
   * Limit: a one-file stage is judged by its input bytes, not by the rows
   * its operators make. Where they multiply rows (q11's cube `Expand`,
@@ -151,7 +160,7 @@ object SinglePartitionStages extends Rule[SparkPlan] {
 
   /** A broadcast join's (left, right) inputs, each on one partition and
     * the build side without its broadcast, when that broadcast has not
-    * run yet and the inputs of both sides together fit one partition. */
+    * run yet and each side fits on its own. */
   private def onePartitionSides(buildSide: BuildSide, left: SparkPlan,
                                 right: SparkPlan): Option[(SparkPlan, SparkPlan)] = {
     val sides = (buildSide, left, right) match {
@@ -159,7 +168,7 @@ object SinglePartitionStages extends Rule[SparkPlan] {
       case (BuildRight, _, BroadcastExchangeExec(_, rightInput)) => Some((left, rightInput))
       case _ => None
     }
-    sides.collect { case (l, r) if fits(l, r) => (onOnePartition(l), onOnePartition(r)) }
+    sides.collect { case (l, r) if fits(l) && fits(r) => (onOnePartition(l), onOnePartition(r)) }
   }
 
   /** `plan` as one partition: as it is when it already declares one (it
@@ -208,22 +217,30 @@ object SinglePartitionStages extends Rule[SparkPlan] {
       conf.getConf(SQLConf.COALESCE_PARTITIONS_MIN_PARTITION_SIZE)
     else conf.getConf(SQLConf.ADVISORY_PARTITION_SIZE_IN_BYTES)
 
-  /** No exchange is left in `stages`, and their one input besides
-    * broadcasts is a file scan the gate counts, or their inputs have
-    * known sizes that together fit one partition. */
-  private def fits(stages: SparkPlan*): Boolean =
-    !stages.exists(_.exists(_.isInstanceOf[Exchange])) && {
-      val leaves = stages.flatMap(_.collectLeaves())
-      oneFile(leaves) || inputBytes(leaves).exists(_ <= onePartitionBytes)
-    }
+  /** No exchange is left in `stage`, and it runs as one task, or its
+    * inputs have known sizes that together fit one partition. */
+  private def fits(stage: SparkPlan): Boolean =
+    !stage.exists(_.isInstanceOf[Exchange]) &&
+      (oneTask(stage) || inputBytes(stage.collectLeaves()).exists(_ <= onePartitionBytes))
 
-  /** The leaves besides broadcast stages are one file scan that Spark
-    * plans as one task, whatever its size against the byte target. */
-  private def oneFile(leaves: Seq[SparkPlan]): Boolean =
-    leaves.filterNot(_.isInstanceOf[BroadcastQueryStageExec]) match {
-      case Seq(scan: FileSourceScanExec) => leafBytes(scan).isDefined
+  /** `plan` declares one partition, is a file scan the gate counts
+    * (Spark plans it as one task whatever its size against the byte
+    * target), or is a unary operator, a cartesian product or a broadcast
+    * join whose inputs (the stream side's, for a broadcast join) each
+    * run as one task. Not a union, whose inputs' partitions add up. */
+  private def oneTask(plan: SparkPlan): Boolean = plan.outputPartitioning.numPartitions == 1 ||
+    (plan match {
+      case scan: FileSourceScanExec => leafBytes(scan).isDefined
+      case unary: UnaryExecNode => oneTask(unary.child)
+      case product: CartesianProductExec => oneTask(product.left) && oneTask(product.right)
+      case join: BroadcastHashJoinExec => oneTask(streamSide(join.buildSide, join.left, join.right))
+      case join: BroadcastNestedLoopJoinExec =>
+        oneTask(streamSide(join.buildSide, join.left, join.right))
       case _ => false
-    }
+    })
+
+  private def streamSide(buildSide: BuildSide, left: SparkPlan, right: SparkPlan): SparkPlan =
+    if (buildSide == BuildLeft) right else left
 
   /** Summed size of the leaves, or None if one is not known. */
   private def inputBytes(leaves: Seq[SparkPlan]): Option[Long] =

@@ -8,10 +8,11 @@ import org.scalatest.funsuite.AnyFunSuite
 
 /** Runs every declared query at sf0.001, so a query that throws or
   * changes its result size, its number of Spark jobs or its output
-  * column types fails tier-1; job counts are also pinned at sf0.1,
-  * where inputs outgrow AQE's one-partition target. Row counts are
-  * pinned from a Verify run of the same inventory, job counts from a
-  * collect on this session,
+  * column types fails tier-1; job counts are also pinned at sf0.01,
+  * where the two sides of q05's and q06's joins sum past AQE's
+  * one-partition target, and at sf0.1, where single inputs outgrow it.
+  * Row counts are pinned from a Verify run of the same inventory, job
+  * counts from a collect on this session,
   * output schemas from its `df.schema.toDDL`; the rows-only queries
   * (no SQL oracle) must also repeat exactly, and in the same order at
   * any shuffle parallelism. Building a table or a query must
@@ -23,49 +24,49 @@ import org.scalatest.funsuite.AnyFunSuite
 class InventorySpec extends AnyFunSuite {
   private lazy val spark = TestSpark.spark
 
-  /** (rows at sf0.001, execution jobs at sf0.001, execution jobs at
+  /** (rows at sf0.001, then execution jobs at sf0.001, sf0.01 and
     * sf0.1) of each query's collect. */
-  private val pinned: Map[String, (Long, Int, Int)] = Map(
-    "q01_pricing_summary" -> (6L, 1, 2),
-    "q02_event_histogram" -> (5L, 1, 1),
-    "q03_topk_orders" -> (10L, 1, 1),
-    "q04_filter_pushdown" -> (225L, 1, 3),
-    "q05_revenue_by_nation" -> (25L, 1, 7),
-    "q06_parts_by_brand" -> (25L, 1, 3),
-    "q07_semi_join_big_spenders" -> (93L, 1, 2),
-    "q08_anti_join_no_big_orders" -> (57L, 1, 2),
-    "q09_top_orders_per_customer" -> (449L, 1, 1),
-    "q10_rollup_orders" -> (19L, 1, 1),
-    "q11_cube_events" -> (48L, 1, 1),
-    "q12_distinct_flags" -> (6L, 1, 2),
-    "q13_except_nations" -> (15L, 1, 1),
-    "q14_intersect_nations" -> (10L, 1, 1),
-    "q15_pivot_flags" -> (3L, 1, 2),
-    "q16_above_avg_orders" -> (754L, 1, 1),
-    "q17_latest_event_per_user" -> (15L, 1, 1),
-    "q18_props_sum" -> (5L, 1, 1),
-    "q20_clean_text" -> (500L, 1, 1),
-    "q21_sentiment_decode" -> (500L, 1, 1),
-    "q22_token_stats" -> (500L, 1, 1),
-    "q23_quality_score" -> (500L, 1, 1),
-    "q24_lang_guess" -> (500L, 1, 1),
-    "q25_fingerprint" -> (500L, 1, 1),
-    "q26_binary_meta" -> (500L, 1, 1),
-    "q30_dedup_exact" -> (500L, 1, 1),
-    "q31_dedup_prefix" -> (476L, 1, 1),
-    "q32_ngram_jaccard_pairs" -> (28L, 1, 1),
-    "q33_minhash_lsh_pairs" -> (28L, 1, 1),
-    "q34_simhash_pairs" -> (7320L, 1, 1),
-    "q35_knn_bruteforce" -> (50L, 1, 2),
-    "q36_embedding_neardup" -> (14L, 2, 3),
-    "q37_ann_ivf" -> (50L, 1, 2),
-    "q40_tumbling_hourly" -> (868L, 1, 1),
-    "q41_sliding_two_hour" -> (664L, 1, 1),
-    "q42_sessionize" -> (946L, 1, 1),
-    "q43_running_totals" -> (1000L, 1, 1),
-    "q45_confusion_matrix" -> (99L, 1, 1),
-    "q46_class_report" -> (10L, 1, 1),
-    "q47_accuracy" -> (1L, 1, 1))
+  private val pinned: Map[String, (Long, Int, Int, Int)] = Map(
+    "q01_pricing_summary" -> (6L, 1, 1, 2),
+    "q02_event_histogram" -> (5L, 1, 1, 1),
+    "q03_topk_orders" -> (10L, 1, 1, 1),
+    "q04_filter_pushdown" -> (225L, 1, 1, 3),
+    "q05_revenue_by_nation" -> (25L, 1, 1, 7),
+    "q06_parts_by_brand" -> (25L, 1, 1, 3),
+    "q07_semi_join_big_spenders" -> (93L, 1, 1, 1),
+    "q08_anti_join_no_big_orders" -> (57L, 1, 1, 1),
+    "q09_top_orders_per_customer" -> (449L, 1, 1, 1),
+    "q10_rollup_orders" -> (19L, 1, 1, 1),
+    "q11_cube_events" -> (48L, 1, 1, 1),
+    "q12_distinct_flags" -> (6L, 1, 1, 2),
+    "q13_except_nations" -> (15L, 1, 1, 1),
+    "q14_intersect_nations" -> (10L, 1, 1, 1),
+    "q15_pivot_flags" -> (3L, 1, 1, 2),
+    "q16_above_avg_orders" -> (754L, 1, 1, 1),
+    "q17_latest_event_per_user" -> (15L, 1, 1, 1),
+    "q18_props_sum" -> (5L, 1, 1, 1),
+    "q20_clean_text" -> (500L, 1, 1, 1),
+    "q21_sentiment_decode" -> (500L, 1, 1, 1),
+    "q22_token_stats" -> (500L, 1, 1, 1),
+    "q23_quality_score" -> (500L, 1, 1, 1),
+    "q24_lang_guess" -> (500L, 1, 1, 1),
+    "q25_fingerprint" -> (500L, 1, 1, 1),
+    "q26_binary_meta" -> (500L, 1, 1, 1),
+    "q30_dedup_exact" -> (500L, 1, 1, 1),
+    "q31_dedup_prefix" -> (476L, 1, 1, 1),
+    "q32_ngram_jaccard_pairs" -> (28L, 1, 1, 1),
+    "q33_minhash_lsh_pairs" -> (28L, 1, 1, 1),
+    "q34_simhash_pairs" -> (7320L, 1, 1, 1),
+    "q35_knn_bruteforce" -> (50L, 1, 1, 1),
+    "q36_embedding_neardup" -> (14L, 2, 2, 2),
+    "q37_ann_ivf" -> (50L, 1, 1, 1),
+    "q40_tumbling_hourly" -> (868L, 1, 1, 1),
+    "q41_sliding_two_hour" -> (664L, 1, 1, 1),
+    "q42_sessionize" -> (946L, 1, 1, 1),
+    "q43_running_totals" -> (1000L, 1, 1, 1),
+    "q45_confusion_matrix" -> (99L, 1, 1, 1),
+    "q46_class_report" -> (10L, 1, 1, 1),
+    "q47_accuracy" -> (1L, 1, 1, 1))
 
   private val pinnedSchemas: Map[String, String] = Map(
     "q01_pricing_summary" ->
@@ -175,15 +176,23 @@ class InventorySpec extends AnyFunSuite {
 
   test("every query launches its pinned number of execution jobs at sf0.001") {
     assert(executionJobs(TestSpark.sfDir, "sf0.001") ===
-      pinned.map { case (name, (_, n, _)) => name -> n })
+      pinned.map { case (name, (_, n, _, _)) => name -> n })
+  }
+
+  test("every query launches its pinned number of execution jobs at sf0.01") {
+    // q05's and q06's broadcasts run in one task here, though their
+    // sides sum past the 1 MB target: each side fits on its own
+    assert(executionJobs(TestSpark.sf001Dir, "sf0.01") ===
+      pinned.map { case (name, (_, _, n, _)) => name -> n })
   }
 
   test("every query launches its pinned number of execution jobs at sf0.1") {
-    // above 1 MB, a stage's input fits the gate only as one file that
-    // Spark reads as one task; lineitem's scans, q05's joins, the
-    // broadcasts that stay and q36's repartition keep their jobs
+    // above 1 MB, a stage fits the gate only when it runs as one task,
+    // as over one file under the open cost; lineitem's scans, the
+    // broadcasts joined to them (q05, q06) and q36's repartition keep
+    // their jobs, and no other broadcast stays
     assert(executionJobs(TestSpark.sf01Dir, "sf0.1") ===
-      pinned.map { case (name, (_, _, n)) => name -> n })
+      pinned.map { case (name, (_, _, _, n)) => name -> n })
   }
 
   test("rows-only queries give identical sorted output on two executions") {

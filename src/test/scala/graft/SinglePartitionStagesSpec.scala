@@ -3,7 +3,8 @@ package graft
 import graft.core.Tables
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
-import org.apache.spark.sql.functions.{broadcast, col, count, lit, when}
+import org.apache.spark.sql.expressions.Window
+import org.apache.spark.sql.functions.{broadcast, col, count, lit, row_number, when}
 import org.scalatest.funsuite.AnyFunSuite
 
 /** `SinglePartitionStages` runs small single-input stages and small
@@ -298,14 +299,54 @@ class SinglePartitionStagesSpec extends AnyFunSuite {
     }
   }
 
-  test("at sf0.1, a one-file scan joined to a second scan over the target keeps its broadcast") {
+  test("at sf0.1, a one-file scan joined to a second scan over the target runs in one task") {
+    // each side is one file that Spark reads as one task, though the two
+    // sum past the 1 MB target
     val orders = Tables.orders(spark, sf01).select("o_orderkey", "o_custkey")
     val customer = Tables.customer(spark, sf01).select("c_custkey", "c_nationkey")
     val plan = checkedPlan(orders.join(broadcast(customer), col("o_custkey") === col("c_custkey"))
       .groupBy("c_nationkey").agg(count(lit(1)).as("n")).orderBy("c_nationkey"))
-    assert(plan.contains("BroadcastHashJoin") && !plan.contains("ShuffledHashJoin"), plan)
-    // the aggregate's stage is the orders scan and the broadcast: one task
+    assert(plan.contains("ShuffledHashJoin") && !plan.contains("BroadcastHashJoin"), plan)
+    // the aggregate's stage is the join, which runs as one task
     assert(!plan.contains("partitioning("), plan)
+  }
+
+  test("a build side that Spark reads as two tasks keeps its broadcast") {
+    val nation = Tables.nation(spark, TestSpark.sfDir).select("n_nationkey", "n_name")
+    def kept(events: DataFrame): Unit = {
+      val plan = checkedPlan(sorted(nation.join(broadcast(events.select("event_id", "event_type")),
+        col("n_nationkey") === col("event_id"))))
+      assert(plan.contains("BroadcastHashJoin") && !plan.contains("ShuffledHashJoin"), plan)
+    }
+    withTwoFileEvents(kept)
+    TestSpark.withConf("spark.sql.files.openCostInBytes" -> "1m") {
+      val events = Tables.events(spark, sf01)
+      assert(events.rdd.getNumPartitions === 2)
+      kept(events)
+    }
+  }
+
+  test("at sf0.1, an aggregate over a broadcast join that stays runs in its stream side's task") {
+    withTwoFileEvents { twoFiles =>
+      // the stream side is one orders file over the 1 MB target; the
+      // build side is two files, so its broadcast stays
+      val orders = Tables.orders(spark, sf01).select("o_orderkey", "o_custkey")
+      val plan = checkedPlan(orders.join(broadcast(twoFiles.select("user_id", "event_type")),
+        col("o_custkey") === col("user_id"))
+        .groupBy("event_type").agg(count(lit(1)).as("n")).orderBy("event_type"))
+      assert(plan.contains("BroadcastHashJoin") && !plan.contains("partitioning("), plan)
+    }
+  }
+
+  test("at sf0.1, a cross join of two one-file scans runs with its window in one task") {
+    // embeddings is one file of 0.8 MB: the two scans sum past the target
+    val ids = Tables.embeddings(spark, sf01).select("vec_id")
+    val queries = ids.filter(col("vec_id") < 5).select(col("vec_id").as("q_id"))
+    val byQuery = Window.partitionBy("q_id").orderBy(col("vec_id").desc)
+    val plan = checkedPlan(ids.crossJoin(broadcast(queries))
+      .withColumn("rank", row_number().over(byQuery)).filter(col("rank") <= 3)
+      .orderBy("q_id", "rank"))
+    assert(plan.contains("CartesianProduct") && !plan.contains("Exchange"), plan)
   }
 
   test("the one-file queries give Spark's ordered rows at sf0.1") {
@@ -316,6 +357,18 @@ class SinglePartitionStagesSpec extends AnyFunSuite {
         def rows() = query(name).fn(spark, sf01).collect().toSeq
         rows() != TestSpark.withConf(sparkExchanges)(rows())
       }
+    assert(changed.isEmpty)
+  }
+
+  test("the queries whose broadcast joins run in one task give Spark's ordered rows") {
+    val changed = Seq(TestSpark.sf001Dir -> Seq("q05_revenue_by_nation", "q06_parts_by_brand"),
+      sf01 -> Seq("q07_semi_join_big_spenders", "q08_anti_join_no_big_orders", "q35_knn_bruteforce",
+        "q36_embedding_neardup", "q37_ann_ivf")).flatMap { case (dir, names) =>
+      names.filter { name =>
+        def rows() = query(name).fn(spark, dir).collect().toSeq
+        rows() != TestSpark.withConf(sparkExchanges)(rows())
+      }
+    }
     assert(changed.isEmpty)
   }
 }

@@ -9,7 +9,9 @@ import org.apache.spark.sql.SparkSession
 /** One shared local session for the whole forked test JVM. */
 object TestSpark {
   val sfDir = "/root/testdata/sf0.001"
-  /** The sf0.1 tables beside `sfDir`, read-only like every test table. */
+  /** The sf0.01 and sf0.1 tables beside `sfDir`, read-only like every
+    * test table. */
+  val sf001Dir = s"${new java.io.File(sfDir).getParent}/sf0.01"
   val sf01Dir = s"${new java.io.File(sfDir).getParent}/sf0.1"
 
   lazy val spark: SparkSession = {
