@@ -2,10 +2,11 @@
 // signature mentions the private[sql] AbstractDataType.
 package org.apache.spark.sql.graftbridge
 
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, ImplicitCastInputTypes}
+import graft.ml.CodebookKMeans
+import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, ImplicitCastInputTypes, Literal, UnsafeArrayData}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.catalyst.util.ArrayData
-import org.apache.spark.sql.types.{AbstractDataType, ArrayType, DataType, DoubleType}
+import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
+import org.apache.spark.sql.types.{AbstractDataType, ArrayType, DataType, DoubleType, IntegerType, LongType}
 
 /** Codegen'd dot product over two array<double> columns.
   *
@@ -73,33 +74,66 @@ case class DotProductExpr(left: Expression, right: Expression)
     copy(left = newLeft, right = newRight)
 }
 
-/** Driver-trained IVF codebook assignment: top-`top` centroid ids for
-  * an array<double> vector, ranked by cosine (ties to the smaller
-  * centroid id). The codebook is a driver-local matrix (trained by
-  * graft.ml.CodebookKMeans on a bounded sample), so assignment is a
-  * pure per-row map — scan → project, no broadcast join, no argmax
-  * aggregate, no exchange at ANY corpus scale. Centroids are
-  * re-normalized once at plan time; ranking by dot(v, ĉ_j) then equals
-  * ranking by cosine (the per-row |v| factor is a positive constant
-  * across j).
+/** IVF codebook training and assignment, called from generated code
+  * through a StaticInvoke (`IvfAssign.train` from
+  * `VectorFunctions.ivfCodebook`, `IvfAssign.topBuckets` from
+  * IvfTopBucketsExpr). A codebook is an array<array<double>> of k
+  * unit-normalised centroids. q37 trains it in its own task, as a
+  * projection of the one-row aggregate that keeps its bounded sample,
+  * so assignment is a per-row map over a cross join with that row: no
+  * argmax aggregate and no exchange of the corpus at any scale. Ranking
+  * by dot(v, ĉ_j) equals ranking by cosine (the per-row |v| factor is a
+  * positive constant across j).
   */
 object IvfAssign {
-  /** `flat` = row-major unit centroids (k × dim). Vectors of the wrong
-    * dimensionality yield an empty array (explode drops them). */
-  def topBuckets(v: ArrayData, flat: Array[Double], dim: Int, top: Int): ArrayData = {
-    if (v.numElements() != dim) return new org.apache.spark.sql.catalyst.util.GenericArrayData(Array.empty[Any])
-    val k = flat.length / dim
+  val CodebookType: DataType =
+    ArrayType(ArrayType(DoubleType, containsNull = false), containsNull = false)
+
+  /** The codebook value of `centroids`, each re-normalised to unit
+    * length (a zero centroid stays zero). */
+  def codebook(centroids: Seq[Array[Double]]): ArrayData = {
+    require(centroids.nonEmpty, "empty codebook")
+    val dim = centroids.head.length
+    new GenericArrayData(centroids.map { c =>
+      require(c.length == dim, "ragged codebook")
+      var s = 0.0
+      c.foreach(x => s += x * x)
+      val n = math.sqrt(s)
+      UnsafeArrayData.fromPrimitiveArray(c.map(x => if (n > 0) x / n else 0.0))
+    }.toArray[Any])
+  }
+
+  /** The codebook graft.ml.CodebookKMeans trains on `sample`, an
+    * array<array<double>> of at least `k` vectors. */
+  def train(sample: ArrayData, k: Int, iters: Int): ArrayData =
+    codebook(CodebookKMeans.train(
+      Array.tabulate(sample.numElements())(i => sample.getArray(i).toDoubleArray()), k, iters).toSeq)
+
+  /** The ids of the `top` centroids of `code` nearest to `v`, ties to the
+    * smaller id. The codebook is read in place; `v` is copied to a
+    * primitive array once, so the k × dim loop reads only one operand
+    * through ArrayData. A NULL vector, or one of another dimensionality,
+    * yields an empty array, which overlaps no bucket list. The result is
+    * never NULL, so the optimizer infers no NULL check that would
+    * evaluate the kernel a second time. */
+  def topBuckets(v: ArrayData, code: ArrayData, top: Int): ArrayData = {
+    val k = code.numElements()
+    require(top >= 1 && top <= k, s"top=$top outside 1..$k")
+    if (v == null || code.getArray(0).numElements() != v.numElements()) {
+      return new GenericArrayData(Array.empty[Any])
+    }
+    val x = v.toDoubleArray()
     val sims = new Array[Double](k)
     var j = 0
     while (j < k) {
+      val c = code.getArray(j)
       var s = 0.0
       var i = 0
-      val off = j * dim
-      while (i < dim) { s += v.getDouble(i) * flat(off + i); i += 1 }
+      while (i < x.length) { s += x(i) * c.getDouble(i); i += 1 }
       sims(j) = s
       j += 1
     }
-    val out = new Array[Any](top)
+    val out = new Array[Long](top)
     val taken = new Array[Boolean](k)
     var t = 0
     while (t < top) {
@@ -114,50 +148,19 @@ object IvfAssign {
       out(t) = best.toLong
       t += 1
     }
-    new org.apache.spark.sql.catalyst.util.GenericArrayData(out)
+    UnsafeArrayData.fromPrimitiveArray(out)
   }
 }
 
 /** array<double> → array<long>: the vector's `top` nearest codebook
-  * centroid ids (see IvfAssign.topBuckets). */
-case class IvfTopBucketsExpr(child: Expression,
-    centroids: Seq[Seq[Double]], top: Int)
-    extends org.apache.spark.sql.catalyst.expressions.UnaryExpression
-    with ImplicitCastInputTypes {
+  * centroid ids (IvfAssign.topBuckets), against a codebook column or
+  * a literal one. */
+object IvfTopBucketsExpr {
+  def apply(child: Expression, codebook: Expression, top: Int): Expression =
+    ColumnBridge.invoke(IvfAssign, "topBuckets", ArrayType(LongType, containsNull = false),
+      Seq(child, codebook, Literal(top)),
+      Seq(ArrayType(DoubleType), IvfAssign.CodebookType, IntegerType), propagateNull = false)
 
-  require(centroids.nonEmpty && top >= 1 && top <= centroids.length,
-    s"top=$top outside 1..${centroids.length}")
-
-  override def inputTypes: Seq[AbstractDataType] = Seq(ArrayType(DoubleType))
-  override def dataType: DataType =
-    ArrayType(org.apache.spark.sql.types.LongType, containsNull = false)
-  override def prettyName: String = "graft_ivf_buckets"
-
-  private val dim = centroids.head.length
-
-  /** Unit-normalized row-major codebook. */
-  @transient private lazy val flat: Array[Double] = {
-    val out = new Array[Double](centroids.length * dim)
-    centroids.zipWithIndex.foreach { case (c, j) =>
-      require(c.length == dim, "ragged codebook")
-      var s = 0.0
-      c.foreach(x => s += x * x)
-      val n = math.sqrt(s)
-      var i = 0
-      while (i < dim) { out(j * dim + i) = if (n > 0) c(i) / n else 0.0; i += 1 }
-    }
-    out
-  }
-
-  override protected def nullSafeEval(input: Any): Any =
-    IvfAssign.topBuckets(input.asInstanceOf[ArrayData], flat, dim, top)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val flatRef = ctx.addReferenceObj("ivfCodebook", flat, "double[]")
-    defineCodeGen(ctx, ev, c =>
-      s"org.apache.spark.sql.graftbridge.IvfAssign.topBuckets($c, $flatRef, $dim, $top)")
-  }
-
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
+  def apply(child: Expression, centroids: Seq[Seq[Double]], top: Int): Expression =
+    apply(child, Literal(IvfAssign.codebook(centroids.map(_.toArray)), IvfAssign.CodebookType), top)
 }

@@ -1,12 +1,14 @@
 package graft.functions
 
 import org.apache.spark.sql.Column
+import org.apache.spark.sql.catalyst.expressions.Literal
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.graftbridge.{ColumnBridge, DotProductExpr}
+import org.apache.spark.sql.graftbridge.{ColumnBridge, DotProductExpr, IvfAssign, IvfTopBucketsExpr}
+import org.apache.spark.sql.types.{ArrayType, DoubleType, IntegerType}
 
 /** Dense-vector math over Array[Float]/Array[Double] columns. The dot
-  * product — the only per-element kernel — is a custom codegen'd
-  * Catalyst expression (DotProductExpr); everything else composes it.
+  * product is a custom codegen'd Catalyst expression (DotProductExpr);
+  * the IVF codebook kernels are static methods (IvfAssign).
   * Element folds run in index order, which keeps double arithmetic
   * bit-deterministic across runs and engines.
   *
@@ -28,4 +30,17 @@ object VectorFunctions {
       DotProductExpr(ColumnBridge.expression(a), ColumnBridge.expression(b)))
 
   def norm2(a: Column): Column = sqrt(dot(a, a))
+
+  /** The IVF codebook (k unit centroids, `IvfAssign.train`) trained on
+    * `sample`, an array<array<double>> column of at least `k` vectors. */
+  def ivfCodebook(sample: Column, k: Int, iters: Int): Column =
+    ColumnBridge.column(ColumnBridge.invoke(IvfAssign, "train", IvfAssign.CodebookType,
+      Seq(ColumnBridge.expression(sample), Literal(k), Literal(iters)),
+      Seq(ArrayType(ArrayType(DoubleType)), IntegerType, IntegerType)))
+
+  /** The ids of the `top` centroids of the `code` codebook nearest to
+    * `v` by cosine, ties to the smaller id. */
+  def ivfTopBuckets(v: Column, code: Column, top: Int): Column =
+    ColumnBridge.column(IvfTopBucketsExpr(ColumnBridge.expression(v),
+      ColumnBridge.expression(code), top))
 }

@@ -4,10 +4,10 @@ package graft.ml
   *
   * Replaces the `vec_id < 8` placeholder codebook (VERDICT r21 item 1:
   * arbitrary centroids give no bucket-balance or pruning guarantee at
-  * corpus scale). Runs on a small bounded sample collected by the
-  * caller, entirely on the driver — the cost model is that of building
-  * any broadcast relation, and the corpus itself is never shuffled for
-  * training.
+  * corpus scale). Runs inside the query's own task, on the bounded
+  * sample that the query's one-row aggregate keeps
+  * (`IvfAssign.train`): no build-time Spark job, and the corpus itself
+  * is never shuffled for training.
   *
   * Everything is deterministic with no RNG: farthest-point ("maxmin")
   * initialization from the hash-ordered sample, argmax-cosine

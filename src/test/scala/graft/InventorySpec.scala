@@ -16,7 +16,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * output schemas from its `df.schema.toDDL`; the rows-only queries
   * (no SQL oracle) must also repeat exactly, and in the same order at
   * any shuffle parallelism. Building a table or a query must
-  * launch no Spark job beyond q37's declared codebook sample. Where
+  * launch no Spark job (q37 trains its codebook in its own task). Where
   * `python3` can import `duckdb` and `pandas`, every result is also
   * replayed against its DuckDB oracle, as the correctness gate does
   * (`graft.Verify` + `tools/check_oracle.py`).
@@ -167,7 +167,7 @@ class InventorySpec extends AnyFunSuite {
 
   /** Execution jobs of each query's collect on `sfDir`. A lost fusion or
     * a new exchange shows here without any timing; the query is built
-    * outside the count (q37's codebook sample). */
+    * outside the count. */
   private def executionJobs(sfDir: String, tag: String): Map[String, Int] =
     SparkEntry.inventory.map { q =>
       val df = q.fn(spark, sfDir)
@@ -225,7 +225,7 @@ class InventorySpec extends AnyFunSuite {
     assert(changed.isEmpty)
   }
 
-  test("building a table or a query launches no Spark job, except q37's codebook sample") {
+  test("building a table or a query launches no Spark job") {
     import TestSpark.jobsLaunchedBy
     val tableJobs = TablesSpec.loaders.map { case (name, load) =>
       name -> jobsLaunchedBy(s"build-table:$name")(load(spark, TestSpark.sfDir))
@@ -234,8 +234,7 @@ class InventorySpec extends AnyFunSuite {
     val queryJobs = SparkEntry.inventory.map { q =>
       q.name -> jobsLaunchedBy(s"build-query:${q.name}")(q.fn(spark, TestSpark.sfDir))
     }.toMap
-    val expected = SparkEntry.inventory.map(q => q.name -> 0).toMap + ("q37_ann_ivf" -> 1)
-    assert(queryJobs === expected)
+    assert(queryJobs === SparkEntry.inventory.map(q => q.name -> 0).toMap)
   }
 
   test("every query's sf0.001 result matches its DuckDB oracle") {

@@ -1,0 +1,76 @@
+package graft
+
+import scala.jdk.CollectionConverters._
+import graft.core.Tables
+import graft.operators.Similarity
+import org.apache.spark.sql.Row
+import org.apache.spark.sql.functions.col
+import org.scalatest.funsuite.AnyFunSuite
+
+/** q37 on hostile `embeddings` tables written to a temp dir with the
+  * declared schema: fewer vectors than the codebook's 8 centroids,
+  * fewer than its 512-vector sample, and NULL embeddings. The vectors
+  * are seeded 4-d Gaussians; ids below 10 are q37's probes. Tiny files
+  * always pass `SinglePartitionStages`' size gate, so nothing here
+  * asserts plan shape.
+  */
+class IvfHostileSpec extends AnyFunSuite {
+  private lazy val spark = TestSpark.spark
+
+  /** `n` vectors with ids 0 until n, each NULL where `nulls` holds its id. */
+  private def vectors(n: Int, nulls: Set[Long] = Set.empty): Seq[(Long, Seq[Float])] = {
+    val rnd = new scala.util.Random(7)
+    (0L until n.toLong).map { id =>
+      val v = Seq.fill(4)(rnd.nextGaussian().toFloat)
+      id -> (if (nulls(id)) null else v)
+    }
+  }
+
+  /** `body` on a temp dir whose `embeddings` table holds `rows`. */
+  private def withEmbeddings[T](rows: Seq[(Long, Seq[Float])])(body: String => T): T =
+    TestSpark.withTempDir { dir =>
+      val schema = Tables.embeddings(spark, TestSpark.sfDir).schema
+      spark.createDataFrame(rows.map { case (id, v) =>
+        Row(id, Option(v).map(_.asJava).orNull, (id % 3).toInt)
+      }.asJava, schema).coalesce(1).write.parquet(s"$dir/embeddings.parquet")
+      body(dir)
+    }
+
+  private def sampleIds(dir: String): Seq[Long] =
+    Similarity.ivfIndexForSpec(spark, dir).select(col("sample.vec_id")).head().getSeq[Long](0)
+
+  /** q37's (q_id, c_id) pairs. */
+  private def pairs(dir: String): Seq[(Long, Long)] =
+    Similarity.annIvf(spark, dir).collect().map(r => (r.getLong(0), r.getLong(2))).toSeq
+
+  test("fewer than 8 embeddings fail q37 with the trainer's require message as the cause") {
+    withEmbeddings(vectors(5)) { dir =>
+      val df = Similarity.annIvf(spark, dir) // building runs nothing, so it cannot fail
+      val e = intercept[Exception](df.collect())
+      val causes = Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null).toSeq
+      assert(causes.exists(c => c.isInstanceOf[IllegalArgumentException] &&
+        c.getMessage.contains("sample 5 < k=8")), causes.map(_.toString).mkString("\n"))
+    }
+  }
+
+  test("fewer than 512 embeddings train on all of them") {
+    withEmbeddings(vectors(40)) { dir =>
+      assert(sampleIds(dir).sorted === (0L until 40L))
+      val got = pairs(dir)
+      assert(got.map(_._1).distinct.sorted === (0L until 10L))
+      assert(got.groupBy(_._1).values.forall(_.size <= 5))
+      assert(got.forall(_._2 >= 10L))
+    }
+  }
+
+  test("a NULL embedding is left out of the sample and pairs with nothing") {
+    // before the sample was aggregated in the plan, its driver collect
+    // threw a NullPointerException on a NULL embedding
+    withEmbeddings(vectors(41, nulls = Set(3L, 40L))) { dir =>
+      assert(sampleIds(dir).sorted === (0L until 40L).filter(_ != 3L))
+      val got = pairs(dir)
+      assert(got.nonEmpty)
+      assert(got.forall { case (q, c) => q != 3L && c != 40L }, got)
+    }
+  }
+}

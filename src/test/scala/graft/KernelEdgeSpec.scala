@@ -6,14 +6,15 @@ import graft.functions.TextFunctions
 import org.apache.spark.sql.{Column, Row}
 import org.apache.spark.sql.catalyst.expressions.{Murmur3HashFunction, XxHash64Function}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.graftbridge.{ColumnBridge, MinHashSigExpr, SignatureUtil, SimHash64Expr}
+import org.apache.spark.sql.graftbridge.{ColumnBridge, IvfTopBucketsExpr, MinHashSigExpr, SignatureUtil, SimHash64Expr}
 import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, StringType, StructField, StructType}
 import org.apache.spark.unsafe.types.UTF8String
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Edge inputs through every text, signature and decimal kernel of
-  * `graftbridge`: NULL, empty and all-whitespace text, token arrays
-  * shorter than the shingle size, NULL array elements, and the doubles
+/** Edge inputs through every text, signature, IVF and decimal kernel
+  * of `graftbridge`: NULL, empty and all-whitespace text, token arrays
+  * shorter than the shingle size, NULL array elements, NULL vectors and
+  * vectors of another dimension than the codebook's, and the doubles
   * that the decimal fast parse hands to its slow path. Every case runs
   * twice, through generated code and interpreted, and must give the
   * pinned value both times.
@@ -48,10 +49,15 @@ class KernelEdgeSpec extends AnyFunSuite {
     }
     (0 until MinhashFuncs).map(i => hs.map(h => (As(i) * h + Bs(i)) % Prime).min)
   }
+  /** Bucket ids against the unit codebook {(1, 0), (0, 1)}. */
+  private def buckets(top: Int)(c: Column): Column =
+    ColumnBridge.column(IvfTopBucketsExpr(ColumnBridge.expression(c),
+      Seq(Seq(1.0, 0.0), Seq(0.0, 1.0)), top))
   private def xx(s: String): Long = XxHash64Function.hash(UTF8String.fromString(s), StringType, 42L)
 
   private val Text = StringType
   private val Tokens = ArrayType(StringType)
+  private val Vector = ArrayType(DoubleType)
   private val Sentinel = Long.MinValue
 
   /** (kernel, input type, kernel column, input, expected output) */
@@ -88,6 +94,10 @@ class KernelEdgeSpec extends AnyFunSuite {
     ("simhash", Tokens, simhash _, Seq(), 0L),
     ("simhash", Tokens, simhash _, Seq(null), 42L),
     ("simhash", Tokens, simhash _, Seq("a", null), 42L & xx("a")),
+    ("topBuckets", Vector, buckets(2) _, null, Seq()),
+    ("topBuckets", Vector, buckets(2) _, Seq(1.0), Seq()),
+    ("topBuckets", Vector, buckets(2) _, Seq(0.2, 0.9), Seq(1L, 0L)),
+    ("topBuckets", Vector, buckets(1) _, Seq(3.0, 3.0), Seq(0L)),
     ("unscaled18", DoubleType, QueryUtils.unscaled18 _, null, null),
     ("unscaled18", DoubleType, QueryUtils.unscaled18 _, Double.NaN, Sentinel),
     ("unscaled18", DoubleType, QueryUtils.unscaled18 _, Double.PositiveInfinity, Sentinel),

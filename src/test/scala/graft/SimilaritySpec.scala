@@ -3,6 +3,7 @@ package graft
 import graft.core.Tables
 import graft.functions.VectorFunctions
 import graft.operators.Similarity
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -82,6 +83,37 @@ class SimilaritySpec extends AnyFunSuite {
     val plan = df.queryExecution.executedPlan.toString
     assert(plan.contains("ReusedQueryStage") || plan.contains("ReusedExchange"),
       "label self-join must share one exchange: " + plan.take(4000))
+  }
+
+  test("q37's in-plan codebook sample is orderBy(h, vec_id).limit(512) at sf0.001, sf0.01 and sf0.1") {
+    // CollectTopK keeps the largest values unless reversed: a flipped
+    // flag trains on another sample, visible only at sf0.1 (2,000
+    // vectors; the smaller scales hold 500, all of them sampled)
+    Seq(sf, TestSpark.sf001Dir, TestSpark.sf01Dir).foreach { dir =>
+      val h = pmod(xxhash64(col("vec_id")), lit(1L << 20))
+      val want = Tables.embeddings(spark, dir).select(h.as("h"), col("vec_id"))
+        .orderBy("h", "vec_id").limit(512).collect().map(r => (r.getLong(0), r.getLong(1))).toSeq
+      val got = Similarity.ivfIndexForSpec(spark, dir)
+        .select(col("sample.h"), col("sample.vec_id")).head()
+      assert(got.getSeq[Long](0).zip(got.getSeq[Long](1)) === want, dir)
+    }
+  }
+
+  test("q37 on embeddings in three files gives the one-file rows and keeps an exchange or broadcast") {
+    // SinglePartitionStages stays out of multi-task inputs, so the
+    // partial sample and probe buffers merge across tasks here; at sf0.1
+    // each file holds more vectors than the 512-vector sample
+    TestSpark.withTempDir { dir =>
+      val path = s"$dir/embeddings.parquet"
+      Tables.embeddings(spark, TestSpark.sf01Dir).repartition(3).write.parquet(path)
+      assert(new java.io.File(path).list().count(_.endsWith(".parquet")) === 3)
+      val df = Similarity.annIvf(spark, dir)
+      val rows = df.collect().toSeq
+      assert(rows === Similarity.annIvf(spark, TestSpark.sf01Dir).collect().toSeq)
+      val plan = df.queryExecution.executedPlan.asInstanceOf[AdaptiveSparkPlanExec]
+        .executedPlan.toString
+      assert(plan.contains("Exchange") || plan.contains("Broadcast"), plan.take(4000))
+    }
   }
 
   test("trained IVF codebook yields non-degenerate buckets (no bucket > 40% of vectors)") {
