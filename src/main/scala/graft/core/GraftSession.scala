@@ -4,7 +4,9 @@ import org.apache.spark.sql.SparkSession
 
 /** Single place where engine-level Spark tuning lives, so every entry
   * point (Verify, Bench, tests, serving) runs the same plan-shaping
-  * config. Values are chosen for the local[32] harness but the knobs
+  * config. The default master (Verify, Bench, perfbench) is
+  * `local[$SPARK_GRAFT_CPUS]`, 4 when unset, and perfbench sets it to
+  * the host's core count; the specs' session runs `local[8]`. The knobs
   * are the ones that matter on a real cluster too: AQE re-plans
   * shuffles at runtime (skew join, partition coalescing), shuffle
   * parallelism is sized to cores rather than the 200 default, and

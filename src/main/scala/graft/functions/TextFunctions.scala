@@ -44,16 +44,24 @@ object TextFunctions {
     * (property-proven; TextKernelUtil.stripNoisePunct). */
   def stripNoiseAndPunct(c: Column): Column = textKernel("stripNoisePunct", StringType)(c)
 
-  /** The 6-char java-\s set: [ \t\n\x0B\f\r]. */
-  private val wsChars = " \t\n\u000B\f\r"
+  /** The text layer's one whitespace set, [ \t\n\x0B\f\r]: the
+    * characters `pyStrip` trims and the kernels' `isWs` tests. RE2's
+    * `\s` lacks \x0B, so the oracle SQL spells whitespace as
+    * `wsClass`/`nonWsClass`, never as `\s`/`\S`. Python's `str.strip`
+    * strips more (\x1c–\x1f, \x85, \xa0, …): a declared deviation. */
+  val wsChars = " \t\n\u000B\f\r"
 
-  /** Python str.strip() parity: strips ALL leading/trailing whitespace
-    * including tab/newline — Spark's one-arg trim() strips spaces only
-    * (golden case at reference src/unit_tests/test_utils.py:18-21).
-    * Spelled as charset-trim rather than
-    * regexp_replace(c, "^\\s+|\\s+$", "") — identical for every input
-    * (both remove exactly the leading and trailing [ \t\n\x0B\f\r]
-    * runs; TextFunctionsSpec proves it) without the per-row regex. */
+  /** `wsChars` as a regex class, [\x20\x09\x0A\x0B\x0C\x0D], and its
+    * negation; DuckDB's RE2 and java.util.regex read both the same. */
+  val wsClass: String = wsChars.map(c => f"\\x${c.toInt}%02X").mkString("[", "", "]")
+  val nonWsClass: String = "[^" + wsClass.tail
+
+  /** Python str.strip() parity over `wsChars`: strips leading and
+    * trailing whitespace including tab/newline — Spark's one-arg trim()
+    * strips spaces only (golden case at reference
+    * src/unit_tests/test_utils.py:18-21). Spelled as charset-trim, not
+    * as the per-row regex `^ws+|ws+$` (TextFunctionsSpec proves them
+    * equal). */
   def pyStrip(c: Column): Column = trim(c, wsChars)
 
   /** F1–F5 chained in reference order (src/utils.py:5-10); F1–F4 run
@@ -64,6 +72,9 @@ object TextFunctions {
   /** Python string.punctuation with the single quote doubled for SQL. */
   private val punctSql = asciiPunctuation.replace("'", "''")
 
+  /** The strip pattern of the oracle SQL: leading or trailing `wsChars`. */
+  private val sqlStrip = s"^$wsClass+|$wsClass+$$"
+
   /** `cleanText` of the SQL expression `e`, spelled for the DuckDB
     * oracle as the reference's own passes: three regex deletes, the
     * punctuation translate, lower, strip. */
@@ -71,9 +82,9 @@ object TextFunctions {
     s"""regexp_replace(
        |  lower(translate(
        |    regexp_replace(regexp_replace(regexp_replace($e,
-       |      'http\\S+|www\\S+', '', 'g'), '@\\w+', '', 'g'), '#\\w+', '', 'g'),
+       |      'http$nonWsClass+|www$nonWsClass+', '', 'g'), '@\\w+', '', 'g'), '#\\w+', '', 'g'),
        |    '$punctSql', '')),
-       |  '^\\s+|\\s+$$', '', 'g')""".stripMargin
+       |  '$sqlStrip', '', 'g')""".stripMargin
 
   /** F6: label decode — 1→Positive, 0→Negative, else Unknown
     * (reference src/predict.py:84-92). */
@@ -84,14 +95,14 @@ object TextFunctions {
 
   /** Whitespace tokenizer over a python-stripped string. Byte-scan
     * kernel (TextKernelUtil.wsTokens), output identical to
-    * split(pyStrip(c), "\\s+") including the [""] result for strings
-    * that strip to empty (TextFunctionsSpec proves equality). */
+    * split(pyStrip(c), wsClass + "+") including the [""] result for
+    * strings that strip to empty (TextFunctionsSpec proves equality). */
   def tokens(c: Column): Column =
     textKernel("wsTokens", ArrayType(StringType, containsNull = false))(c)
 
   /** `tokens` of the SQL expression `e`, spelled for the DuckDB oracle. */
   def sqlTokens(e: String): String =
-    s"regexp_split_to_array(regexp_replace($e, '^\\s+|\\s+$$', '', 'g'), '\\s+')"
+    s"regexp_split_to_array(regexp_replace($e, '$sqlStrip', '', 'g'), '$wsClass+')"
 
   /** Tiny embedded stopword list for quality scoring: the table of
     * `tokenStats3`'s kernel and the list q23's oracle SQL reads. */
@@ -117,9 +128,10 @@ object TextFunctions {
   /** Whole-word hit counts of each `langMarkers` list, in order, in ONE
     * byte scan (TextKernelUtil.langMarkerCounts): the
     * regexp_extract_all spelling ran four full-text regex scans per
-    * row. Counts are identical (the sets are disjoint and a \b(w)\b
-    * match is exactly a maximal \w-run equal to w — TextFunctionsSpec
-    * proves equality per set). */
+    * row. A hit is a maximal ASCII \w-run equal to a marker, which is
+    * what the oracle's RE2 \b(w)\b matches, since RE2's \b is ASCII
+    * (an accented letter next to a marker does not join its word).
+    * The sets are disjoint; TextFunctionsSpec proves equality per set. */
   def markerCounts(c: Column): Column =
     textKernel("langMarkerCounts", ArrayType(IntegerType, containsNull = false))(c)
 

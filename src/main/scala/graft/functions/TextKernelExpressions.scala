@@ -1,43 +1,46 @@
 package org.apache.spark.sql.graftbridge
 
 import graft.functions.TextFunctions
+import org.apache.spark.sql.catalyst.expressions.UnsafeArrayData
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.unsafe.Platform
 import org.apache.spark.unsafe.types.UTF8String
 
-/** Byte-scan text kernels replacing per-row java.util.regex passes.
-  * Each public method is one kernel, called from generated code through
-  * a StaticInvoke (`ColumnBridge.invoke`, built in `TextFunctions`).
+/** Byte-scan text kernels replacing per-row regex passes. Each public
+  * method is one kernel, called from generated code through a
+  * StaticInvoke (`ColumnBridge.invoke`, built in `TextFunctions`).
   * A kernel's plan-time table (punctuation, stopwords, marker words) is
   * a constant here, built from the list in `TextFunctions` that the
   * oracle SQL also reads.
   *
-  * The tokenizer and marker counter below are exact re-implementations
-  * of regex spellings whose character classes are pure ASCII (java
-  * `\s` = [ \t\n\x0B\f\r], java `\w` = [a-zA-Z0-9_] — multi-byte
-  * UTF-8 units are ≥ 0x80, so byte-level scanning sees exactly the
-  * same boundaries the regex engine sees). Measured at sf0.1 the
-  * regex tokenization cost ~0.13 s per evaluation over 5k docs and
-  * feeds eight queries; the marker counter collapses q24's four
-  * full-text regex scans into one. Equivalence with the regex
-  * spellings is property-proven in TextFunctionsSpec over the corpus
-  * plus adversarial inputs.
+  * Each kernel's contract is its DuckDB oracle SQL, and each re-implements
+  * that SQL's ASCII character classes: whitespace is the class spelled
+  * from `TextFunctions.wsChars` ([ \t\n\x0B\f\r]), and a word byte is
+  * RE2's ASCII `\w` ([a-zA-Z0-9_]). Multi-byte UTF-8 units are ≥ 0x80,
+  * in neither class, so a byte scan sees exactly the boundaries the
+  * regex engine sees. Measured at sf0.1 the regex tokenization cost
+  * ~0.13 s per evaluation over 5k docs and feeds eight queries; the
+  * marker counter collapses q24's four full-text regex scans into one.
+  * TextFunctionsSpec proves each kernel equal to the regex spelling over
+  * the corpus plus adversarial inputs, and TextHostileSpec replays the
+  * queries on hostile documents against DuckDB.
   */
 object TextKernelUtil {
-  /** java \s */
+  /** The bytes of `TextFunctions.wsChars` (KernelEdgeSpec pins them);
+    * a compare chain, since this is the layer's hottest test. */
   @inline private def isWs(b: Byte): Boolean =
     b == ' ' || b == '\t' || b == '\n' || b == 0x0B || b == '\f' || b == '\r'
 
-  /** java \w */
+  /** ASCII \w, as RE2 and java.util.regex read it */
   @inline private def isWord(b: Byte): Boolean =
     (b >= 'a' && b <= 'z') || (b >= 'A' && b <= 'Z') ||
       (b >= '0' && b <= '9') || b == '_'
 
   private val EmptyString = UTF8String.fromString("")
 
-  /** split(regexp_replace(s, "^\s+|\s+$", ""), "\s+") — strip both
-    * ends, then maximal non-whitespace runs; a string that strips to
-    * empty yields [""] exactly like java "".split(re, -1). */
+  /** `TextFunctions.sqlTokens`: strip both ends, then maximal
+    * non-whitespace runs; a string that strips to empty yields [""]
+    * exactly like the regex split of "". */
   def wsTokens(s: UTF8String): ArrayData = {
     val base = s.getBaseObject
     val off = s.getBaseOffset
@@ -63,51 +66,52 @@ object TextKernelUtil {
     new GenericArrayData(out.toArray)
   }
 
-  /** Pack an ASCII word of 1..7 bytes into a long (length-tagged). */
-  private def pack(bytes: Array[Byte]): Long = {
-    require(bytes.length >= 1 && bytes.length <= 7, "marker words must be 1..7 bytes")
-    var v = bytes.length.toLong
-    var i = 0
-    while (i < bytes.length) {
-      v |= (bytes(i) & 0xFFL) << (8 * (i + 1))
-      i += 1
+  /** The `len` bytes at `i` packed into a long, byte k at bits
+    * 8(k+1) and the length in the low byte; -1, which no table word
+    * packs to, above 7 bytes. */
+  @inline private def packAt(base: AnyRef, off: Long, i: Int, len: Int): Long =
+    if (len > 7) -1L
+    else {
+      var v = len.toLong
+      var k = 0
+      while (k < len) {
+        v |= (Platform.getByte(base, off + i + k) & 0xFFL) << (8 * (k + 1))
+        k += 1
+      }
+      v
     }
-    v
+
+  /** `words` packed by `packAt`; they must be distinct ASCII words of
+    * 1..7 bytes. */
+  private def wordTable(words: Seq[String]): Array[Long] = {
+    require(words.forall(w => w.nonEmpty && w.length <= 7 && w.forall(_ < 128)),
+      "table words must be ASCII and 1..7 bytes")
+    require(words.distinct.size == words.size, "table words must be distinct")
+    words.map(w => packAt(w.getBytes("US-ASCII"), Platform.BYTE_ARRAY_OFFSET, 0, w.length)).toArray
   }
 
-  /** Compile marker sets into (packed word, set index) arrays. Words
-    * must be ASCII \w+ and pairwise distinct across sets. */
-  private def compile(sets: Seq[Seq[String]]): (Array[Long], Array[Int], Int) = {
-    val words = new scala.collection.mutable.ArrayBuffer[Long]
-    val idx = new scala.collection.mutable.ArrayBuffer[Int]
-    sets.zipWithIndex.foreach { case (set, si) =>
-      set.foreach { w =>
-        val b = w.getBytes("US-ASCII")
-        words += pack(b)
-        idx += si
-      }
-    }
-    require(words.distinct.size == words.size, "marker words must be disjoint across sets")
-    (words.toArray, idx.toArray, sets.size)
+  /** The position of `v` in `table`, or -1. */
+  @inline private def indexOf(table: Array[Long], v: Long): Int = {
+    var w = 0
+    while (w < table.length && table(w) != v) w += 1
+    if (w < table.length) w else -1
   }
 
   /** One-pass token statistics over the SAME token boundaries as
     * wsTokens: [token count, stopword hits, char sum], where "char"
     * counts code points exactly like Spark's length() (UTF-8 lead
-    * bytes) and a stopword hit is exact string equality against the
-    * packed word list (same 1..7-byte packing as the marker kernel).
-    * The strip-to-empty edge mirrors wsTokens' [""] result: one token,
-    * zero stopwords, zero chars. Equivalent to
-    * (size(toks), size(filter(toks, isin(stop))), aggregate(transform(
-    * toks, length), 0, +)) over toks = wsTokens(s) — the HOF spelling
-    * is interpreted CodegenFallback and re-walks the token array three
-    * times — except that char_sum accumulates in a long where the HOF's
-    * int accumulator would overflow-throw under ANSI (needs a single
-    * document of ≥ 2³¹ chars; unreachable, and wider-exact is the safe
-    * direction). Property-proven equal in TextFunctionsSpec. The
-    * stopwords are `TextFunctions.qualityStopwords`. */
+    * bytes) and a stopword hit is a token equal to a word of
+    * `TextFunctions.qualityStopwords`. The strip-to-empty edge mirrors
+    * wsTokens' [""] result: one token, zero stopwords, zero chars.
+    * Equivalent to (size(toks), size(filter(toks, isin(stop))),
+    * aggregate(transform(toks, length), 0, +)) over toks = wsTokens(s)
+    * — the HOF spelling is interpreted CodegenFallback and re-walks the
+    * token array three times — except that char_sum accumulates in a
+    * long where the HOF's int accumulator would overflow-throw under
+    * ANSI (needs a single document of ≥ 2³¹ chars; unreachable, and
+    * wider-exact is the safe direction). Property-proven equal in
+    * TextFunctionsSpec. */
   def tokenStats(s: UTF8String): ArrayData = {
-    val stopPacked = QualityStop
     val base = s.getBaseObject
     val off = s.getBaseOffset
     val n = s.numBytes
@@ -115,7 +119,7 @@ object TextKernelUtil {
     while (lo < n && isWs(Platform.getByte(base, off + lo))) lo += 1
     var hi = n
     while (hi > lo && isWs(Platform.getByte(base, off + hi - 1))) hi -= 1
-    if (lo >= hi) return new GenericArrayData(Array[Any](1L, 0L, 0L))
+    if (lo >= hi) return UnsafeArrayData.fromPrimitiveArray(Array(1L, 0L, 0L))
     var nTok = 0L
     var nStop = 0L
     var chars = 0L
@@ -123,28 +127,16 @@ object TextKernelUtil {
     while (i < hi) {
       // stripped interior: i starts on a non-ws byte
       var j = i
-      var v = 0L
-      var len = 0
       while (j < hi && !isWs(Platform.getByte(base, off + j))) {
-        val b = Platform.getByte(base, off + j)
-        if ((b & 0xC0) != 0x80) chars += 1 // UTF-8 lead byte = one code point
-        if (len < 7) v |= (b & 0xFFL) << (8 * (len + 1))
-        len += 1
+        if ((Platform.getByte(base, off + j) & 0xC0) != 0x80) chars += 1 // UTF-8 lead byte = one code point
         j += 1
       }
       nTok += 1
-      if (len <= 7) {
-        v |= len.toLong
-        var w = 0
-        while (w < stopPacked.length) {
-          if (stopPacked(w) == v) { nStop += 1; w = stopPacked.length }
-          else w += 1
-        }
-      }
+      if (indexOf(QualityStop, packAt(base, off, i, j - i)) >= 0) nStop += 1
       i = j + 1
       while (i < hi && isWs(Platform.getByte(base, off + i))) i += 1
     }
-    new GenericArrayData(Array[Any](nTok, nStop, chars))
+    UnsafeArrayData.fromPrimitiveArray(Array(nTok, nStop, chars))
   }
 
   /** Bitmap of ASCII bytes to drop at emit time (the translate-delete
@@ -238,85 +230,36 @@ object TextKernelUtil {
   }
 
   // the plan-time tables; building them validates the lists (ASCII
-  // punctuation, 1..7-byte words, disjoint marker sets)
+  // punctuation, distinct 1..7-byte words)
   private val NoDrop: Array[Boolean] = new Array[Boolean](256)
   private val PunctDrop: Array[Boolean] = punctTable(TextFunctions.asciiPunctuation)
-  private val QualityStop: Array[Long] = compile(Seq(TextFunctions.qualityStopwords))._1
-  private val (markerWords, markerSet, markerSets) = compile(TextFunctions.langMarkers)
-
-  /** java.util.regex \b neighbor test: the default (non-UNICODE_
-    * CHARACTER_CLASS) Bound node treats '_' and any Unicode
-    * letter-or-digit as a word character — deliberately WIDER than \w.
-    * ASCII neighbors of a maximal \w-run are never letters/digits (or
-    * the run would extend), so only multi-byte neighbors can reject. */
-  @inline private def isBoundWord(cp: Int): Boolean =
-    cp == '_' || Character.isLetterOrDigit(cp)
-
-  /** Decode the UTF-8 code point starting at byte i. */
-  private def codePointAt(base: AnyRef, off: Long, i: Int): Int = {
-    val b0 = Platform.getByte(base, off + i) & 0xFF
-    if (b0 < 0x80) b0
-    else if (b0 < 0xE0)
-      ((b0 & 0x1F) << 6) | (Platform.getByte(base, off + i + 1) & 0x3F)
-    else if (b0 < 0xF0)
-      ((b0 & 0x0F) << 12) | ((Platform.getByte(base, off + i + 1) & 0x3F) << 6) |
-        (Platform.getByte(base, off + i + 2) & 0x3F)
-    else
-      ((b0 & 0x07) << 18) | ((Platform.getByte(base, off + i + 1) & 0x3F) << 12) |
-        ((Platform.getByte(base, off + i + 2) & 0x3F) << 6) |
-        (Platform.getByte(base, off + i + 3) & 0x3F)
-  }
-
-  /** Decode the UTF-8 code point ending just before byte i (i > 0). */
-  private def codePointBefore(base: AnyRef, off: Long, i: Int): Int = {
-    var j = i - 1
-    while (j > 0 && (Platform.getByte(base, off + j) & 0xC0) == 0x80) j -= 1
-    codePointAt(base, off, j)
-  }
+  private val QualityStop: Array[Long] = wordTable(TextFunctions.qualityStopwords)
+  private val MarkerWords: Array[Long] = wordTable(TextFunctions.langMarkers.flatten)
+  private val MarkerSet: Array[Int] =
+    TextFunctions.langMarkers.zipWithIndex.flatMap { case (ws, l) => ws.map(_ => l) }.toArray
 
   /** Per-set counts of whole-word marker matches — exactly
-    * size(regexp_extract_all(s, "\b(w1|w2|…)\b", 0)) per set, in one
-    * scan: a \b(w)\b match is precisely a maximal \w-run equal to w
-    * whose neighboring code points are not java-\b word characters
-    * (the trailing \b rejects prefix matches, runs are disjoint so
-    * counts are independent across disjoint sets). The sets are
+    * len(regexp_extract_all(s, '\b(w1|w2|…)\b')) per set in DuckDB,
+    * in one scan. RE2's \b is ASCII, so such a match is precisely a
+    * maximal \w-run equal to w: its neighbours are non-\w bytes or a
+    * string end, multi-byte UTF-8 units included. Runs are disjoint, so
+    * counts are independent across the disjoint sets. The sets are
     * `TextFunctions.langMarkers`, counted in their order. */
   def langMarkerCounts(s: UTF8String): ArrayData = {
-    val words = markerWords
-    val setIdx = markerSet
-    val nSets = markerSets
     val base = s.getBaseObject
     val off = s.getBaseOffset
     val n = s.numBytes
-    val counts = new Array[Int](nSets)
+    val counts = new Array[Int](MarkerSet.last + 1)
     var i = 0
     while (i < n) {
       if (isWord(Platform.getByte(base, off + i))) {
         var j = i + 1
         while (j < n && isWord(Platform.getByte(base, off + j))) j += 1
-        val len = j - i
-        val boundaryOk =
-          (i == 0 || !isBoundWord(codePointBefore(base, off, i))) &&
-          (j == n || !isBoundWord(codePointAt(base, off, j)))
-        if (len <= 7 && boundaryOk) {
-          var v = len.toLong
-          var k = 0
-          while (k < len) {
-            v |= (Platform.getByte(base, off + i + k) & 0xFFL) << (8 * (k + 1))
-            k += 1
-          }
-          var w = 0
-          while (w < words.length) {
-            if (words(w) == v) { counts(setIdx(w)) += 1; w = words.length }
-            else w += 1
-          }
-        }
+        val w = indexOf(MarkerWords, packAt(base, off, i, j - i))
+        if (w >= 0) counts(MarkerSet(w)) += 1
         i = j
       } else i += 1
     }
-    val out = new Array[Any](nSets)
-    var c = 0
-    while (c < nSets) { out(c) = counts(c); c += 1 }
-    new GenericArrayData(out)
+    UnsafeArrayData.fromPrimitiveArray(counts)
   }
 }

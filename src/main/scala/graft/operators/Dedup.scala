@@ -154,17 +154,11 @@ object Dedup {
     * explode dropped them. Projected on its own, so the kernel evaluates
     * ONCE per doc (CollapseProject keeps non-cheap multiply-referenced
     * aliases) and its slots are then plain array reads. */
-  private def withMinhash(s: SparkSession, d: String): DataFrame =
+  private[graft] def withMinhash(s: SparkSession, d: String): DataFrame =
     withShingleArr(s, d)
       .filter(size(col("sh_arr")) > 0)
       .withColumn("mhs", ColumnBridge.column(MinHashSigExpr(
         ColumnBridge.expression(col("sh_arr")))))
-
-  /** Per-doc MinHash signature, one column `mh_i` per slot. */
-  def minhashSignatures(s: SparkSession, d: String): DataFrame =
-    withMinhash(s, d)
-      .select(col("doc_id") +: (0 until MinhashFuncs).map(i =>
-        element_at(col("mhs"), i + 1).as(s"mh_$i")): _*)
 
   /** LSH pairs: band the signature (8 bands × 4 rows), bucket docs by
     * (band, band-hash), pair within buckets, then verify with exact

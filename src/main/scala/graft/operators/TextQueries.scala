@@ -111,7 +111,9 @@ object TextQueries {
        |ORDER BY doc_id""".stripMargin
 
   /** Language guess via marker-word hit counts (n-gram heuristic
-    * lang-ID — deterministic argmax with a fixed tie order). */
+    * lang-ID — deterministic argmax with a fixed tie order). A hit is
+    * a whole ASCII word, as RE2's ASCII \b reads the oracle's
+    * `\b(w1|…)\b`: in "derédie", "der" and "die" both count. */
   def langGuess(s: SparkSession, d: String): DataFrame =
     // all four marker counts in ONE byte-scan pass (markerCounts).
     // Two-level projection so the kernel evaluates once.

@@ -104,7 +104,9 @@ class DedupSpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
     }
     val want = sh.groupBy("doc_id").agg(aggCols.head, aggCols.tail: _*)
       .orderBy("doc_id").collect().map(_.toSeq).toSeq
-    val got = Dedup.minhashSignatures(spark, sf)
+    val got = Dedup.withMinhash(spark, sf)
+      .select(col("doc_id") +: (0 until SignatureUtil.MinhashFuncs).map(i =>
+        element_at(col("mhs"), i + 1).as(s"mh_$i")): _*)
       .orderBy("doc_id").collect().map(_.toSeq).toSeq
     assert(got === want)
   }

@@ -12,12 +12,14 @@ import org.apache.spark.unsafe.types.UTF8String
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Edge inputs through every text, signature, IVF and decimal kernel
-  * of `graftbridge`: NULL, empty and all-whitespace text, token arrays
-  * shorter than the shingle size, NULL array elements, NULL vectors and
-  * vectors of another dimension than the codebook's, and the doubles
-  * that the decimal fast parse hands to its slow path. Every case runs
-  * twice, through generated code and interpreted, and must give the
-  * pinned value both times.
+  * of `graftbridge`: NULL, empty and all-whitespace text, each ASCII
+  * byte between two words, marker words at the string's ends, longer
+  * than 7 bytes or `_`-joined, token arrays shorter than the shingle
+  * size, NULL array elements, NULL vectors and vectors of another
+  * dimension than the codebook's, and the doubles that the decimal
+  * fast parse hands to its slow path. Every case runs twice, through
+  * generated code and interpreted, and must give the pinned value both
+  * times.
   */
 class KernelEdgeSpec extends AnyFunSuite {
   private lazy val spark = TestSpark.spark
@@ -80,6 +82,13 @@ class KernelEdgeSpec extends AnyFunSuite {
     ("markerCounts", Text, TextFunctions.markerCounts _, null, null),
     ("markerCounts", Text, TextFunctions.markerCounts _, "", Seq(0, 0, 0, 0)),
     ("markerCounts", Text, TextFunctions.markerCounts _, "the le el der und", Seq(1, 1, 1, 2)),
+    // a marker is a whole ASCII word: longer runs, `_`-joined runs and
+    // accented neighbours (RE2's \b is ASCII) as the oracle reads them
+    ("markerCounts", Text, TextFunctions.markerCounts _, "theeeeeee the_ _the", Seq(0, 0, 0, 0)),
+    ("markerCounts", Text, TextFunctions.markerCounts _, "the x and", Seq(2, 0, 0, 0)),
+    ("markerCounts", Text, TextFunctions.markerCounts _, "der\u00e9die", Seq(0, 0, 0, 2)),
+    ("markerCounts", Text, TextFunctions.markerCounts _, "\u00e9the the\u00e9 \u00e9the\u00e9 the",
+      Seq(4, 0, 0, 0)),
     ("wordShingles", Tokens, (c: Column) => TextFunctions.wordShingles(c, 3), null, Seq()),
     ("wordShingles", Tokens, (c: Column) => TextFunctions.wordShingles(c, 3), Seq(), Seq()),
     ("wordShingles", Tokens, (c: Column) => TextFunctions.wordShingles(c, 3), Seq("a", "b"), Seq()),
@@ -131,6 +140,14 @@ class KernelEdgeSpec extends AnyFunSuite {
         }
       }
       assert(wrong.isEmpty, wrong.mkString("\n"))
+    }
+
+    test(s"tokens splits \"a<byte>b\" exactly when the ASCII byte is in wsChars ($mode)") {
+      val inputs = (0 until 128).map(b => s"a${b.toChar}b")
+      val got = TestSpark.withConf(conf: _*) {
+        frame(Text, inputs).select(TextFunctions.tokens(col("x"))).collect().map(_.getSeq[String](0)).toSeq
+      }
+      assert(got === inputs.map(in => if (TextFunctions.wsChars.contains(in(1))) Seq("a", "b") else Seq(in)))
     }
 
     test(s"the exact decimal sum gives its pinned total on slow-path inputs ($mode)") {

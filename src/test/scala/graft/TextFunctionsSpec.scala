@@ -87,20 +87,13 @@ class TextFunctionsSpec extends AnyFunSuite {
     assert(out(1) === Seq("a b c", "b c d"))
   }
 
-  /** The regex spellings the byte-scan kernels replaced; kept here as
-    * the equivalence reference. */
-  private def pyStripRegex(c: org.apache.spark.sql.Column) =
-    regexp_replace(c, "^\\s+|\\s+$", "")
-  private def tokensRegex(c: org.apache.spark.sql.Column) =
-    split(pyStripRegex(c), "\\s+")
-
   private val advStrings: Seq[String] = Seq(
     "", " ", "\t\n\u000B\f\r", "a", " a ", "\ta b\u000Bc\rd\f e\n",
     "no_whitespace", "  double  spaces  inside  ", "tab\tonly",
     "unicode \u00e9t\u00e9 caf\u00e9  ", "the and of to is",
     "der die das und ist", "el los las de y le la les et des",
     "theand of-to is. (is) [the] _the_ the1 1the the_ the",
-    "\u00e9the the\u00e9 \u00e9the\u00e9 the")
+    "\u00e9the the\u00e9 \u00e9the\u00e9 the", "der\u00e9die")
 
   test("charset-trim pyStrip equals the regex spelling (corpus + adversarial)") {
     val adv = advStrings.toDF("text")

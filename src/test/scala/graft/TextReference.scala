@@ -1,15 +1,17 @@
 package graft
 
-import graft.functions.TextFunctions.{asciiPunctuation, qualityStopwords}
+import graft.functions.TextFunctions.{asciiPunctuation, nonWsClass, qualityStopwords, wsClass}
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
 
 /** The built-in spellings the byte-scan text kernels replaced, kept as
-  * the references TextFunctionsSpec compares the kernels against. */
+  * the references TextFunctionsSpec compares the kernels against. Each
+  * reads the oracle SQL's character classes: whitespace is
+  * `TextFunctions.wsClass`, and a word is ASCII, as in RE2. */
 object TextReference {
 
   /** F1: strip URLs (reference src/utils.py:6). */
-  def stripUrls(c: Column): Column = regexp_replace(c, "http\\S+|www\\S+", "")
+  def stripUrls(c: Column): Column = regexp_replace(c, s"http$nonWsClass+|www$nonWsClass+", "")
 
   /** F2: strip @mentions (reference src/utils.py:7). */
   def stripMentions(c: Column): Column = regexp_replace(c, "@\\w+", "")
@@ -31,7 +33,15 @@ object TextReference {
     aggregate(transform(toks, t => length(t)), lit(0), (acc, x) => acc + x)
 
   /** Language-marker hit count: number of whole-word matches of any of
-    * the marker words. */
+    * the marker words, where a word boundary is ASCII, as RE2's \b is
+    * (java's \b would also join a marker to an accented neighbour). */
   def markerHits(c: Column, markers: Seq[String]): Column =
-    size(regexp_extract_all(c, lit("\\b(" + markers.mkString("|") + ")\\b"), lit(0)))
+    size(regexp_extract_all(c,
+      lit("(?<![A-Za-z0-9_])(" + markers.mkString("|") + ")(?![A-Za-z0-9_])"), lit(0)))
+
+  /** Strip leading and trailing whitespace by regex. */
+  def pyStripRegex(c: Column): Column = regexp_replace(c, s"^$wsClass+|$wsClass+$$", "")
+
+  /** Split the stripped string on whitespace runs. */
+  def tokensRegex(c: Column): Column = split(pyStripRegex(c), s"$wsClass+")
 }
