@@ -88,10 +88,10 @@ object QueryUtils {
     * DECIMAL(28,10) is exact and associative, so Spark and the DuckDB
     * oracle agree bit-for-bit no matter the plan. The final round()
     * guards the decimal→double conversion ulp. */
-  def dsum(c: String): Column = round(sumDec(c).cast("double"), 4)
+  def dsum(c: String): Column = round(sumDec(c).cast(DoubleType), 4)
 
   /** Deterministic mean: exact decimal sum over exact long count. */
-  def davg(c: String): Column = round(sumDec(c).cast("double") / count(lit(1)), 6)
+  def davg(c: String): Column = round(sumDec(c).cast(DoubleType) / count(lit(1)), 6)
 
   /** The same casts, spelled for the DuckDB oracle. */
   def sqlDsum(e: String): String =

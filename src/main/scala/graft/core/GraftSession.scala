@@ -9,8 +9,8 @@ import org.apache.spark.sql.SparkSession
   * the host's core count; the specs' session runs `local[8]`. The knobs
   * are the ones that matter on a real cluster too: AQE re-plans
   * shuffles at runtime (skew join, partition coalescing), shuffle
-  * parallelism is sized to cores rather than the 200 default, and
-  * timestamps are pinned to UTC for oracle parity.
+  * parallelism is 32 rather than the 200 default (AQE coalesces it to
+  * the data), and timestamps are pinned to UTC for oracle parity.
   *
   * Every session also runs [[SinglePartitionStages]] as an AQE
   * query-stage preparation rule. Most queries are chains of small
@@ -38,12 +38,11 @@ import org.apache.spark.sql.SparkSession
 object GraftSession {
   def defaultCpus: String = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
 
-  def builder(master: String = s"local[$defaultCpus]",
-              shufflePartitions: Int = 32): SparkSession.Builder =
+  def builder(master: String = s"local[$defaultCpus]"): SparkSession.Builder =
     SparkSession.builder()
       .master(master)
       .appName("graft")
-      .config("spark.sql.shuffle.partitions", shufflePartitions.toString)
+      .config("spark.sql.shuffle.partitions", "32")
       .config("spark.sql.adaptive.enabled", "true")
       .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
       .config("spark.sql.adaptive.skewJoin.enabled", "true")

@@ -42,13 +42,13 @@ import org.apache.spark.sql.internal.SQLConf
   * relation, and neither side is shuffled. An explicit `broadcast(...)`
   * hint is a choice of strategy, not a request for partitioning, so the
   * rule overrides it as it would Spark's own size-based choice. What
-  * that saves is jobs. q05 hints four broadcasts that AQE ran
-  * concurrently, and its one task reads all of its input serially: at
-  * sf0.001 it leaned slower (0.450 -> 0.493 s, 3 of 3 pairs, inside the
-  * host's drift), and at sf0.01 it tied, 428 ms against 482 ms but
-  * faster in only 5 of 10 alternating `graft.Bench` pairs (medians of 7
-  * reps, `local[4]`, 4-vCPU host), where q06 ran in 206 ms against
-  * 250 ms, faster in 10 of 10. Two
+  * that saves is jobs. q05's four broadcasts are Spark's own size-based
+  * choice, which AQE ran concurrently, and its one task reads all of
+  * its input serially: at sf0.001 it leaned slower (0.450 -> 0.493 s,
+  * 3 of 3 pairs, inside the host's drift), and at sf0.01 it tied,
+  * 428 ms against 482 ms but faster in only 5 of 10 alternating
+  * `graft.Bench` pairs (medians of 7 reps, `local[4]`, 4-vCPU host),
+  * where q06 ran in 206 ms against 250 ms, faster in 10 of 10. Two
   * broadcast joins always stay: a null-aware anti join (`NOT IN`), which
   * `ShuffledHashJoinExec` has no mode for, and an outer, semi or anti
   * nested-loop join, as `CartesianProductExec` is inner only.

@@ -1,10 +1,12 @@
 package graft.core
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.types._
 
 /** Loaders for the synthetic test tables (TESTDATA.md). Each table's
-  * schema is declared, so a read launches no Spark job: an undeclared
-  * parquet read runs one to infer the schema from the file footer.
+  * schema is declared as a typed `StructType`, with no DDL text to
+  * parse, so a read launches no Spark job: an undeclared parquet read
+  * runs one to infer the schema from the file footer.
   * `TablesSpec` asserts that every declared schema equals the footer
   * schema at every scale, so a dropped, renamed, reordered or retyped
   * column fails loudly instead of reading as NULL. Plain parquet scans
@@ -17,32 +19,36 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * so their epoch micros match DuckDB's `epoch_us`.
   */
 object Tables {
-  private def load(spark: SparkSession, dir: String, name: String, ddl: String): DataFrame =
-    spark.read.schema(ddl).parquet(s"$dir/$name.parquet")
+  private def load(s: SparkSession, d: String, name: String, cols: (String, DataType)*): DataFrame =
+    s.read.schema(StructType(cols.map(c => StructField(c._1, c._2)))).parquet(s"$d/$name.parquet")
 
   def region(s: SparkSession, d: String): DataFrame = load(s, d, "region",
-    "r_regionkey INT, r_name STRING")
+    "r_regionkey" -> IntegerType, "r_name" -> StringType)
   def nation(s: SparkSession, d: String): DataFrame = load(s, d, "nation",
-    "n_nationkey INT, n_name STRING, n_regionkey INT")
+    "n_nationkey" -> IntegerType, "n_name" -> StringType, "n_regionkey" -> IntegerType)
   def customer(s: SparkSession, d: String): DataFrame = load(s, d, "customer",
-    "c_custkey BIGINT, c_name STRING, c_nationkey INT, c_acctbal DOUBLE, c_mktsegment STRING")
+    "c_custkey" -> LongType, "c_name" -> StringType, "c_nationkey" -> IntegerType,
+    "c_acctbal" -> DoubleType, "c_mktsegment" -> StringType)
   def supplier(s: SparkSession, d: String): DataFrame = load(s, d, "supplier",
-    "s_suppkey BIGINT, s_name STRING, s_nationkey INT, s_acctbal DOUBLE")
+    "s_suppkey" -> LongType, "s_name" -> StringType, "s_nationkey" -> IntegerType,
+    "s_acctbal" -> DoubleType)
   def part(s: SparkSession, d: String): DataFrame = load(s, d, "part",
-    "p_partkey BIGINT, p_name STRING, p_brand STRING, p_type STRING, p_size INT, " +
-      "p_retailprice DOUBLE")
+    "p_partkey" -> LongType, "p_name" -> StringType, "p_brand" -> StringType,
+    "p_type" -> StringType, "p_size" -> IntegerType, "p_retailprice" -> DoubleType)
   def orders(s: SparkSession, d: String): DataFrame = load(s, d, "orders",
-    "o_orderkey BIGINT, o_custkey BIGINT, o_orderstatus STRING, o_totalprice DOUBLE, " +
-      "o_orderdate TIMESTAMP_LTZ, o_orderpriority STRING")
+    "o_orderkey" -> LongType, "o_custkey" -> LongType, "o_orderstatus" -> StringType,
+    "o_totalprice" -> DoubleType, "o_orderdate" -> TimestampType, "o_orderpriority" -> StringType)
   def lineitem(s: SparkSession, d: String): DataFrame = load(s, d, "lineitem",
-    "l_orderkey BIGINT, l_partkey BIGINT, l_suppkey BIGINT, l_linenumber INT, " +
-      "l_quantity DOUBLE, l_extendedprice DOUBLE, l_discount DOUBLE, l_tax DOUBLE, " +
-      "l_returnflag STRING, l_linestatus STRING, l_shipdate TIMESTAMP_LTZ")
+    "l_orderkey" -> LongType, "l_partkey" -> LongType, "l_suppkey" -> LongType,
+    "l_linenumber" -> IntegerType, "l_quantity" -> DoubleType, "l_extendedprice" -> DoubleType,
+    "l_discount" -> DoubleType, "l_tax" -> DoubleType, "l_returnflag" -> StringType,
+    "l_linestatus" -> StringType, "l_shipdate" -> TimestampType)
   def events(s: SparkSession, d: String): DataFrame = load(s, d, "events",
-    "event_id BIGINT, ts TIMESTAMP_LTZ, user_id BIGINT, event_type STRING, value DOUBLE, " +
-      "props STRING")
+    "event_id" -> LongType, "ts" -> TimestampType, "user_id" -> LongType,
+    "event_type" -> StringType, "value" -> DoubleType, "props" -> StringType)
   def documents(s: SparkSession, d: String): DataFrame = load(s, d, "documents",
-    "doc_id BIGINT, text STRING, lang STRING, source STRING, n_chars BIGINT")
+    "doc_id" -> LongType, "text" -> StringType, "lang" -> StringType, "source" -> StringType,
+    "n_chars" -> LongType)
   def embeddings(s: SparkSession, d: String): DataFrame = load(s, d, "embeddings",
-    "vec_id BIGINT, embedding ARRAY<FLOAT>, label INT")
+    "vec_id" -> LongType, "embedding" -> ArrayType(FloatType), "label" -> IntegerType)
 }

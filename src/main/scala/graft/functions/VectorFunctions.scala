@@ -22,7 +22,7 @@ object VectorFunctions {
     * float accumulation is both lossy and engine-dependent. A direct
     * array cast (codegen'd, element-identical) — the transform() HOF
     * spelling is interpreted CodegenFallback. */
-  def toDoubleArray(c: Column): Column = c.cast("array<double>")
+  def toDoubleArray(c: Column): Column = c.cast(ArrayType(DoubleType))
 
   /** Codegen'd dot product (index-ordered fold, bit-deterministic). */
   def dot(a: Column, b: Column): Column =

@@ -3,6 +3,7 @@ package graft.operators
 import graft.core.{GQuery, Tables}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.LongType
 
 /** Evaluation-metric queries (SURVEY.md §2.5 M5–M8, §2.6 Q5–Q6): the
   * confusion matrix and classification report as relational
@@ -14,7 +15,7 @@ object MlQueries {
 
   private def scored(s: SparkSession, d: String): DataFrame =
     Tables.embeddings(s, d)
-      .select(col("label").cast("long").as("label"),
+      .select(col("label").cast(LongType).as("label"),
         (col("vec_id") % 10).as("pred"))
 
   /** M8/Q5: confusion-matrix counts. */

@@ -5,6 +5,7 @@ import graft.core.QueryUtils._
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{DoubleType, LongType}
 
 /** Relational operator inventory (SURVEY.md §2.6 Q1–Q8 re-expressed
   * over the synthetic star schema, plus the scan/filter/join/window/
@@ -15,8 +16,8 @@ import org.apache.spark.sql.functions._
   *    aggregation; no sort-based fallback is required by these shapes;
   *  - `ORDER BY ... LIMIT k` plans as TakeOrderedAndProject (per-
   *    partition top-k + driver merge), never a total sort;
-  *  - dimension joins (region/nation/part/supplier) are broadcast —
-  *    dimensions stay small at any fact-table scale factor;
+  *  - dimension joins carry no hint: Spark broadcasts a dimension by
+  *    size (`autoBroadcastJoinThreshold`) and shuffles one past it;
   *  - fact-fact joins (orders⋈lineitem) shuffle on the join key and
   *    AQE handles skew/coalescing at runtime.
   */
@@ -98,7 +99,7 @@ object Relational {
       |ORDER BY l_orderkey, l_linenumber""".stripMargin
 
   /** Flagship: star join region⋈nation⋈customer⋈orders⋈lineitem →
-    * revenue per nation (TPC-H Q5 shape). Dimensions broadcast.
+    * revenue per nation (TPC-H Q5 shape). Dimensions broadcast by Spark's size-based choice.
     *
     * Lineitem is pre-aggregated per order key BEFORE the fact-fact
     * join (guide §2.3 "aggregate before you shuffle"): the order-key
@@ -121,12 +122,12 @@ object Relational {
     val n = Tables.nation(s, d)
     val r = Tables.region(s, d)
     liPerOrder.join(o, col("l_orderkey") === col("o_orderkey"))
-      .join(broadcast(c), col("o_custkey") === col("c_custkey"))
-      .join(broadcast(n), col("c_nationkey") === col("n_nationkey"))
-      .join(broadcast(r), col("n_regionkey") === col("r_regionkey"))
+      .join(c, col("o_custkey") === col("c_custkey"))
+      .join(n, col("c_nationkey") === col("n_nationkey"))
+      .join(r, col("n_regionkey") === col("r_regionkey"))
       .groupBy("r_name", "n_name")
       .agg(
-        round(sumOfParts(col("rev")).cast("double"), 4).as("revenue"),
+        round(sumOfParts(col("rev")).cast(DoubleType), 4).as("revenue"),
         count(lit(1)).as("n_orders"))
       .orderBy(col("revenue").desc, col("n_name"))
   }
@@ -145,10 +146,10 @@ object Relational {
        |GROUP BY r_name, n_name
        |ORDER BY revenue DESC, n_name""".stripMargin
 
-  /** Broadcast dimension join: lineitem⋈part grouped by brand. */
+  /** Dimension join: lineitem⋈part grouped by brand (broadcast by size). */
   def partsByBrand(s: SparkSession, d: String): DataFrame =
     Tables.lineitem(s, d)
-      .join(broadcast(Tables.part(s, d)), col("l_partkey") === col("p_partkey"))
+      .join(Tables.part(s, d), col("l_partkey") === col("p_partkey"))
       .transform(withExactParse("l_quantity", "l_extendedprice"))
       .groupBy("p_brand")
       .agg(
@@ -197,7 +198,7 @@ object Relational {
     val w = Window.partitionBy("o_custkey")
       .orderBy(col("o_totalprice").desc, col("o_orderkey"))
     Tables.orders(s, d)
-      .withColumn("rn", row_number().over(w).cast("long"))
+      .withColumn("rn", row_number().over(w).cast(LongType))
       .filter(col("rn") <= 3)
       .select("o_custkey", "rn", "o_orderkey", "o_totalprice")
       .orderBy("o_custkey", "rn")
@@ -228,7 +229,7 @@ object Relational {
       .agg(count(lit(1)).as("pn"), sumDecParts("o_totalprice").as("ps"))
       .rollup("o_orderstatus", "o_orderpriority")
       .agg(sum(col("pn")).as("n"),
-        round(sumOfParts(col("ps")).cast("double"), 4).as("sum_price"))
+        round(sumOfParts(col("ps")).cast(DoubleType), 4).as("sum_price"))
       .orderBy(asc_nulls_first("o_orderstatus"), asc_nulls_first("o_orderpriority"))
 
   val rollupOrdersSql: String =
@@ -242,13 +243,13 @@ object Relational {
     * row, so the flat spelling pays the decimal cast 4× per row. */
   def cubeEvents(s: SparkSession, d: String): DataFrame =
     Tables.events(s, d)
-      .withColumn("dow", dayofweek(col("ts")).cast("long"))
+      .withColumn("dow", dayofweek(col("ts")).cast(LongType))
       .transform(withExactParse("value"))
       .groupBy("event_type", "dow")
       .agg(count(lit(1)).as("pn"), sumDecParts("value").as("ps"))
       .cube("event_type", "dow")
       .agg(sum(col("pn")).as("n"),
-        round(sumOfParts(col("ps")).cast("double"), 4).as("sum_value"))
+        round(sumOfParts(col("ps")).cast(DoubleType), 4).as("sum_value"))
       .orderBy(asc_nulls_first("event_type"), asc_nulls_first("dow"))
 
   val cubeEventsSql: String =
@@ -321,7 +322,7 @@ object Relational {
     Tables.orders(s, d)
       .transform(withExactParse("o_totalprice"))
       .withColumn("cust_avg",
-        round(sumDec("o_totalprice").over(w).cast("double") / count(lit(1)).over(w), 6))
+        round(sumDec("o_totalprice").over(w).cast(DoubleType) / count(lit(1)).over(w), 6))
       .filter(col("o_totalprice") > col("cust_avg"))
       .select("o_orderkey", "o_custkey", "o_totalprice", "cust_avg")
       .orderBy("o_orderkey")
@@ -368,7 +369,7 @@ object Relational {
     * parsing). */
   def propsSum(s: SparkSession, d: String): DataFrame =
     Tables.events(s, d)
-      .withColumn("k", get_json_object(col("props"), "$.k").cast("long"))
+      .withColumn("k", get_json_object(col("props"), "$.k").cast(LongType))
       .groupBy("event_type")
       .agg(sum(col("k")).as("sum_k"), count(col("k")).as("n_k"))
       .orderBy("event_type")

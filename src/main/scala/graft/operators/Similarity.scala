@@ -7,6 +7,7 @@ import org.apache.spark.sql.catalyst.expressions.aggregate.CollectTopK
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graftbridge.ColumnBridge
+import org.apache.spark.sql.types.LongType
 
 /** Similarity search over the `embeddings` table (array<float>, 64-d).
   *
@@ -48,7 +49,7 @@ object Similarity {
     * (q_id, rank, c_id, sim) ordered by query and rank. */
   private def topK(scored: DataFrame): DataFrame = {
     val w = Window.partitionBy("q_id").orderBy(col("sim").desc, col("c_id"))
-    scored.select(col("q_id"), row_number().over(w).cast("long").as("rank"), col("c_id"),
+    scored.select(col("q_id"), row_number().over(w).cast(LongType).as("rank"), col("c_id"),
         col("sim"))
       .filter(col("rank") <= K)
       .orderBy("q_id", "rank")
@@ -61,6 +62,7 @@ object Similarity {
       .select(col("vec_id").as("q_id"), col("v").as("qv"), col("nrm").as("qn"))
     val cands = emb.filter(col("vec_id") >= NQueries)
       .select(col("vec_id").as("c_id"), col("v").as("cv"), col("nrm").as("cn"))
+    // hinted: past the broadcast threshold, this cross join would plan as a cartesian product
     topK(cands.join(broadcast(queries)).select(col("q_id"), col("c_id"),
       round(dot(col("qv"), col("cv")) / (col("qn") * col("cn")), 4).as("sim")))
   }
@@ -80,14 +82,11 @@ object Similarity {
     * slice, blocked by label to keep candidate generation
     * sub-quadratic. */
   def embeddingNearDup(s: SparkSession, d: String): DataFrame = {
-    // hash-partitioned on the blocking key so both self-join sides
-    // read ONE reused exchange: without it the planner broadcasts one
-    // side and re-runs the scan + array-cast + norm pipeline for it
-    // (the embeddings scan decodes the full vector column — measured
-    // 0.23 s/scan at sf0.1). Also the scale shape: the blocked table
-    // is corpus-sized, label skew is AQE's skew-join's job.
+    // no partitioning of our own: over one file both sides run in the
+    // join's one task (SinglePartitionStages), a small side is broadcast,
+    // and where Spark shuffles both sides on `label`, ReuseExchange gives
+    // them one exchange, so the scan + cast + norm pipeline runs once
     val emb = withNorm(s, d).filter(col("vec_id") < MaxVecId)
-      .repartition(col("label"))
     // the similarity threshold lives IN the join condition: evaluated
     // on the JoinedRow view, so rejected candidate pairs never copy
     // their two 64-dim vectors into an output row (the post-join
@@ -151,15 +150,6 @@ object Similarity {
   /** `ivfIndex` on the `embeddings` table of `d`, for the sample specs. */
   private[graft] def ivfIndexForSpec(s: SparkSession, d: String): DataFrame =
     ivfIndex(withNorm(s, d))
-
-  /** (vec_id, bucket): primary (rank-1) trained-codebook assignment —
-    * exposed for the bucket-balance spec; not a declared query. */
-  private[graft] def ivfBucketsForSpec(s: SparkSession, d: String): DataFrame = {
-    val emb = withNorm(s, d)
-    emb.crossJoin(ivfIndex(emb).select("code"))
-      .select(col("vec_id").as("c_id"),
-        element_at(ivfTopBuckets(col("v"), col("code"), 1), 1).as("bucket"))
-  }
 
   /** IVF-style approximate NN under the trained codebook.
     *

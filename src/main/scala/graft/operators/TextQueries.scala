@@ -4,6 +4,7 @@ import graft.core.{GQuery, Tables}
 import graft.functions.TextFunctions._
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.LongType
 
 /** Text-analysis inventory over the `documents` table: the reference's
   * clean_text/decode kernels (SURVEY.md §2.3 F1–F7) plus the
@@ -58,7 +59,7 @@ object TextQueries {
     Tables.documents(s, d)
       .select(col("doc_id"), col("n_chars"),
         element_at(tokenStats3(col("text")), 1).as("n_tokens"),
-        length(col("text")).cast("long").as("len_chars"))
+        length(col("text")).cast(LongType).as("len_chars"))
       .withColumn("chars_match", col("n_chars") === col("len_chars"))
       .orderBy("doc_id")
 
@@ -120,10 +121,10 @@ object TextQueries {
     Tables.documents(s, d)
       .select(col("doc_id"), col("lang"), markerCounts(col("text")).as("mc"))
       .select(col("doc_id"), col("lang"),
-        element_at(col("mc"), 1).cast("long").as("en_n"),
-        element_at(col("mc"), 2).cast("long").as("fr_n"),
-        element_at(col("mc"), 3).cast("long").as("es_n"),
-        element_at(col("mc"), 4).cast("long").as("de_n"))
+        element_at(col("mc"), 1).cast(LongType).as("en_n"),
+        element_at(col("mc"), 2).cast(LongType).as("fr_n"),
+        element_at(col("mc"), 3).cast(LongType).as("es_n"),
+        element_at(col("mc"), 4).cast(LongType).as("de_n"))
       .withColumn("guess",
         when(col("en_n") >= greatest(col("fr_n"), col("es_n"), col("de_n")), "en")
           .when(col("fr_n") >= greatest(col("es_n"), col("de_n")), "fr")
@@ -171,7 +172,7 @@ object TextQueries {
     Tables.documents(s, d)
       .withColumn("payload", encode(col("text"), "UTF-8"))
       .select(col("doc_id"),
-        length(col("payload")).cast("long").as("n_bytes"),
+        length(col("payload")).cast(LongType).as("n_bytes"),
         md5(col("payload")).as("payload_md5"))
       .orderBy("doc_id")
 

@@ -5,6 +5,7 @@ import graft.core.QueryUtils._
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{DoubleType, LongType}
 
 /** Event-time window operators over `events` — the batch-expressible
   * faces of the streaming inventory (SURVEY.md §2.7), run as batch
@@ -109,11 +110,11 @@ object WindowQueries {
     Tables.events(s, d)
       .filter(col("user_id") < MaxUserId)
       .withColumn("ts_us", unix_micros(col("ts")))
-      .withColumn("idx", row_number().over(byUser).cast("long"))
+      .withColumn("idx", row_number().over(byUser).cast(LongType))
       .transform(withExactParse("value"))
       .withColumn("cum_value",
         round(sumDec("value").over(byUser.rowsBetween(Window.unboundedPreceding, 0))
-          .cast("double"), 4))
+          .cast(DoubleType), 4))
       .select("user_id", "idx", "event_id", "ts_us", "cum_value")
       .orderBy("user_id", "idx")
   }

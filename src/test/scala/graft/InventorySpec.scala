@@ -58,7 +58,7 @@ class InventorySpec extends AnyFunSuite {
     "q33_minhash_lsh_pairs" -> (28L, 1, 1, 1),
     "q34_simhash_pairs" -> (7320L, 1, 1, 1),
     "q35_knn_bruteforce" -> (50L, 1, 1, 1),
-    "q36_embedding_neardup" -> (14L, 2, 2, 2),
+    "q36_embedding_neardup" -> (14L, 1, 1, 1),
     "q37_ann_ivf" -> (50L, 1, 1, 1),
     "q40_tumbling_hourly" -> (868L, 1, 1, 1),
     "q41_sliding_two_hour" -> (664L, 1, 1, 1),
@@ -188,9 +188,9 @@ class InventorySpec extends AnyFunSuite {
 
   test("every query launches its pinned number of execution jobs at sf0.1") {
     // above 1 MB, a stage fits the gate only when it runs as one task,
-    // as over one file under the open cost; lineitem's scans, the
-    // broadcasts joined to them (q05, q06) and q36's repartition keep
-    // their jobs, and no other broadcast stays
+    // as over one file under the open cost; lineitem's scans and the
+    // broadcasts joined to them (q05, q06) keep their jobs, and no other
+    // broadcast stays
     assert(executionJobs(TestSpark.sf01Dir, "sf0.1") ===
       pinned.map { case (name, (_, _, _, n)) => name -> n })
   }

@@ -3,6 +3,7 @@ package graft
 import graft.core.Tables
 import graft.functions.VectorFunctions
 import graft.operators.Similarity
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
@@ -41,8 +42,17 @@ class SimilaritySpec extends AnyFunSuite {
     }
   }
 
+  /** (c_id, bucket): each vector's nearest centroid under q37's trained
+    * codebook. */
+  private def ivfBuckets(dir: String): DataFrame =
+    Tables.embeddings(spark, dir)
+      .select(col("vec_id").as("c_id"), VectorFunctions.toDoubleArray(col("embedding")).as("v"))
+      .crossJoin(Similarity.ivfIndexForSpec(spark, dir).select("code"))
+      .select(col("c_id"),
+        element_at(VectorFunctions.ivfTopBuckets(col("v"), col("code"), 1), 1).as("bucket"))
+
   test("IVF ANN recall@5 >= 0.8 against the brute-force baseline") {
-    def topSets(df: org.apache.spark.sql.DataFrame): Map[Long, Set[Long]] =
+    def topSets(df: DataFrame): Map[Long, Set[Long]] =
       df.collect().map(r => (r.getLong(0), r.getLong(2)))
         .groupBy(_._1).map { case (q, rs) => q -> rs.map(_._2).toSet }
     val brute = topSets(Similarity.knnBruteForce(spark, sf))
@@ -78,11 +88,24 @@ class SimilaritySpec extends AnyFunSuite {
   }
 
   test("blocked near-dup self-join computes the embedding pipeline once (reused exchange)") {
-    val df = Similarity.embeddingNearDup(spark, sf)
-    df.collect() // materialize so the adaptive plan is final
-    val plan = df.queryExecution.executedPlan.toString
-    assert(plan.contains("ReusedQueryStage") || plan.contains("ReusedExchange"),
-      "label self-join must share one exchange: " + plan.take(4000))
+    def finalPlan(df: DataFrame): String =
+      df.queryExecution.executedPlan.asInstanceOf[AdaptiveSparkPlanExec].executedPlan.toString
+    val oneFile = Similarity.embeddingNearDup(spark, sf)
+    val rows = oneFile.collect().toSeq
+    // one file: the join runs in one task, with nothing to shuffle
+    assert(!finalPlan(oneFile).contains("Exchange"), finalPlan(oneFile))
+    // two files with broadcasts off: Spark shuffles both sides on label,
+    // and the two sides read one exchange
+    TestSpark.withTempDir { dir =>
+      Tables.embeddings(spark, sf).repartition(2).write.parquet(s"$dir/embeddings.parquet")
+      TestSpark.withConf("spark.sql.autoBroadcastJoinThreshold" -> "-1") {
+        val twoFiles = Similarity.embeddingNearDup(spark, dir)
+        assert(twoFiles.collect().toSeq === rows)
+        val plan = finalPlan(twoFiles)
+        assert(plan.contains("ReusedQueryStage") || plan.contains("ReusedExchange"),
+          "label self-join must share one exchange: " + plan.take(4000))
+      }
+    }
   }
 
   test("q37's in-plan codebook sample is orderBy(h, vec_id).limit(512) at sf0.001, sf0.01 and sf0.1") {
@@ -117,7 +140,7 @@ class SimilaritySpec extends AnyFunSuite {
   }
 
   test("trained IVF codebook yields non-degenerate buckets (no bucket > 40% of vectors)") {
-    val buckets = Similarity.ivfBucketsForSpec(spark, sf)
+    val buckets = ivfBuckets(sf)
     val counts = buckets.groupBy("bucket").count().collect()
       .map(r => (r.getLong(0), r.getLong(1))).toMap
     val total = counts.values.sum.toDouble
@@ -128,7 +151,7 @@ class SimilaritySpec extends AnyFunSuite {
   }
 
   test("trained IVF codebook is deterministic across invocations") {
-    def snap() = Similarity.ivfBucketsForSpec(spark, sf)
+    def snap() = ivfBuckets(sf)
       .orderBy("c_id").collect().map(r => (r.getLong(0), r.getLong(1))).toSeq
     assert(snap() === snap())
   }

@@ -15,7 +15,7 @@ object TestSpark {
   val sf01Dir = s"${new java.io.File(sfDir).getParent}/sf0.1"
 
   lazy val spark: SparkSession = {
-    val s = GraftSession.builder("local[8]", shufflePartitions = 8).getOrCreate()
+    val s = GraftSession.builder("local[8]").getOrCreate()
     s.sparkContext.setLogLevel("ERROR")
     s
   }
