@@ -18,6 +18,7 @@ final case class GQuery(
 
 object QueryUtils {
   import org.apache.spark.sql.catalyst.expressions.{EqualTo, Expression, If, Literal}
+  import org.apache.spark.sql.catalyst.expressions.aggregate.CollectTopK
   import org.apache.spark.sql.graftbridge._
   import org.apache.spark.sql.types.{DoubleType, LongType}
 
@@ -92,6 +93,12 @@ object QueryUtils {
 
   /** Deterministic mean: exact decimal sum over exact long count. */
   def davg(c: String): Column = round(sumDec(c).cast(DoubleType) / count(lit(1)), 6)
+
+  /** The `n` smallest non-NULL values of `c`, ascending: Catalyst's bounded
+    * CollectTopK, whose partial buffers keep at most `n` each. */
+  def smallest(c: Column, n: Int): Column =
+    ColumnBridge.column(
+      new CollectTopK(ColumnBridge.expression(c), n, reverse = true).toAggregateExpression())
 
   /** The same casts, spelled for the DuckDB oracle. */
   def sqlDsum(e: String): String =

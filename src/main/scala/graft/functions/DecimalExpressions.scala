@@ -52,12 +52,15 @@ object DecimalFast {
     * x to the nearest half-integer exceeds that bound, every value
     * within it — V included, whichever JDK's shortest-repr produced
     * it — rounds to the same integer, and U follows from pure 128-bit
-    * long arithmetic (m·5¹⁰ < 2⁷⁷). Values within the band (~1e-9 of
-    * uniformly distributed inputs), |d| < 2⁻²¹ (s > 63), |d| ≥ 10⁸
-    * and non-finites fall through to the string tier, which is the
-    * reference definition itself. Equality is property-proven against
-    * the Cast in DecimalFastSpec, including adversarial half-boundary
-    * neighborhoods. */
+    * long arithmetic (m·5¹⁰ < 2⁷⁷). Values within the band, |d| < 2⁻²¹
+    * (s > 63), |d| ≥ 10⁸ and non-finites fall through to the string
+    * tier, which is the reference definition itself. A value of ≤ 10
+    * fraction digits has an integer V·10¹⁰, so x sits 2^(s−1) rem units
+    * (give or take the bound) from a half-integer: past the band always
+    * below 2¹⁸, never from 2¹⁹, and in between only when d is close
+    * enough to V (2 in 3 of `o_totalprice`'s values there). Equality is
+    * property-proven against the Cast in DecimalFastSpec, including
+    * adversarial half-boundary neighborhoods. */
   def unscaled18OrSentinel(d: Double): Long = {
     if (d == 0.0) return 0L // covers -0.0: toString "-0.0" parses to -0 = 0
     val ad = java.lang.Math.abs(d)

@@ -5,19 +5,12 @@ import org.apache.spark.unsafe.types.UTF8String
 
 /** Word n-gram shingles over a token array, as one tight JVM loop,
   * called from generated code through a StaticInvoke
-  * (`TextFunctions.wordShingles`).
-  *
-  * The higher-order-function spelling
-  * (`when(size(t) >= n, transform(sequence(1, size(t)-n+1),
-  * i => concat_ws(" ", element_at×n))).otherwise(array())`) is
-  * CodegenFallback: every shingle is an interpreted sub-tree walk
-  * (sequence element → lambda bind → n element_at calls → concat_ws),
-  * measured at ~2.7 s per evaluation over just 500 docs — and the
-  * dedup queries evaluate it up to four times per plan. This kernel
-  * produces the identical array (same strings, same order, concat_ws
-  * null-skipping included; size < n and NULL input both yield the
-  * empty array exactly like the when/otherwise wrapper) in one call
-  * per row.
+  * (`TextFunctions.wordShingles`). It gives the array of the
+  * higher-order-function spelling (`when(size(t) >= n,
+  * transform(sequence(…), i => concat_ws(" ", element_at×n)))`: same
+  * strings and order, concat_ws null-skipping included, the empty array
+  * for size < n and NULL input), whose interpreted lambda walk per
+  * shingle `KernelLedger` times about 40× slower.
   */
 object ShingleUtil {
   private val Sep = UTF8String.fromString(" ")

@@ -3,7 +3,7 @@ package graft.functions
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.catalyst.expressions.Literal
-import org.apache.spark.sql.graftbridge.{ColumnBridge, ShingleUtil, TextKernelUtil}
+import org.apache.spark.sql.graftbridge.{ColumnBridge, MinHashSigExpr, ShingleUtil, SignatureUtil, SimHash64Expr, TextKernelUtil}
 import org.apache.spark.sql.types.{ArrayType, DataType, IntegerType, LongType, StringType}
 
 /** Column-level text kernels: Spark-first re-expressions of the
@@ -151,4 +151,16 @@ object TextFunctions {
       ArrayType(StringType, containsNull = false), Seq(ColumnBridge.expression(toks), Literal(n)),
       Seq(ArrayType(StringType), IntegerType), propagateNull = false))
   }
+
+  val minhashSlots: Int = SignatureUtil.MinhashFuncs // slots of a `minhashSignature`
+
+  /** The MinHash signature of a non-empty shingle array, one loop per
+    * row (SignatureUtil.minhash, seed-42 murmur3 shingle hashes). */
+  def minhashSignature(shingles: Column): Column =
+    ColumnBridge.column(MinHashSigExpr(ColumnBridge.expression(shingles)))
+
+  /** The 64-bit SimHash of a token array, one loop per row
+    * (SignatureUtil.simhash, seed-42 xxhash64 token hashes). */
+  def simhashSignature(toks: Column): Column =
+    ColumnBridge.column(SimHash64Expr(ColumnBridge.expression(toks)))
 }

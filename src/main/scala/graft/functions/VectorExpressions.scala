@@ -7,22 +7,21 @@ import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, 
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.types.{AbstractDataType, ArrayType, DataType, DoubleType, IntegerType, LongType}
+import org.apache.spark.unsafe.bitset.BitSetMethods
 
-/** Codegen'd dot product over two array<double> columns.
-  *
-  * The higher-order-function spelling (`aggregate(zip_with(a, b, _*_),
-  * 0.0, _+_)`) is CodegenFallback — every element hop is an interpreted
-  * Invoke, which is fatal when the expression runs once per candidate
-  * PAIR (q35/q36 similarity joins). This expression emits a tight
-  * primitive loop inside WholeStageCodegen instead.
+/** Codegen'd dot product over two array<double> columns, run once per
+  * candidate PAIR in q35–q37: the higher-order-function spelling
+  * (`aggregate(zip_with(a, b, _*_), 0.0, _+_)`) is CodegenFallback, an
+  * interpreted Invoke per element, and `KernelLedger` times it ~5× slower.
   *
   * The fold runs in index order with a plain `+=` on equal-length
   * inputs, exactly the arithmetic sequence of the HOF spelling, so
   * results match it bit-for-bit there (oracle parity keeps holding at
-  * round(…, 4)). On UNEQUAL lengths the HOF spelling null-pads the
-  * short side (`zip_with` → null product → null sum), so this
-  * expression returns null too — a silent min-length truncation would
-  * turn a malformed embedding into a plausible number.
+  * round(…, 4)). On UNEQUAL lengths (`zip_with` null-pads the short
+  * side) or a NULL element, the HOF spelling's product and sum are null,
+  * and so is this expression's — a silent min-length truncation or a
+  * NULL read as 0.0 would turn a malformed embedding into a plausible
+  * number.
   */
 case class DotProductExpr(left: Expression, right: Expression)
     extends BinaryExpression with ImplicitCastInputTypes {
@@ -40,38 +39,39 @@ case class DotProductExpr(left: Expression, right: Expression)
     val x = a.asInstanceOf[ArrayData]
     val y = b.asInstanceOf[ArrayData]
     val n = x.numElements()
-    if (n != y.numElements()) {
-      null
-    } else {
-      var s = 0.0
-      var i = 0
-      while (i < n) { s += x.getDouble(i) * y.getDouble(i); i += 1 }
-      s
-    }
+    if (n != y.numElements() || NullElements.any(x) || NullElements.any(y)) return null
+    var s = 0.0
+    var i = 0
+    while (i < n) { s += x.getDouble(i) * y.getDouble(i); i += 1 }
+    s
   }
 
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
     nullSafeCodeGen(ctx, ev, (a, b) => {
-      val n = ctx.freshName("n")
-      val i = ctx.freshName("i")
-      val s = ctx.freshName("s")
+      val Seq(n, i, s) = Seq("n", "i", "s").map(ctx.freshName)
+      val any = NullElements.getClass.getName.stripSuffix("$") + ".any"
       s"""
          |int $n = $a.numElements();
-         |if ($n != $b.numElements()) {
-         |  ${ev.isNull} = true;
-         |} else {
-         |  double $s = 0.0;
-         |  for (int $i = 0; $i < $n; $i++) {
-         |    $s += $a.getDouble($i) * $b.getDouble($i);
-         |  }
-         |  ${ev.value} = $s;
-         |}
+         |${ev.isNull} = $n != $b.numElements() || $any($a) || $any($b);
+         |double $s = 0.0;
+         |for (int $i = 0; !${ev.isNull} && $i < $n; $i++) $s += $a.getDouble($i) * $b.getDouble($i);
+         |${ev.value} = $s;
        """.stripMargin
     })
 
   override protected def withNewChildrenInternal(
       newLeft: Expression, newRight: Expression): Expression =
     copy(left = newLeft, right = newRight)
+}
+
+/** Whether an array holds a NULL element: one read per 64 elements of an
+  * UnsafeArrayData, whose NULL bits follow its 8-byte element count. */
+object NullElements {
+  def any(x: ArrayData): Boolean = x match {
+    case u: UnsafeArrayData =>
+      BitSetMethods.anySet(u.getBaseObject, u.getBaseOffset + 8, (u.numElements + 63) / 64)
+    case _ => (0 until x.numElements).exists(x.isNullAt)
+  }
 }
 
 /** IVF codebook training and assignment, called from generated code

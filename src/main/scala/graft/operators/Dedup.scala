@@ -4,7 +4,6 @@ import graft.core.{GQuery, Tables}
 import graft.functions.TextFunctions._
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.graftbridge.{ColumnBridge, MinHashSigExpr, SignatureUtil, SimHash64Expr}
 
 /** Deduplication operators over `documents` — the exact and near-dup
   * families a pretraining-data pipeline runs at corpus scale.
@@ -140,13 +139,12 @@ object Dedup {
   // engine-specific; the driver records a rows-only check and
   // DedupSpec validates the pair set against exact Jaccard). ----
 
-  private val MinhashFuncs = SignatureUtil.MinhashFuncs
   private val Bands = 8
-  private val RowsPerBand = MinhashFuncs / Bands
+  private val RowsPerBand = minhashSlots / Bands
 
   /** The slice's documents with at least one shingle, as (doc_id,
     * sh_arr, mhs): `mhs` is the 32-slot MinHash signature, computed by
-    * the per-row kernel (MinHashSigExpr → SignatureUtil.minhash: same
+    * the per-row kernel (`minhashSignature`: same
     * murmur3 shingle hashes folded into [0, p), same affine
     * (a_i·h + b_i) mod p mins — DedupSpec proves equality with the
     * aggregate spelling). A pure scan → project, with no explode and no
@@ -157,8 +155,7 @@ object Dedup {
   private[graft] def withMinhash(s: SparkSession, d: String): DataFrame =
     withShingleArr(s, d)
       .filter(size(col("sh_arr")) > 0)
-      .withColumn("mhs", ColumnBridge.column(MinHashSigExpr(
-        ColumnBridge.expression(col("sh_arr")))))
+      .withColumn("mhs", minhashSignature(col("sh_arr")))
 
   /** LSH pairs: band the signature (8 bands × 4 rows), bucket docs by
     * (band, band-hash), pair within buckets, then verify with exact
@@ -183,7 +180,7 @@ object Dedup {
 
   /** SimHash: 64-bit signature — per-token xxhash64-derived bits,
     * summed ±1 per bit position, sign → bit — computed by the per-row
-    * kernel (SimHash64Expr → SignatureUtil.simhash; DedupSpec proves
+    * kernel (`simhashSignature`; DedupSpec proves
     * equality with the 64-conditional-sum aggregate spelling). Pure
     * scan → project: no explode, no doc-keyed exchange at any scale.
     * Docs with no non-empty token (NULL or whitespace-only text) are
@@ -194,8 +191,7 @@ object Dedup {
       .select(col("doc_id"), array_distinct(tokens(col("text"))).as("toks"))
       .filter(size(array_remove(col("toks"), "")) > 0)
       .select(col("doc_id"),
-        ColumnBridge.column(SimHash64Expr(
-          ColumnBridge.expression(col("toks")))).as("simhash"))
+        simhashSignature(col("toks")).as("simhash"))
 
   private val SimhashBands = 8 // 8 bands × 8 bits
 

@@ -1,26 +1,24 @@
 package graft.operators
 
 import graft.core.{GQuery, Tables}
+import graft.core.QueryUtils.smallest
 import graft.functions.VectorFunctions._
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
-import org.apache.spark.sql.catalyst.expressions.aggregate.CollectTopK
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.graftbridge.ColumnBridge
 import org.apache.spark.sql.types.LongType
 
 /** Similarity search over the `embeddings` table (array<float>, 64-d).
   *
   * Scale posture:
-  *  - brute-force top-k broadcasts the (small) query set and streams
-  *    the candidate corpus once — linear in corpus size, the correct
-  *    baseline at any scale when the query set is small;
+  *  - brute-force top-k streams the candidate corpus once past one
+  *    probe row holding the (small) query set — linear in corpus size,
+  *    the correct baseline at any scale when the query set is small;
   *  - the IVF variant is the sub-linear path: one pass to assign each
   *    vector to its nearest centroids (a codebook trained in the
   *    query's own task), candidates are then restricted to the probed
-  *    buckets — at 100 TB the bucket
-  *    assignment becomes the partitioning key so probes touch only
-  *    matching partitions;
+  *    buckets — at 100 TB the bucket assignment becomes the
+  *    partitioning key so probes touch only matching partitions;
   *  - near-dup pairs are blocked by `label` (any cheap blocking key)
   *    to avoid the quadratic cross join.
   *
@@ -45,26 +43,34 @@ object Similarity {
     Tables.embeddings(s, d).select(col("vec_id"), col("label"), v.as("v"), norm2(v).as("nrm"))
   }
 
-  /** The K best candidates of each query by (sim desc, c_id), as
-    * (q_id, rank, c_id, sim) ordered by query and rank. */
-  private def topK(scored: DataFrame): DataFrame = {
+  /** A query vector of `withNorm` as a probe struct (q_id, qv, qn). */
+  private val probe = struct(col("vec_id").as("q_id"), col("v").as("qv"), col("nrm").as("qn"))
+
+  /** `emb`'s candidates (c_id, cv, cn), each with the one-row `index`'s `keep`. */
+  private def candidates(emb: DataFrame, index: DataFrame, keep: Column*): DataFrame =
+    emb.filter(col("vec_id") >= NQueries).crossJoin(index)
+      .select(Seq(col("vec_id").as("c_id"), col("v").as("cv"), col("nrm").as("cn")) ++ keep: _*)
+
+  /** The K best of pair rows (q_id, qv, qn, c_id, cv, cn) per query by
+    * cosine (sim desc, c_id), as (q_id, rank, c_id, sim) by query, rank. */
+  private def topK(pairs: DataFrame): DataFrame = {
     val w = Window.partitionBy("q_id").orderBy(col("sim").desc, col("c_id"))
-    scored.select(col("q_id"), row_number().over(w).cast(LongType).as("rank"), col("c_id"),
+    pairs.select(col("q_id"), col("c_id"),
+        round(dot(col("qv"), col("cv")) / (col("qn") * col("cn")), 4).as("sim"))
+      .select(col("q_id"), row_number().over(w).cast(LongType).as("rank"), col("c_id"),
         col("sim"))
       .filter(col("rank") <= K)
       .orderBy("q_id", "rank")
   }
 
-  /** Brute-force exact top-k cosine neighbors for a fixed query set. */
+  /** Brute-force exact top-k cosine neighbors for a fixed query set.
+    * The probe row, NQueries vectors (about 5 KB) at any corpus size, is
+    * broadcast or pairs in the candidates' one task
+    * (`SinglePartitionStages`), never a cartesian product across tasks. */
   def knnBruteForce(s: SparkSession, d: String): DataFrame = {
     val emb = withNorm(s, d)
-    val queries = emb.filter(col("vec_id") < NQueries)
-      .select(col("vec_id").as("q_id"), col("v").as("qv"), col("nrm").as("qn"))
-    val cands = emb.filter(col("vec_id") >= NQueries)
-      .select(col("vec_id").as("c_id"), col("v").as("cv"), col("nrm").as("cn"))
-    // hinted: past the broadcast threshold, this cross join would plan as a cartesian product
-    topK(cands.join(broadcast(queries)).select(col("q_id"), col("c_id"),
-      round(dot(col("qv"), col("cv")) / (col("qn") * col("cn")), 4).as("sim")))
+    val probes = emb.filter(col("vec_id") < NQueries).agg(collect_list(probe).as("probes"))
+    topK(candidates(emb, probes, inline(col("probes"))))
   }
 
   val knnBruteForceSql: String =
@@ -117,39 +123,25 @@ object Similarity {
   private val IndexReplication = 2 // corpus vectors indexed in their top-2 buckets
   private val ProbeBuckets = 3     // queries probe their 3 nearest buckets
 
-  /** The aggregate of the `n` smallest non-NULL values of `c`, in
-    * ascending order: Catalyst's bounded CollectTopK, whose partial
-    * buffers each keep at most `n` and merge in any order. */
-  private def smallest(c: Column, n: Int): Column =
-    ColumnBridge.column(
-      new CollectTopK(ColumnBridge.expression(c), n, reverse = true).toAggregateExpression())
-
-  /** The one-row IVF index over `emb` (vec_id, v, nrm), an aggregate
-    * that runs in the query's own task:
+  /** The one-row IVF index over the `embeddings` table of `d`, an
+    * aggregate that runs in the query's own task:
     *  - `sample`: the CodebookSampleN vectors smallest by
     *    (xxhash64(vec_id) mod 2²⁰, vec_id), as (h, vec_id, v) structs in
     *    that order. A seeded pseudo-random, scale-stable choice; a NULL
     *    vector is left out;
     *  - `code`: the codebook trained on the sample (deterministic
     *    spherical k-means, graft.ml.CodebookKMeans, through
-    *    `IvfAssign.train`). It replaced a `vec_id < 8` placeholder
-    *    whose "centroids" were 8 of the 10 query vectors, so each
-    *    query's neighborhood piled into its own bucket;
+    *    `IvfAssign.train`);
     *  - `probes`: the query vectors, as (q_id, qv, qn) structs. */
-  private def ivfIndex(emb: DataFrame): DataFrame = {
+  private[graft] def ivfIndex(s: SparkSession, d: String): DataFrame = {
     val h = pmod(xxhash64(col("vec_id")), lit(1L << 20))
-    emb.agg(
+    withNorm(s, d).agg(
         smallest(when(col("v").isNotNull, struct(h.as("h"), col("vec_id"), col("v"))),
           CodebookSampleN).as("sample"),
-        collect_list(when(col("vec_id") < NQueries,
-          struct(col("vec_id").as("q_id"), col("v").as("qv"), col("nrm").as("qn")))).as("probes"))
+        collect_list(when(col("vec_id") < NQueries, probe)).as("probes"))
       .select(col("sample"), ivfCodebook(col("sample.v"), CodebookK, CodebookIters).as("code"),
         col("probes"))
   }
-
-  /** `ivfIndex` on the `embeddings` table of `d`, for the sample specs. */
-  private[graft] def ivfIndexForSpec(s: SparkSession, d: String): DataFrame =
-    ivfIndex(withNorm(s, d))
 
   /** IVF-style approximate NN under the trained codebook.
     *
@@ -168,17 +160,13 @@ object Similarity {
     * against brute force, bucket balance and determinism on the
     * fixture. */
   def annIvf(s: SparkSession, d: String): DataFrame = {
-    val emb = withNorm(s, d)
-    val index = ivfIndex(emb).select(col("code"),
-      transform(col("probes"),
-        p => p.withField("qb", ivfTopBuckets(p("qv"), col("code"), ProbeBuckets))).as("probes"))
-    val cands = emb.filter(col("vec_id") >= NQueries).crossJoin(index)
-      .select(col("vec_id").as("c_id"), col("v").as("cv"), col("nrm").as("cn"),
+    val index = ivfIndex(s, d).select(col("code"),
+      transform(col("probes"), p => struct(p("q_id"), p("qv"), p("qn"),
+        ivfTopBuckets(p("qv"), col("code"), ProbeBuckets).as("qb"))).as("probes"))
+    topK(candidates(withNorm(s, d), index,
         ivfTopBuckets(col("v"), col("code"), IndexReplication).as("cb"), col("probes"))
-    topK(cands.select(col("c_id"), col("cv"), col("cn"), col("cb"), inline(col("probes")))
-      .filter(arrays_overlap(col("qb"), col("cb")))
-      .select(col("q_id"), col("c_id"),
-        round(dot(col("qv"), col("cv")) / (col("qn") * col("cn")), 4).as("sim")))
+      .select(col("c_id"), col("cv"), col("cn"), col("cb"), inline(col("probes")))
+      .filter(arrays_overlap(col("qb"), col("cb"))))
   }
 
   val all: Seq[GQuery] = Seq(

@@ -37,7 +37,7 @@ class IvfHostileSpec extends AnyFunSuite {
     }
 
   private def sampleIds(dir: String): Seq[Long] =
-    Similarity.ivfIndexForSpec(spark, dir).select(col("sample.vec_id")).head().getSeq[Long](0)
+    Similarity.ivfIndex(spark, dir).select(col("sample.vec_id")).head().getSeq[Long](0)
 
   /** q37's (q_id, c_id) pairs. */
   private def pairs(dir: String): Seq[(Long, Long)] =

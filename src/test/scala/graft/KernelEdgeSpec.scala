@@ -2,24 +2,24 @@ package graft
 
 import scala.jdk.CollectionConverters._
 import graft.core.QueryUtils
-import graft.functions.TextFunctions
+import graft.functions.{TextFunctions, VectorFunctions}
 import org.apache.spark.sql.{Column, Row}
 import org.apache.spark.sql.catalyst.expressions.{Murmur3HashFunction, XxHash64Function}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.graftbridge.{ColumnBridge, IvfTopBucketsExpr, MinHashSigExpr, SignatureUtil, SimHash64Expr}
+import org.apache.spark.sql.graftbridge.{ColumnBridge, IvfTopBucketsExpr, SignatureUtil}
 import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, StringType, StructField, StructType}
 import org.apache.spark.unsafe.types.UTF8String
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Edge inputs through every text, signature, IVF and decimal kernel
+/** Edge inputs through every text, signature, vector and decimal kernel
   * of `graftbridge`: NULL, empty and all-whitespace text, each ASCII
   * byte between two words, marker words at the string's ends, longer
   * than 7 bytes or `_`-joined, token arrays shorter than the shingle
-  * size, NULL array elements, NULL vectors and vectors of another
-  * dimension than the codebook's, and the doubles that the decimal
-  * fast parse hands to its slow path. Every case runs twice, through
-  * generated code and interpreted, and must give the pinned value both
-  * times.
+  * size, NULL array elements, NULL vectors, vectors with a NULL
+  * element or of another dimension than the codebook's, and the
+  * doubles that the decimal fast parse hands to its slow path. Every
+  * case runs twice, through generated code and interpreted, and must
+  * give the pinned value both times.
   */
 class KernelEdgeSpec extends AnyFunSuite {
   private lazy val spark = TestSpark.spark
@@ -36,10 +36,10 @@ class KernelEdgeSpec extends AnyFunSuite {
   private def frame(in: DataType, values: Seq[Any]) =
     spark.createDataFrame(values.map(v => Row(v)).asJava, StructType(Seq(StructField("x", in))))
 
-  private def minhash(c: Column): Column =
-    ColumnBridge.column(MinHashSigExpr(ColumnBridge.expression(c)))
-  private def simhash(c: Column): Column =
-    ColumnBridge.column(SimHash64Expr(ColumnBridge.expression(c)))
+  private def selfDot(c: Column): Column = VectorFunctions.dot(c, c)
+  /** The dot product of a vector with (1, 5, 1). */
+  private def dot151(c: Column): Column =
+    VectorFunctions.dot(c, array(lit(1.0), lit(5.0), lit(1.0)))
 
   /** MinHash by its definition: slot i is the minimum over element
     * hashes h of (a_i·h + b_i) mod p; a NULL element hashes to 42. */
@@ -96,13 +96,20 @@ class KernelEdgeSpec extends AnyFunSuite {
       Seq("a", "b", "c"), Seq("a b c")),
     ("wordShingles", Tokens, (c: Column) => TextFunctions.wordShingles(c, 2),
       Seq("a", null, "b"), Seq("a", "b")),
-    ("minhash", Tokens, minhash _, null, null),
-    ("minhash", Tokens, minhash _, Seq(null), minhashOf(Seq(null))),
-    ("minhash", Tokens, minhash _, Seq("a", null), minhashOf(Seq("a", null))),
-    ("simhash", Tokens, simhash _, null, null),
-    ("simhash", Tokens, simhash _, Seq(), 0L),
-    ("simhash", Tokens, simhash _, Seq(null), 42L),
-    ("simhash", Tokens, simhash _, Seq("a", null), 42L & xx("a")),
+    ("minhash", Tokens, TextFunctions.minhashSignature _, null, null),
+    ("minhash", Tokens, TextFunctions.minhashSignature _, Seq(null), minhashOf(Seq(null))),
+    ("minhash", Tokens, TextFunctions.minhashSignature _, Seq("a", null), minhashOf(Seq("a", null))),
+    ("simhash", Tokens, TextFunctions.simhashSignature _, null, null),
+    ("simhash", Tokens, TextFunctions.simhashSignature _, Seq(), 0L),
+    ("simhash", Tokens, TextFunctions.simhashSignature _, Seq(null), 42L),
+    ("simhash", Tokens, TextFunctions.simhashSignature _, Seq("a", null), 42L & xx("a")),
+    ("dot", Vector, dot151 _, null, null),
+    ("dot", Vector, dot151 _, Seq(1.0, 0.0, 2.0), 3.0),
+    ("dot", Vector, dot151 _, Seq(1.0, null, 2.0), null),
+    ("dot", Vector, dot151 _, Seq(1.0, 2.0), null),
+    // a NULL past the first 64 elements, in the second word of NULL bits
+    ("dot", Vector, selfDot _, Seq.tabulate(100)(i => if (i == 70) null else 1.0), null),
+    ("dot", Vector, selfDot _, Seq.fill(100)(1.0), 100.0),
     ("topBuckets", Vector, buckets(2) _, null, Seq()),
     ("topBuckets", Vector, buckets(2) _, Seq(1.0), Seq()),
     ("topBuckets", Vector, buckets(2) _, Seq(0.2, 0.9), Seq(1L, 0L)),

@@ -6,19 +6,12 @@ import org.scalatest.funsuite.AnyFunSuite
 /** The queries leave join strategy and partitioning to Spark's optimizer
   * and `SinglePartitionStages`: no analyzed query plan holds a strategy
   * hint (`broadcast(...)`, `hint(...)`) or a user repartition
-  * (`repartition`, `repartitionByRange`, `coalesce`), except the ones
-  * listed here with their reason.
+  * (`repartition`, `repartitionByRange`, `coalesce`).
   */
 class PlanDirectivesSpec extends AnyFunSuite {
   private lazy val spark = TestSpark.spark
 
-  /** The directives that stay, by query. q35's broadcast: q35 is a
-    * cross join, and without the hint, once both sides pass the
-    * broadcast threshold, Spark plans a cartesian product over the
-    * corpus instead of streaming it past the broadcast query set. */
-  private val allowed = Map("q35_knn_bruteforce" -> Seq("hint"))
-
-  test("no query's analyzed plan holds a strategy hint or a user repartition, except q35's broadcast") {
+  test("no query's analyzed plan holds a strategy hint or a user repartition") {
     val found = SparkEntry.inventory.map { q =>
       val plan = q.fn(spark, TestSpark.sfDir).queryExecution.analyzed
       q.name -> plan.collectWithSubqueries {
@@ -26,6 +19,6 @@ class PlanDirectivesSpec extends AnyFunSuite {
         case _: RepartitionOperation => "repartition"
       }
     }.filter(_._2.nonEmpty).toMap
-    assert(found === allowed)
+    assert(found === Map.empty)
   }
 }

@@ -19,26 +19,25 @@ class SimilaritySpec extends AnyFunSuite {
       (Seq(0.1, -0.2, 0.3), Seq(-0.4, 0.5, 0.6)),
       (Seq.empty[Double], Seq.empty[Double])
     ).toDF("a", "b")
-    val hof = aggregate(zip_with(col("a"), col("b"), (x, y) => x * y),
-      lit(0.0), (acc, x) => acc + x)
     val rows = df.select(VectorFunctions.dot(col("a"), col("b")).as("fast"),
-      hof.as("slow")).collect()
+      TextReference.hofDot(col("a"), col("b")).as("slow")).collect()
     rows.foreach(r => assert(r.getDouble(0) === r.getDouble(1)))
   }
 
   test("dot product is null on unequal lengths, matching the HOF null-pad") {
     import spark.implicits._
-    val df = Seq(
-      (Seq(1.0, 2.0, 3.0), Seq(4.0, 5.0)),
-      (Seq(1.0), Seq.empty[Double])
+    // and on a NULL element, where the HOF product is null too
+    val df = Seq[(Seq[Option[Double]], Seq[Option[Double]])](
+      (Seq(Some(1.0), Some(2.0), Some(3.0)), Seq(Some(4.0), Some(5.0))),
+      (Seq(Some(1.0)), Seq.empty),
+      (Seq(Some(1.0), None, Some(2.0)), Seq(Some(1.0), Some(5.0), Some(1.0))),
+      (Seq(Some(1.0), Some(2.0)), Seq(Some(3.0), None))
     ).toDF("a", "b")
-    val hof = aggregate(zip_with(col("a"), col("b"), (x, y) => x * y),
-      lit(0.0), (acc, x) => acc + x)
     val rows = df.select(VectorFunctions.dot(col("a"), col("b")).as("fast"),
-      hof.as("slow")).collect()
+      TextReference.hofDot(col("a"), col("b")).as("slow")).collect()
     rows.foreach { r =>
-      assert(r.isNullAt(0), "expression must null out on length mismatch")
-      assert(r.isNullAt(1), "HOF reference semantics: null-padded product")
+      assert(r.isNullAt(0), "expression must null out on a length mismatch or NULL element")
+      assert(r.isNullAt(1), "HOF reference semantics: null-padded or null product")
     }
   }
 
@@ -47,7 +46,7 @@ class SimilaritySpec extends AnyFunSuite {
   private def ivfBuckets(dir: String): DataFrame =
     Tables.embeddings(spark, dir)
       .select(col("vec_id").as("c_id"), VectorFunctions.toDoubleArray(col("embedding")).as("v"))
-      .crossJoin(Similarity.ivfIndexForSpec(spark, dir).select("code"))
+      .crossJoin(Similarity.ivfIndex(spark, dir).select("code"))
       .select(col("c_id"),
         element_at(VectorFunctions.ivfTopBuckets(col("v"), col("code"), 1), 1).as("bucket"))
 
@@ -64,21 +63,60 @@ class SimilaritySpec extends AnyFunSuite {
     assert(mean >= 0.8, s"mean recall@5 = $mean")
   }
 
-  test("near-dup join plans broadcast the small side, never nested-loop over pairs") {
-    // embeddings as two files: SinglePartitionStages never counts such an
-    // input, so the plan is Spark's own join choice
+  private def finalPlan(df: DataFrame): String =
+    df.queryExecution.executedPlan.asInstanceOf[AdaptiveSparkPlanExec].executedPlan.toString
+
+  /** `body` on a temp dir whose `embeddings` table is sf0.001's in two
+    * files: SinglePartitionStages never counts such an input, so its
+    * plans are Spark's own join choice. */
+  private def withTwoFiles[T](body: String => T): T =
     TestSpark.withTempDir { dir =>
       Tables.embeddings(spark, sf).repartition(2).write.parquet(s"$dir/embeddings.parquet")
-      val plan = Similarity.knnBruteForce(spark, dir)
-        .queryExecution.executedPlan.toString
-      assert(plan.contains("Broadcast"), plan.take(2000))
-      assert(!plan.contains("CartesianProduct"), plan.take(2000))
+      body(dir)
+    }
+
+  test("q35 on two files broadcasts its probe row, with no cartesian product") {
+    val rows = Similarity.knnBruteForce(spark, sf).collect().toSeq
+    withTwoFiles { dir =>
+      val df = Similarity.knnBruteForce(spark, dir)
+      assert(df.collect().toSeq === rows)
+      val plan = finalPlan(df)
+      assert(plan.contains("BroadcastExchange") && !plan.contains("CartesianProduct"), plan)
     }
   }
 
-  test("a near-dup join whose inputs fit one partition pairs them in one task, no pair shuffled") {
-    val plan = Similarity.knnBruteForce(spark, sf).queryExecution.executedPlan.toString
-    assert(plan.contains("CartesianProduct") && !plan.contains("Exchange"), plan.take(2000))
+  test("q35 on two files keeps its broadcast when the corpus is past the broadcast threshold") {
+    // the probe row holds the 10 query vectors (about 5 KB) at any
+    // corpus size, so it stays the broadcast side where two sides past
+    // the threshold would make the cross join a cartesian product
+    val rows = Similarity.knnBruteForce(spark, sf).collect().toSeq
+    withTwoFiles { dir =>
+      val corpusBytes = Tables.embeddings(spark, dir).queryExecution.optimizedPlan.stats.sizeInBytes
+      TestSpark.withConf("spark.sql.autoBroadcastJoinThreshold" -> "32768") {
+        assert(corpusBytes > 32768)
+        val df = Similarity.knnBruteForce(spark, dir)
+        assert(df.collect().toSeq === rows)
+        val plan = finalPlan(df)
+        assert(plan.contains("BroadcastNestedLoopJoin") && !plan.contains("CartesianProduct"), plan)
+      }
+    }
+  }
+
+  test("q35 on one file pairs its probe row with the candidates in one task, with no exchange") {
+    val df = Similarity.knnBruteForce(spark, sf)
+    assert(TestSpark.tasksLaunchedBy("similarity:q35:one-file")(df.collect()) === 1)
+    assert(!finalPlan(df).contains("Exchange"), finalPlan(df))
+  }
+
+  test("q36 on two files broadcasts one side of its label join") {
+    val rows = Similarity.embeddingNearDup(spark, sf).collect().toSeq
+    withTwoFiles { dir =>
+      val df = Similarity.embeddingNearDup(spark, dir)
+      assert(df.collect().toSeq === rows)
+      val plan = finalPlan(df)
+      assert(plan.contains("BroadcastHashJoin") && plan.contains("BroadcastExchange") &&
+        !plan.contains("SortMergeJoin") && !plan.contains("CartesianProduct"), plan)
+    }
   }
 
   test("blocked near-dup plan contains no cartesian product") {
@@ -88,16 +126,13 @@ class SimilaritySpec extends AnyFunSuite {
   }
 
   test("blocked near-dup self-join computes the embedding pipeline once (reused exchange)") {
-    def finalPlan(df: DataFrame): String =
-      df.queryExecution.executedPlan.asInstanceOf[AdaptiveSparkPlanExec].executedPlan.toString
     val oneFile = Similarity.embeddingNearDup(spark, sf)
     val rows = oneFile.collect().toSeq
     // one file: the join runs in one task, with nothing to shuffle
     assert(!finalPlan(oneFile).contains("Exchange"), finalPlan(oneFile))
     // two files with broadcasts off: Spark shuffles both sides on label,
     // and the two sides read one exchange
-    TestSpark.withTempDir { dir =>
-      Tables.embeddings(spark, sf).repartition(2).write.parquet(s"$dir/embeddings.parquet")
+    withTwoFiles { dir =>
       TestSpark.withConf("spark.sql.autoBroadcastJoinThreshold" -> "-1") {
         val twoFiles = Similarity.embeddingNearDup(spark, dir)
         assert(twoFiles.collect().toSeq === rows)
@@ -116,7 +151,7 @@ class SimilaritySpec extends AnyFunSuite {
       val h = pmod(xxhash64(col("vec_id")), lit(1L << 20))
       val want = Tables.embeddings(spark, dir).select(h.as("h"), col("vec_id"))
         .orderBy("h", "vec_id").limit(512).collect().map(r => (r.getLong(0), r.getLong(1))).toSeq
-      val got = Similarity.ivfIndexForSpec(spark, dir)
+      val got = Similarity.ivfIndex(spark, dir)
         .select(col("sample.h"), col("sample.vec_id")).head()
       assert(got.getSeq[Long](0).zip(got.getSeq[Long](1)) === want, dir)
     }

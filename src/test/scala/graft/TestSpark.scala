@@ -46,4 +46,13 @@ object TestSpark {
     ListenerBusDrain.drain(sc)
     sc.statusTracker.getJobIdsForGroup(group).length
   }
+
+  /** Spark tasks launched by `body`, summed over the stages of the jobs
+    * of a job group, as `jobsLaunchedBy` counts them. */
+  def tasksLaunchedBy(group: String)(body: => Unit): Int = {
+    val tracker = spark.sparkContext.statusTracker
+    jobsLaunchedBy(group)(body)
+    tracker.getJobIdsForGroup(group).toSeq.flatMap(tracker.getJobInfo).flatMap(_.stageIds)
+      .flatMap(tracker.getStageInfo).map(_.numTasks).sum
+  }
 }

@@ -56,11 +56,6 @@ class TextFunctionsSpec extends AnyFunSuite {
   test("codegen'd word shingles equal the HOF spelling over the corpus") {
     // the ShingleUtil.shingles kernel must reproduce the original
     // transform/sequence/element_at/concat_ws chain element-for-element
-    def hofShingles(toks: org.apache.spark.sql.Column, n: Int) =
-      when(size(toks) >= n,
-        transform(sequence(lit(1), size(toks) - (n - 1)),
-          i => concat_ws(" ", (0 until n).map(k => element_at(toks, i + k)): _*)))
-        .otherwise(array().cast("array<string>"))
     val docs = core.Tables.documents(spark, TestSpark.sfDir)
     for (n <- Seq(2, 3, 5)) {
       val toks = TextFunctions.tokens(col("text"))

@@ -4,10 +4,11 @@ import graft.functions.TextFunctions.{asciiPunctuation, nonWsClass, qualityStopw
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
 
-/** The built-in spellings the byte-scan text kernels replaced, kept as
-  * the references TextFunctionsSpec compares the kernels against. Each
-  * reads the oracle SQL's character classes: whitespace is
-  * `TextFunctions.wsClass`, and a word is ASCII, as in RE2. */
+/** The built-in spellings the kernels replaced, kept as the references
+  * the specs compare the kernels against and `KernelLedger` times them
+  * against. The text ones read the oracle SQL's character classes:
+  * whitespace is `TextFunctions.wsClass`, and a word is ASCII, as in
+  * RE2. */
 object TextReference {
 
   /** F1: strip URLs (reference src/utils.py:6). */
@@ -44,4 +45,18 @@ object TextReference {
 
   /** Split the stripped string on whitespace runs. */
   def tokensRegex(c: Column): Column = split(pyStripRegex(c), s"$wsClass+")
+
+  /** Word n-gram shingles of a token array: the higher-order-function
+    * chain `TextFunctions.wordShingles` replaced. */
+  def hofShingles(toks: Column, n: Int): Column =
+    when(size(toks) >= n,
+      transform(sequence(lit(1), size(toks) - (n - 1)),
+        i => concat_ws(" ", (0 until n).map(k => element_at(toks, i + k)): _*)))
+      .otherwise(array().cast("array<string>"))
+
+  /** Dot product as the higher-order-function fold `VectorFunctions.dot`
+    * replaced: NULL on unequal lengths (zip_with pads with NULL) and on a
+    * NULL element. */
+  def hofDot(a: Column, b: Column): Column =
+    aggregate(zip_with(a, b, (x, y) => x * y), lit(0.0), (acc, x) => acc + x)
 }
