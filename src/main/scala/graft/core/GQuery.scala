@@ -28,8 +28,9 @@ object QueryUtils {
 
   /** The parse half of the exact-sum split: unscaled(cast(c →
     * DECIMAL(28,10))) as a long, or the out-of-band sentinel when the
-    * fast path does not apply (`DecimalFast.unscaled18OrSentinel`;
-    * NULL stays NULL). Queries reach it through `withExactParse`. */
+    * value is outside the one-long window or not finite (|c| ≥ 10⁸,
+    * NaN, ±Inf; `DecimalFast.unscaled18OrSentinel`; NULL stays NULL).
+    * Queries reach it through `withExactParse`. */
   def unscaled18(c: Column): Column =
     ColumnBridge.column(ofDouble(DecimalFast, "unscaled18OrSentinel", ColumnBridge.expression(c)))
 
@@ -37,7 +38,7 @@ object QueryUtils {
 
   /** Projects each named double column's `unscaled18` parse ONCE per
     * row, as `_u_<column>`, for the name-keyed sums below to read. The
-    * parse is the expensive node (Double.toString + digit parse), and
+    * parse is the expensive node (128-bit math, or the Cast), and
     * neither window update projections nor aggregate-update codegen
     * reliably CSE it (measured: 3 evaluations/row/input when inlined, 1
     * when pre-projected). A name-keyed sum over a column whose parse

@@ -7,10 +7,12 @@ import org.apache.spark.sql.SparkSession
   * config. The default master (Verify, Bench, perfbench) is
   * `local[$SPARK_GRAFT_CPUS]`, 4 when unset, and perfbench sets it to
   * the host's core count; the specs' session runs `local[8]`. The knobs
-  * are the ones that matter on a real cluster too: AQE re-plans
-  * shuffles at runtime (skew join, partition coalescing), shuffle
-  * parallelism is 32 rather than the 200 default (AQE coalesces it to
-  * the data), and timestamps are pinned to UTC for oracle parity.
+  * are the ones that matter on a real cluster too: shuffle parallelism
+  * is 32 rather than the 200 default (AQE coalesces it to the data), and
+  * timestamps are pinned to UTC for oracle parity. AQE, its partition
+  * coalescing and its skew join are Spark's defaults, left unset here;
+  * the rule below relies on the first two (SinglePartitionStagesSpec
+  * pins all three).
   *
   * Every session also runs [[SinglePartitionStages]] as an AQE
   * query-stage preparation rule. Most queries are chains of small
@@ -43,9 +45,6 @@ object GraftSession {
       .master(master)
       .appName("graft")
       .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-      .config("spark.sql.adaptive.skewJoin.enabled", "true")
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")
       .withExtensions(_.injectQueryStagePrepRule(_ => SinglePartitionStages))

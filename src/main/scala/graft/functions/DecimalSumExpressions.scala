@@ -40,12 +40,12 @@ object DecimalSum {
   val Base: Long = 1000000000000000000L
   private val BaseBig = java.math.BigInteger.valueOf(Base)
 
-  /** Out-of-band marker for "fast parse did not apply" — the parser's
-    * real outputs satisfy |u| ≤ 10¹⁸ > Long.MinValue. */
+  /** Out-of-band marker for "outside the one-long window or not
+    * finite" — the parser's real outputs satisfy |u| ≤ 10¹⁸. */
   val Sentinel: Long = Long.MinValue
 
   /** hi part (truncated division by 10¹⁸) of unscaled(cast) for values
-    * the fast path rejected (rare: |d| ≥ 10⁸ and sub-2⁻²¹ magnitudes).
+    * the parse leaves to the sentinel: |d| ≥ 10⁸ or not finite.
     * Exact for the whole DECIMAL(28,10) domain: |unscaled| < 10²⁸ →
     * |hi| < 10¹⁰. NaN/Inf throw here (NumberFormatException via
     * Decimal(NaN)) where Spark's non-ANSI Cast would return NULL — a

@@ -112,14 +112,15 @@ object IvfAssign {
   /** The ids of the `top` centroids of `code` nearest to `v`, ties to the
     * smaller id. The codebook is read in place; `v` is copied to a
     * primitive array once, so the k × dim loop reads only one operand
-    * through ArrayData. A NULL vector, or one of another dimensionality,
-    * yields an empty array, which overlaps no bucket list. The result is
+    * through ArrayData. A NULL vector, one holding a NULL element (which
+    * `dot` reads as NULL), or one of another dimensionality, yields an
+    * empty array, which overlaps no bucket list. The result is
     * never NULL, so the optimizer infers no NULL check that would
     * evaluate the kernel a second time. */
   def topBuckets(v: ArrayData, code: ArrayData, top: Int): ArrayData = {
     val k = code.numElements()
     require(top >= 1 && top <= k, s"top=$top outside 1..$k")
-    if (v == null || code.getArray(0).numElements() != v.numElements()) {
+    if (v == null || code.getArray(0).numElements() != v.numElements() || NullElements.any(v)) {
       return new GenericArrayData(Array.empty[Any])
     }
     val x = v.toDoubleArray()

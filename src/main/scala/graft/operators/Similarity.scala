@@ -127,8 +127,9 @@ object Similarity {
     * aggregate that runs in the query's own task:
     *  - `sample`: the CodebookSampleN vectors smallest by
     *    (xxhash64(vec_id) mod 2²⁰, vec_id), as (h, vec_id, v) structs in
-    *    that order. A seeded pseudo-random, scale-stable choice; a NULL
-    *    vector is left out;
+    *    that order. A seeded pseudo-random, scale-stable choice; a vector
+    *    whose norm is NULL (a NULL vector or one holding a NULL element,
+    *    under `dot`'s rule) is left out;
     *  - `code`: the codebook trained on the sample (deterministic
     *    spherical k-means, graft.ml.CodebookKMeans, through
     *    `IvfAssign.train`);
@@ -136,7 +137,7 @@ object Similarity {
   private[graft] def ivfIndex(s: SparkSession, d: String): DataFrame = {
     val h = pmod(xxhash64(col("vec_id")), lit(1L << 20))
     withNorm(s, d).agg(
-        smallest(when(col("v").isNotNull, struct(h.as("h"), col("vec_id"), col("v"))),
+        smallest(when(col("nrm").isNotNull, struct(h.as("h"), col("vec_id"), col("v"))),
           CodebookSampleN).as("sample"),
         collect_list(when(col("vec_id") < NQueries, probe)).as("probes"))
       .select(col("sample"), ivfCodebook(col("sample.v"), CodebookK, CodebookIters).as("code"),

@@ -82,7 +82,7 @@ class DecimalFastSpec extends AnyFunSuite {
   test("integer-tier unscaled parse equals Cast on half-boundary neighborhoods") {
     // doubles whose value·10¹⁰ sits as close as possible to k + 0.5 —
     // exactly the band where the integer tier must hand off to the
-    // string tier rather than guess
+    // Cast rather than guess
     val rnd = new scala.util.Random(1234)
     var n = 0
     while (n < 200000) {
@@ -127,6 +127,27 @@ class DecimalFastSpec extends AnyFunSuite {
       Double.NegativeInfinity, Double.MaxValue).foreach { d =>
       if (java.lang.Double.isFinite(d)) checkUnscaled(d)
       else assert(DecimalFast.unscaled18OrSentinel(d) == Long.MinValue)
+    }
+  }
+
+  test("finite values the integer tier leaves parse to the Cast's unscaled long, never the sentinel") {
+    // sf0.01 `o_totalprice` in [2¹⁸, 2¹⁹), where its band values lie;
+    // magnitudes below the tier's 4.8e-7 floor; band values from 10⁷,
+    // whose Double.toString is scientific
+    val prices = core.Tables.orders(spark, TestSpark.sf001Dir)
+      .filter(col("o_totalprice") >= 262144.0 && col("o_totalprice") < 524288.0)
+      .select("o_totalprice").collect().map(_.getDouble(0))
+    assert(prices.length > 2000)
+    (prices.toSeq ++ Seq(1e-10, 2.4e-7, Math.nextDown(4.8e-7), Double.MinPositiveValue,
+      1e7, 1.23456789e7, 99999999.99, Math.nextDown(1e8))).foreach { d =>
+      Seq(d, -d).foreach { x =>
+        val u = DecimalFast.unscaled18OrSentinel(x)
+        assert(u != DecimalSum.Sentinel && BigInt(u) == refUnscaled(x), s"d=$x u=$u")
+      }
+    }
+    Seq(Double.NaN, Double.PositiveInfinity, Double.NegativeInfinity, 1e8, -1e8,
+      Math.nextUp(1e8)).foreach { d =>
+      assert(DecimalFast.unscaled18OrSentinel(d) == DecimalSum.Sentinel, s"d=$d")
     }
   }
 

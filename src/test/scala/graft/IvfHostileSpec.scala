@@ -9,25 +9,28 @@ import org.scalatest.funsuite.AnyFunSuite
 
 /** q37 on hostile `embeddings` tables written to a temp dir with the
   * declared schema: fewer vectors than the codebook's 8 centroids,
-  * fewer than its 512-vector sample, and NULL embeddings. The vectors
-  * are seeded 4-d Gaussians; ids below 10 are q37's probes. Tiny files
-  * always pass `SinglePartitionStages`' size gate, so nothing here
-  * asserts plan shape.
+  * fewer than its 512-vector sample, NULL embeddings and embeddings
+  * holding a NULL element. The vectors are seeded 4-d Gaussians; ids
+  * below 10 are q37's probes. Tiny files always pass
+  * `SinglePartitionStages`' size gate, so nothing here asserts plan
+  * shape.
   */
 class IvfHostileSpec extends AnyFunSuite {
   private lazy val spark = TestSpark.spark
 
-  /** `n` vectors with ids 0 until n, each NULL where `nulls` holds its id. */
-  private def vectors(n: Int, nulls: Set[Long] = Set.empty): Seq[(Long, Seq[Float])] = {
+  /** `n` vectors with ids 0 until n, each NULL where `nulls` holds its
+    * id, and with a NULL second element where `nullElements` does. */
+  private def vectors(n: Int, nulls: Set[Long] = Set.empty,
+      nullElements: Set[Long] = Set.empty): Seq[(Long, Seq[java.lang.Float])] = {
     val rnd = new scala.util.Random(7)
     (0L until n.toLong).map { id =>
-      val v = Seq.fill(4)(rnd.nextGaussian().toFloat)
-      id -> (if (nulls(id)) null else v)
+      val v = Seq.fill(4)(Float.box(rnd.nextGaussian().toFloat))
+      id -> (if (nulls(id)) null else if (nullElements(id)) v.updated(1, null) else v)
     }
   }
 
   /** `body` on a temp dir whose `embeddings` table holds `rows`. */
-  private def withEmbeddings[T](rows: Seq[(Long, Seq[Float])])(body: String => T): T =
+  private def withEmbeddings[T](rows: Seq[(Long, Seq[java.lang.Float])])(body: String => T): T =
     TestSpark.withTempDir { dir =>
       val schema = Tables.embeddings(spark, TestSpark.sfDir).schema
       spark.createDataFrame(rows.map { case (id, v) =>
@@ -71,6 +74,17 @@ class IvfHostileSpec extends AnyFunSuite {
       val got = pairs(dir)
       assert(got.nonEmpty)
       assert(got.forall { case (q, c) => q != 3L && c != 40L }, got)
+    }
+  }
+
+  test("a vector holding a NULL element is left out of the sample and pairs with nothing") {
+    // `dot` reads such a vector as NULL, so neither training nor bucket
+    // assignment may read its NULL element as 0.0
+    withEmbeddings(vectors(41, nullElements = Set(4L, 40L))) { dir =>
+      assert(sampleIds(dir).sorted === (0L until 41L).filter(id => id != 4L && id != 40L))
+      val got = pairs(dir)
+      assert(got.nonEmpty)
+      assert(got.forall { case (q, c) => q != 4L && c != 40L }, got)
     }
   }
 }

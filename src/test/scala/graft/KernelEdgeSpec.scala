@@ -112,6 +112,7 @@ class KernelEdgeSpec extends AnyFunSuite {
     ("dot", Vector, selfDot _, Seq.fill(100)(1.0), 100.0),
     ("topBuckets", Vector, buckets(2) _, null, Seq()),
     ("topBuckets", Vector, buckets(2) _, Seq(1.0), Seq()),
+    ("topBuckets", Vector, buckets(2) _, Seq(null, 1.0), Seq()),
     ("topBuckets", Vector, buckets(2) _, Seq(0.2, 0.9), Seq(1L, 0L)),
     ("topBuckets", Vector, buckets(1) _, Seq(3.0, 3.0), Seq(0L)),
     ("unscaled18", DoubleType, QueryUtils.unscaled18 _, null, null),
@@ -120,8 +121,9 @@ class KernelEdgeSpec extends AnyFunSuite {
     ("unscaled18", DoubleType, QueryUtils.unscaled18 _, Double.NegativeInfinity, Sentinel),
     ("unscaled18", DoubleType, QueryUtils.unscaled18 _, 1e8, Sentinel),
     ("unscaled18", DoubleType, QueryUtils.unscaled18 _, -1.5e8, Sentinel),
-    ("unscaled18", DoubleType, QueryUtils.unscaled18 _, 1e-12, Sentinel),
-    ("unscaled18", DoubleType, QueryUtils.unscaled18 _, 99999999.99, Sentinel),
+    ("unscaled18", DoubleType, QueryUtils.unscaled18 _, 1e-12, 0L),
+    ("unscaled18", DoubleType, QueryUtils.unscaled18 _, 2.4e-7, 2400L),
+    ("unscaled18", DoubleType, QueryUtils.unscaled18 _, 99999999.99, 999999999900000000L),
     ("unscaled18", DoubleType, QueryUtils.unscaled18 _, -1234.5678, -12345678000000L),
     ("unscaled18", DoubleType, QueryUtils.unscaled18 _, 0.0, 0L),
     ("unscaled18", DoubleType, QueryUtils.unscaled18 _, -0.0, 0L))

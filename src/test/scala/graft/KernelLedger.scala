@@ -1,10 +1,12 @@
 package graft
 
-import graft.core.{GraftSession, Tables}
+import graft.core.{GraftSession, QueryUtils, Tables}
 import graft.functions.{TextFunctions, VectorFunctions}
 import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.catalyst.expressions.UnscaledValue
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.LongType
+import org.apache.spark.sql.graftbridge.ColumnBridge
+import org.apache.spark.sql.types.{DecimalType, LongType}
 
 /** The kernel ledger: each custom kernel timed against the built-in
   * spelling it replaced (`TextReference`), in one `local[1]` JVM.
@@ -12,10 +14,14 @@ import org.apache.spark.sql.types.LongType
   *   Test/runMain graft.KernelLedger <sfDir> [pairs, default 11] [kernel,...]
   *
   * A run writes one spelling's column through Spark's `noop` sink over
-  * the `documents` texts repeated TextRepeat times, or the `embeddings`
-  * vectors repeated VectorRepeat times, read from parquet on each run,
-  * so every time includes the scan. Both spellings first run once
-  * untimed, and must give equal columns; then each pair runs them back
+  * the `documents` texts repeated TextRepeat times, the `embeddings`
+  * vectors repeated VectorRepeat times, or the `orders` prices or
+  * `events` values repeated DecimalRepeat times, read from parquet on
+  * each run, so every time includes the scan. The decimal lines time the
+  * exact parse, `unscaled18`, over `o_totalprice` (the one column whose
+  * values reach its Cast tier) and the exact sum over `value`, each
+  * against the built-in cast to DECIMAL(28,10). Both spellings first run
+  * once untimed, and must give equal columns; then each pair runs them back
   * to back, the first spelling alternating between pairs. Per kernel it
   * prints the median and quartiles (inclusive) of each spelling's
   * times, and the pairs the kernel won.
@@ -23,6 +29,7 @@ import org.apache.spark.sql.types.LongType
 object KernelLedger {
   private val TextRepeat = 4
   private val VectorRepeat = 20
+  private val DecimalRepeat = 20
 
   private def quartiles(xs: Seq[Double]): (Double, Double, Double) = {
     val s = xs.sorted
@@ -51,6 +58,12 @@ object KernelLedger {
     val vecs = Tables.embeddings(spark, sfDir)
       .select(explode(array_repeat(VectorFunctions.toDoubleArray(col("embedding")),
         lit(VectorRepeat))).as("v"))
+    def repeated(df: DataFrame, c: String): DataFrame =
+      df.select(explode(array_repeat(col(c), lit(DecimalRepeat))).as(c))
+    val prices = repeated(Tables.orders(spark, sfDir), "o_totalprice")
+    val values = repeated(Tables.events(spark, sfDir), "value")
+      .transform(QueryUtils.withExactParse("value"))
+    def dec(c: String): Column = col(c).cast(DecimalType(28, 10))
     import TextReference._
     val text = col("text")
     val toks = TextFunctions.tokens(text)
@@ -67,12 +80,16 @@ object KernelLedger {
       ("markerCounts", docs, TextFunctions.markerCounts(text),
         array(TextFunctions.langMarkers.map(markerHits(text, _)): _*)),
       ("wordShingles", docs, TextFunctions.wordShingles(toks, 3), hofShingles(toks, 3)),
-      ("dot", vecs, VectorFunctions.dot(v, v), hofDot(v, v)))
+      ("dot", vecs, VectorFunctions.dot(v, v), hofDot(v, v)),
+      ("unscaled18", prices, QueryUtils.unscaled18(col("o_totalprice")),
+        ColumnBridge.column(UnscaledValue(ColumnBridge.expression(dec("o_totalprice"))))),
+      ("sumDec", values, QueryUtils.sumDec("value"), sum(dec("value"))))
 
     println(s"kernel ledger: $sfDir, documents x$TextRepeat, embeddings x$VectorRepeat, " +
-      s"local[1], $pairs pairs, ms per run [quartiles]")
+      s"orders and events x$DecimalRepeat, local[1], $pairs pairs, ms per run [quartiles]")
     ledger.filter(k => only.forall(_(k._1))).foreach { case (name, df, kernel, builtIn) =>
-      val differ = df.filter(not(kernel <=> builtIn)).count()
+      val differ = df.select(kernel.as("k"), builtIn.as("b"))
+        .filter(not(col("k") <=> col("b"))).count()
       require(differ == 0, s"$name: $differ rows differ from the built-in spelling")
       ms(df, kernel)
       ms(df, builtIn)

@@ -61,6 +61,15 @@ class SinglePartitionStagesSpec extends AnyFunSuite {
 
   private def sorted(df: DataFrame): DataFrame = df.orderBy(df.columns.map(col).toSeq: _*)
 
+  test("the session runs with AQE, partition coalescing and skew join on, Spark's defaults") {
+    // GraftSession leaves these three unset; the rule is inert without
+    // the first two, so a Spark upgrade that flips a default fails here
+    Seq("spark.sql.adaptive.enabled", "spark.sql.adaptive.coalescePartitions.enabled",
+      "spark.sql.adaptive.skewJoin.enabled").foreach { k =>
+      assert(spark.conf.get(k) === "true", k)
+    }
+  }
+
   test("every query's ordered output equals Spark's exchanges at sf0.001") {
     val changed = SparkEntry.inventory.filter { q =>
       val onePartition = q.fn(spark, TestSpark.sfDir).collect().toSeq
