@@ -74,7 +74,7 @@ object Bench {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val abSel = sys.env.get("SPARK_GRAFT_AB")
     val headline = selected(abSel)
-    val spark = GraftSession.local()
+    val spark = GraftSession.builder().getOrCreate()
     println(run(spark, sfDir, headline, abSel.isDefined))
     spark.stop()
   }

@@ -15,7 +15,7 @@ import org.apache.spark.sql.execution.ExplainMode
 object PlanDump {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir, tag) = args
-    val spark = GraftSession.local()
+    val spark = GraftSession.builder().getOrCreate()
     new java.io.File(outDir).mkdirs()
     SparkEntry.inventory.foreach { q =>
       val df = q.fn(spark, sfDir)

@@ -12,7 +12,7 @@ import scala.jdk.CollectionConverters._
 object Verify {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args
-    val spark = GraftSession.local()
+    val spark = GraftSession.builder().getOrCreate()
     val failed = dump(spark, sfDir, outDir)
     spark.stop()
     if (failed.nonEmpty) {

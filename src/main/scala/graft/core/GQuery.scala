@@ -71,16 +71,21 @@ object QueryUtils {
   /** Exact sum of column `c`, read with its `withExactParse` parse. */
   def sumDec(c: String): Column = sumDec(col(parseOf(c)), col(c))
 
-  /** sumDec emitting the normalized struct<hi,lo> parts instead of the
-    * decimal — for two-level aggregations whose outer level re-sums
-    * the partials (q05/q10/q11). */
-  def sumDecParts(c: String): Column = sum128(col(parseOf(c)), col(c), emitStruct = true)
+  private def partsOf(c: String): String = s"_p_$c"
 
-  /** Re-aggregate struct<hi,lo> partials (from sumDecParts) into the
-    * exact DECIMAL(38,10) total. Children are plain field reads. */
-  def sumOfParts(s: Column): Column = {
-    val hi = ColumnBridge.expression(s.getField("hi"))
-    val lo = ColumnBridge.expression(s.getField("lo"))
+  /** sumDec emitting the normalized struct<hi,lo> parts instead of the
+    * decimal, named `_p_<column>`, for two-level aggregations whose
+    * outer level re-sums them with `sumOfParts(c)` (q05/q10/q11). */
+  def sumDecParts(c: String): Column =
+    sum128(col(parseOf(c)), col(c), emitStruct = true).as(partsOf(c))
+
+  /** Re-aggregate column `c`'s `sumDecParts` partials into the exact
+    * DECIMAL(38,10) total. Re-summing parts that were not aggregated
+    * fails analysis when the frame is built. */
+  def sumOfParts(c: String): Column = {
+    val parts = col(partsOf(c))
+    val hi = ColumnBridge.expression(parts.getField("hi"))
+    val lo = ColumnBridge.expression(parts.getField("lo"))
     ColumnBridge.column(SumScaled128(hi, lo).toAggregateExpression())
   }
 

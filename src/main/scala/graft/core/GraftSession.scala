@@ -9,7 +9,8 @@ import org.apache.spark.sql.SparkSession
   * the host's core count; the specs' session runs `local[8]`. The knobs
   * are the ones that matter on a real cluster too: shuffle parallelism
   * is 32 rather than the 200 default (AQE coalesces it to the data), and
-  * timestamps are pinned to UTC for oracle parity. AQE, its partition
+  * timestamps are pinned to UTC for oracle parity. Spark logs at WARN
+  * from the moment its context starts (`spark.log.level`). AQE, its partition
   * coalescing and its skew join are Spark's defaults, left unset here;
   * the rule below relies on the first two (SinglePartitionStagesSpec
   * pins all three).
@@ -47,11 +48,6 @@ object GraftSession {
       .config("spark.sql.shuffle.partitions", "32")
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")
+      .config("spark.log.level", "WARN")
       .withExtensions(_.injectQueryStagePrepRule(_ => SinglePartitionStages))
-
-  def local(): SparkSession = {
-    val s = builder().getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
-    s
-  }
 }

@@ -22,16 +22,16 @@ import org.apache.spark.sql.types.{BooleanType, DataType, Decimal, DecimalType, 
   * (codegen'd, allocation-free) and the exact DECIMAL(38,10) value is
   * materialized once per group. Every value a DECIMAL(28,10) can hold
   * splits exactly (|unscaled| < 10²⁸ → hi < 10¹⁰), and the two-long
-  * window covers |sum| < ~9.2·10²⁶ — ~10× narrower than DECIMAL(38,10),
-  * unreachable for this input domain, and GUARDED: the hi accumulator
-  * update is an overflow-checked add (`checkedHiAdd`), so an
-  * out-of-window sum throws like built-in Sum instead of wrapping.
-  * The aggregate's update and result expressions call `checkedHiAdd`
-  * and `combine` through a StaticInvoke; `QueryUtils` builds the
-  * per-row parse (`DecimalFast.unscaled18OrSentinel`) and the slow
-  * split (`slowHi18`/`slowLo18`) the same way.
+  * window covers |hi| within a long, |sum| < ~9.2·10²⁶ — ~10× narrower
+  * than DECIMAL(38,10), unreachable for this input domain, and guarded:
+  * the hi accumulator adds with Catalyst's exact (ANSI) add, so an
+  * out-of-window sum throws ARITHMETIC_OVERFLOW like built-in Sum
+  * instead of wrapping. The result expression calls `combine` through a
+  * StaticInvoke; `QueryUtils` builds the per-row parse
+  * (`DecimalFast.unscaled18OrSentinel`) and the slow split
+  * (`slowHi18`/`slowLo18`) the same way.
   * Equivalence to `sum(cast(c as DECIMAL(28,10)))` is
-  * property-proven in DecimalFastSpec (grouped, windowed, null and
+  * property-proven in SumScaledSpec (grouped, windowed, null and
   * slow-path inputs) and gated by the DuckDB oracle.
   */
 object DecimalSum {
@@ -61,28 +61,6 @@ object DecimalSum {
     DecimalFast.reference(d).toJavaBigDecimal.unscaledValue()
       .remainder(BaseBig).longValue()
 
-  /** Loud-failure bound for the hi accumulator: 9·10¹⁸ < 2⁶³ − 10¹⁰ − 1,
-    * so a sum that passed the check on one row cannot wrap on the next
-    * (per-row |inHi| < 10¹⁰, carry ±1) — the guard always fires before
-    * two's-complement wraparound can produce a plausible value. */
-  private val HiGuard = 9000000000000000000L
-
-  /** a + b with loud failure once the hi accumulator leaves the exact
-    * window: true two's-complement overflow is caught by the sign
-    * trick (required on the MERGE path, where both operands are
-    * partials up to the guard bound and a single add can wrap), and
-    * the guard band keeps the pre-wrap margin on the per-row update
-    * path. Throws like built-in Sum's decimal-overflow signal instead
-    * of silently wrapping (the two-long window is ~10× narrower than
-    * DECIMAL(38,10)'s). One add + two predictable compares per row. */
-  def checkedHiAdd(a: Long, b: Long): Long = {
-    val r = a + b
-    if (((a ^ r) & (b ^ r)) < 0 || r > HiGuard || r < -HiGuard)
-      throw new ArithmeticException(
-        "graft_sum128 overflow: |sum| exceeds the exact two-long window (~9e26)")
-    r
-  }
-
   /** (hi, lo) → the exact DECIMAL(38,10) value hi·10¹⁸ + lo. Compact
     * long-backed when hi carries nothing, so downstream casts stay on
     * Decimal's fast paths. */
@@ -104,8 +82,10 @@ object DecimalSum {
   * aggregation (partial per key → re-aggregate, q05/q10/q11) never
   * materializes intermediate decimals at all.
   *
-  * All arithmetic is EvalMode.LEGACY: the carry step keeps |slo| < 10¹⁸
-  * so no add here can overflow regardless of the session's ANSI mode.
+  * The lo half's arithmetic is EvalMode.LEGACY: the carry step keeps
+  * |slo| < 10¹⁸, so none of it can overflow. Both hi adds are
+  * EvalMode.ANSI (`Math.addExact`): on the merge path the incoming hi
+  * is a whole partial, so even its `+ carry` can wrap.
   */
 case class SumScaled128(
     hiExpr: Expression,
@@ -130,12 +110,6 @@ case class SumScaled128(
   override lazy val initialValues: Seq[Expression] =
     Seq(Literal(0L), Literal(0L), Literal(false))
 
-  private def legacyAdd(a: Expression, b: Expression) = Add(a, b, EvalMode.LEGACY)
-
-  /** `DecimalSum.<method>(a, b)` over two longs. */
-  private def longs(method: String, dataType: DataType, a: Expression, b: Expression) =
-    ColumnBridge.invoke(DecimalSum, method, dataType, Seq(a, b), Seq(LongType, LongType))
-
   /** One carry-normalized accumulation step. Preconditions: |curLo| <
     * 10¹⁸ (buffer invariant) and |inLo| ≤ 10¹⁸ (parser/normalized
     * bound), so |newLo| < 2·10¹⁸ < 2⁶³ and one borrow/carry restores
@@ -143,13 +117,11 @@ case class SumScaled128(
   private def step(curHi: Expression, curLo: Expression,
       inHi: Expression, inLo: Expression): Seq[Expression] = {
     val base = Literal(DecimalSum.Base)
-    val newLo = legacyAdd(curLo, inLo)
+    val newLo = Add(curLo, inLo, EvalMode.LEGACY)
     val carry = If(GreaterThanOrEqual(newLo, base), Literal(1L),
       If(LessThanOrEqual(newLo, Literal(-DecimalSum.Base)), Literal(-1L), Literal(0L)))
     Seq(
-      // guarded hi add: out-of-window |sum| throws instead of wrapping
-      // (inner add is safe: |inHi| is in-window on both paths, |carry| ≤ 1)
-      longs("checkedHiAdd", LongType, curHi, legacyAdd(inHi, carry)),
+      Add(curHi, Add(inHi, carry, EvalMode.ANSI), EvalMode.ANSI),
       Subtract(newLo, Multiply(carry, base, EvalMode.LEGACY), EvalMode.LEGACY))
   }
 
@@ -172,7 +144,8 @@ case class SumScaled128(
       if (emitStruct) {
         CreateNamedStruct(Seq(Literal("hi"), shi, Literal("lo"), slo))
       } else {
-        longs("combine", DecimalType(38, 10), shi, slo)
+        ColumnBridge.invoke(DecimalSum, "combine", DecimalType(38, 10), Seq(shi, slo),
+          Seq(LongType, LongType))
       },
       Literal.create(null, dataType))
 

@@ -96,10 +96,7 @@ object IvfAssign {
     val dim = centroids.head.length
     new GenericArrayData(centroids.map { c =>
       require(c.length == dim, "ragged codebook")
-      var s = 0.0
-      c.foreach(x => s += x * x)
-      val n = math.sqrt(s)
-      UnsafeArrayData.fromPrimitiveArray(c.map(x => if (n > 0) x / n else 0.0))
+      UnsafeArrayData.fromPrimitiveArray(CodebookKMeans.normalize(c))
     }.toArray[Any])
   }
 

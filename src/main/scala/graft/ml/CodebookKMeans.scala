@@ -24,7 +24,8 @@ object CodebookKMeans {
     s
   }
 
-  private def normalize(x: Array[Double]): Array[Double] = {
+  /** `x` scaled to unit length; all zeros when its norm is not > 0. */
+  def normalize(x: Array[Double]): Array[Double] = {
     val n = math.sqrt(dot(x, x))
     val out = new Array[Double](x.length)
     if (n > 0.0) {

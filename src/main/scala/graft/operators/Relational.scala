@@ -114,7 +114,7 @@ object Relational {
       .withColumn("v_rev", col("l_extendedprice") * (lit(1) - col("l_discount")))
       .transform(withExactParse("v_rev"))
       .groupBy("l_orderkey")
-      .agg(sumDecParts("v_rev").as("rev"))
+      .agg(sumDecParts("v_rev"))
     val o = Tables.orders(s, d)
       .filter(col("o_orderdate") >= to_timestamp(lit("1996-01-01")) &&
         col("o_orderdate") < to_timestamp(lit("1999-01-01")))
@@ -127,7 +127,7 @@ object Relational {
       .join(r, col("n_regionkey") === col("r_regionkey"))
       .groupBy("r_name", "n_name")
       .agg(
-        round(sumOfParts(col("rev")).cast(DoubleType), 4).as("revenue"),
+        round(sumOfParts("v_rev").cast(DoubleType), 4).as("revenue"),
         count(lit(1)).as("n_orders"))
       .orderBy(col("revenue").desc, col("n_name"))
   }
@@ -226,10 +226,10 @@ object Relational {
     Tables.orders(s, d)
       .transform(withExactParse("o_totalprice"))
       .groupBy("o_orderstatus", "o_orderpriority")
-      .agg(count(lit(1)).as("pn"), sumDecParts("o_totalprice").as("ps"))
+      .agg(count(lit(1)).as("pn"), sumDecParts("o_totalprice"))
       .rollup("o_orderstatus", "o_orderpriority")
       .agg(sum(col("pn")).as("n"),
-        round(sumOfParts(col("ps")).cast(DoubleType), 4).as("sum_price"))
+        round(sumOfParts("o_totalprice").cast(DoubleType), 4).as("sum_price"))
       .orderBy(asc_nulls_first("o_orderstatus"), asc_nulls_first("o_orderpriority"))
 
   val rollupOrdersSql: String =
@@ -246,10 +246,10 @@ object Relational {
       .withColumn("dow", dayofweek(col("ts")).cast(LongType))
       .transform(withExactParse("value"))
       .groupBy("event_type", "dow")
-      .agg(count(lit(1)).as("pn"), sumDecParts("value").as("ps"))
+      .agg(count(lit(1)).as("pn"), sumDecParts("value"))
       .cube("event_type", "dow")
       .agg(sum(col("pn")).as("n"),
-        round(sumOfParts(col("ps")).cast(DoubleType), 4).as("sum_value"))
+        round(sumOfParts("value").cast(DoubleType), 4).as("sum_value"))
       .orderBy(asc_nulls_first("event_type"), asc_nulls_first("dow"))
 
   val cubeEventsSql: String =

@@ -17,9 +17,9 @@ import org.scalatest.funsuite.AnyFunSuite
   * (no SQL oracle) must also repeat exactly, and in the same order at
   * any shuffle parallelism. Building a table or a query must
   * launch no Spark job (q37 trains its codebook in its own task). Where
-  * `python3` can import `duckdb` and `pandas`, every result is also
-  * replayed against its DuckDB oracle, as the correctness gate does
-  * (`graft.Verify` + `tools/check_oracle.py`).
+  * `python3` can import `duckdb` and `pandas`, every result at sf0.001,
+  * sf0.01 and sf0.1 is also replayed against its DuckDB oracle, as the
+  * correctness gate does (`graft.Verify` + `tools/check_oracle.py`).
   */
 class InventorySpec extends AnyFunSuite {
   private lazy val spark = TestSpark.spark
@@ -237,25 +237,41 @@ class InventorySpec extends AnyFunSuite {
     assert(queryJobs === SparkEntry.inventory.map(q => q.name -> 0).toMap)
   }
 
-  test("every query's sf0.001 result matches its DuckDB oracle") {
+  private def assumeOracle(): Unit =
     assume(Try(Seq("python3", "-c", "import duckdb, pandas").!).toOption.contains(0),
       "python3 with duckdb and pandas is needed to replay the oracle")
-    def replay(dir: String): (Int, String) = {
-      val log = new StringBuilder
-      val exit = Seq("python3", "tools/check_oracle.py", TestSpark.sfDir, dir)
-        .!(ProcessLogger(line => log.append(line).append('\n')))
-      (exit, log.toString)
-    }
+
+  /** `check_oracle.py`'s exit code and log over the `Verify` dump in `dir`. */
+  private def replay(sfDir: String, dir: String): (Int, String) = {
+    val log = new StringBuilder
+    val exit = Seq("python3", "tools/check_oracle.py", sfDir, dir)
+      .!(ProcessLogger(line => log.append(line).append('\n')))
+    (exit, log.toString)
+  }
+
+  test("every query's sf0.001 result matches its DuckDB oracle") {
+    assumeOracle()
     TestSpark.withTempDir { dir =>
       assert(Verify.dump(spark, TestSpark.sfDir, dir).isEmpty)
-      val (exit, log) = replay(dir)
+      val (exit, log) = replay(TestSpark.sfDir, dir)
       assert(exit === 0, log)
       // a query that failed inside Verify leaves no output: not a skip
       FileUtils.deleteDirectory(new java.io.File(s"$dir/q02_event_histogram"))
-      val (missingExit, missingLog) = replay(dir)
+      val (missingExit, missingLog) = replay(TestSpark.sfDir, dir)
       assert(missingExit === 1, missingLog)
       assert(missingLog.linesIterator.exists(l =>
         l.startsWith("q02_event_histogram") && l.contains("MISSING")), missingLog)
+    }
+  }
+
+  Seq("sf0.01" -> TestSpark.sf001Dir, "sf0.1" -> TestSpark.sf01Dir).foreach { case (label, sfDir) =>
+    test(s"every query's $label result matches its DuckDB oracle") {
+      assumeOracle()
+      TestSpark.withTempDir { dir =>
+        assert(Verify.dump(spark, sfDir, dir).isEmpty)
+        val (exit, log) = replay(sfDir, dir)
+        assert(exit === 0, log)
+      }
     }
   }
 }

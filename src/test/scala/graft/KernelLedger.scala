@@ -14,7 +14,9 @@ import org.apache.spark.sql.types.{DecimalType, LongType}
   *   Test/runMain graft.KernelLedger <sfDir> [pairs, default 11] [kernel,...]
   *
   * A run writes one spelling's column through Spark's `noop` sink over
-  * the `documents` texts repeated TextRepeat times, the `embeddings`
+  * the `documents` texts repeated TextRepeat times (the signature lines
+  * over each text's non-empty distinct 3-shingles or tokens, as q33 and
+  * q34 sign them), the `embeddings`
   * vectors repeated VectorRepeat times, or the `orders` prices or
   * `events` values repeated DecimalRepeat times, read from parquet on
   * each run, so every time includes the scan. The decimal lines time the
@@ -69,6 +71,9 @@ object KernelLedger {
     val toks = TextFunctions.tokens(text)
     val regexToks = tokensRegex(text)
     val noise = dropPunctuation(stripHashtags(stripMentions(stripUrls(text))))
+    val shingles = docs.select(array_distinct(TextFunctions.wordShingles(toks, 3)).as("sh"))
+      .filter(size(col("sh")) > 0)
+    val docToks = docs.select(array_distinct(toks).as("toks")).filter(size(col("toks")) > 0)
     val v = col("v")
     // (kernel, input, kernel column, built-in column)
     val ledger: Seq[(String, DataFrame, Column, Column)] = Seq(
@@ -80,6 +85,10 @@ object KernelLedger {
       ("markerCounts", docs, TextFunctions.markerCounts(text),
         array(TextFunctions.langMarkers.map(markerHits(text, _)): _*)),
       ("wordShingles", docs, TextFunctions.wordShingles(toks, 3), hofShingles(toks, 3)),
+      ("minhashSignature", shingles, TextFunctions.minhashSignature(col("sh")),
+        hofMinhash(col("sh"))),
+      ("simhashSignature", docToks, TextFunctions.simhashSignature(col("toks")),
+        hofSimhash(col("toks"))),
       ("dot", vecs, VectorFunctions.dot(v, v), hofDot(v, v)),
       ("unscaled18", prices, QueryUtils.unscaled18(col("o_totalprice")),
         ColumnBridge.column(UnscaledValue(ColumnBridge.expression(dec("o_totalprice"))))),

@@ -90,9 +90,9 @@ class SumScaledSpec extends AnyFunSuite {
       .withColumn("g2", col("g") % 5)
     val got = df.transform(QueryUtils.withExactParse("v"))
       .groupBy("g", "g2")
-      .agg(count(lit(1)).as("pn"), QueryUtils.sumDecParts("v").as("ps"))
+      .agg(count(lit(1)).as("pn"), QueryUtils.sumDecParts("v"))
       .rollup("g2")
-      .agg(sum(col("pn")).as("n"), round(QueryUtils.sumOfParts(col("ps")).cast("double"), 4).as("s"))
+      .agg(sum(col("pn")).as("n"), round(QueryUtils.sumOfParts("v").cast("double"), 4).as("s"))
       .orderBy(asc_nulls_first("g2"))
     val want = df
       .rollup("g2")
@@ -120,6 +120,11 @@ class SumScaledSpec extends AnyFunSuite {
     intercept[AnalysisException](parsedW.groupBy("g").agg(QueryUtils.sumDecParts("v")))
     intercept[AnalysisException](
       parsedW.withColumn("s", QueryUtils.sumDec("v").over(Window.partitionBy("g"))))
+    // nor do another column's parts re-sum as v's, or parts never aggregated
+    val partsW = parsedW.groupBy("g").agg(QueryUtils.sumDecParts("w"))
+    intercept[AnalysisException](partsW.agg(QueryUtils.sumOfParts("v")))
+    intercept[AnalysisException](
+      df.transform(QueryUtils.withExactParse("v")).agg(QueryUtils.sumOfParts("v")))
   }
 
   test("lo-carry torture: values pinned near the 10^18 unscaled bound") {
@@ -140,26 +145,36 @@ class SumScaledSpec extends AnyFunSuite {
   test("hi-guard torture: out-of-window sums fail loudly instead of wrapping") {
     import org.apache.spark.sql.graftbridge.{ColumnBridge, SumScaled128}
     import spark.implicits._
-    // scalar: the guard bound and true-wrap detection
-    assert(DecimalSum.checkedHiAdd(8999999999999999999L, 1L) === 9000000000000000000L)
-    assert(DecimalSum.checkedHiAdd(-8999999999999999999L, -1L) === -9000000000000000000L)
-    intercept[ArithmeticException](DecimalSum.checkedHiAdd(9000000000000000000L, 1L))
-    intercept[ArithmeticException](DecimalSum.checkedHiAdd(-9000000000000000000L, -1L))
-    // a single merge-path add that wraps clean past the band
-    intercept[ArithmeticException](DecimalSum.checkedHiAdd(8e18.toLong, 8e18.toLong))
-    // executor path: feed the aggregate raw (hi, lo) parts whose hi sum
-    // crosses the window (unreachable from real doubles in a test-sized
-    // corpus — |inHi| < 1e10 needs ~9e8 rows — so craft the parts)
-    def sumOf(his: Seq[Long]): Seq[org.apache.spark.sql.Row] = {
-      val df = his.map(h => (h, 0L)).toDF("hi", "lo")
+    // feed the aggregate raw (hi, lo) parts whose hi sum reaches the
+    // window's edge (unreachable from real doubles in a test-sized
+    // corpus — |inHi| < 1e10 needs ~9e8 rows — so craft the parts),
+    // in `partitions` partitions, each summed on its own and then merged
+    def sumOf(his: Seq[Long], partitions: Int = 1): java.math.BigDecimal = {
+      val df = spark.sparkContext.parallelize(his.map(h => (h, 0L)), partitions).toDF("hi", "lo")
       val agg = ColumnBridge.column(SumScaled128(
         ColumnBridge.expression(col("hi")),
         ColumnBridge.expression(col("lo"))).toAggregateExpression())
-      df.agg(agg.as("s")).collect().toSeq
+      df.agg(agg.as("s")).head().getDecimal(0)
     }
-    assert(sumOf(Seq(4000000000000000000L, 4000000000000000000L)).nonEmpty) // 8e18: in window
-    val e = intercept[org.apache.spark.SparkException](
-      sumOf(Seq(4000000000000000000L, 4000000000000000000L, 4000000000000000000L)))
-    assert(e.getCause.toString.contains("graft_sum128 overflow"), e.toString)
+    def overflows(thunk: => Any): Unit = {
+      val e = intercept[Exception](thunk)
+      val chain = Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null).toSeq
+      assert(chain.exists {
+        case a: ArithmeticException => a.getMessage.contains("ARITHMETIC_OVERFLOW")
+        case _ => false
+      }, e.toString)
+    }
+    val base = java.math.BigDecimal.valueOf(DecimalSum.Base).scaleByPowerOfTen(-10)
+    // 9.2e18 is past the former 9e18 guard band and inside a long
+    assert(sumOf(Seq(4600000000000000000L, 4600000000000000000L))
+      .compareTo(base.multiply(java.math.BigDecimal.valueOf(9200000000000000000L))) == 0)
+    assert(sumOf(Seq(-4600000000000000000L, -4600000000000000000L))
+      .compareTo(base.multiply(java.math.BigDecimal.valueOf(-9200000000000000000L))) == 0)
+    overflows(sumOf(Seq(4000000000000000000L, 4000000000000000000L, 4000000000000000000L)))
+    overflows(sumOf(Seq(-4000000000000000000L, -4000000000000000000L, -4000000000000000000L)))
+    // merge path: each partition's partial fits, their total does not
+    val halves = Seq(4600000000000000000L, 4600000000000000000L)
+    assert(sumOf(halves, partitions = 2).signum() == 1)
+    overflows(sumOf(halves ++ halves, partitions = 2))
   }
 }

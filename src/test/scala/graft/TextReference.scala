@@ -3,6 +3,7 @@ package graft
 import graft.functions.TextFunctions.{asciiPunctuation, nonWsClass, qualityStopwords, wsClass}
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftbridge.SignatureUtil
 
 /** The built-in spellings the kernels replaced, kept as the references
   * the specs compare the kernels against and `KernelLedger` times them
@@ -59,4 +60,29 @@ object TextReference {
     * NULL element. */
   def hofDot(a: Column, b: Column): Column =
     aggregate(zip_with(a, b, (x, y) => x * y), lit(0.0), (acc, x) => acc + x)
+
+  /** MinHash signature of a non-empty shingle array as the per-row
+    * higher-order-function spelling of `TextFunctions.minhashSignature`:
+    * slot i is the least pmod(As[i]·pmod(hash(s), p) + Bs[i], p) over the
+    * shingles s. */
+  def hofMinhash(sh: Column): Column = {
+    val p = lit(SignatureUtil.Prime)
+    val as = typedLit(SignatureUtil.As.toSeq)
+    val bs = typedLit(SignatureUtil.Bs.toSeq)
+    transform(sequence(lit(0), lit(SignatureUtil.MinhashFuncs - 1)), i =>
+      array_min(transform(sh, s =>
+        pmod(as.getItem(i) * pmod(hash(s).cast("long"), p) + bs.getItem(i), p))))
+  }
+
+  /** 64-bit SimHash of a token array as the per-row higher-order-function
+    * spelling of `TextFunctions.simhashSignature`: bit i is set iff the
+    * tokens' xxhash64 values have bit i set more often than not. */
+  def hofSimhash(toks: Column): Column = {
+    val hs = transform(toks, t => xxhash64(t))
+    aggregate(sequence(lit(0), lit(63)), lit(0L), (sig, i) => {
+      val votes = aggregate(hs, lit(0), (n, h) =>
+        n + when(call_function("shiftright", h, i).bitwiseAND(1L) === 1L, 1).otherwise(-1))
+      sig.bitwiseOR(when(votes > 0, call_function("shiftleft", lit(1L), i)).otherwise(0L))
+    })
+  }
 }
