@@ -19,7 +19,8 @@ final case class GQuery(
 object QueryUtils {
   import org.apache.spark.sql.catalyst.expressions.{EqualTo, Expression, If, Literal}
   import org.apache.spark.sql.catalyst.expressions.aggregate.CollectTopK
-  import org.apache.spark.sql.graftbridge._
+  import graft.functions.{DecimalFast, DecimalSum, SumScaled128}
+  import org.apache.spark.sql.graftbridge.ColumnBridge
   import org.apache.spark.sql.types.{DoubleType, LongType}
 
   /** `obj.<method>(d)` for a double argument, as a long. */

@@ -1,8 +1,9 @@
-package org.apache.spark.sql.graftbridge
+package graft.functions
 
 import org.apache.spark.sql.catalyst.expressions.{Add, AttributeReference, CreateNamedStruct, EvalMode, Expression, GreaterThanOrEqual, If, IsNotNull, LessThanOrEqual, Literal, Multiply, Or, Subtract}
 import org.apache.spark.sql.catalyst.expressions.aggregate.DeclarativeAggregate
 import org.apache.spark.sql.catalyst.trees.BinaryLike
+import org.apache.spark.sql.graftbridge.ColumnBridge
 import org.apache.spark.sql.types.{BooleanType, DataType, Decimal, DecimalType, LongType, StructField, StructType}
 
 /** Exact decimal-sum kernel over a pair of longs.

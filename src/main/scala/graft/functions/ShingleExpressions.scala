@@ -1,4 +1,4 @@
-package org.apache.spark.sql.graftbridge
+package graft.functions
 
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.unsafe.types.UTF8String

@@ -1,8 +1,8 @@
-package org.apache.spark.sql.graftbridge
+package graft.functions
 
-import org.apache.spark.sql.catalyst.expressions.{Expression, Murmur3HashFunction, UnsafeArrayData, XxHash64Function}
+import org.apache.spark.sql.catalyst.expressions.{Murmur3HashFunction, UnsafeArrayData, XxHash64Function}
 import org.apache.spark.sql.catalyst.util.ArrayData
-import org.apache.spark.sql.types.{ArrayType, LongType, StringType}
+import org.apache.spark.sql.types.StringType
 
 /** Per-document signature kernels for the near-dup operators.
   *
@@ -13,8 +13,8 @@ import org.apache.spark.sql.types.{ArrayType, LongType, StringType}
   * and pays a doc-keyed exchange — a corpus-wide shuffle at scale for
   * what is semantically a map. These kernels compute the identical
   * signature in one loop per row, called from generated code through
-  * a StaticInvoke (MinHashSigExpr, SimHash64Expr below), so the
-  * signature stage becomes scan → project with NO shuffle at any
+  * a StaticInvoke (MinHashSigExpr, SimHash64Expr in ColumnBridge.scala),
+  * so the signature stage becomes scan → project with NO shuffle at any
   * scale.
   *
   * Hash parity: the per-element hashes call the same
@@ -91,18 +91,4 @@ object SignatureUtil {
     }
     sig
   }
-}
-
-/** array<string> shingles → array<long>(32) MinHash signature
-  * (SignatureUtil.minhash). */
-object MinHashSigExpr {
-  def apply(child: Expression): Expression =
-    ColumnBridge.invoke(SignatureUtil, "minhash", ArrayType(LongType, containsNull = false),
-      Seq(child), Seq(ArrayType(StringType)))
-}
-
-/** array<string> tokens → 64-bit SimHash signature (SignatureUtil.simhash). */
-object SimHash64Expr {
-  def apply(child: Expression): Expression =
-    ColumnBridge.invoke(SignatureUtil, "simhash", LongType, Seq(child), Seq(ArrayType(StringType)))
 }

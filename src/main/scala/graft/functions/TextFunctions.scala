@@ -3,7 +3,7 @@ package graft.functions
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.catalyst.expressions.Literal
-import org.apache.spark.sql.graftbridge.{ColumnBridge, MinHashSigExpr, ShingleUtil, SignatureUtil, SimHash64Expr, TextKernelUtil}
+import org.apache.spark.sql.graftbridge.{ColumnBridge, MinHashSigExpr, SimHash64Expr}
 import org.apache.spark.sql.types.{ArrayType, DataType, IntegerType, LongType, StringType}
 
 /** Column-level text kernels: Spark-first re-expressions of the

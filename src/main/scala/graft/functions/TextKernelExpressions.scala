@@ -1,6 +1,5 @@
-package org.apache.spark.sql.graftbridge
+package graft.functions
 
-import graft.functions.TextFunctions
 import org.apache.spark.sql.catalyst.expressions.UnsafeArrayData
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.unsafe.Platform

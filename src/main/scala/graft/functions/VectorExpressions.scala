@@ -1,76 +1,43 @@
-// Nested under org.apache.spark.sql because ImplicitCastInputTypes'
-// signature mentions the private[sql] AbstractDataType.
-package org.apache.spark.sql.graftbridge
+package graft.functions
 
 import graft.ml.CodebookKMeans
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, ImplicitCastInputTypes, Literal, UnsafeArrayData}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
+import org.apache.spark.sql.catalyst.expressions.UnsafeArrayData
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
-import org.apache.spark.sql.types.{AbstractDataType, ArrayType, DataType, DoubleType, IntegerType, LongType}
+import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType}
 import org.apache.spark.unsafe.bitset.BitSetMethods
 
-/** Codegen'd dot product over two array<double> columns, run once per
-  * candidate PAIR in q35–q37: the higher-order-function spelling
-  * (`aggregate(zip_with(a, b, _*_), 0.0, _+_)`) is CodegenFallback, an
-  * interpreted Invoke per element, and `KernelLedger` times it ~5× slower.
-  *
-  * The fold runs in index order with a plain `+=` on equal-length
-  * inputs, exactly the arithmetic sequence of the HOF spelling, so
-  * results match it bit-for-bit there (oracle parity keeps holding at
-  * round(…, 4)). On UNEQUAL lengths (`zip_with` null-pads the short
-  * side) or a NULL element, the HOF spelling's product and sum are null,
-  * and so is this expression's — a silent min-length truncation or a
-  * NULL read as 0.0 would turn a malformed embedding into a plausible
-  * number.
+/** Vector kernels over array<double> values, called from generated code
+  * through a StaticInvoke (`VectorFunctions.dot`).
   */
-case class DotProductExpr(left: Expression, right: Expression)
-    extends BinaryExpression with ImplicitCastInputTypes {
-
-  override def inputTypes: Seq[AbstractDataType] =
-    Seq(ArrayType(DoubleType), ArrayType(DoubleType))
-
-  override def dataType: DataType = DoubleType
-
-  override def nullable: Boolean = true
-
-  override def prettyName: String = "graft_dot"
-
-  override protected def nullSafeEval(a: Any, b: Any): Any = {
-    val x = a.asInstanceOf[ArrayData]
-    val y = b.asInstanceOf[ArrayData]
+object VectorKernel {
+  /** The dot product, run once per candidate PAIR in q35–q37: the
+    * higher-order-function spelling (`aggregate(zip_with(a, b, _*_),
+    * 0.0, _+_)`) is CodegenFallback, an interpreted Invoke per element,
+    * and `KernelLedger` times it about 2.6× slower.
+    *
+    * The fold runs in index order with a plain `+=` on equal-length
+    * inputs, exactly the arithmetic sequence of the HOF spelling, so
+    * results match it bit-for-bit there (oracle parity keeps holding at
+    * round(…, 4)). On UNEQUAL lengths (`zip_with` null-pads the short
+    * side) or a NULL element, the HOF spelling's product and sum are
+    * null, and so is this kernel's (boxed) result — a silent min-length
+    * truncation or a NULL read as 0.0 would turn a malformed embedding
+    * into a plausible number. */
+  def dot(x: ArrayData, y: ArrayData): java.lang.Double = {
     val n = x.numElements()
-    if (n != y.numElements() || NullElements.any(x) || NullElements.any(y)) return null
+    if (n != y.numElements() || hasNull(x) || hasNull(y)) return null
     var s = 0.0
     var i = 0
     while (i < n) { s += x.getDouble(i) * y.getDouble(i); i += 1 }
     s
   }
 
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (a, b) => {
-      val Seq(n, i, s) = Seq("n", "i", "s").map(ctx.freshName)
-      val any = NullElements.getClass.getName.stripSuffix("$") + ".any"
-      s"""
-         |int $n = $a.numElements();
-         |${ev.isNull} = $n != $b.numElements() || $any($a) || $any($b);
-         |double $s = 0.0;
-         |for (int $i = 0; !${ev.isNull} && $i < $n; $i++) $s += $a.getDouble($i) * $b.getDouble($i);
-         |${ev.value} = $s;
-       """.stripMargin
-    })
-
-  override protected def withNewChildrenInternal(
-      newLeft: Expression, newRight: Expression): Expression =
-    copy(left = newLeft, right = newRight)
-}
-
-/** Whether an array holds a NULL element: one read per 64 elements of an
-  * UnsafeArrayData, whose NULL bits follow its 8-byte element count. */
-object NullElements {
-  def any(x: ArrayData): Boolean = x match {
+  /** Whether an array holds a NULL element: one read per 64 elements of
+    * an UnsafeArrayData, whose NULL bits follow its 8-byte element count. */
+  def hasNull(x: ArrayData): Boolean = x match {
     case u: UnsafeArrayData =>
-      BitSetMethods.anySet(u.getBaseObject, u.getBaseOffset + 8, (u.numElements + 63) / 64)
-    case _ => (0 until x.numElements).exists(x.isNullAt)
+      BitSetMethods.anySet(u.getBaseObject, u.getBaseOffset + 8, (u.numElements() + 63) / 64)
+    case _ => (0 until x.numElements()).exists(x.isNullAt)
   }
 }
 
@@ -117,7 +84,7 @@ object IvfAssign {
   def topBuckets(v: ArrayData, code: ArrayData, top: Int): ArrayData = {
     val k = code.numElements()
     require(top >= 1 && top <= k, s"top=$top outside 1..$k")
-    if (v == null || code.getArray(0).numElements() != v.numElements() || NullElements.any(v)) {
+    if (v == null || code.getArray(0).numElements() != v.numElements() || VectorKernel.hasNull(v)) {
       return new GenericArrayData(Array.empty[Any])
     }
     val x = v.toDoubleArray()
@@ -148,17 +115,4 @@ object IvfAssign {
     }
     UnsafeArrayData.fromPrimitiveArray(out)
   }
-}
-
-/** array<double> → array<long>: the vector's `top` nearest codebook
-  * centroid ids (IvfAssign.topBuckets), against a codebook column or
-  * a literal one. */
-object IvfTopBucketsExpr {
-  def apply(child: Expression, codebook: Expression, top: Int): Expression =
-    ColumnBridge.invoke(IvfAssign, "topBuckets", ArrayType(LongType, containsNull = false),
-      Seq(child, codebook, Literal(top)),
-      Seq(ArrayType(DoubleType), IvfAssign.CodebookType, IntegerType), propagateNull = false)
-
-  def apply(child: Expression, centroids: Seq[Seq[Double]], top: Int): Expression =
-    apply(child, Literal(IvfAssign.codebook(centroids.map(_.toArray)), IvfAssign.CodebookType), top)
 }

@@ -3,12 +3,12 @@ package graft.functions
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.expressions.Literal
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.graftbridge.{ColumnBridge, DotProductExpr, IvfAssign, IvfTopBucketsExpr}
+import org.apache.spark.sql.graftbridge.{ColumnBridge, IvfTopBucketsExpr}
 import org.apache.spark.sql.types.{ArrayType, DoubleType, IntegerType}
 
 /** Dense-vector math over Array[Float]/Array[Double] columns. The dot
-  * product is a custom codegen'd Catalyst expression (DotProductExpr);
-  * the IVF codebook kernels are static methods (IvfAssign).
+  * product (VectorKernel) and the IVF codebook kernels (IvfAssign) are
+  * static methods that generated code calls through a StaticInvoke.
   * Element folds run in index order, which keeps double arithmetic
   * bit-deterministic across runs and engines.
   *
@@ -24,10 +24,12 @@ object VectorFunctions {
     * spelling is interpreted CodegenFallback. */
   def toDoubleArray(c: Column): Column = c.cast(ArrayType(DoubleType))
 
-  /** Codegen'd dot product (index-ordered fold, bit-deterministic). */
+  /** Dot product (`VectorKernel.dot`: index-ordered fold,
+    * bit-deterministic), NULL for unequal lengths or a NULL element. */
   def dot(a: Column, b: Column): Column =
-    ColumnBridge.column(
-      DotProductExpr(ColumnBridge.expression(a), ColumnBridge.expression(b)))
+    ColumnBridge.column(ColumnBridge.invoke(VectorKernel, "dot", DoubleType,
+      Seq(ColumnBridge.expression(a), ColumnBridge.expression(b)),
+      Seq(ArrayType(DoubleType), ArrayType(DoubleType)), returnNullable = true))
 
   def norm2(a: Column): Column = sqrt(dot(a, a))
 

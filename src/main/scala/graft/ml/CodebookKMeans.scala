@@ -25,7 +25,7 @@ object CodebookKMeans {
   }
 
   /** `x` scaled to unit length; all zeros when its norm is not > 0. */
-  def normalize(x: Array[Double]): Array[Double] = {
+  private[graft] def normalize(x: Array[Double]): Array[Double] = {
     val n = math.sqrt(dot(x, x))
     val out = new Array[Double](x.length)
     if (n > 0.0) {

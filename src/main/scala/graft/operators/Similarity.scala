@@ -22,10 +22,11 @@ import org.apache.spark.sql.types.LongType
   *  - near-dup pairs are blocked by `label` (any cheap blocking key)
   *    to avoid the quadratic cross join.
   *
-  * Per-pair scoring is one codegen'd dot (DotProductExpr); vector
+  * Per-pair scoring is one dot (`VectorFunctions.dot`); vector
   * norms are computed once per ROW before any join, never per pair.
   * `dot/(nrm_a*nrm_b)` is arithmetically identical to the cosine the
-  * oracle computes, so round(…,4) parity is unaffected.
+  * oracle computes, so round(…,4) parity is unaffected, except that a
+  * zero vector's cosine is NULL here and -1.0 in DuckDB (see `withNorm`).
   */
 object Similarity {
 
@@ -37,10 +38,12 @@ object Similarity {
   private val MaxVecId = 2000L
 
   /** (vec_id, label, v, nrm): doubles + the per-row L2 norm, the shape
-    * every similarity join here consumes. */
+    * every similarity join here consumes. A zero norm is NULL, so a
+    * zero vector's cosine is NULL rather than a 0/0 division. */
   private def withNorm(s: SparkSession, d: String): DataFrame = {
     val v = toDoubleArray(col("embedding"))
-    Tables.embeddings(s, d).select(col("vec_id"), col("label"), v.as("v"), norm2(v).as("nrm"))
+    Tables.embeddings(s, d).select(col("vec_id"), col("label"), v.as("v"),
+      nullif(norm2(v), lit(0.0)).as("nrm"))
   }
 
   /** A query vector of `withNorm` as a probe struct (q_id, qv, qn). */
@@ -128,8 +131,8 @@ object Similarity {
     *  - `sample`: the CodebookSampleN vectors smallest by
     *    (xxhash64(vec_id) mod 2²⁰, vec_id), as (h, vec_id, v) structs in
     *    that order. A seeded pseudo-random, scale-stable choice; a vector
-    *    whose norm is NULL (a NULL vector or one holding a NULL element,
-    *    under `dot`'s rule) is left out;
+    *    whose norm is NULL (a NULL or zero vector, or one holding a NULL
+    *    element, under `dot`'s rule) is left out;
     *  - `code`: the codebook trained on the sample (deterministic
     *    spherical k-means, graft.ml.CodebookKMeans, through
     *    `IvfAssign.train`);

@@ -1,8 +1,9 @@
 package graft
 
+import graft.functions.{DecimalFast, DecimalSum}
 import org.apache.spark.sql.catalyst.expressions.UnscaledValue
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.graftbridge.{ColumnBridge, DecimalFast, DecimalSum}
+import org.apache.spark.sql.graftbridge.ColumnBridge
 import org.apache.spark.sql.types.{Decimal, DecimalType}
 import org.scalatest.funsuite.AnyFunSuite
 

@@ -91,7 +91,7 @@ class DedupSpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
 
   test("MinHash kernel signatures equal the explode+min aggregate spelling") {
     import graft.functions.TextFunctions._
-    import org.apache.spark.sql.graftbridge.SignatureUtil
+    import graft.functions.SignatureUtil
     val p = SignatureUtil.Prime
     val sh = core.Tables.documents(spark, sf)
       .filter(col("doc_id") < Dedup.MaxDocId)

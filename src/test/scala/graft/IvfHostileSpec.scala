@@ -9,23 +9,25 @@ import org.scalatest.funsuite.AnyFunSuite
 
 /** q37 on hostile `embeddings` tables written to a temp dir with the
   * declared schema: fewer vectors than the codebook's 8 centroids,
-  * fewer than its 512-vector sample, NULL embeddings and embeddings
-  * holding a NULL element. The vectors are seeded 4-d Gaussians; ids
-  * below 10 are q37's probes. Tiny files always pass
-  * `SinglePartitionStages`' size gate, so nothing here asserts plan
-  * shape.
+  * fewer than its 512-vector sample, NULL embeddings, embeddings
+  * holding a NULL element, and (for q35–q37) a zero embedding. The
+  * vectors are seeded 4-d Gaussians; ids below 10 are the probes.
+  * Tiny files always pass `SinglePartitionStages`' size gate, so
+  * nothing here asserts plan shape.
   */
 class IvfHostileSpec extends AnyFunSuite {
   private lazy val spark = TestSpark.spark
 
   /** `n` vectors with ids 0 until n, each NULL where `nulls` holds its
-    * id, and with a NULL second element where `nullElements` does. */
-  private def vectors(n: Int, nulls: Set[Long] = Set.empty,
-      nullElements: Set[Long] = Set.empty): Seq[(Long, Seq[java.lang.Float])] = {
+    * id, with a NULL second element where `nullElements` does, and all
+    * zeros where `zeros` does. */
+  private def vectors(n: Int, nulls: Set[Long] = Set.empty, nullElements: Set[Long] = Set.empty,
+      zeros: Set[Long] = Set.empty): Seq[(Long, Seq[java.lang.Float])] = {
     val rnd = new scala.util.Random(7)
     (0L until n.toLong).map { id =>
       val v = Seq.fill(4)(Float.box(rnd.nextGaussian().toFloat))
-      id -> (if (nulls(id)) null else if (nullElements(id)) v.updated(1, null) else v)
+      id -> (if (nulls(id)) null else if (nullElements(id)) v.updated(1, null)
+        else if (zeros(id)) v.map(_ => Float.box(0f)) else v)
     }
   }
 
@@ -85,6 +87,27 @@ class IvfHostileSpec extends AnyFunSuite {
       val got = pairs(dir)
       assert(got.nonEmpty)
       assert(got.forall { case (q, c) => q != 4L && c != 40L }, got)
+    }
+  }
+
+  test("a zero embedding has a NULL cosine: in no q36 pair, not in q37's sample, ranked last") {
+    // its cosine was 0.0 / 0.0, which threw DIVIDE_BY_ZERO under ANSI in
+    // all three queries; 4 candidates put it in every probe's top 5 in q35
+    withEmbeddings(vectors(14, zeros = Set(12L))) { dir =>
+      val knn = Similarity.knnBruteForce(spark, dir).collect().toSeq
+      val zeroRows = knn.filter(_.getLong(2) == 12L)
+      assert(zeroRows.map(_.getLong(0)) === (0L until 10L))
+      assert(zeroRows.forall(r => r.isNullAt(3) && r.getLong(1) == 4L), zeroRows)
+      assert(knn.filter(_.getLong(2) != 12L).forall(!_.isNullAt(3)))
+
+      val nearDup = Similarity.embeddingNearDup(spark, dir).collect().toSeq
+      assert(nearDup.nonEmpty)
+      assert(nearDup.forall(r => r.getLong(0) != 12L && r.getLong(1) != 12L), nearDup)
+
+      assert(sampleIds(dir).sorted === (0L until 14L).filter(_ != 12L))
+      val ann = Similarity.annIvf(spark, dir).collect().toSeq
+      assert(ann.nonEmpty)
+      assert(ann.forall(r => r.isNullAt(3) == (r.getLong(2) == 12L)), ann)
     }
   }
 }

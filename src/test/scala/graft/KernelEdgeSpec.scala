@@ -2,24 +2,25 @@ package graft
 
 import scala.jdk.CollectionConverters._
 import graft.core.QueryUtils
-import graft.functions.{TextFunctions, VectorFunctions}
+import graft.functions.{SignatureUtil, TextFunctions, VectorFunctions}
 import org.apache.spark.sql.{Column, Row}
 import org.apache.spark.sql.catalyst.expressions.{Murmur3HashFunction, XxHash64Function}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.graftbridge.{ColumnBridge, IvfTopBucketsExpr, SignatureUtil}
+import org.apache.spark.sql.graftbridge.{ColumnBridge, IvfTopBucketsExpr}
 import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, StringType, StructField, StructType}
 import org.apache.spark.unsafe.types.UTF8String
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Edge inputs through every text, signature, vector and decimal kernel
-  * of `graftbridge`: NULL, empty and all-whitespace text, each ASCII
+  * of `graft.functions`: NULL, empty and all-whitespace text, each ASCII
   * byte between two words, marker words at the string's ends, longer
   * than 7 bytes or `_`-joined, token arrays shorter than the shingle
   * size, NULL array elements, NULL vectors, vectors with a NULL
   * element or of another dimension than the codebook's, and the
   * doubles that the decimal fast parse hands to its slow path. Every
   * case runs twice, through generated code and interpreted, and must
-  * give the pinned value both times.
+  * give the pinned value both times; both modes call the one kernel
+  * method, through StaticInvoke's generated call or its reflection.
   */
 class KernelEdgeSpec extends AnyFunSuite {
   private lazy val spark = TestSpark.spark

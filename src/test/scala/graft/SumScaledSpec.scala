@@ -1,10 +1,10 @@
 package graft
 
 import graft.core.QueryUtils
+import graft.functions.DecimalSum
 import org.apache.spark.sql.{AnalysisException, Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.graftbridge.DecimalSum
 import org.apache.spark.sql.types.DecimalType
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -52,7 +52,7 @@ class SumScaledSpec extends AnyFunSuite {
     val cases = Seq(0.0, -0.0, 1.5, -1.5, 99999999.99, -99999999.99,
       1.23e10, -1.23e10, 4.9e-12, 123456789012345.678)
     cases.foreach { d =>
-      val u = org.apache.spark.sql.graftbridge.DecimalFast.unscaled18OrSentinel(d)
+      val u = graft.functions.DecimalFast.unscaled18OrSentinel(d)
       val (hi, lo) =
         if (u == DecimalSum.Sentinel) (DecimalSum.slowHi18(d), DecimalSum.slowLo18(d))
         else (0L, u)
@@ -143,7 +143,8 @@ class SumScaledSpec extends AnyFunSuite {
   }
 
   test("hi-guard torture: out-of-window sums fail loudly instead of wrapping") {
-    import org.apache.spark.sql.graftbridge.{ColumnBridge, SumScaled128}
+    import graft.functions.SumScaled128
+    import org.apache.spark.sql.graftbridge.ColumnBridge
     import spark.implicits._
     // feed the aggregate raw (hi, lo) parts whose hi sum reaches the
     // window's edge (unreachable from real doubles in a test-sized

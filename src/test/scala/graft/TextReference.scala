@@ -1,9 +1,9 @@
 package graft
 
+import graft.functions.SignatureUtil
 import graft.functions.TextFunctions.{asciiPunctuation, nonWsClass, qualityStopwords, wsClass}
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.graftbridge.SignatureUtil
 
 /** The built-in spellings the kernels replaced, kept as the references
   * the specs compare the kernels against and `KernelLedger` times them
