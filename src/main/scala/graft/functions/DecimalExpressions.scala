@@ -31,11 +31,11 @@ object DecimalFast {
       s"$d cannot be represented as Decimal($Precision, $Scale)")
   }
 
-  /** The parse, surfaced as a bare unscaled long for the two-long sum
-    * kernel (DecimalSum): returns unscaled(Cast(d → DECIMAL(28,10)))
+  /** The parse, surfaced as a bare unscaled long for the exact sums'
+    * digit split (`QueryUtils.sumDec`, `DecimalSum`): returns unscaled(Cast(d → DECIMAL(28,10)))
     * with |u| ≤ 10¹⁸ guaranteed, or Long.MinValue outside the one-long
     * window or when d is not finite (|d| ≥ 10⁸, NaN, ±Inf), where the
-    * caller must take the exact slow split.
+    * caller must take the exact slow split (`DecimalSum.slowDigit`).
     *
     * Two tiers. The integer tier decides U = halfUp(V·10¹⁰) — where
     * V is the shortest-decimal (Double.toString) value the Cast

@@ -322,7 +322,7 @@ object Relational {
     Tables.orders(s, d)
       .transform(withExactParse("o_totalprice"))
       .withColumn("cust_avg",
-        round(sumDec("o_totalprice").over(w).cast(DoubleType) / count(lit(1)).over(w), 6))
+        round(sumDec("o_totalprice", w).cast(DoubleType) / count(lit(1)).over(w), 6))
       .filter(col("o_totalprice") > col("cust_avg"))
       .select("o_orderkey", "o_custkey", "o_totalprice", "cust_avg")
       .orderBy("o_orderkey")

@@ -113,7 +113,7 @@ object WindowQueries {
       .withColumn("idx", row_number().over(byUser).cast(LongType))
       .transform(withExactParse("value"))
       .withColumn("cum_value",
-        round(sumDec("value").over(byUser.rowsBetween(Window.unboundedPreceding, 0))
+        round(sumDec("value", byUser.rowsBetween(Window.unboundedPreceding, 0))
           .cast(DoubleType), 4))
       .select("user_id", "idx", "event_id", "ts_us", "cum_value")
       .orderBy("user_id", "idx")

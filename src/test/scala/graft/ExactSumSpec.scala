@@ -8,16 +8,18 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DecimalType
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Proves the two-long SumScaled128 aggregate (QueryUtils.sumDec /
-  * sumDecParts / sumOfParts) is bit-identical to the reference
-  * spelling `sum(cast(c AS DECIMAL(28,10)))` — grouped, two-level
-  * (struct partials re-aggregated, incl. through ROLLUP's Expand),
-  * and windowed — across seeded random corpora that exercise the
-  * carry step, negative values, nulls, all-null groups and the
-  * slow (sentinel) path. Also unit-proves the carry-step invariant
-  * arithmetic on the scalar helpers.
+/** Proves the exact sum (QueryUtils.sumDec / sumDecParts /
+  * sumOfParts: Spark's long `sum` of each base-2³⁰ digit of the
+  * scale-10 unscaled value, rebuilt by `DecimalSum.combine`) is
+  * bit-identical to the reference spelling `sum(cast(c AS
+  * DECIMAL(28,10)))` — grouped, two-level (struct partials
+  * re-aggregated, incl. through ROLLUP's Expand), and windowed —
+  * across seeded random corpora with negative values, nulls, all-null
+  * groups and the slow (sentinel) path, up to DECIMAL(28,10)'s edge.
+  * Also unit-proves the digit split and its recombination, and that a
+  * digit sum leaving a long throws instead of wrapping.
   */
-class SumScaledSpec extends AnyFunSuite {
+class ExactSumSpec extends AnyFunSuite {
   private lazy val spark = TestSpark.spark
 
   private def refSum(c: Column): Column =
@@ -48,18 +50,28 @@ class SumScaledSpec extends AnyFunSuite {
     spark.createDataFrame(data ++ allNull).toDF("id", "g", "v")
   }
 
-  test("carry-step scalar helpers split and recombine exactly") {
-    val cases = Seq(0.0, -0.0, 1.5, -1.5, 99999999.99, -99999999.99,
-      1.23e10, -1.23e10, 4.9e-12, 123456789012345.678)
+  test("digits split and combine exactly, both signs, up to DECIMAL(28,10)'s edge") {
+    val edge = Math.nextDown(1e18) // just under DECIMAL(28,10)'s edge: digit 2 ≈ 8.7·10⁹
+    val cases = Seq(0.0, -0.0, 1.5, -1.5, 99999999.99, -99999999.99, 1e8, -1e8,
+      1.23e10, -1.23e10, 4.9e-12, 123456789012345.678, -123456789012345.678, 9.99e17, -9.99e17,
+      edge, -edge)
+    val mask = DecimalSum.DigitMask
     cases.foreach { d =>
       val u = graft.functions.DecimalFast.unscaled18OrSentinel(d)
-      val (hi, lo) =
-        if (u == DecimalSum.Sentinel) (DecimalSum.slowHi18(d), DecimalSum.slowLo18(d))
-        else (0L, u)
+      val ps =
+        if (u == DecimalSum.Sentinel) (0 to 2).map(DecimalSum.slowDigit(d, _))
+        else Seq(u & mask, (u >> 30) & mask, u >> 60)
+      assert(ps.take(2).forall(p => p >= 0 && p <= mask), s"d=$d digits=$ps")
       val expect = DecimalFastSpec.toDec2810(d).toJavaBigDecimal
-      val got = DecimalSum.combine(hi, lo).toJavaBigDecimal
-      assert(got.compareTo(expect) == 0, s"d=$d hi=$hi lo=$lo got=$got expect=$expect")
+      val got = DecimalSum.combine(ps(0), ps(1), ps(2)).toJavaBigDecimal
+      assert(got.compareTo(expect) == 0, s"d=$d digits=$ps got=$got expect=$expect")
+      // n equal values sum to n times the value, carries and all
+      val n = 7L
+      val sumN = DecimalSum.combine(n * ps(0), n * ps(1), n * ps(2)).toJavaBigDecimal
+      assert(sumN.compareTo(expect.multiply(java.math.BigDecimal.valueOf(n))) == 0, s"d=$d")
     }
+    assert(math.abs(DecimalSum.slowDigit(edge, 2)) > 8000000000L)
+    assert(DecimalSum.slowDigit(-edge, 2) < 0)
   }
 
   test("grouped sumDec equals built-in Sum over the decimal cast") {
@@ -105,7 +117,7 @@ class SumScaledSpec extends AnyFunSuite {
     val df = corpus(seed = 31, rows = 5000, groups = 9)
     val w = Window.partitionBy("g").orderBy("id").rowsBetween(Window.unboundedPreceding, 0)
     val bad = df.transform(QueryUtils.withExactParse("v"))
-      .withColumn("s", QueryUtils.sumDec("v").over(w).cast(DecimalType(38, 10)))
+      .withColumn("s", QueryUtils.sumDec("v", w).cast(DecimalType(38, 10)))
       .withColumn("ws", refSum(col("v")).over(w).cast(DecimalType(38, 10)))
       .filter(not(col("s") <=> col("ws")))
     assert(bad.count() === 0L)
@@ -119,7 +131,7 @@ class SumScaledSpec extends AnyFunSuite {
     intercept[AnalysisException](parsedW.groupBy("g").agg(QueryUtils.davg("v")))
     intercept[AnalysisException](parsedW.groupBy("g").agg(QueryUtils.sumDecParts("v")))
     intercept[AnalysisException](
-      parsedW.withColumn("s", QueryUtils.sumDec("v").over(Window.partitionBy("g"))))
+      parsedW.withColumn("s", QueryUtils.sumDec("v", Window.partitionBy("g"))))
     // nor do another column's parts re-sum as v's, or parts never aggregated
     val partsW = parsedW.groupBy("g").agg(QueryUtils.sumDecParts("w"))
     intercept[AnalysisException](partsW.agg(QueryUtils.sumOfParts("v")))
@@ -128,34 +140,39 @@ class SumScaledSpec extends AnyFunSuite {
   }
 
   test("lo-carry torture: values pinned near the 10^18 unscaled bound") {
-    // every value has |unscaled| in [0.9e18, 1e18] so consecutive adds
-    // cross the carry boundary constantly, in both directions
-    val rnd = new scala.util.Random(99)
-    val data = (0 until 4000).map { i =>
-      val sign = if (rnd.nextBoolean()) 1 else -1
-      (i.toLong, (i % 3).toLong, sign * (9e7 + rnd.nextDouble() * 1e7))
+    // values with |unscaled| in [0.9e18, 1e18] (the fast parse's edge,
+    // near 2⁶⁰), then values just under DECIMAL(28,10)'s edge (|d| ≈
+    // 9.99·10¹⁷, the slow split), both signs: every digit carries
+    def pinned(lo: Double, span: Double): DataFrame = {
+      val rnd = new scala.util.Random(99)
+      val data = (0 until 4000).map { i =>
+        val sign = if (rnd.nextBoolean()) 1 else -1
+        (i.toLong, (i % 3).toLong, sign * (lo + rnd.nextDouble() * span))
+      }
+      spark.createDataFrame(data).toDF("id", "g", "v")
     }
-    val df = spark.createDataFrame(data).toDF("id", "g", "v")
-    val (withU, agg) = newSum(df, "v")
-    val got = withU.groupBy("g").agg(agg.cast(DecimalType(38, 10)).as("s")).orderBy("g")
-    val want = df.groupBy("g").agg(refSum(col("v")).cast(DecimalType(38, 10)).as("s")).orderBy("g")
-    assert(got.collect().toSeq === want.collect().toSeq)
+    Seq(pinned(9e7, 1e7), pinned(9.9e17, 9e15)).foreach { df =>
+      val (withU, agg) = newSum(df, "v")
+      val got = withU.groupBy("g").agg(agg.cast(DecimalType(38, 10)).as("s")).orderBy("g")
+      val want = df.groupBy("g").agg(refSum(col("v")).cast(DecimalType(38, 10)).as("s")).orderBy("g")
+      assert(got.collect().toSeq === want.collect().toSeq)
+    }
   }
 
-  test("hi-guard torture: out-of-window sums fail loudly instead of wrapping") {
-    import graft.functions.SumScaled128
-    import org.apache.spark.sql.graftbridge.ColumnBridge
+  test("digit-sum overflow torture: a total that leaves a long fails loudly instead of wrapping") {
     import spark.implicits._
-    // feed the aggregate raw (hi, lo) parts whose hi sum reaches the
-    // window's edge (unreachable from real doubles in a test-sized
-    // corpus — |inHi| < 1e10 needs ~9e8 rows — so craft the parts),
-    // in `partitions` partitions, each summed on its own and then merged
-    def sumOf(his: Seq[Long], partitions: Int = 1): java.math.BigDecimal = {
-      val df = spark.sparkContext.parallelize(his.map(h => (h, 0L)), partitions).toDF("hi", "lo")
-      val agg = ColumnBridge.column(SumScaled128(
-        ColumnBridge.expression(col("hi")),
-        ColumnBridge.expression(col("lo"))).toAggregateExpression())
-      df.agg(agg.as("s")).head().getDecimal(0)
+    // crafted `_p_v` partials (a real digit 2 is below 8.7e9, so a test-
+    // sized corpus cannot reach the bound), in `partitions` partitions,
+    // each summed on its own and then merged
+    val low = DecimalSum.DigitMask
+    def sumOf(p2s: Seq[Long], partitions: Int): java.math.BigDecimal =
+      spark.sparkContext.parallelize(p2s.map(p2 => (low, low, p2)), partitions)
+        .toDF("p0", "p1", "p2").select(struct("p0", "p1", "p2").as("_p_v"))
+        .agg(QueryUtils.sumOfParts("v").as("s")).head().getDecimal(0)
+    def exact(p2s: Seq[Long]): java.math.BigDecimal = {
+      val n = BigInt(p2s.length)
+      val u = BigInt(low) * n + (BigInt(low) * n << 30) + (p2s.map(BigInt(_)).sum << 60)
+      new java.math.BigDecimal(u.bigInteger, 10)
     }
     def overflows(thunk: => Any): Unit = {
       val e = intercept[Exception](thunk)
@@ -165,17 +182,14 @@ class SumScaledSpec extends AnyFunSuite {
         case _ => false
       }, e.toString)
     }
-    val base = java.math.BigDecimal.valueOf(DecimalSum.Base).scaleByPowerOfTen(-10)
-    // 9.2e18 is past the former 9e18 guard band and inside a long
-    assert(sumOf(Seq(4600000000000000000L, 4600000000000000000L))
-      .compareTo(base.multiply(java.math.BigDecimal.valueOf(9200000000000000000L))) == 0)
-    assert(sumOf(Seq(-4600000000000000000L, -4600000000000000000L))
-      .compareTo(base.multiply(java.math.BigDecimal.valueOf(-9200000000000000000L))) == 0)
-    overflows(sumOf(Seq(4000000000000000000L, 4000000000000000000L, 4000000000000000000L)))
-    overflows(sumOf(Seq(-4000000000000000000L, -4000000000000000000L, -4000000000000000000L)))
-    // merge path: each partition's partial fits, their total does not
-    val halves = Seq(4600000000000000000L, 4600000000000000000L)
-    assert(sumOf(halves, partitions = 2).signum() == 1)
-    overflows(sumOf(halves ++ halves, partitions = 2))
+    val big = 1L << 62
+    Seq(1, 2).foreach { partitions =>
+      // two partials sum exactly, at the edge of a long on each side
+      Seq(Seq(big - 1, big - 1), Seq(-big, -big)).foreach { p2s =>
+        assert(sumOf(p2s, partitions).compareTo(exact(p2s)) == 0, s"$p2s $partitions")
+      }
+      overflows(sumOf(Seq(big, big, big), partitions))
+      overflows(sumOf(Seq(-big, -big, -big), partitions))
+    }
   }
 }

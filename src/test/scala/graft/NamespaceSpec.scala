@@ -6,15 +6,30 @@ import org.scalatest.funsuite.AnyFunSuite
 
 /** One bridge into Spark's package-private API: `ColumnBridge.scala` is
   * the only main source that declares a package under
-  * `org.apache.spark`. Kernels and Column functions live in `graft.*`.
+  * `org.apache.spark`. Kernels and Column functions live in `graft.*`,
+  * and no main source declares a Catalyst expression class: kernels are
+  * static methods that Spark's StaticInvoke calls, and sums are Spark's
+  * own aggregates.
   */
 class NamespaceSpec extends AnyFunSuite {
+  private lazy val files: Seq[Path] = Files.walk(Paths.get("src/main/scala")).iterator().asScala
+    .filter(_.toString.endsWith(".scala")).toSeq
+
+  private def lines(f: Path): Seq[String] = Files.readAllLines(f).asScala.toSeq
+
   test("ColumnBridge.scala is the only main file in Spark's namespace") {
-    val files = Files.walk(Paths.get("src/main/scala")).iterator().asScala
-      .filter(_.toString.endsWith(".scala")).toSeq
     assert(files.nonEmpty)
-    def inSpark(f: Path): Boolean =
-      Files.readAllLines(f).asScala.exists(_.startsWith("package org.apache.spark"))
+    def inSpark(f: Path): Boolean = lines(f).exists(_.startsWith("package org.apache.spark"))
     assert(files.filter(inSpark).map(_.getFileName.toString) === Seq("ColumnBridge.scala"))
+  }
+
+  test("no main file declares a Catalyst expression or aggregate function class") {
+    val catalyst = ("""\b(extends|with)\s+(Expression|UnaryExpression|BinaryExpression|""" +
+      """LeafExpression|DeclarativeAggregate|ImperativeAggregate|TypedImperativeAggregate|""" +
+      """AggregateFunction)\b""").r
+    assert(files.nonEmpty)
+    val found = files.flatMap(f => lines(f).filter(catalyst.findFirstIn(_).isDefined)
+      .map(l => s"${f.getFileName}: ${l.trim}"))
+    assert(found.isEmpty, found.mkString("\n"))
   }
 }

@@ -70,6 +70,13 @@ class SinglePartitionStagesSpec extends AnyFunSuite {
     }
   }
 
+  test("the session runs in ANSI mode, Spark's default") {
+    // GraftSession leaves it unset; the exact sums' digit `sum`s throw on
+    // overflow only in ANSI mode, so a default that turns it off fails
+    // here instead of letting a sum wrap
+    assert(spark.conf.get("spark.sql.ansi.enabled") === "true")
+  }
+
   test("every query's ordered output equals Spark's exchanges at sf0.001") {
     val changed = SparkEntry.inventory.filter { q =>
       val onePartition = q.fn(spark, TestSpark.sfDir).collect().toSeq
