@@ -162,12 +162,13 @@ class ExactSumSpec extends AnyFunSuite {
   test("digit-sum overflow torture: a total that leaves a long fails loudly instead of wrapping") {
     import spark.implicits._
     // crafted `_p_v` partials (a real digit 2 is below 8.7e9, so a test-
-    // sized corpus cannot reach the bound), in `partitions` partitions,
-    // each summed on its own and then merged
+    // sized corpus cannot reach the bound), sliced in order into
+    // `partitions` partitions of near-equal size
     val low = DecimalSum.DigitMask
-    def sumOf(p2s: Seq[Long], partitions: Int): java.math.BigDecimal =
+    def rows(p2s: Seq[Long], partitions: Int) =
       spark.sparkContext.parallelize(p2s.map(p2 => (low, low, p2)), partitions)
-        .toDF("p0", "p1", "p2").select(struct("p0", "p1", "p2").as("_p_v"))
+    def sumOf(p2s: Seq[Long], partitions: Int): java.math.BigDecimal =
+      rows(p2s, partitions).toDF("p0", "p1", "p2").select(struct("p0", "p1", "p2").as("_p_v"))
         .agg(QueryUtils.sumOfParts("v").as("s")).head().getDecimal(0)
     def exact(p2s: Seq[Long]): java.math.BigDecimal = {
       val n = BigInt(p2s.length)
@@ -188,8 +189,17 @@ class ExactSumSpec extends AnyFunSuite {
       Seq(Seq(big - 1, big - 1), Seq(-big, -big)).foreach { p2s =>
         assert(sumOf(p2s, partitions).compareTo(exact(p2s)) == 0, s"$p2s $partitions")
       }
-      overflows(sumOf(Seq(big, big, big), partitions))
-      overflows(sumOf(Seq(-big, -big, -big), partitions))
+    }
+    // update path: in one partition the third partial's add leaves a long
+    overflows(sumOf(Seq(big, big, big), 1))
+    overflows(sumOf(Seq(-big, -big, -big), 1))
+    // merge path: two partitions of two partials each, whose sums
+    // (2⁶³−2 and −2⁶³) fit a long, so only adding the two partitions'
+    // sums leaves it
+    Seq(Seq.fill(4)(big - 1), Seq.fill(4)(-big)).foreach { p2s =>
+      val perPartition = rows(p2s, 2).glom().collect().map(_.map(r => BigInt(r._3)).sum)
+      assert(perPartition.length == 2 && perPartition.forall(_.isValidLong), perPartition.toSeq)
+      overflows(sumOf(p2s, 2))
     }
   }
 }
