@@ -17,7 +17,7 @@ import org.apache.spark.sql.types.{ArrayType, DataType, IntegerType, LongType, S
   * Spark's StaticInvoke — no UDFs — so the whole chain stays inside
   * WholeStageCodegen and is equally usable in batch and Structured
   * Streaming plans. Plans print a kernel as
-  * `static_invoke(TextKernelUtil.stripNoise(text#…))`.
+  * `static_invoke(graft.functions.TextKernelUtil.stripNoise(text#…))`.
   */
 object TextFunctions {
 
@@ -37,15 +37,8 @@ object TextFunctions {
     * java.util.regex passes per row, the dominant cost of q20/q25. */
   def stripNoise(c: Column): Column = textKernel("stripNoise", StringType)(c)
 
-  /** F1–F4 fused: the noise scan with the punctuation translate-delete
-    * (F4, reference src/utils.py:9) applied to each surviving byte —
-    * per-character deletions commute with the emit order, so this
-    * equals translate(stripNoise(c), asciiPunctuation, "") exactly
-    * (property-proven; TextKernelUtil.stripNoisePunct). */
-  def stripNoiseAndPunct(c: Column): Column = textKernel("stripNoisePunct", StringType)(c)
-
   /** The text layer's one whitespace set, [ \t\n\x0B\f\r]: the
-    * characters `pyStrip` trims and the kernels' `isWs` tests. RE2's
+    * characters `cleanText` strips and the kernels' `isWs` tests. RE2's
     * `\s` lacks \x0B, so the oracle SQL spells whitespace as
     * `wsClass`/`nonWsClass`, never as `\s`/`\S`. Python's `str.strip`
     * strips more (\x1c–\x1f, \x85, \xa0, …): a declared deviation. */
@@ -56,18 +49,17 @@ object TextFunctions {
   val wsClass: String = wsChars.map(c => f"\\x${c.toInt}%02X").mkString("[", "", "]")
   val nonWsClass: String = "[^" + wsClass.tail
 
-  /** Python str.strip() parity over `wsChars`: strips leading and
-    * trailing whitespace including tab/newline — Spark's one-arg trim()
-    * strips spaces only (golden case at reference
-    * src/unit_tests/test_utils.py:18-21). Spelled as charset-trim, not
-    * as the per-row regex `^ws+|ws+$` (TextFunctionsSpec proves them
-    * equal). */
-  def pyStrip(c: Column): Column = trim(c, wsChars)
-
-  /** F1–F5 chained in reference order (src/utils.py:5-10); F1–F4 run
-    * as the fused byte-scan kernel. */
-  def cleanText(c: Column): Column =
-    pyStrip(lower(stripNoiseAndPunct(c)))
+  /** F1–F5 (reference src/utils.py:5-10) as ONE kernel
+    * (TextKernelUtil.cleanText): the noise scan deletes the punctuation
+    * (F4, reference src/utils.py:9) as it emits, then lowers the kept
+    * text as Spark's default `lower` does and strips `wsChars` from
+    * both ends, Python's `str.strip()` over that set (golden case at
+    * reference src/unit_tests/test_utils.py:18-21). One scan and one
+    * output string per row, where `trim(lower(…))` made three; and no
+    * plan calls Spark's case mapping, whose initializer loads ICU's
+    * break-iterator data. TextFunctionsSpec proves it equal to the
+    * reference's passes spelled in Spark. */
+  def cleanText(c: Column): Column = textKernel("cleanText", StringType)(c)
 
   /** Python string.punctuation with the single quote doubled for SQL. */
   private val punctSql = asciiPunctuation.replace("'", "''")
@@ -94,9 +86,10 @@ object TextFunctions {
       .otherwise("Unknown sentiment")
 
   /** Whitespace tokenizer over a python-stripped string. Byte-scan
-    * kernel (TextKernelUtil.wsTokens), output identical to
-    * split(pyStrip(c), wsClass + "+") including the [""] result for
-    * strings that strip to empty (TextFunctionsSpec proves equality). */
+    * kernel (TextKernelUtil.wsTokens), output identical to splitting
+    * the `wsChars`-stripped string on wsClass + "+", including the
+    * [""] result for strings that strip to empty (TextFunctionsSpec
+    * proves equality). */
   def tokens(c: Column): Column =
     textKernel("wsTokens", ArrayType(StringType, containsNull = false))(c)
 

@@ -1,5 +1,7 @@
 package graft.functions
 
+import java.nio.charset.StandardCharsets.UTF_8
+import com.ibm.icu.lang.UCharacter
 import org.apache.spark.sql.catalyst.expressions.UnsafeArrayData
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.unsafe.Platform
@@ -17,7 +19,9 @@ import org.apache.spark.unsafe.types.UTF8String
   * from `TextFunctions.wsChars` ([ \t\n\x0B\f\r]), and a word byte is
   * RE2's ASCII `\w` ([a-zA-Z0-9_]). Multi-byte UTF-8 units are ≥ 0x80,
   * in neither class, so a byte scan sees exactly the boundaries the
-  * regex engine sees. Measured at sf0.1 the regex tokenization cost
+  * regex engine sees. `cleanText` also lowers as Spark's `lower` does,
+  * calling ICU itself for non-ASCII text, so no plan holds a Spark case
+  * mapping. Measured at sf0.1 the regex tokenization cost
   * ~0.13 s per evaluation over 5k docs and feeds eight queries; the
   * marker counter collapses q24's four full-text regex scans into one.
   * TextFunctionsSpec proves each kernel equal to the regex spelling over
@@ -173,18 +177,48 @@ object TextKernelUtil {
     *  - pass 3 runs AFTER pass 2, so text joined by a hashtag deletion
     *    is never re-examined for mentions ("@#x" → "@"), which the
     *    left-to-right single scan reproduces for free. */
-  def stripNoise(s: UTF8String): UTF8String = strip(s, NoDrop)
+  def stripNoise(s: UTF8String): UTF8String = {
+    val out = new Array[Byte](s.numBytes)
+    UTF8String.fromBytes(out, 0, strip(s, NoDrop, out))
+  }
 
-  /** stripNoise fused with the translate-delete of
-    * `TextFunctions.asciiPunctuation`: a dropped byte is just not
-    * emitted (see punctTable). */
-  def stripNoisePunct(s: UTF8String): UTF8String = strip(s, PunctDrop)
+  /** clean_text (F1–F5) in one scan: the noise scan drops the bytes of
+    * `TextFunctions.asciiPunctuation` as it emits (see punctTable),
+    * then lowers the kept text in place and strips `TextFunctions.wsChars`
+    * from both ends, so a row makes one output array. Lowering is
+    * Spark's default `lower` (`spark.sql.icu.caseMappings.enabled`):
+    * all-ASCII text maps A–Z to a–z, as `toLowerCaseAscii` does; any
+    * other text is lowered whole by ICU's `UCharacter.toLowerCase`, the
+    * body of `CollationAwareUTF8String.toLowerCaseSlow`. That class is
+    * not touched: its initializer loads ICU's break-iterator data. */
+  def cleanText(s: UTF8String): UTF8String = {
+    var out = new Array[Byte](s.numBytes)
+    var n = strip(s, PunctDrop, out)
+    var i = 0
+    while (i < n && out(i) >= 0) i += 1
+    if (i < n) {
+      out = UCharacter.toLowerCase(UTF8String.fromBytes(out, 0, n).toValidString).getBytes(UTF_8)
+      n = out.length
+    } else {
+      i = 0
+      while (i < n) {
+        if (out(i) >= 'A' && out(i) <= 'Z') out(i) = (out(i) + ('a' - 'A')).toByte
+        i += 1
+      }
+    }
+    var lo = 0
+    while (lo < n && isWs(out(lo))) lo += 1
+    var hi = n
+    while (hi > lo && isWs(out(hi - 1))) hi -= 1
+    UTF8String.fromBytes(out, lo, hi - lo)
+  }
 
-  private def strip(s: UTF8String, drop: Array[Boolean]): UTF8String = {
+  /** The noise scan of `s` into `out` (at least `s.numBytes` long),
+    * emitting no byte that `drop` marks; returns the bytes emitted. */
+  private def strip(s: UTF8String, drop: Array[Boolean], out: Array[Byte]): Int = {
     val base = s.getBaseObject
     val off = s.getBaseOffset
     val n = s.numBytes
-    val out = new Array[Byte](n)
     var o = 0
     var i = 0
     while (i < n) {
@@ -225,7 +259,7 @@ object TextKernelUtil {
         i = re // [eff, re) is the deleted URL tail
       }
     }
-    UTF8String.fromBytes(out, 0, o)
+    o
   }
 
   // the plan-time tables; building them validates the lists (ASCII

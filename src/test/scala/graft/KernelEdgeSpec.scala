@@ -69,9 +69,10 @@ class KernelEdgeSpec extends AnyFunSuite {
     ("stripNoise", Text, TextFunctions.stripNoise _, "", ""),
     ("stripNoise", Text, TextFunctions.stripNoise _, " \t\n", " \t\n"),
     ("stripNoise", Text, TextFunctions.stripNoise _, "#t @u http://x.y a,b!", "   a,b!"),
-    ("stripNoiseAndPunct", Text, TextFunctions.stripNoiseAndPunct _, null, null),
-    ("stripNoiseAndPunct", Text, TextFunctions.stripNoiseAndPunct _, "", ""),
-    ("stripNoiseAndPunct", Text, TextFunctions.stripNoiseAndPunct _, "#t @u http://x.y a,b!", "   ab"),
+    ("cleanText", Text, TextFunctions.cleanText _, null, null),
+    ("cleanText", Text, TextFunctions.cleanText _, "", ""),
+    ("cleanText", Text, TextFunctions.cleanText _, "#t @u http://x.y a,b!", "ab"),
+    ("cleanText", Text, TextFunctions.cleanText _, " ÉCOLE Straße ", "école straße"),
     ("tokens", Text, TextFunctions.tokens _, null, null),
     ("tokens", Text, TextFunctions.tokens _, "", Seq("")),
     ("tokens", Text, TextFunctions.tokens _, " \t\n\u000B\f\r", Seq("")),

@@ -77,7 +77,6 @@ object KernelLedger {
     val v = col("v")
     // (kernel, input, kernel column, built-in column)
     val ledger: Seq[(String, DataFrame, Column, Column)] = Seq(
-      ("stripNoiseAndPunct", docs, TextFunctions.stripNoiseAndPunct(text), noise),
       ("cleanText", docs, TextFunctions.cleanText(text), pyStripRegex(lower(noise))),
       ("tokens", docs, toks, regexToks),
       ("tokenStats3", docs, TextFunctions.tokenStats3(text), array(size(regexToks).cast(LongType),

@@ -77,6 +77,12 @@ class SinglePartitionStagesSpec extends AnyFunSuite {
     assert(spark.conf.get("spark.sql.ansi.enabled") === "true")
   }
 
+  test("the session lowers text with ICU case mappings, Spark's default") {
+    // TextKernelUtil.cleanText lowers non-ASCII text with ICU, as Spark's
+    // `lower` does only under this default
+    assert(spark.conf.get("spark.sql.icu.caseMappings.enabled") === "true")
+  }
+
   test("every query's ordered output equals Spark's exchanges at sf0.001") {
     val changed = SparkEntry.inventory.filter { q =>
       val onePartition = q.fn(spark, TestSpark.sfDir).collect().toSeq

@@ -88,15 +88,32 @@ class TextFunctionsSpec extends AnyFunSuite {
     "unicode \u00e9t\u00e9 caf\u00e9  ", "the and of to is",
     "der die das und ist", "el los las de y le la les et des",
     "theand of-to is. (is) [the] _the_ the1 1the the_ the",
-    "\u00e9the the\u00e9 \u00e9the\u00e9 the", "der\u00e9die")
+    "\u00e9the the\u00e9 \u00e9the\u00e9 the", "der\u00e9die",
+    // uppercase ASCII (the ASCII lowering), uppercase letters whose
+    // lowering needs ICU (İ becomes two code points, a word-final Σ
+    // becomes ς, the Kelvin sign k, ẞ ß), and wsChars at both ends
+    "HELLO World THE End", "ÉCOLE Ärger İSTANBUL ΟΔΟΣ \u212AELVIN STRAẞE",
+    "ΣΑΣ, ΣΑΣ. Σ", "\t\u000B \f ÉCOLE \n\r", " \u000BMiXeD CaSe\t\n ")
 
-  test("charset-trim pyStrip equals the regex spelling (corpus + adversarial)") {
+  /** clean_text as the reference spells it, each pass a Spark built-in:
+    * three regex deletes, the punctuation translate, Spark's `lower`,
+    * and the strip of `wsChars` by regex. */
+  private def cleanRef(c: org.apache.spark.sql.Column) =
+    pyStripRegex(lower(dropPunctuation(stripHashtags(stripMentions(stripUrls(c))))))
+
+  /** A corpus text inside every clean_text rule, as q20 wraps it. */
+  private def messy(docs: org.apache.spark.sql.DataFrame) =
+    docs.select(concat(lit("  #Tag @user http://x.com/a?b=1 "),
+      col("text"), lit(" READ!!\t")).as("text"))
+
+  test("one-kernel cleanText equals the reference's passes with Spark's lower") {
     val adv = advStrings.toDF("text")
     val docs = core.Tables.documents(spark, TestSpark.sfDir).select("text")
-    Seq(adv, docs).foreach { df =>
-      val bad = df.filter(not(
-        TextFunctions.pyStrip(col("text")) <=> pyStripRegex(col("text"))))
-      assert(bad.count() === 0L)
+    Seq(adv, docs, messy(docs)).foreach { df =>
+      val bad = df.filter(not(TextFunctions.cleanText(col("text")) <=> cleanRef(col("text"))))
+      assert(bad.count() === 0L,
+        bad.select(col("text"), TextFunctions.cleanText(col("text")), cleanRef(col("text")))
+          .collect().mkString("\n").take(2000))
     }
   }
 
@@ -128,15 +145,12 @@ class TextFunctionsSpec extends AnyFunSuite {
       "  #Tag @user http://x.com/a?b=1 words READ!!\t")
     val adv = (advStrings ++ noiseAdv).toDF("text")
     val docs = core.Tables.documents(spark, TestSpark.sfDir).select("text")
-    val messy = docs.select(concat(lit("  #Tag @user http://x.com/a?b=1 "),
-      col("text"), lit(" READ!!\t")).as("text"))
     val ref = (c: org.apache.spark.sql.Column) =>
       stripHashtags(stripMentions(stripUrls(c)))
-    Seq(adv, docs, messy).foreach { df =>
+    Seq(adv, docs, messy(docs)).foreach { df =>
       val bad = df.filter(not(
         TextFunctions.stripNoise(col("text")) <=> ref(col("text")) &&
-        TextFunctions.stripNoiseAndPunct(col("text")) <=>
-          dropPunctuation(ref(col("text")))))
+        TextFunctions.cleanText(col("text")) <=> cleanRef(col("text"))))
       assert(bad.count() === 0L,
         bad.select(col("text"), TextFunctions.stripNoise(col("text")), ref(col("text")))
           .collect().mkString("\n").take(2000))
@@ -145,17 +159,18 @@ class TextFunctionsSpec extends AnyFunSuite {
     val nl = Seq[Option[String]](None).toDF("text")
       .select(TextFunctions.stripNoise(col("text"))).head()
     assert(nl.isNullAt(0))
-    // randomized: seeded strings over a hostile alphabet
+    // randomized: seeded strings over a hostile alphabet, with
+    // uppercase ASCII, letters that ICU lowers, and more wsChars
     val rnd = new scala.util.Random(99)
-    val alpha = "h t p w @ # a 7 _ - é ".split(" ").mkString + "htpw@#a"
+    val alpha = "h t p w @ # a 7 _ - é ".split(" ").mkString + "htpw@#a" +
+      "HTPWA" + "ÉÄİΣ\u212Aẞ" + " \t\n"
     val fuzz = (1 to 4000).map { _ =>
       val len = rnd.nextInt(24)
       (1 to len).map(_ => alpha.charAt(rnd.nextInt(alpha.length))).mkString
     }.toDF("text")
     assert(fuzz.filter(not(
       TextFunctions.stripNoise(col("text")) <=> ref(col("text")) &&
-      TextFunctions.stripNoiseAndPunct(col("text")) <=>
-        dropPunctuation(ref(col("text"))))).count() === 0L)
+      TextFunctions.cleanText(col("text")) <=> cleanRef(col("text")))).count() === 0L)
   }
 
   test("one-pass token stats equal the size/filter/aggregate HOF spelling") {
